@@ -37,13 +37,18 @@ object Main {
                         outputType: String, ledger: Option[String],
                         master: String)
 
+  private val knownFlags =
+    Set("input", "output", "input-type", "output-type", "ledger", "master")
+
   def parseArgs(args: Array[String]): Either[String, Conf] = {
     val m = scala.collection.mutable.Map[String, String]()
     var i = 0
     while (i < args.length) {
       args(i) match {
         case flag if flag.startsWith("--") && i + 1 < args.length =>
-          m(flag.stripPrefix("--")) = args(i + 1); i += 2
+          val name = flag.stripPrefix("--")
+          if (!knownFlags.contains(name)) return Left(s"unknown flag: $flag")
+          m(name) = args(i + 1); i += 2
         case other => return Left(s"unexpected argument: $other")
       }
     }
@@ -81,44 +86,41 @@ object Main {
     // pin the batch: several actions follow (reject count, statement count,
     // sink write, watermark agg) — the cache keeps them on one snapshot and
     // stops the render DAG executing once per action
-    val fresh = conf.ledger.flatMap(Checkpoint.lastWatermark(spark, _))
-      .fold(turns)(wm => turns.filter(col("ts") > lit(wm)))
+    val fresh = conf.ledger.fold(turns)(Checkpoint.pastWatermark(turns, _))
       .cache()
-    val parsed = Pipeline.parse(fresh)
-    val valid = Pipeline.filterValid(parsed)
-    // unknown-op guard (transformer.go:26-28): count + log, never crash
-    val nRejects = Pipeline.rejects(parsed).count()
-    if (nRejects > 0)
-      System.err.println(s"[graft] dead-lettered $nRejects unknown-op/denied-db turns")
+    try {
+      val parsed = Pipeline.parse(fresh)
+      val valid = Pipeline.filterValid(parsed)
+      // unknown-op guard (transformer.go:26-28): count + log, never crash
+      val nRejects = Pipeline.rejects(parsed).count()
+      if (nRejects > 0)
+        System.err.println(s"[graft] dead-lettered $nRejects unknown-op/denied-db turns")
 
-    val stmts = Pipeline.renderAllStatements(valid)
-      .orderBy(col("phase"), col("ord"), col("turn_idx"), col("stmt"))
-    val n = conf.outputType match {
-      case "sql" =>
-        val out = stmts.select(col("stmt")).coalesce(1)
-        val n = out.count() // this run's emissions (the sink is append-only)
-        out.write.mode("append").text(conf.output)
-        n
-      case _ =>
-        // DDL strictly before DML; single ordered partition per phase so
-        // execution order equals stream order inside the transaction
-        val ddl = stmts.filter(col("phase") < 3)
-          .orderBy(col("phase"), col("ord"), col("stmt")).coalesce(1)
-        val dml = stmts.filter(col("phase") === 3)
-          .orderBy(col("ord"), col("turn_idx"), col("stmt")).coalesce(1)
-        JdbcSink.executeStatements(ddl, conf.output) +
-          JdbcSink.executeStatements(dml, conf.output)
-    }
+      val stmts = Pipeline.renderAllStatements(valid)
+        .orderBy(col("phase"), col("ord"), col("turn_idx"), col("stmt"))
+      val n = conf.outputType match {
+        case "sql" =>
+          val out = stmts.select(col("stmt")).coalesce(1)
+          val n = out.count() // this run's emissions (the sink is append-only)
+          out.write.mode("append").text(conf.output)
+          n
+        case _ =>
+          // DDL strictly before DML; single ordered partition per phase so
+          // execution order equals stream order inside the transaction
+          val ddl = stmts.filter(col("phase") < 3)
+            .orderBy(col("phase"), col("ord"), col("stmt")).coalesce(1)
+          val dml = stmts.filter(col("phase") === 3)
+            .orderBy(col("ord"), col("turn_idx"), col("stmt")).coalesce(1)
+          JdbcSink.executeStatements(ddl, conf.output) +
+            JdbcSink.executeStatements(dml, conf.output)
+      }
 
-    conf.ledger.foreach { ledgerPath =>
-      val batchId = Checkpoint.committedBatches(spark, ledgerPath)
-      fresh.agg(max(col("ts")).as("max_ts"))
-        .filter(col("max_ts").isNotNull)
-        .select(lit(batchId).as("batch_id"), col("max_ts"))
-        .write.mode("append").parquet(ledgerPath)
-    }
-    fresh.unpersist()
-    (n, nRejects)
+      conf.ledger.foreach { ledgerPath =>
+        Checkpoint.commitBatch(fresh, ledgerPath,
+          Checkpoint.committedBatches(spark, ledgerPath))
+      }
+      (n, nRejects)
+    } finally fresh.unpersist()
   }
 
   def main(args: Array[String]): Unit =

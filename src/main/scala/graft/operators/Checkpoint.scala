@@ -51,6 +51,24 @@ object Checkpoint {
     if (!ledgerExists(spark, ledgerPath)) 0L
     else spark.read.parquet(ledgerPath).count()
 
+  /** The turns not yet committed: `ts` past the ledger's watermark, or all
+    * of `turns` before the first commit.
+    */
+  def pastWatermark(turns: DataFrame, ledgerPath: String): DataFrame =
+    lastWatermark(turns.sparkSession, ledgerPath)
+      .fold(turns)(wm => turns.filter(col("ts") > lit(wm)))
+
+  /** Ledger commit of a batch whose data already landed — in the
+    * partitioned sink (the overload below) or in Main.run's statement
+    * sink: append `(batchId, max ts of batch)`. An empty batch appends
+    * nothing, so it neither advances the watermark nor takes a batch id.
+    */
+  def commitBatch(batch: DataFrame, ledgerPath: String, batchId: Long): Unit =
+    batch.agg(max(col("ts")).as("max_ts"))
+      .filter(col("max_ts").isNotNull)
+      .select(lit(batchId).as("batch_id"), col("max_ts"))
+      .write.mode("append").parquet(ledgerPath)
+
   /** Idempotent data commit: everything in `routed` lands under its
     * batch_id partition; re-running the same batch overwrites in place.
     * Ledger append AFTER data commit — a crash between the two replays the
@@ -63,10 +81,7 @@ object Checkpoint {
       .option("partitionOverwriteMode", "dynamic")
       .partitionBy("batch_id", "sink")
       .parquet(sinkPath)
-    routed.agg(max(col("ts")).as("max_ts"))
-      .filter(col("max_ts").isNotNull)
-      .select(lit(batchId).as("batch_id"), col("max_ts"))
-      .write.mode("append").parquet(ledgerPath)
+    commitBatch(routed, ledgerPath, batchId)
   }
 
   case class CompactStats(filesBefore: Long, filesAfter: Long, rows: Long)
@@ -162,12 +177,10 @@ object Checkpoint {
     */
   def runIncrement(turns: DataFrame, toolDim: DataFrame, sinkPath: String,
                    ledgerPath: String): Long = {
-    val spark = turns.sparkSession
-    val wm = lastWatermark(spark, ledgerPath)
-    val fresh = wm.fold(turns)(w => turns.filter(col("ts") > lit(w)))
-    val routed = Pipeline.route(
-      Pipeline.enrich(Pipeline.filterValid(Pipeline.parse(fresh)), toolDim))
-    val batchId = committedBatches(spark, ledgerPath)
+    val routed = Pipeline.route(Pipeline.enrich(
+      Pipeline.filterValid(Pipeline.parse(pastWatermark(turns, ledgerPath))),
+      toolDim))
+    val batchId = committedBatches(turns.sparkSession, ledgerPath)
     val cached = routed.cache()
     try {
       val n = cached.count()

@@ -89,6 +89,10 @@ object Pipeline {
   // Deterministic SQL-text rendering (T3-T6): sorted column order and typed
   // literal binding, strictly stronger than the reference whose INSERT
   // column order is Go-map-random (transformer.go:154-174; SURVEY.md §5).
+  // Every column list, SET/WHERE clause, child table and drift ALTER is
+  // derived from each document at runtime — the reference's schema-on-read
+  // semantics (map[string]interface{} payloads, transformer.go:54-114) —
+  // so no caller supplies a key list.
   //
   // All renderers share ONE tokenizer pass per row: json_kv_raw parses the
   // payload once into map<key, raw-json-token> (aliased as `kv`, so the
@@ -97,13 +101,6 @@ object Pipeline {
   // lookups). Raw tokens keep their JSON quoting, so the renderer switches
   // on the ACTUAL value type like the reference does (transformer.go:34-52)
   // — a numeric-looking JSON *string* "89799" stays quoted and VARCHAR.
-
-  /** Payload keys the bench corpus carries, in sorted order (deterministic
-    * column ordering replaces Go map iteration). The mechanism — probe
-    * key, render typed literal — is schema-driven via the `keys` params.
-    */
-  val insertKeys: Seq[String] = Seq("_id", "extra", "k")
-  val updateSetKeys: Seq[String] = Seq("k", "obsolete")
 
   private def jval(key: String): Column =
     get_json_object(col("payload"), "$." + key)
@@ -131,76 +128,6 @@ object Pipeline {
       .when(raw.startsWith("\""),
         concat(lit("'"), regexp_replace(json_unquote(raw), "'", "''"), lit("'")))
       .otherwise(raw)
-
-  /** INSERT synthesis (T3) over parsed+filtered INS turns. */
-  def renderInsert(parsed: DataFrame,
-                   keys: Seq[String] = insertKeys): DataFrame = {
-    val present = keys.sorted.map(k => (k, element_at(kv, lit(k))))
-    val colsList = concat_ws(", ",
-      present.map { case (k, v) => when(isScalarRaw(v), lit(k)) }: _*)
-    val valsList = concat_ws(", ",
-      present.map { case (_, v) => when(isScalarRaw(v), sqlLiteralRaw(v)) }: _*)
-    withKv(parsed.filter(col("op") === "INS"))
-      .withColumn("stmt",
-        concat(lit("INSERT INTO "), col("db"), lit("."), col("tbl"),
-          lit(" ("), colsList, lit(") VALUES ("), valsList, lit(");")))
-      .select("conv_id", "turn_idx", "stmt")
-  }
-
-  /** UPDATE synthesis (T4, transformer.go:255-299): diff.u → SET k=v,
-    * diff.d → SET k=NULL, WHERE from the o2 key. Sorted SET order.
-    */
-  def renderUpdate(parsed: DataFrame,
-                   setKeys: Seq[String] = updateSetKeys,
-                   whereKeys: Seq[String] = Seq("_id")): DataFrame = {
-    // diff.d KEY PRESENCE drives SET NULL — the value is ignored, and may
-    // itself be JSON null (transformer.go:279-282), so probe the key set,
-    // not the value.
-    // Scalar guard on diff.u: a nested object/array value would render its
-    // raw JSON braces bare into the SET clause (malformed SQL). The
-    // reference's own renderer has no map case, so its `?` placeholder
-    // survives and SHIFTS every later value one slot left
-    // (transformer.go:34-52 populateValuesInQuery) — a bug, not semantics
-    // to preserve. We emit `k = NULL`, same as diff.d key presence.
-    val setParts = setKeys.sorted.map { k =>
-      val u = element_at(col("ukv"), lit(k))
-      when(isScalarRaw(u), concat(lit(k + " = "), sqlLiteralRaw(u)))
-        .when(u.isNotNull || element_at(col("dkv"), lit(k)).isNotNull,
-          lit(k + " = NULL"))
-    }
-    withDiffKv(withKv(parsed.filter(col("op") === "UPD")))
-      .withColumn("stmt",
-        concat(lit("UPDATE "), col("db"), lit("."), col("tbl"), lit(" SET "),
-          concat_ws(", ", setParts: _*),
-          lit(" WHERE "), whereClause(whereKeys), lit(";")))
-      .select("conv_id", "turn_idx", "stmt")
-  }
-
-  /** WHERE from all present key columns joined " and "
-    * (transformer.go:284-297 update / :308-316 delete).
-    */
-  private def whereClause(keys: Seq[String]): Column =
-    concat_ws(" and ", keys.sorted.map { k =>
-      val v = element_at(kv, lit(k))
-      when(isScalarRaw(v), concat(lit(k + " = "), sqlLiteralRaw(v)))
-    }: _*)
-
-  /** DELETE synthesis (T5, transformer.go:301-319): WHERE from all present
-    * payload keys joined " and ".
-    */
-  def renderDelete(parsed: DataFrame,
-                   whereKeys: Seq[String] = Seq("_id")): DataFrame =
-    withKv(parsed.filter(col("op") === "DEL"))
-      .withColumn("stmt",
-        concat(lit("DELETE FROM "), col("db"), lit("."), col("tbl"),
-          lit(" WHERE "), whereClause(whereKeys), lit(";")))
-      .select("conv_id", "turn_idx", "stmt")
-
-  // ----------------------------------------- dynamic (schema-on-read) forms
-  // The keyed renderers above are the explicit-schema fast path; these
-  // derive the column set from each document at runtime — the reference's
-  // true semantics (map[string]interface{} payloads, transformer.go:54-114)
-  // with deterministic sorted ordering instead of Go map iteration.
 
   /** Sorted scalar (renderable) keys of the parsed payload map. Nested
     * object/array values are flattened to child tables (F1), never rendered
@@ -265,9 +192,11 @@ object Pipeline {
     val setKeys = array_sort(array_union(
       coalesce(map_keys(col("ukv")), empty),
       coalesce(map_keys(col("dkv")), empty)))
-    // isScalarRaw guard: nested diff.u values fall through to `k = NULL`
-    // (see renderUpdate — the reference's renderer shifts later values on
-    // a non-scalar, which is a bug, not semantics)
+    // isScalarRaw guard: a nested diff.u value would render its raw JSON
+    // braces bare into the SET clause, so it falls through to `k = NULL`,
+    // as diff.d key presence does. The reference's renderer has no map
+    // case: its `?` placeholder survives and SHIFTS every later value one
+    // slot left (transformer.go:34-52) — a bug, not semantics to preserve.
     val setParts = transform(setKeys, k => {
       val u = element_at(col("ukv"), k)
       when(isScalarRaw(u), concat(k, lit(" = "), sqlLiteralRaw(u)))
@@ -350,45 +279,6 @@ object Pipeline {
         sha2(concat_ws("|", col("parent_id"), col("child_tbl"), col("pos")), 256))
       .select("conv_id", "turn_idx", "db", "child_tbl", "_id", "parent_id",
         "pos", "value")
-  }
-
-  /** Generic nested-OBJECT flatten (F1 obj branch, transformer.go:74-82):
-    * one child row per parent whose payload has `key` as a JSON object;
-    * child table `<tbl>_<key>`, FK carried in-row, sha2 surrogate key.
-    */
-  def flattenObjectChild(parsed: DataFrame, key: String,
-                         childKeys: Seq[String]): DataFrame = {
-    import org.apache.spark.sql.types.{StringType, StructField, StructType}
-    val schema = StructType(childKeys.map(k => StructField(k, StringType)))
-    parsed.filter(col("op") === "INS" && jval(key).startsWith("{"))
-      .select(col("conv_id"), col("turn_idx"), col("db"), col("tbl"),
-        jval("_id").as("parent_id"), from_json(jval(key), schema).as("child"))
-      .withColumn("child_tbl", concat(col("tbl"), lit("_" + key)))
-      .withColumn("_id",
-        sha2(concat_ws("|", col("parent_id"), col("child_tbl"), lit(0)), 256))
-      .select(Seq(col("conv_id"), col("turn_idx"), col("db"),
-        col("child_tbl"), col("_id"), col("parent_id")) ++
-        childKeys.map(k => col("child." + k).as(k)): _*)
-  }
-
-  /** Generic nested ARRAY-of-objects flatten (F1 array branch,
-    * transformer.go:83-107): one child row per element, position-stable
-    * surrogate keys.
-    */
-  def flattenArrayChild(parsed: DataFrame, key: String,
-                        childKeys: Seq[String]): DataFrame = {
-    import org.apache.spark.sql.types.{ArrayType, StringType, StructField, StructType}
-    val schema = ArrayType(StructType(childKeys.map(k => StructField(k, StringType))))
-    parsed.filter(col("op") === "INS" && jval(key).startsWith("["))
-      .select(col("conv_id"), col("turn_idx"), col("db"), col("tbl"),
-        jval("_id").as("parent_id"),
-        posexplode(from_json(jval(key), schema)).as(Seq("pos", "child")))
-      .withColumn("child_tbl", concat(col("tbl"), lit("_" + key)))
-      .withColumn("_id",
-        sha2(concat_ws("|", col("parent_id"), col("child_tbl"), col("pos")), 256))
-      .select(Seq(col("conv_id"), col("turn_idx"), col("db"),
-        col("child_tbl"), col("_id"), col("parent_id"), col("pos")) ++
-        childKeys.map(k => col("child." + k).as(k)): _*)
   }
 
   // ------------------------------------------- dynamic (runtime) child flatten
@@ -498,52 +388,6 @@ object Pipeline {
     filterValid(parsed).select(col("db")).distinct()
       .withColumn("stmt",
         concat(lit("CREATE SCHEMA IF NOT EXISTS "), col("db"), lit(";")))
-
-  /** CREATE TABLE from first-seen doc (D2, transformer.go:205-228): column
-    * set and inferred types from the first insert, `_id` as PRIMARY KEY.
-    */
-  def ddlCreateTables(parsed: DataFrame): DataFrame =
-    firstSeen(parsed.filter(col("op") === "INS"))
-      .withColumn("stmt",
-        concat(lit("CREATE TABLE IF NOT EXISTS "), col("db"), lit("."),
-          col("tbl"), lit(" (_id VARCHAR(255) PRIMARY KEY"),
-          when(jval("extra").isNotNull, lit(", extra VARCHAR(255)")).otherwise(lit("")),
-          lit(", k INTEGER);")))
-      .select("db", "tbl", "stmt")
-
-  /** ALTER TABLE schema drift (D3, transformer.go:176-195): emit ADD COLUMN
-    * for keys present in later docs but absent from the first-seen doc.
-    * Distributed form: per-table aggregate of (first-doc key set) vs
-    * (union of all key sets) — one shuffle on (db,tbl).
-    */
-  def ddlAlterTables(parsed: DataFrame,
-                     driftKeys: Seq[String] = Seq("extra")): DataFrame = {
-    // Same two-phase min-struct aggregate shape as firstSeen / the dynamic
-    // form — NOT a row_number window over (db,tbl), which shuffles every
-    // insert row into |tables| reducer partitions (a skew cliff at corpus
-    // scale). One scan, one ≤|tables|-row exchange: map-side partials
-    // carry (first-seen presence flags via min-struct, any-presence via
-    // max) for ALL drift keys at once.
-    val keys = driftKeys.sorted
-    val flags = struct(keys.map(k => jval(k).isNotNull.as(k)): _*)
-    val anyAggs = keys.map(k => max(jval(k).isNotNull).as("any_" + k))
-    val aggd = parsed.filter(col("op") === "INS")
-      .groupBy(col("db"), col("tbl"))
-      .agg(min(struct(col("ts"), col("conv_id"), col("turn_idx"),
-        flags.as("f"))).as("m"), anyAggs: _*)
-    // getField / backticked names, not "m.f."+k path strings: a drift
-    // key containing '.' would otherwise parse as a deeper field path
-    // and fail resolution
-    aggd
-      .select(col("db"), col("tbl"), explode(array(keys.map(k =>
-        when(col(s"`any_$k`") &&
-          !col("m").getField("f").getField(k), lit(k))): _*)).as("key"))
-      .filter(col("key").isNotNull)
-      .withColumn("stmt",
-        concat(lit("ALTER TABLE "), col("db"), lit("."), col("tbl"),
-          lit(" ADD "), col("key"), lit(" VARCHAR(255);")))
-      .select("db", "tbl", "stmt")
-  }
 
   // ------------------------------------------------------- full SQL stream
 

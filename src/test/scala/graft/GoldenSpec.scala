@@ -88,11 +88,6 @@ class GoldenSpec extends SparkSuite {
     assert(del == Seq("DELETE FROM test.t WHERE _id = 'x1' and k = 5;"))
     val upd = stmtsOrdered(Pipeline.renderUpdateDynamic(parsedValid(df)))
     assert(upd == Seq("UPDATE test.t SET v = 7 WHERE _id = 'x1' and k = 5;"))
-    // the keyed (explicit-schema) API stays equivalent
-    assert(del == stmtsOrdered(
-      Pipeline.renderDelete(parsedValid(df), Seq("_id", "k"))))
-    assert(upd == stmtsOrdered(
-      Pipeline.renderUpdate(parsedValid(df), Seq("v"), Seq("_id", "k"))))
   }
 
   test("malformed payloads render NO broken SQL (null-guard); routing still counts them") {
@@ -108,34 +103,6 @@ class GoldenSpec extends SparkSuite {
     assert(Pipeline.renderDeleteDynamic(p).count() == 0)
     // the turns are still admitted (valid op/db) and countable per-sink
     assert(p.count() == 4)
-  }
-
-  test("nestedObject1 (transformer_test.go:89-115): object + array flatten with FK") {
-    val payload =
-      s"""{"_id":"$id","name":"Selena Miller","phone":{"personal":"7678456640","work":"8130097989"},""" +
-        """"address":[{"line1":"481 Harborsburgh","zip":"89799"},{"line1":"329 Flatside","zip":"80872"}]}"""
-    val df = turns(("c1", 1, "user", s"INS test.student $payload", "tool_0", T))
-    val p = parsedValid(df)
-
-    val phone = Pipeline.flattenObjectChild(p, "phone", Seq("personal", "work"))
-      .collect()
-    assert(phone.length == 1)
-    val ph = phone(0)
-    assert(ph.getAs[String]("child_tbl") == "student_phone")
-    assert(ph.getAs[String]("parent_id") == id)
-    assert(ph.getAs[String]("personal") == "7678456640")
-    assert(ph.getAs[String]("work") == "8130097989")
-    // deterministic surrogate key (vs reference's uuid.New at
-    // transformer.go:131) — recomputable:
-    assert(ph.getAs[String]("_id") == sha256hex(s"$id|student_phone|0"))
-
-    val addr = Pipeline.flattenArrayChild(p, "address", Seq("line1", "zip"))
-      .orderBy("pos").collect()
-    assert(addr.length == 2)
-    assert(addr.map(_.getAs[String]("line1")).toSeq ==
-      Seq("481 Harborsburgh", "329 Flatside"))
-    assert(addr.map(_.getAs[String]("_id")).distinct.length == 2)
-    assert(addr.forall(_.getAs[String]("parent_id") == id))
   }
 
   test("nestedObject1 DYNAMIC: child columns discovered from the document (transformer.go:74-108)") {
@@ -178,21 +145,14 @@ class GoldenSpec extends SparkSuite {
       .select("stmt").collect().map(_.getString(0)).toSeq
     assert(alters ==
       Seq("ALTER TABLE test.student_address ADD pincode VARCHAR(255);"))
-  }
-
-  test("keyed ALTER detection accepts dotted drift keys (JSON-path probe, no column-path crash)") {
-    // keyed drift keys are JSON paths (jval = get_json_object "$."+k), so
-    // "meta.extra" probes the NESTED meta.extra; the aggregate's derived
-    // column names must not re-parse the dots as field paths (backticks +
-    // getField — the naive "m.f."+k form threw at analysis)
-    val df = turns(
-      ("c1", 1, "user", """INS test.t {"_id":"a1","k":1}""", "tool_0", T),
-      ("c1", 2, "user",
-        """INS test.t {"_id":"a2","k":2,"meta":{"extra":"x"}}""",
-        "tool_0", "2024-01-01 10:05:00"))
-    val alters = Pipeline.ddlAlterTables(parsedValid(df), Seq("meta.extra"))
-      .select("stmt").collect().map(_.getString(0)).toSeq
-    assert(alters == Seq("ALTER TABLE test.t ADD meta.extra VARCHAR(255);"))
+    // each child row carries only its own element's keys: p1's has no pincode
+    val rows = stmtsOrdered(Pipeline.renderChildInsertsDynamic(parsedValid(df)))
+    def sha(parent: String) = sha256hex(s"$parent|student_address|0")
+    assert(rows == Seq(
+      s"INSERT INTO test.student_address (_id, line1, student__id, zip) " +
+        s"VALUES ('${sha("p1")}', '329 Flatside', 'p1', '80872');",
+      s"INSERT INTO test.student_address (_id, line1, pincode, student__id, zip) " +
+        s"VALUES ('${sha("p2")}', '481 Harborsburgh', '123', 'p2', '89799');"))
   }
 
   test("nested diff.u value renders SET k = NULL, never bare JSON braces (r2 ADVICE)") {
@@ -205,9 +165,6 @@ class GoldenSpec extends SparkSuite {
     val want =
       Seq("UPDATE test.t SET addr = NULL, name = 'n' WHERE _id = 'x1';")
     assert(stmtsOrdered(Pipeline.renderUpdateDynamic(parsedValid(df))) == want)
-    // keyed path guards identically
-    assert(stmtsOrdered(Pipeline.renderUpdate(parsedValid(df),
-      Seq("addr", "name"))) == want)
   }
 
   test("parent without _id: child row survives with FK NULL (GetValueFromObject nil → NULL)") {
@@ -242,38 +199,5 @@ class GoldenSpec extends SparkSuite {
       .select("stmt").collect().map(_.getString(0)).toSeq
     assert(got == Seq("INSERT INTO test.t_sub (_id, t__id, v) VALUES " +
       s"('${sha256hex("p1|t_sub|0")}', 'p1', 2);"))
-  }
-
-  test("nestedObject2 (transformer_test.go:116-144): drift inside child tables") {
-    // turn 1: address rows without pincode; turn 2: first element carries
-    // pincode — child-level ALTER must fire (reference drift-in-children)
-    val df = turns(
-      ("c1", 1, "user",
-        s"""INS test.student {"_id":"p1","address":[{"line1":"329 Flatside","zip":"80872"}]}""",
-        "tool_0", T),
-      ("c1", 2, "user",
-        s"""INS test.student {"_id":"p2","address":[{"line1":"481 Harborsburgh","pincode":"123","zip":"89799"}]}""",
-        "tool_0", "2024-01-01 10:05:00"))
-    val p = parsedValid(df)
-    val children = Pipeline.flattenArrayChild(p, "address",
-      Seq("line1", "pincode", "zip"))
-    assert(children.count() == 2)
-    // null where the source element lacked the key
-    val byParent = children.collect().map(r =>
-      r.getAs[String]("parent_id") -> r.getAs[String]("pincode")).toMap
-    assert(byParent("p1") == null && byParent("p2") == "123")
-
-    // child-level drift pass: re-shape child rows to (db, tbl, payload)
-    // and run the same ALTER detector used for parents
-    import org.apache.spark.sql.functions._
-    val childParsed = children.select(
-      col("conv_id"), col("turn_idx"), col("db"),
-      col("child_tbl").as("tbl"), lit("INS").as("op"),
-      to_json(struct(col("line1"), col("pincode"), col("zip"))).as("payload"),
-      col("turn_idx").cast("timestamp").as("ts"))
-    val alters = Pipeline.ddlAlterTables(childParsed, Seq("pincode"))
-      .select("stmt").collect().map(_.getString(0)).toSeq
-    assert(alters ==
-      Seq("ALTER TABLE test.student_address ADD pincode VARCHAR(255);"))
   }
 }

@@ -11,8 +11,9 @@ import graft.operators.{JdbcSink, Pipeline}
 class JdbcSinkSpec extends SparkSuite {
 
   // Derby (the embedded test db) rejects unquoted identifiers starting
-  // with _; the renderer is key-parametrized, so this suite uses `id`.
-  // A Postgres deployment keeps `_id` exactly as the reference does.
+  // with _; the renderer takes its columns from the document, so this
+  // suite's payloads key on `id`. A Postgres deployment keeps `_id`
+  // exactly as the reference does.
 
   private val url = "jdbc:derby:memory:graftdb;create=true"
 
@@ -52,10 +53,10 @@ class JdbcSinkSpec extends SparkSuite {
     val p = parsedValid(df)
 
     // order matters for DML: single ordered partition, like the sink commit
-    val inserts = Pipeline.renderInsert(p, Seq("id", "k"))
+    val inserts = Pipeline.renderInsertDynamic(p)
     assert(JdbcSink.executeStatements(inserts.coalesce(1), url) == 2L)
-    val updates = Pipeline.renderUpdate(p, Seq("k"), Seq("id"))
-    val deletes = Pipeline.renderDelete(p, Seq("id"))
+    val updates = Pipeline.renderUpdateDynamic(p)
+    val deletes = Pipeline.renderDeleteDynamic(p)
     assert(JdbcSink.executeStatements(
       updates.unionByName(deletes).coalesce(1), url) == 2L)
 

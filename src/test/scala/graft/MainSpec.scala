@@ -34,6 +34,9 @@ class MainSpec extends SparkSuite {
       "--input-type", "mongodb")).swap.exists(_.contains("egress")))
     assert(Main.parseArgs(Array("--input", "x", "--output", "y",
       "--output-type", "nope")).isLeft)
+    // a misspelt flag is an error, not a silently ignored option
+    assert(Main.parseArgs(Array("--input", "x", "--output", "y",
+      "--ledgr", "l")) == Left("unknown flag: --ledgr"))
     val ok = Main.parseArgs(Array("--input", "in", "--output", "out",
       "--ledger", "l", "--master", "local[2]"))
     assert(ok == Right(Main.Conf("in", "json", "out", "sql", Some("l"), "local[2]")))
@@ -86,6 +89,17 @@ class MainSpec extends SparkSuite {
     assert(got.takeRight(2).toSeq == Seq(
       "CREATE SCHEMA IF NOT EXISTS shop;",
       "DELETE FROM shop.orders WHERE _id = 'o1';"))
+  }
+
+  test("a failed run releases its cached batch") {
+    val base = tmp()
+    writeInput(s"$base/in", upToDay2 = true)
+    val notADir = Files.createFile(java.nio.file.Paths.get(s"$base/out.sql"))
+    val conf = Main.Conf(s"$base/in", "json", notADir.toString, "sql",
+      None, "local[4]")
+    spark.catalog.clearCache()
+    intercept[Exception](Main.run(spark, conf))
+    assert(spark.sharedState.cacheManager.isEmpty)
   }
 
   test("json -> db: DDL then DML execute transactionally over JDBC (Derby)") {

@@ -48,9 +48,9 @@ class PipelineE2ESpec extends SparkSuite {
   test("row-for-row rendered-text equality under (conv_id, turn_idx) order") {
     val p = parsedValid(fixture)
     val got = stmtsOrdered(
-      Pipeline.renderInsert(p)
-        .unionByName(Pipeline.renderUpdate(p))
-        .unionByName(Pipeline.renderDelete(p)))
+      Pipeline.renderInsertDynamic(p)
+        .unionByName(Pipeline.renderUpdateDynamic(p))
+        .unionByName(Pipeline.renderDeleteDynamic(p)))
     val want =
       (1 to 10).map(i =>
         s"INSERT INTO test.student (_id, k) VALUES ('s$i', $i);") ++ Seq(
@@ -67,14 +67,14 @@ class PipelineE2ESpec extends SparkSuite {
       .select("stmt").collect().map(_.getString(0)).toSet
     assert(schemas == Set("CREATE SCHEMA IF NOT EXISTS test;"))
 
-    val creates = Pipeline.ddlCreateTables(p)
+    val creates = Pipeline.ddlCreateTablesDynamic(p)
       .select("stmt").collect().map(_.getString(0)).toSet
     assert(creates == Set(
       "CREATE TABLE IF NOT EXISTS test.student (_id VARCHAR(255) PRIMARY KEY, k INTEGER);",
       "CREATE TABLE IF NOT EXISTS test.employee (_id VARCHAR(255) PRIMARY KEY, extra VARCHAR(255), k INTEGER);"))
 
     // employee's FIRST doc already has extra → no drift ALTER anywhere
-    assert(Pipeline.ddlAlterTables(p).count() == 0L)
+    assert(Pipeline.ddlAlterTablesDynamic(p).count() == 0L)
   }
 
   test("window ordering: transitions reflect per-conv turn order") {
@@ -85,19 +85,6 @@ class PipelineE2ESpec extends SparkSuite {
     assert(tr(("user", "assistant")) == 1L)
     assert(tr(("user", "tool")) == 1L)
     assert(tr(("system", "user")) == 1L) // c3
-  }
-
-  test("SQL-file sink (W1 analog): golden file content in deterministic order") {
-    val p = parsedValid(fixture)
-    val all = Pipeline.renderInsert(p)
-      .unionByName(Pipeline.renderUpdate(p))
-      .unionByName(Pipeline.renderDelete(p))
-    val dir = java.nio.file.Files.createTempDirectory("graft_sqlsink").toString + "/out"
-    graft.operators.SqlFileSink.write(all, dir)
-    val lines = graft.operators.SqlFileSink.readBack(spark, dir)
-    assert(lines.size == 16)
-    assert(lines.head == "INSERT INTO test.student (_id, k) VALUES ('s1', 1);")
-    assert(lines.last == "DELETE FROM test.employee WHERE _id = 'e11';")
   }
 
   test("flagship entry() runs green on sf0.001 with rows > 0") {

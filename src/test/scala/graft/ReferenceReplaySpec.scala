@@ -56,11 +56,12 @@ class ReferenceReplaySpec extends SparkSuite {
 
     val parentTables = p.filter(col("op") === "INS")
       .select("db", "tbl").distinct().count()
-    val phone = Pipeline.flattenObjectChild(p, "phone", Seq("personal", "work"))
-    val address = Pipeline.flattenArrayChild(p, "address", Seq("line1", "zip"))
-    val childTables = phone.select("db", "child_tbl").distinct()
-      .unionByName(address.select("db", "child_tbl").distinct()).distinct().count()
+    // child tables and their columns are discovered from the nested docs
+    val childTables = Pipeline.ddlCreateChildTablesDynamic(p).count()
     assert(parentTables + childTables == 4) // 4 CREATE TABLE
+    val children = Pipeline.childDocs(p)
+    val phone = children.filter(col("tbl").endsWith("_phone"))
+    val address = children.filter(col("tbl").endsWith("_address"))
 
     // drift keys DISCOVERED from the corpus, not listed: exactly the two
     // ALTERs the reference emitted (workhours int→our INTEGER vs its FLOAT
@@ -76,6 +77,7 @@ class ReferenceReplaySpec extends SparkSuite {
     assert(phone.count() == 7)
     assert(address.count() == 14)
     assert(parentInserts + phone.count() + address.count() == 35) // 35 INSERT
+    assert(Pipeline.renderChildInsertsDynamic(p).count() == 21)
 
     assert(Pipeline.renderUpdateDynamic(p).count() == 1) // 1 UPDATE
     assert(Pipeline.renderDeleteDynamic(p).count() == 1) // 1 DELETE
@@ -109,11 +111,13 @@ class ReferenceReplaySpec extends SparkSuite {
   }
 
   test("child rows carry the parent FK exactly like the reference flatten") {
-    val phone = Pipeline.flattenObjectChild(p, "phone", Seq("personal", "work"))
+    val phone = Pipeline.childDocs(p).filter(col("tbl") === "employees_phone")
     val parents = p.filter(col("op") === "INS" && col("tbl") === "employees")
       .select(get_json_object(col("payload"), "$._id")).collect()
       .map(_.getString(0)).toSet
-    val fks = phone.select("parent_id").collect().map(_.getString(0)).toSet
+    // the FK column is <parentTbl>__id (transformer.go:130-133)
+    val fks = phone.select(get_json_object(col("payload"), "$.employees__id"))
+      .collect().map(_.getString(0)).toSet
     assert(fks.subsetOf(parents) && fks.size == 7)
   }
 }

@@ -29,7 +29,7 @@ class RendererPropSpec extends SparkSuite {
       ("c1", i, "tool", s"""DEL test.t {"_id":"${jsonEscape(s)}"}""", "tool_0",
         "2024-01-01 00:00:00")
     }
-    val got = stmtsOrdered(Pipeline.renderDelete(parsedValid(turns(rows: _*))))
+    val got = stmtsOrdered(Pipeline.renderDeleteDynamic(parsedValid(turns(rows: _*))))
     samples.zip(got).foreach { case (s, stmt) =>
       val escaped = s.replace("'", "''")
       assert(stmt == s"DELETE FROM test.t WHERE _id = '$escaped';",
@@ -54,7 +54,7 @@ class RendererPropSpec extends SparkSuite {
         "2024-01-01 00:00:00")
     }
     val got = stmtsOrdered(
-      Pipeline.renderInsert(parsedValid(turns(rows: _*)), Seq("_id", "v")))
+      Pipeline.renderInsertDynamic(parsedValid(turns(rows: _*))))
     cases.zipWithIndex.foreach { case ((_, want), i) =>
       assert(got(i) ==
         s"INSERT INTO test.t (_id, v) VALUES ('x$i', $want);")
@@ -62,11 +62,15 @@ class RendererPropSpec extends SparkSuite {
   }
 
   test("absent keys are omitted from column list (first-doc schema, D2)") {
+    // a key absent from the document, or present with JSON null, is not
+    // a column of that row's INSERT
     val df = turns(
       ("c1", 1, "user", """INS test.t {"_id":"a"}""", "tool_0",
+        "2024-01-01 00:00:00"),
+      ("c1", 2, "user", """INS test.t {"_id":"b","v":null,"w":1}""", "tool_0",
         "2024-01-01 00:00:00"))
-    val got = stmtsOrdered(
-      Pipeline.renderInsert(parsedValid(df), Seq("_id", "v", "w")))
-    assert(got == Seq("INSERT INTO test.t (_id) VALUES ('a');"))
+    val got = stmtsOrdered(Pipeline.renderInsertDynamic(parsedValid(df)))
+    assert(got == Seq("INSERT INTO test.t (_id) VALUES ('a');",
+      "INSERT INTO test.t (_id, w) VALUES ('b', 1);"))
   }
 }

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.operators.{Checkpoint, JdbcSink, Pipeline}
 import graft.streaming.TranscriptStream
@@ -83,9 +83,9 @@ object Main {
     */
   def run(spark: SparkSession, conf: Conf): (Long, Long) = {
     val turns = readTurns(spark, conf)
-    // pin the batch: several actions follow (reject count, statement count,
-    // sink write, watermark agg) — the cache keeps them on one snapshot and
-    // stops the render DAG executing once per action
+    // pin the batch: several actions read it (reject count, the sink
+    // write or JDBC run, the ledger commit) — the cache keeps them on one
+    // snapshot, and the render DAG's branches scan it instead of the source
     val fresh = conf.ledger.fold(turns)(Checkpoint.pastWatermark(turns, _))
       .cache()
     try {
@@ -96,23 +96,22 @@ object Main {
       if (nRejects > 0)
         System.err.println(s"[graft] dead-lettered $nRejects unknown-op/denied-db turns")
 
+      // the render DAG executes exactly once per run, in the sink
       val stmts = Pipeline.renderAllStatements(valid)
         .orderBy(col("phase"), col("ord"), col("turn_idx"), col("stmt"))
       val n = conf.outputType match {
         case "sql" =>
-          val out = stmts.select(col("stmt")).coalesce(1)
-          val n = out.count() // this run's emissions (the sink is append-only)
-          out.write.mode("append").text(conf.output)
-          n
+          // this run's emissions (the sink is append-only), observed
+          // during the write rather than counted in a second pass
+          val emitted = Observation()
+          stmts.select(col("stmt")).coalesce(1)
+            .observe(emitted, count(lit(1)).as("n"))
+            .write.mode("append").text(conf.output)
+          emitted.get("n").asInstanceOf[Long]
         case _ =>
-          // DDL strictly before DML; single ordered partition per phase so
-          // execution order equals stream order inside the transaction
-          val ddl = stmts.filter(col("phase") < 3)
-            .orderBy(col("phase"), col("ord"), col("stmt")).coalesce(1)
-          val dml = stmts.filter(col("phase") === 3)
-            .orderBy(col("ord"), col("turn_idx"), col("stmt")).coalesce(1)
-          JdbcSink.executeStatements(ddl, conf.output) +
-            JdbcSink.executeStatements(dml, conf.output)
+          // one ordered partition, so execution order equals stream
+          // order; the sink commits the DDL phases before any DML runs
+          JdbcSink.executeStatements(stmts.coalesce(1), conf.output)
       }
 
       conf.ledger.foreach { ledgerPath =>

@@ -218,48 +218,6 @@ object Pipeline {
           lit(" WHERE "), dynWhere, lit(";")))
       .select("conv_id", "turn_idx", "stmt")
 
-  /** CREATE TABLE from the first-seen doc with runtime-derived columns and
-    * inferred types; _id leads as PRIMARY KEY (transformer.go:205-228).
-    */
-  def ddlCreateTablesDynamic(parsed: DataFrame): DataFrame = {
-    val others = filter(scalarKeysOf(kv), k => k =!= "_id")
-    val defs = array_join(transform(others,
-      k => concat(k, lit(" "), sqlTypeOfRaw(element_at(kv, k)))), ", ")
-    withKv(firstSeen(parsed.filter(col("op") === "INS")))
-      .withColumn("stmt",
-        concat(lit("CREATE TABLE IF NOT EXISTS "), col("db"), lit("."),
-          col("tbl"), lit(" (_id VARCHAR(255) PRIMARY KEY"),
-          when(defs === "", lit("")).otherwise(concat(lit(", "), defs)),
-          lit(");")))
-      .select("db", "tbl", "stmt")
-  }
-
-  /** ALTER synthesis with runtime-derived drift keys: any scalar key absent
-    * from the table's first-seen doc but present later gets ADD COLUMN with
-    * the type inferred from its EARLIEST occurrence (deterministic
-    * replacement for the registry race, transformer.go:176-195).
-    */
-  def ddlAlterTablesDynamic(parsed: DataFrame): DataFrame = {
-    // both sides are two-phase aggregates (no full-data window shuffle —
-    // see firstSeen): per-key earliest occurrence vs the first doc's keys
-    val keyRows = withKv(parsed.filter(col("op") === "INS"))
-      .select(col("db"), col("tbl"), col("ts"),
-        col("conv_id"), col("turn_idx"), col("kv"),
-        explode(scalarKeysOf(kv)).as("key"))
-      .withColumn("ktype", sqlTypeOfRaw(element_at(kv, col("key"))))
-    val firstDocKeys = withKv(firstSeen(parsed.filter(col("op") === "INS")))
-      .select(col("db"), col("tbl"), explode(scalarKeysOf(kv)).as("key"))
-    val earliest = keyRows
-      .groupBy(col("db"), col("tbl"), col("key"))
-      .agg(min(struct(col("ts"), col("conv_id"), col("turn_idx"),
-        col("ktype"))).as("m"))
-    earliest.join(firstDocKeys, Seq("db", "tbl", "key"), "left_anti")
-      .withColumn("stmt",
-        concat(lit("ALTER TABLE "), col("db"), lit("."), col("tbl"),
-          lit(" ADD "), col("key"), lit(" "), col("m.ktype"), lit(";")))
-      .select("db", "tbl", "stmt")
-  }
-
   // -------------------------------------------------------------- flatten
 
   /** Nested-value flatten (F1, transformer.go:69-108): payload arrays become
@@ -353,35 +311,93 @@ object Pipeline {
   def renderChildInsertsDynamic(parsed: DataFrame): DataFrame =
     renderInsertDynamic(childDocs(parsed))
 
-  /** Child CREATE TABLE from each child table's first-seen document. */
+  // ------------------------------------------------------------------ DDL
+  // Every table's CREATE and drift ALTERs come from ONE two-level
+  // aggregate over its documents ([[tableDdl]]) — the distributed
+  // replacement for the reference's mutex-guarded first-writer-wins
+  // registry (constants/config_manager.go:31-52) with a
+  // deterministic (ts, conv_id, turn_idx, payload) order instead of the
+  // goroutine arrival race. Parent and child tables share it: the child
+  // docs are parsed-shaped rows, so one aggregate serves both. Both
+  // levels are two-phase min-struct/collect aggregates — map-side
+  // partials reduce every scan partition to ≤|keys| rows before the
+  // exchange; there is no window over all rows (a window would shuffle
+  // EVERY insert into |tables| partitions, a skew cliff at corpus scale).
+
+  /** CREATE (phase 1) and ALTER (phase 2) statements per table, as
+    * (phase, db, tbl, stmt). Only documents that render an INSERT (a
+    * payload json_kv_raw accepts) take part, so a malformed first payload
+    * never decides a table's columns.
+    *
+    * Per (db, tbl, key) — explode_outer, so a key-less doc still competes
+    * for first place — `fd` is the key's first doc with the key's type
+    * there, and `ea` the key's earliest occurrence by (ts, conv_id,
+    * turn_idx) with its type. Per (db, tbl), `first` is the smallest
+    * `fd.at`: the table's first doc. A key belongs to that doc iff its own
+    * `fd.at` equals `first`; those keys, sorted, are the CREATE columns
+    * typed from the first doc (transformer.go:205-228). Every other key is
+    * drift: ALTER ... ADD typed from its earliest occurrence
+    * (transformer.go:176-195). `_id` is never drift — CREATE always
+    * declares it as the PRIMARY KEY.
+    */
+  private def tableDdl(docs: DataFrame): DataFrame = {
+    val perKey = withKv(docs.filter(col("op") === "INS"))
+      .filter(kv.isNotNull)
+      .select(col("db"), col("tbl"), col("ts"), col("conv_id"),
+        col("turn_idx"), col("payload"), kv,
+        explode_outer(scalarKeysOf(kv)).as("key"))
+      .withColumn("ktype", sqlTypeOfRaw(element_at(kv, col("key"))))
+      .groupBy(col("db"), col("tbl"), col("key"))
+      .agg(
+        min(struct(struct(col("ts"), col("conv_id"), col("turn_idx"),
+          col("payload")).as("at"), col("ktype"))).as("fd"),
+        min(struct(col("ts"), col("conv_id"), col("turn_idx"),
+          col("ktype"))).as("ea"))
+    val perTable = perKey
+      .groupBy(col("db"), col("tbl"))
+      .agg(min(col("fd.at")).as("first"),
+        // key-less docs (null key) and _id only count towards `first`;
+        // collect_list drops the nulls
+        collect_list(when(col("key").isNotNull && col("key") =!= "_id",
+          struct(col("key"), col("fd.at").as("at"),
+            col("fd.ktype").as("ctype"), col("ea.ktype").as("atype"))))
+          .as("keys"))
+    val defs = array_join(transform(
+      array_sort(filter(col("keys"), k => k("at") === col("first"))),
+      k => concat(k("key"), lit(" "), k("ctype"))), ", ")
+    val create = concat(lit("CREATE TABLE IF NOT EXISTS "), col("db"),
+      lit("."), col("tbl"), lit(" (_id VARCHAR(255) PRIMARY KEY"),
+      when(defs === "", lit("")).otherwise(concat(lit(", "), defs)),
+      lit(");"))
+    val alters = transform(filter(col("keys"), k => k("at") =!= col("first")),
+      k => struct(lit(2).as("phase"),
+        concat(lit("ALTER TABLE "), col("db"), lit("."), col("tbl"),
+          lit(" ADD "), k("key"), lit(" "), k("atype"), lit(";")).as("stmt")))
+    perTable.select(col("db"), col("tbl"),
+      inline(concat(array(struct(lit(1).as("phase"), create.as("stmt"))),
+        alters)))
+  }
+
+  private def tableDdlPhase(docs: DataFrame, phase: Int): DataFrame =
+    tableDdl(docs).filter(col("phase") === phase).select("db", "tbl", "stmt")
+
+  /** CREATE TABLE per parent table from its first doc: runtime-derived
+    * columns, inferred types, _id leading as PRIMARY KEY.
+    */
+  def ddlCreateTablesDynamic(parsed: DataFrame): DataFrame =
+    tableDdlPhase(parsed, 1)
+
+  /** ALTER ... ADD per parent-table drift key. */
+  def ddlAlterTablesDynamic(parsed: DataFrame): DataFrame =
+    tableDdlPhase(parsed, 2)
+
+  /** Child CREATE TABLE from each child table's first document. */
   def ddlCreateChildTablesDynamic(parsed: DataFrame): DataFrame =
-    ddlCreateTablesDynamic(childDocs(parsed))
+    tableDdlPhase(childDocs(parsed), 1)
 
   /** Child ALTER on drift inside nested documents (transformer_test.go:116-144). */
   def ddlAlterChildTablesDynamic(parsed: DataFrame): DataFrame =
-    ddlAlterTablesDynamic(childDocs(parsed))
-
-  // ------------------------------------------------------------------ DDL
-
-  /** First-seen row per (db,tbl) — the distributed replacement for the
-    * reference's mutex-guarded first-writer-wins registry
-    * (/root/reference/constants/config_manager.go:31-52): deterministic
-    * (ts, conv_id, turn_idx) order instead of goroutine arrival race.
-    *
-    * Shape: a two-phase min-struct AGGREGATE, not a window — map-side
-    * partials reduce every scan partition to ≤|tables| rows before the
-    * exchange. The window form shuffles EVERY insert row into |tables|
-    * partitions (12 reducers for 10¹² rows — a skew cliff at corpus
-    * scale). Tie order matches the window orderBy: lexicographic
-    * (ts, conv_id, turn_idx).
-    */
-  private def firstSeen(ins: DataFrame): DataFrame =
-    ins.groupBy(col("db"), col("tbl"))
-      .agg(min(struct(col("ts"), col("conv_id"), col("turn_idx"),
-        col("payload"))).as("m"))
-      .select(col("db"), col("tbl"), col("m.ts").as("ts"),
-        col("m.conv_id").as("conv_id"), col("m.turn_idx").as("turn_idx"),
-        col("m.payload").as("payload"))
+    tableDdlPhase(childDocs(parsed), 2)
 
   /** CREATE SCHEMA dedup (D1, transformer.go:62-67,230-232). */
   def ddlCreateSchemas(parsed: DataFrame): DataFrame =
@@ -394,29 +410,34 @@ object Pipeline {
   /** The COMPLETE statement stream a reference user gets from one run
     * (main.go:84-107: per-record CREATE SCHEMA → child DDL/DML → parent
     * DDL/DML → UPDATE/DELETE), assembled batch-style with a deterministic
-    * global order: DDL phases first (schemas, CREATEs, ALTERs — parent and
-    * runtime-discovered child tables alike), then DML in (conv_id,
-    * turn_idx) stream order; a parent INSERT sorts before its children's
-    * at the same turn ("(" < "_"). The reference's own interleaving is
-    * goroutine-arrival-racy, so a deterministic convention is strictly
-    * stronger, not a divergence.
+    * global order: DDL phases first (schemas, CREATEs, ALTERs), then DML
+    * in (conv_id, turn_idx) stream order; a parent INSERT sorts before its
+    * children's at the same turn ("(" < "_"). The reference's own
+    * interleaving is goroutine-arrival-racy, so a deterministic convention
+    * is strictly stronger, not a divergence.
+    *
+    * Parent INS rows and their runtime-discovered child docs form one
+    * document set, built once: [[tableDdl]] derives every table's CREATE
+    * and ALTERs from it in a single aggregate, and one INSERT renderer
+    * covers parent and child rows alike. The plan is five branches with
+    * four shuffles in all (schema distinct, per-key and per-table DDL
+    * aggregates, the caller's global sort).
     *
     * Output: (phase, ord, turn_idx, stmt) — callers order by all four.
     */
   def renderAllStatements(parsed: DataFrame): DataFrame = {
-    def ddl(df: DataFrame, phase: Int): DataFrame =
-      df.select(lit(phase).as("phase"), col("stmt").as("ord"),
+    val docs = parsed.filter(col("op") === "INS")
+      .select("conv_id", "turn_idx", "ts", "db", "tbl", "op", "payload")
+      .unionByName(childDocs(parsed))
+    def ddl(df: DataFrame, phase: Column): DataFrame =
+      df.select(phase.as("phase"), col("stmt").as("ord"),
         lit(0).as("turn_idx"), col("stmt"))
     def dml(df: DataFrame): DataFrame =
       df.select(lit(3).as("phase"), col("conv_id").as("ord"),
         col("turn_idx"), col("stmt"))
-    ddl(ddlCreateSchemas(parsed), 0)
-      .unionByName(ddl(ddlCreateTablesDynamic(parsed), 1))
-      .unionByName(ddl(ddlCreateChildTablesDynamic(parsed), 1))
-      .unionByName(ddl(ddlAlterTablesDynamic(parsed), 2))
-      .unionByName(ddl(ddlAlterChildTablesDynamic(parsed), 2))
-      .unionByName(dml(renderInsertDynamic(parsed)))
-      .unionByName(dml(renderChildInsertsDynamic(parsed)))
+    ddl(ddlCreateSchemas(parsed), lit(0))
+      .unionByName(ddl(tableDdl(docs), col("phase")))
+      .unionByName(dml(renderInsertDynamic(docs)))
       .unionByName(dml(renderUpdateDynamic(parsed)))
       .unionByName(dml(renderDeleteDynamic(parsed)))
   }

@@ -33,7 +33,7 @@ object TextOps {
     * Keep-first is a two-phase min(doc_id) aggregate joined back, NOT a
     * row_number window over fingerprint: web corpora duplicate boilerplate
     * pages millions of times, and a window must sort each fingerprint's
-    * entire partition on ONE reducer (the skew cliff the DDL first-seen
+    * entire partition on ONE reducer (the skew cliff the DDL aggregate
     * path already retired). The aggregate combines the hot key map-side,
     * and the join back is AQE-skew-splittable because the build side
     * carries one row per fingerprint. Semantics identical (smallest

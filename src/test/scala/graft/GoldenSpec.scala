@@ -155,6 +155,29 @@ class GoldenSpec extends SparkSuite {
         s"VALUES ('${sha("p2")}', '481 Harborsburgh', '123', 'p2', '89799');"))
   }
 
+  test("sibling child docs: first doc by payload, ALTER typed from the earliest occurrence") {
+    // the elements of one parent array share (ts, conv_id, turn_idx), so the
+    // child table's first doc is the smallest canonical payload — e1's, the
+    // SECOND element — and CREATE takes its keys with its types (b FLOAT,
+    // not e2's INTEGER). z is drift: its earliest occurrences tie on
+    // (ts, conv_id, turn_idx) as INTEGER (e2) and VARCHAR (e3), and the
+    // type breaks the tie; the later BOOLEAN never wins
+    val df = turns(
+      ("c1", 1, "user",
+        """INS test.t {"_id":"p1","items":[{"_id":"e2","b":1,"z":7},""" +
+          """{"_id":"e1","a":"x","b":2.5},{"_id":"e3","z":"s"}]}""",
+        "tool_0", T),
+      ("c1", 2, "user", """INS test.t {"_id":"p2","items":[{"_id":"e4","z":true}]}""",
+        "tool_0", "2024-01-01 10:05:00"))
+    val creates = Pipeline.ddlCreateChildTablesDynamic(parsedValid(df))
+      .select("stmt").collect().map(_.getString(0)).toSeq
+    assert(creates == Seq("CREATE TABLE IF NOT EXISTS test.t_items " +
+      "(_id VARCHAR(255) PRIMARY KEY, a VARCHAR(255), b FLOAT);"))
+    val alters = Pipeline.ddlAlterChildTablesDynamic(parsedValid(df))
+      .select("stmt").collect().map(_.getString(0)).toSeq
+    assert(alters == Seq("ALTER TABLE test.t_items ADD z INTEGER;"))
+  }
+
   test("nested diff.u value renders SET k = NULL, never bare JSON braces (r2 ADVICE)") {
     // the reference renderer has NO map case: its `?` placeholder survives
     // and shifts every later value one slot left (transformer.go:34-52) —

@@ -79,6 +79,27 @@ class JdbcSinkSpec extends SparkSuite {
     assert(queryK("a").isEmpty)
   }
 
+  test("a phase column commits the DDL before the DML; failed DML rolls back alone") {
+    setupSchema()
+    import spark.implicits._
+    val conn0 = DriverManager.getConnection(url)
+    try conn0.createStatement().execute("DROP TABLE app.drift")
+    catch { case _: Exception => () } finally conn0.close()
+    val stream = Seq(
+      (1, "CREATE TABLE app.drift (id VARCHAR(255) PRIMARY KEY, k INTEGER);"),
+      (3, "INSERT INTO app.drift (id, k) VALUES ('d1', 1);"),
+      (3, "INSERT INTO nowhere.nothing VALUES (1);"))
+      .toDF("phase", "stmt")
+    intercept[Exception](JdbcSink.executeStatements(stream.coalesce(1), url))
+    val conn = DriverManager.getConnection(url)
+    try {
+      // the table survives the DML failure; its insert does not
+      val rs = conn.createStatement().executeQuery("SELECT count(*) FROM app.drift")
+      rs.next()
+      assert(rs.getInt(1) == 0)
+    } finally conn.close()
+  }
+
   test("table-shaped append via Spark's JDBC writer") {
     setupSchema()
     import spark.implicits._

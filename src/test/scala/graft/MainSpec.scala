@@ -1,6 +1,10 @@
 package graft
 
 import java.nio.file.Files
+import java.util.concurrent.{LinkedBlockingQueue, TimeUnit}
+
+import org.apache.spark.sql.execution.QueryExecution
+import org.apache.spark.sql.util.QueryExecutionListener
 
 /** The CLI driver end-to-end (reference main.go analog): json turn log in,
   * ordered DDL+DML statement stream out, ledger-gated resume, flag
@@ -89,6 +93,39 @@ class MainSpec extends SparkSuite {
     assert(got.takeRight(2).toSeq == Seq(
       "CREATE SCHEMA IF NOT EXISTS shop;",
       "DELETE FROM shop.orders WHERE _id = 'o1';"))
+  }
+
+  test("the sql path executes the statement DAG once") {
+    val base = tmp()
+    writeInput(s"$base/in", upToDay2 = true)
+    val conf = Main.Conf(s"$base/in", "json", s"$base/out.sql", "sql",
+      None, "local[4]")
+    val seen = new LinkedBlockingQueue[String]()
+    val listener = new QueryExecutionListener {
+      private def note(func: String, qe: QueryExecution): Unit =
+        seen.put(qe.analyzed.output.headOption.map(_.name)
+          .filter(_.startsWith("marker_")).getOrElse(func))
+      def onSuccess(func: String, qe: QueryExecution, ns: Long): Unit =
+        note(func, qe)
+      def onFailure(func: String, qe: QueryExecution, e: Exception): Unit =
+        note(func, qe)
+    }
+    // listener events arrive asynchronously but in order: a marker query
+    // returns once everything executed before it has been seen
+    def executedUntilMarker(tag: String): Seq[String] = {
+      spark.sql(s"SELECT 1 AS marker_$tag").collect()
+      Iterator.continually(Option(seen.poll(60, TimeUnit.SECONDS))
+        .getOrElse(fail(s"marker_$tag never arrived")))
+        .takeWhile(_ != s"marker_$tag").toSeq
+    }
+    spark.listenerManager.register(listener)
+    try {
+      executedUntilMarker("before")
+      Main.run(spark, conf)
+      // the dead-letter count and the write — the write carries the
+      // statement count, so no second pass over the render DAG
+      assert(executedUntilMarker("after") == Seq("count", "command"))
+    } finally spark.listenerManager.unregister(listener)
   }
 
   test("a failed run releases its cached batch") {

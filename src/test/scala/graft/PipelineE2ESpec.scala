@@ -77,6 +77,36 @@ class PipelineE2ESpec extends SparkSuite {
     assert(Pipeline.ddlAlterTablesDynamic(p).count() == 0L)
   }
 
+  private def stmtSet(df: org.apache.spark.sql.DataFrame): Seq[String] =
+    df.select("stmt").collect().map(_.getString(0)).toSeq.sorted
+
+  test("DDL: a malformed first payload never decides the table's columns") {
+    // the earliest INS payload is truncated JSON: it renders no INSERT, so
+    // it must not be the table's first doc either (it used to null the
+    // CREATE and turn every key of the table, _id included, into an ALTER)
+    val p = parsedValid(turns(
+      ("c1", 1, "user", """INS shop.orders {"_id":"o0","total":""", "tool_0", ts(1)),
+      ("c1", 2, "user", """INS shop.orders {"_id":"o1","total":9.5}""", "tool_0", ts(2)),
+      ("c1", 3, "user", """INS shop.orders {"_id":"o2","note":"n","total":3}""",
+        "tool_0", ts(3))))
+    assert(stmtSet(Pipeline.ddlCreateTablesDynamic(p)) == Seq(
+      "CREATE TABLE IF NOT EXISTS shop.orders (_id VARCHAR(255) PRIMARY KEY, total FLOAT);"))
+    assert(stmtSet(Pipeline.ddlAlterTablesDynamic(p)) ==
+      Seq("ALTER TABLE shop.orders ADD note VARCHAR(255);"))
+  }
+
+  test("DDL: _id is never drift, even when the first doc lacks it") {
+    // CREATE always declares _id as the PRIMARY KEY, so ADD _id would fail
+    // on every database
+    val p = parsedValid(turns(
+      ("c1", 1, "user", """INS shop.orders {"nested":{"a":1}}""", "tool_0", ts(1)),
+      ("c1", 2, "user", """INS shop.orders {"_id":"o1","total":9.5}""", "tool_0", ts(2))))
+    assert(stmtSet(Pipeline.ddlCreateTablesDynamic(p)) == Seq(
+      "CREATE TABLE IF NOT EXISTS shop.orders (_id VARCHAR(255) PRIMARY KEY);"))
+    assert(stmtSet(Pipeline.ddlAlterTablesDynamic(p)) ==
+      Seq("ALTER TABLE shop.orders ADD total FLOAT;"))
+  }
+
   test("window ordering: transitions reflect per-conv turn order") {
     val tr = Pipeline.turnTransitions(fixture).collect()
       .map(r => (r.getString(0), r.getString(1)) -> r.getLong(2)).toMap

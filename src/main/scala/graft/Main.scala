@@ -27,9 +27,11 @@ import graft.streaming.TranscriptStream
   *   single-writer in stream order because correctness of UPDATE-after-
   *   INSERT is order-dependent; table-shaped data at scale should use
   *   Checkpoint.commitBatch / JdbcSink.append instead.
-  * - `--ledger` enables resume: only turns with ts past the committed
-  *   watermark render (reference K1-K3, gob checkpoint at main.go:312-355
-  *   — ours is exactly-once per batch instead of at-least-once).
+  * - `--ledger <dir>` enables resume on Checkpoint's file ledger: only
+  *   the input files no ledger entry holds render, and each run that
+  *   finds new files records them after its sink write (reference K1-K3,
+  *   gob checkpoint at main.go:312-355). The input directory is
+  *   append-only: a file written under a new name is new input.
   */
 object Main {
 
@@ -78,16 +80,28 @@ object Main {
     }
 
   /** One batch run; returns (statements emitted, rejects dead-lettered).
-    * Session lifecycle belongs to the caller (main() owns it; tests pass
-    * their shared session).
+    * With a ledger, only the files it has not seen run, and none new
+    * means nothing renders. Session lifecycle belongs to the caller
+    * (main() owns it; tests pass their shared session).
     */
   def run(spark: SparkSession, conf: Conf): (Long, Long) = {
     val turns = readTurns(spark, conf)
-    // pin the batch: several actions read it (reject count, the sink
-    // write or JDBC run, the ledger commit) — the cache keeps them on one
-    // snapshot, and the render DAG's branches scan it instead of the source
-    val fresh = conf.ledger.fold(turns)(Checkpoint.pastWatermark(turns, _))
-      .cache()
+    conf.ledger match {
+      case None => render(turns, conf)
+      case Some(ledgerPath) =>
+        Checkpoint.pending(turns, ledgerPath).fold((0L, 0L)) { inc =>
+          val (n, rejects) = render(inc.turns, conf)
+          Checkpoint.record(spark, ledgerPath, inc, n)
+          (n, rejects)
+        }
+    }
+  }
+
+  private def render(turns: DataFrame, conf: Conf): (Long, Long) = {
+    // pin the batch: two actions read it (the reject count and the sink
+    // write or JDBC run) — the cache keeps them on one snapshot, and the
+    // render DAG's branches scan it instead of the source
+    val fresh = turns.cache()
     try {
       val parsed = Pipeline.parse(fresh)
       val valid = Pipeline.filterValid(parsed)
@@ -112,11 +126,6 @@ object Main {
           // one ordered partition, so execution order equals stream
           // order; the sink commits the DDL phases before any DML runs
           JdbcSink.executeStatements(stmts.coalesce(1), conf.output)
-      }
-
-      conf.ledger.foreach { ledgerPath =>
-        Checkpoint.commitBatch(fresh, ledgerPath,
-          Checkpoint.committedBatches(spark, ledgerPath))
       }
       (n, nRejects)
     } finally fresh.unpersist()

@@ -1,6 +1,12 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import java.io.{FileNotFoundException, IOException}
+import java.net.URI
+import java.nio.charset.StandardCharsets.UTF_8
+
+import org.apache.hadoop.fs.{FileStatus, Path}
+import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
+import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
 import org.apache.spark.sql.functions._
 
 /** Batch checkpoint/resume (reference K1-K3, SURVEY.md §2.6) with
@@ -9,79 +15,147 @@ import org.apache.spark.sql.functions._
   * /root/reference/main.go:291-297; mongo resume uses $gte so the last
   * entry replays, /root/reference/database/mongodb/mongo.go:89-91).
   *
-  * Two pieces:
-  *  - a tiny ledger table (parquet) of committed (batch_id, max_ts) — the
-  *    analog of checkpoint.gob (/root/reference/main.go:312-355);
+  * Resume is by source position, as in the reference (a byte offset into
+  * the input file, main.go:244-248), at file granularity. Two pieces:
+  *  - a FILE LEDGER: the directory `ledgerPath` holds one small text entry
+  *    per committed batch — its batch id, the rows it committed and the
+  *    canonical paths of the source files it consumed (the shape of
+  *    Structured Streaming's seen-files log; the analog of checkpoint.gob,
+  *    reference main.go:312-355). It is read with one directory listing
+  *    and each entry is written atomically (temp file, then rename), by
+  *    plain file-system calls, so the ledger costs no Spark job;
   *  - idempotent sink commits: data lands under batch_id=N partitions with
   *    dynamic partition overwrite, so a replayed batch REPLACES itself
   *    instead of duplicating (the Iceberg-snapshot-commit analog, SURVEY.md
   *    §7.6).
   *
-  * Resume = read ledger → watermark = max committed ts → source filter
-  * `ts > watermark`, which prunes partitions at the scan (the distributed
-  * replacement for the reference's byte-offset Seek, main.go:244-248).
+  * Resume = `turns.inputFiles` minus the ledger's files → a
+  * `_metadata.file_path` predicate on the scan, which Spark prunes at
+  * planning time, so an increment reads only its new files. The ledger
+  * entry is written AFTER the data commit: a crash between the two replays
+  * batch N over the same files, and the overwrite makes the replay a no-op.
+  * A turn's `ts` plays no part, so tied timestamps and late files commit
+  * exactly once.
+  *
+  * Input contract: `turns` is ONE file-source scan over an append-only
+  * landing directory. The ledger keys files by path, as Structured
+  * Streaming's file source does: a file written under a new name (which
+  * every `mode("overwrite")` rewrite does) is new input and commits again;
+  * a file modified under a name already committed is never re-read.
   */
 object Checkpoint {
 
-  /** Ledger-missing is the ONLY condition treated as "no checkpoint yet":
-    * a transient read failure (permissions, corrupt footer, FS hiccup) must
-    * PROPAGATE — swallowing it would silently reset the watermark and
-    * reprocess the full input under batch_id 0 while committed batches
-    * 1..N stay in the sink, duplicating data and breaking exactly-once.
+  /** One committed batch: its id, the rows it committed, the canonical
+    * paths of the source files it consumed.
     */
-  private def ledgerExists(spark: SparkSession, ledgerPath: String): Boolean = {
-    val p = new org.apache.hadoop.fs.Path(ledgerPath)
-    p.getFileSystem(spark.sessionState.newHadoopConf()).exists(p)
+  private final case class LedgerEntry(batchId: Long, rows: Long,
+                                       files: Seq[String])
+
+  /** The part of `turns` no ledger entry holds yet: the scan narrowed to
+    * the new `files`, and the batch id it commits under.
+    */
+  final case class Increment(turns: DataFrame, batchId: Long, files: Seq[String])
+
+  /** One spelling per file. `inputFiles` writes `file:///a%20b`, the
+    * `_metadata.file_path` column `file:/a%20b` (both URL-encoded);
+    * rebuilt from its URI parts either becomes the column's spelling, so
+    * the ledger and the scan predicate compare equal.
+    */
+  def canonicalPath(path: String): String = {
+    val u = new URI(path)
+    new URI(u.getScheme, u.getAuthority, u.getPath, u.getQuery, u.getFragment)
+      .toString
   }
 
-  /** Highest committed event time, if any batch committed yet. Returned as
-    * the engine's own timestamp representation (NTZ → LocalDateTime, LTZ →
-    * Instant/Timestamp) and only ever fed back through lit() — never
-    * interpreted driver-side.
+  /** Canonical paths of the files `turns` scans. Resume keys on them, so
+    * `turns` must be ONE file-source scan: for a cached, in-memory, union
+    * or join input `inputFiles` is empty or partial, and the increment
+    * would silently commit nothing — rejected instead.
     */
-  def lastWatermark(spark: SparkSession, ledgerPath: String): Option[Any] =
-    if (!ledgerExists(spark, ledgerPath)) None
-    else {
-      val rows = spark.read.parquet(ledgerPath)
-        .agg(max(col("max_ts"))).collect()
-      Option(rows(0).get(0))
+  private def sourceFiles(turns: DataFrame): Seq[String] =
+    turns.queryExecution.optimizedPlan.collectLeaves() match {
+      case Seq(r: LogicalRelation) if r.relation.isInstanceOf[HadoopFsRelation] =>
+        turns.inputFiles.toSeq.map(canonicalPath)
+      case leaves => throw new IllegalArgumentException(
+        "resume needs `turns` to be a single file-source scan (spark.read " +
+          "over the landing directory), not cached, in-memory, a union or a " +
+          s"join; this plan reads ${leaves.map(_.nodeName).mkString(", ")}")
     }
 
+  /** Every ledger entry. A missing ledger directory is the ONLY condition
+    * treated as "no checkpoint yet": any other read failure propagates, and
+    * so does a file that is not an entry — a ledger pointed at some other
+    * directory would otherwise restart at batch 0 and replay every file.
+    */
+  private def ledger(spark: SparkSession, ledgerPath: String): Seq[LedgerEntry] = {
+    val dir = new Path(ledgerPath)
+    val fs = dir.getFileSystem(spark.sessionState.newHadoopConf())
+    val listed =
+      try fs.listStatus(dir)
+      catch { case _: FileNotFoundException => Array.empty[FileStatus] }
+    // dot files are the in-flight temp entries and their checksums
+    listed.iterator.map(_.getPath).filterNot(_.getName.startsWith(".")).map { p =>
+      val in = fs.open(p)
+      val text = try new String(in.readAllBytes(), UTF_8) finally in.close()
+      text.linesIterator.toList match {
+        case "v1" :: s"batch $id" :: s"rows $n" :: files
+            if p.getName == id && files.forall(_.startsWith("file ")) =>
+          LedgerEntry(id.toLong, n.toLong, files.map(_.stripPrefix("file ")))
+        case _ => throw new IllegalStateException(
+          s"$p is not a file-ledger entry; give the ledger a directory of its own")
+      }
+    }.toVector
+  }
+
+  /** Batches that committed rows. */
   def committedBatches(spark: SparkSession, ledgerPath: String): Long =
-    if (!ledgerExists(spark, ledgerPath)) 0L
-    else spark.read.parquet(ledgerPath).count()
+    ledger(spark, ledgerPath).count(_.rows > 0).toLong
 
-  /** The turns not yet committed: `ts` past the ledger's watermark, or all
-    * of `turns` before the first commit.
+  /** The files of `turns` no ledger entry holds, or None when none is new.
+    * Costs one listing of the ledger and no Spark job.
     */
-  def pastWatermark(turns: DataFrame, ledgerPath: String): DataFrame =
-    lastWatermark(turns.sparkSession, ledgerPath)
-      .fold(turns)(wm => turns.filter(col("ts") > lit(wm)))
+  def pending(turns: DataFrame, ledgerPath: String): Option[Increment] = {
+    val files = sourceFiles(turns)
+    val done = ledger(turns.sparkSession, ledgerPath)
+    val seen = done.iterator.flatMap(_.files).toSet
+    val fresh = files.filterNot(seen).sorted
+    Option.when(fresh.nonEmpty)(Increment(
+      turns.filter(col("_metadata.file_path").isin(fresh: _*)),
+      done.map(_.batchId).maxOption.fold(0L)(_ + 1), fresh))
+  }
 
-  /** Ledger commit of a batch whose data already landed — in the
-    * partitioned sink (the overload below) or in Main.run's statement
-    * sink: append `(batchId, max ts of batch)`. An empty batch appends
-    * nothing, so it neither advances the watermark nor takes a batch id.
+  /** Ledger commit of an increment whose data already landed — in the
+    * partitioned sink or in Main.run's statement sink. The entry is
+    * written to a temp file and renamed into place, so a reader sees it
+    * whole or not at all. An increment that committed no rows is recorded
+    * too: its files are consumed and never rescanned.
     */
-  def commitBatch(batch: DataFrame, ledgerPath: String, batchId: Long): Unit =
-    batch.agg(max(col("ts")).as("max_ts"))
-      .filter(col("max_ts").isNotNull)
-      .select(lit(batchId).as("batch_id"), col("max_ts"))
-      .write.mode("append").parquet(ledgerPath)
+  def record(spark: SparkSession, ledgerPath: String, inc: Increment,
+             rows: Long): Unit = {
+    val dir = new Path(ledgerPath)
+    val fs = dir.getFileSystem(spark.sessionState.newHadoopConf())
+    val tmp = new Path(dir, s".${inc.batchId}.tmp")
+    val out = fs.create(tmp, true)
+    try out.write((Seq("v1", s"batch ${inc.batchId}", s"rows $rows") ++
+      inc.files.map("file " + _)).mkString("", "\n", "\n").getBytes(UTF_8))
+    finally out.close()
+    if (!fs.rename(tmp, new Path(dir, inc.batchId.toString)))
+      throw new IOException(s"ledger: cannot commit entry ${inc.batchId} at $ledgerPath")
+  }
 
   /** Idempotent data commit: everything in `routed` lands under its
     * batch_id partition; re-running the same batch overwrites in place.
-    * Ledger append AFTER data commit — a crash between the two replays the
-    * batch on resume, and the overwrite makes the replay a no-op.
+    * One write; the rows it committed are observed during that write.
     */
-  def commitBatch(routed: DataFrame, sinkPath: String, ledgerPath: String,
-                  batchId: Long): Unit = {
+  def commitBatch(routed: DataFrame, sinkPath: String, batchId: Long): Long = {
+    val committed = Observation()
     routed.withColumn("batch_id", lit(batchId))
+      .observe(committed, count(lit(1)).as("n"))
       .write.mode("overwrite")
       .option("partitionOverwriteMode", "dynamic")
       .partitionBy("batch_id", "sink")
       .parquet(sinkPath)
-    commitBatch(routed, ledgerPath, batchId)
+    committed.get("n").asInstanceOf[Long]
   }
 
   case class CompactStats(filesBefore: Long, filesAfter: Long, rows: Long)
@@ -172,20 +246,17 @@ object Checkpoint {
     } else false
   }
 
-  /** One resumable pipeline increment: filter past the ledger watermark,
-    * route, commit. Returns rows committed this run.
+  /** One resumable pipeline increment: route the files the ledger has
+    * not seen, commit them, record them. Returns rows committed this run;
+    * with no new file it returns 0 and runs no Spark job.
     */
   def runIncrement(turns: DataFrame, toolDim: DataFrame, sinkPath: String,
-                   ledgerPath: String): Long = {
-    val routed = Pipeline.route(Pipeline.enrich(
-      Pipeline.filterValid(Pipeline.parse(pastWatermark(turns, ledgerPath))),
-      toolDim))
-    val batchId = committedBatches(turns.sparkSession, ledgerPath)
-    val cached = routed.cache()
-    try {
-      val n = cached.count()
-      if (n > 0) commitBatch(cached, sinkPath, ledgerPath, batchId)
+                   ledgerPath: String): Long =
+    pending(turns, ledgerPath).fold(0L) { inc =>
+      val n = commitBatch(Pipeline.route(Pipeline.enrich(
+        Pipeline.filterValid(Pipeline.parse(inc.turns)), toolDim)),
+        sinkPath, inc.batchId)
+      record(turns.sparkSession, ledgerPath, inc, n)
       n
-    } finally cached.unpersist()
-  }
+    }
 }

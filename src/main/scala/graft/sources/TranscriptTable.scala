@@ -4,10 +4,9 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Iceberg-analog materialized transcript table: partitioned by event day
-  * (`days(ts)` layout, SURVEY.md §7.6/SCALE.md) so checkpoint resume and
-  * time-range queries prune partitions at planning time instead of
-  * scanning — the distributed replacement for the reference's byte-offset
-  * Seek (/root/reference/main.go:244-248).
+  * (`days(ts)` layout, SURVEY.md §7.6/SCALE.md) so time-range queries
+  * prune partitions at planning time instead of scanning. (Checkpoint
+  * resume prunes by source file instead — see Checkpoint.)
   */
 object TranscriptTable {
 
@@ -24,7 +23,7 @@ object TranscriptTable {
   def read(spark: SparkSession, path: String): DataFrame =
     spark.read.parquet(path).drop("event_day")
 
-  /** Resume-style scan: everything after the watermark. The predicate on
+  /** Time-range scan: everything after the watermark. The predicate on
     * the partition column prunes whole directories — assert via
     * [[prunedPartitionCount]].
     */

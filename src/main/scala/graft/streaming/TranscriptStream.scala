@@ -39,16 +39,18 @@ object TranscriptStream {
 
   /** Routing stream with exactly-once sinks: foreachBatch commits each
     * micro-batch idempotently (overwrite-by-batch-id, Checkpoint analog of
-    * an Iceberg snapshot commit); Spark's checkpointLocation provides
-    * offset tracking/resume (reference K1-K3).
+    * an Iceberg snapshot commit). The resume record is Spark's own:
+    * the file source's seen-files log and the offset log under
+    * `checkpointDir` (reference K1-K3), the streaming form of Checkpoint's
+    * file ledger.
     */
   def startRouting(turns: DataFrame, toolDim: DataFrame, sinkPath: String,
-                   ledgerPath: String, checkpointDir: String): StreamingQuery =
+                   checkpointDir: String): StreamingQuery =
     routed(turns, toolDim).writeStream
       .option("checkpointLocation", checkpointDir)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (!batch.isEmpty)
-          Checkpoint.commitBatch(batch, sinkPath, ledgerPath, batchId)
+        if (!batch.isEmpty) Checkpoint.commitBatch(batch, sinkPath, batchId)
+        ()
       }
       .trigger(Trigger.AvailableNow())
       .start()

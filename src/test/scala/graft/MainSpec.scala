@@ -1,10 +1,6 @@
 package graft
 
 import java.nio.file.Files
-import java.util.concurrent.{LinkedBlockingQueue, TimeUnit}
-
-import org.apache.spark.sql.execution.QueryExecution
-import org.apache.spark.sql.util.QueryExecutionListener
 
 /** The CLI driver end-to-end (reference main.go analog): json turn log in,
   * ordered DDL+DML statement stream out, ledger-gated resume, flag
@@ -17,20 +13,28 @@ class MainSpec extends SparkSuite {
   private val T1 = "2024-01-01 10:00:00"
   private val T2 = "2024-01-02 10:00:00"
 
-  private def writeInput(dir: String, upToDay2: Boolean): Unit = {
-    val rows = Seq(
-      ("c1", 1, "user",
-        """INS shop.orders {"_id":"o1","total":9.5,"tags":["a","b"]}""",
-        "tool_0", T1),
-      ("c1", 2, "assistant",
-        """UPD shop.orders {"_id":"o1","diff":{"u":{"total":11.5}}}""",
-        "tool_0", T1),
-      ("c1", 3, "system", "SYS shop.orders {}", "tool_0", T1)) ++
-      (if (upToDay2)
-        Seq(("c2", 1, "tool", """DEL shop.orders {"_id":"o1"}""", "tool_0", T2))
-      else Nil)
-    turns(rows: _*).write.mode("overwrite").json(dir)
-  }
+  private val day1 = Seq(
+    ("c1", 1, "user",
+      """INS shop.orders {"_id":"o1","total":9.5,"tags":["a","b"]}""",
+      "tool_0", T1),
+    ("c1", 2, "assistant",
+      """UPD shop.orders {"_id":"o1","diff":{"u":{"total":11.5}}}""",
+      "tool_0", T1),
+    ("c1", 3, "system", "SYS shop.orders {}", "tool_0", T1))
+  private val day2 =
+    Seq(("c2", 1, "tool", """DEL shop.orders {"_id":"o1"}""", "tool_0", T2))
+
+  private def writeInput(dir: String, upToDay2: Boolean): Unit =
+    turns(day1 ++ (if (upToDay2) day2 else Nil): _*)
+      .write.mode("overwrite").json(dir)
+
+  /** Land `rows` as a new file beside the input already in `dir`. */
+  private def appendInput(dir: String,
+                          rows: (String, Int, String, String, String, String)*): Unit =
+    turns(rows: _*).write.mode("append").json(dir)
+
+  private def lines(dir: String): Seq[String] =
+    spark.read.text(dir).collect().map(_.getString(0)).toSeq
 
   test("flag validation mirrors main.go:153-203 (mongodb rejected with reason)") {
     assert(Main.parseArgs(Array("--input", "x")).isLeft)
@@ -77,11 +81,11 @@ class MainSpec extends SparkSuite {
     Main.run(spark, conf)
     val after1 = spark.read.text(s"$base/out.sql").count()
 
-    Main.run(spark, conf) // same input again — watermark filters everything
+    Main.run(spark, conf) // same input again — every file is in the ledger
     val after2 = spark.read.text(s"$base/out.sql").count()
     assert(after2 == after1, "resume replayed already-committed turns")
 
-    writeInput(s"$base/in", upToDay2 = true) // day-2 DELETE arrives
+    appendInput(s"$base/in", day2: _*) // day-2 DELETE arrives as a new file
     Main.run(spark, conf)
     val got = spark.read.text(s"$base/out.sql").collect().map(_.getString(0))
     // the delta batch re-emits ITS OWN DDL (CREATE SCHEMA for the schema it
@@ -95,37 +99,51 @@ class MainSpec extends SparkSuite {
       "DELETE FROM shop.orders WHERE _id = 'o1';"))
   }
 
+  /** Run `conf` over its input, land `late` as a new file, run twice
+    * more; returns the statements the later runs added.
+    */
+  private def addedAfter(conf: Main.Conf,
+                         late: (String, Int, String, String, String, String)): Seq[String] = {
+    Main.run(spark, conf)
+    val before = lines(conf.output)
+    appendInput(conf.input, late)
+    Main.run(spark, conf)
+    Main.run(spark, conf) // replay: nothing new
+    lines(conf.output).diff(before)
+  }
+
+  test("ledger resume: a turn tying the committed max ts, in a later file, renders once") {
+    val base = tmp()
+    writeInput(s"$base/in", upToDay2 = false) // every turn at T1
+    val conf = Main.Conf(s"$base/in", "json", s"$base/out.sql", "sql",
+      Some(s"$base/ledger"), "local[4]")
+    val added = addedAfter(conf,
+      ("c2", 1, "tool", """DEL shop.orders {"_id":"o1"}""", "tool_0", T1))
+    assert(added.sorted == Seq(
+      "CREATE SCHEMA IF NOT EXISTS shop;",
+      "DELETE FROM shop.orders WHERE _id = 'o1';"))
+  }
+
+  test("ledger resume: a late file, every ts below the committed max, renders once") {
+    val base = tmp()
+    writeInput(s"$base/in", upToDay2 = true) // committed max is T2
+    val conf = Main.Conf(s"$base/in", "json", s"$base/out.sql", "sql",
+      Some(s"$base/ledger"), "local[4]")
+    val added = addedAfter(conf,
+      ("c0", 9, "tool", """DEL shop.orders {"_id":"o0"}""", "tool_0", T1))
+    assert(added.sorted == Seq(
+      "CREATE SCHEMA IF NOT EXISTS shop;",
+      "DELETE FROM shop.orders WHERE _id = 'o0';"))
+  }
+
   test("the sql path executes the statement DAG once") {
     val base = tmp()
     writeInput(s"$base/in", upToDay2 = true)
     val conf = Main.Conf(s"$base/in", "json", s"$base/out.sql", "sql",
       None, "local[4]")
-    val seen = new LinkedBlockingQueue[String]()
-    val listener = new QueryExecutionListener {
-      private def note(func: String, qe: QueryExecution): Unit =
-        seen.put(qe.analyzed.output.headOption.map(_.name)
-          .filter(_.startsWith("marker_")).getOrElse(func))
-      def onSuccess(func: String, qe: QueryExecution, ns: Long): Unit =
-        note(func, qe)
-      def onFailure(func: String, qe: QueryExecution, e: Exception): Unit =
-        note(func, qe)
-    }
-    // listener events arrive asynchronously but in order: a marker query
-    // returns once everything executed before it has been seen
-    def executedUntilMarker(tag: String): Seq[String] = {
-      spark.sql(s"SELECT 1 AS marker_$tag").collect()
-      Iterator.continually(Option(seen.poll(60, TimeUnit.SECONDS))
-        .getOrElse(fail(s"marker_$tag never arrived")))
-        .takeWhile(_ != s"marker_$tag").toSeq
-    }
-    spark.listenerManager.register(listener)
-    try {
-      executedUntilMarker("before")
-      Main.run(spark, conf)
-      // the dead-letter count and the write — the write carries the
-      // statement count, so no second pass over the render DAG
-      assert(executedUntilMarker("after") == Seq("count", "command"))
-    } finally spark.listenerManager.unregister(listener)
+    // the dead-letter count and the write — the write carries the
+    // statement count, so no second pass over the render DAG
+    assert(queriesRun(Main.run(spark, conf)) == Seq("count", "command"))
   }
 
   test("a failed run releases its cached batch") {

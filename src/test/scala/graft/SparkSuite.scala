@@ -1,7 +1,11 @@
 package graft
 
+import java.util.concurrent.{LinkedBlockingQueue, TimeUnit}
+
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.QueryExecution
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.util.QueryExecutionListener
 import org.scalatest.funsuite.AnyFunSuite
 import graft.operators.Pipeline
 
@@ -42,4 +46,34 @@ trait SparkSuite extends AnyFunSuite {
   def sha256hex(s: String): String =
     java.security.MessageDigest.getInstance("SHA-256")
       .digest(s.getBytes("UTF-8")).map("%02x".format(_)).mkString
+
+  /** The query executions `body` runs, in order, each named by its action
+    * (`count`, `collect`, `command` for a write …).
+    */
+  def queriesRun(body: => Any): Seq[String] = {
+    val seen = new LinkedBlockingQueue[String]()
+    val listener = new QueryExecutionListener {
+      private def note(func: String, qe: QueryExecution): Unit =
+        seen.put(qe.analyzed.output.headOption.map(_.name)
+          .filter(_.startsWith("marker_")).getOrElse(func))
+      def onSuccess(func: String, qe: QueryExecution, ns: Long): Unit =
+        note(func, qe)
+      def onFailure(func: String, qe: QueryExecution, e: Exception): Unit =
+        note(func, qe)
+    }
+    // listener events arrive asynchronously but in order: a marker query
+    // returns once everything executed before it has been seen
+    def executedUntilMarker(tag: String): Seq[String] = {
+      spark.sql(s"SELECT 1 AS marker_$tag").collect()
+      Iterator.continually(Option(seen.poll(60, TimeUnit.SECONDS))
+        .getOrElse(fail(s"marker_$tag never arrived")))
+        .takeWhile(_ != s"marker_$tag").toSeq
+    }
+    spark.listenerManager.register(listener)
+    try {
+      executedUntilMarker("before")
+      body
+      executedUntilMarker("after")
+    } finally spark.listenerManager.unregister(listener)
+  }
 }

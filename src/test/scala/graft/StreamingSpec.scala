@@ -24,21 +24,20 @@ class StreamingSpec extends SparkSuite {
     val base = tmp()
     val in = s"$base/in"
     val sink = s"$base/sink"
-    val ledger = s"$base/ledger"
     val ckpt = s"$base/ckpt"
 
     val half1 = batchTurns.filter(col("ts") <= lit("2024-01-15").cast("timestamp"))
     half1.write.mode("append").parquet(in)
 
     val q1 = TranscriptStream.startRouting(
-      TranscriptStream.readTurns(spark, in), toolDim, sink, ledger, ckpt)
+      TranscriptStream.readTurns(spark, in), toolDim, sink, ckpt)
     q1.awaitTermination()
 
     // second tranche arrives; a NEW query resumes from the same checkpoint
     batchTurns.filter(col("ts") > lit("2024-01-15").cast("timestamp"))
       .write.mode("append").parquet(in)
     val q2 = TranscriptStream.startRouting(
-      TranscriptStream.readTurns(spark, in), toolDim, sink, ledger, ckpt)
+      TranscriptStream.readTurns(spark, in), toolDim, sink, ckpt)
     q2.awaitTermination()
 
     val expected = Pipeline.route(Pipeline.enrich(
@@ -389,7 +388,6 @@ class StreamingSpec extends SparkSuite {
     val base = tmp()
     val in = s"$base/in"
     val sink = s"$base/sink"
-    val ledger = s"$base/ledger"
     val ckpt = s"$base/ckpt"
 
     val half1 = batchTurns.filter(col("ts") <= lit("2024-01-15").cast("timestamp"))
@@ -404,7 +402,8 @@ class StreamingSpec extends SparkSuite {
         val routed = Pipeline.route(Pipeline.enrich(
           Pipeline.filterValid(Pipeline.parse(batch)), toolDim))
         if (!routed.isEmpty)
-          graft.operators.Checkpoint.commitBatch(routed, sink, ledger, batchId)
+          graft.operators.Checkpoint.commitBatch(routed, sink, batchId)
+        ()
       }
       .trigger(org.apache.spark.sql.streaming.Trigger.ProcessingTime("1 second"))
       .start()
@@ -421,7 +420,7 @@ class StreamingSpec extends SparkSuite {
     batchTurns.filter(col("ts") > lit("2024-01-15").cast("timestamp"))
       .write.mode("append").parquet(in)
     val q2 = TranscriptStream.startRouting(
-      TranscriptStream.readTurns(spark, in), toolDim, sink, ledger, ckpt)
+      TranscriptStream.readTurns(spark, in), toolDim, sink, ckpt)
     q2.awaitTermination()
 
     val expected = Pipeline.route(Pipeline.enrich(parsedValid(batchTurns), toolDim))

@@ -525,29 +525,6 @@ object ExplainAudit {
       Seq("BroadcastHashJoin"),
       forbid = Seq("Window", "CartesianProduct", "SortMergeJoin"))
 
-    // m5 perceptual fingerprints: the m-tier contract — media bytes
-    // stay inside the partition-batched decode boundary; hashing is a
-    // pure per-row pass, ZERO exchanges
-    audit("m5_perceptual_hash",
-      SparkEntry.queries("m5_perceptual_hash")(spark, sfDir),
-      Seq("MapPartitions"),
-      forbid = Seq("Exchange", "Join", "Window", "CartesianProduct"))
-
-    // m6 audio energy windows: decode + window fan-out inside the same
-    // per-partition boundary — media bytes never cross an exchange
-    audit("m6_audio_energy",
-      SparkEntry.queries("m6_audio_energy")(spark, sfDir),
-      Seq("MapPartitions"),
-      forbid = Seq("Exchange", "Join", "Window", "CartesianProduct"))
-
-    // m7 scene cuts: LZW decode + per-frame luma + IN-ROW frame lag all
-    // inside the partition boundary — no window ranks the frames, media
-    // bytes never cross an exchange
-    audit("m7_scene_cuts",
-      SparkEntry.queries("m7_scene_cuts")(spark, sfDir),
-      Seq("MapPartitions"),
-      forbid = Seq("Exchange", "Join", "Window", "CartesianProduct"))
-
     // d20/d21 CDC: chunking is a pure per-row HOF projection; both
     // queries reduce through two-phase hash aggregates over the 32-byte
     // chunk hash (text never crosses an exchange), d21 adds a left-semi

@@ -518,9 +518,9 @@ object SparkEntry {
     "t33_multisuite_decon" -> ((s, dir) =>
       operators.TextOps.multiSuiteDecon(t(s, dir, "documents"))),
     // C4 cleaning pass (Raffel et al. 2020 §2.2) over the deterministic
-    // line-structured rendering (synthesizeLines — the m-tier generator
-    // pattern: flat synthetic docs have no lines/punctuation, so the
-    // generator is what gives the line gate test power)
+    // line-structured rendering (synthesizeLines — flat synthetic docs
+    // have no lines/punctuation, so the generator is what gives the line
+    // gate test power)
     "t34_c4_rules" -> ((s, dir) =>
       operators.TextOps.c4Rules(
         operators.TextOps.synthesizeLines(t(s, dir, "documents")))),
@@ -886,54 +886,6 @@ object SparkEntry {
       operators.Similarity.knnGraphRecall(t(s, dir, "embeddings"))),
     "d8_embedding_ladder" -> ((s, dir) =>
       operators.Similarity.embeddingNearDupLadder(t(s, dir, "embeddings"))),
-    // m-tier: REAL container bytes (PNG/WAV/animated GIF built and
-    // parsed by the pure-JVM MediaCodecs — CRCs, zlib, LZW and all;
-    // JDK-codec cross-validated in MediaCodecsSpec). The generator is
-    // deterministic in the doc row, so the oracle replays the
-    // size/dimension arithmetic while the engine round-trips the bytes.
-    "m1_media_meta" -> ((s, dir) =>
-      operators.Multimodal.decodeMeta(s,
-        operators.Multimodal.synthesizeMedia(s, t(s, dir, "documents")).toDF())
-        .toDF()),
-    "m2_media_resize" -> ((s, dir) =>
-      operators.Multimodal.resizeDims(
-        operators.Multimodal.decodeMeta(s,
-          operators.Multimodal.synthesizeMedia(s, t(s, dir, "documents"))
-            .toDF()).toDF())),
-    "m3_media_features" -> ((s, dir) =>
-      operators.Multimodal.extractFeatures(s,
-        operators.Multimodal.synthesizeMedia(s, t(s, dir, "documents")).toDF())
-        .toDF()),
-    // perceptual fingerprints over DECODED pixels: 8x8 average-hash +
-    // 64-segment stream hash, exact-integer comparisons — the engine
-    // round-trips real PNG bytes, the oracle replays the generator's
-    // pixel arithmetic bit-for-bit
-    "m5_perceptual_hash" -> ((s, dir) =>
-      operators.Multimodal.perceptualHash(s,
-        operators.Multimodal.synthesizeMedia(s, t(s, dir, "documents")).toDF())
-        .toDF()),
-    // windowed audio energy segmentation (VAD first pass) over REAL
-    // decoded WAV PCM; oracle replays the generator's byte arithmetic
-    "m6_audio_energy" -> ((s, dir) =>
-      operators.Multimodal.audioEnergyWindows(s,
-        operators.Multimodal.synthesizeMedia(s, t(s, dir, "documents")).toDF())
-        .toDF()),
-    // frame sampling: every ceil(n/4)th frame of each video row — the
-    // explode fan-out a frame-level extractor consumes; n_frames comes
-    // from the actual GIF image-descriptor walk
-    "m4_frame_sample" -> ((s, dir) =>
-      operators.Multimodal.sampleFrames(
-        operators.Multimodal.decodeMeta(s,
-          operators.Multimodal.synthesizeMedia(s, t(s, dir, "documents"))
-            .toDF()).toDF())),
-    // scene-cut detection: per-frame luma sums from REAL LZW-decoded GIF
-    // frames, in-row lag, cross-multiplied mean-delta threshold — the
-    // shot-boundary screen that makes m4's keyframes land on content
-    // changes; oracle replays the generator's (d+f)%256 pixel arithmetic
-    "m7_scene_cuts" -> ((s, dir) =>
-      operators.Multimodal.sceneCuts(s,
-        operators.Multimodal.synthesizeMedia(s, t(s, dir, "documents")).toDF())
-        .toDF()),
   )
 
   /** DuckDB equivalents over the same parquet tables (events-derived
@@ -1449,189 +1401,5 @@ object SparkEntry {
                                          ORDER BY dot DESC, nid) AS rnk
             FROM d)
       WHERE rnk <= 5""",
-    // m2/m3 oracle parity rests on the documented ASCII-corpus assumption
-    // (same as PolyHash31's, TESTDATA.md): Spark operates on the UTF-8
-    // BYTES of the media column (n = byte length, byteSum over byte
-    // values) while DuckDB's length()/ascii() are CHARACTER semantics —
-    // identical only while every document is single-byte ASCII, which
-    // holds at all three scale factors (verified: length == strlen).
-    // the m-tier oracles replay synthesizeMedia's deterministic
-    // dimension/size arithmetic (PNG: stored-block zlib closed form;
-    // WAV: 44 + data + RIFF pad; GIF: 782 + 42 bytes per 4×4 frame —
-    // each closed form is spec-asserted against the actual encoder in
-    // MediaCodecsSpec) while Spark round-trips the REAL bytes
-    "m1_media_meta" -> """
-      WITH m AS (
-        SELECT doc_id, CAST(length(text) AS BIGINT) AS n,
-          CAST(length(text) % 64 + 1 AS INT) AS w,
-          CAST(length(text) % 30 + 1 AS INT) AS f
-        FROM documents),
-      d AS (
-        SELECT doc_id, n, w, f,
-          CAST(greatest((n + w - 1) // w, 1) AS INT) AS h
-        FROM m),
-      z AS (
-        SELECT doc_id, n, w, f, h,
-          h * (w + 1) AS L
-        FROM d)
-      SELECT doc_id,
-        CASE CAST(doc_id % 3 AS INT) WHEN 0 THEN 'image' WHEN 1 THEN 'audio'
-             ELSE 'video' END AS media_type,
-        CASE CAST(doc_id % 3 AS INT) WHEN 0 THEN 'png' WHEN 1 THEN 'wav'
-             ELSE 'gif' END AS format,
-        CAST(CASE CAST(doc_id % 3 AS INT)
-          WHEN 0 THEN 63 + 5 * greatest((L + 65534) // 65535, 1) + L
-          WHEN 1 THEN 44 + n + n % 2
-          ELSE 782 + 42 * f END AS BIGINT) AS n_bytes,
-        CAST(CASE CAST(doc_id % 3 AS INT) WHEN 0 THEN w WHEN 1 THEN 0
-          ELSE 4 END AS INT) AS width,
-        CAST(CASE CAST(doc_id % 3 AS INT) WHEN 0 THEN h WHEN 1 THEN 0
-          ELSE 4 END AS INT) AS height,
-        CAST(CASE CAST(doc_id % 3 AS INT) WHEN 0 THEN 1 WHEN 1 THEN 0
-          ELSE f END AS INT) AS n_frames,
-        CAST(CASE WHEN doc_id % 3 = 1 THEN 8000 ELSE 0 END AS INT)
-          AS sample_rate,
-        CAST(CASE WHEN doc_id % 3 = 1 THEN n ELSE 0 END AS BIGINT)
-          AS n_samples,
-        CAST(CASE WHEN doc_id % 3 = 1 THEN n // 8 ELSE 0 END AS BIGINT)
-          AS duration_ms
-      FROM z""",
-    "m2_media_resize" -> """
-      WITH b AS (
-        SELECT doc_id, CAST(length(text) AS BIGINT) AS n,
-          CAST(length(text) % 64 + 1 AS INT) AS w
-        FROM documents WHERE doc_id % 3 = 0),
-      m AS (
-        SELECT doc_id, w AS width,
-          CAST(greatest((n + w - 1) // w, 1) AS INT) AS height
-        FROM b)
-      SELECT doc_id, width, height,
-        CAST(greatest(width * 224 // greatest(width, height), 1) AS INT) AS out_w,
-        CAST(greatest(height * 224 // greatest(width, height), 1) AS INT) AS out_h
-      FROM m""",
-    "m3_media_features" -> """
-      WITH s AS (
-        SELECT doc_id, CAST(length(text) AS BIGINT) AS n,
-          CAST(length(text) % 64 + 1 AS BIGINT) AS w,
-          CAST(length(text) % 30 + 1 AS BIGINT) AS f,
-          CAST(COALESCE(list_sum(list_transform(range(1, length(text) + 1),
-            j -> CAST(ascii(substr(text, CAST(j AS INT), 1)) AS BIGINT))), 0)
-            AS BIGINT) AS tsum
-        FROM documents),
-      p AS (
-        SELECT doc_id,
-          CAST(CASE CAST(doc_id % 3 AS INT)
-            WHEN 0 THEN w * greatest((n + w - 1) // w, 1)
-            WHEN 1 THEN n
-            ELSE 16 * f END AS BIGINT) AS np,
-          CAST(CASE WHEN doc_id % 3 = 2
-            THEN COALESCE(list_sum(list_transform(range(0, f),
-              i -> 16 * ((doc_id + i) % 256))), 0)
-            ELSE tsum END AS BIGINT) AS bsum
-        FROM s)
-      SELECT doc_id, CAST(k AS INT) AS feat_idx,
-        (np * (k + 1) + bsum * (k * k + 1)) % 100000 AS value
-      FROM p CROSS JOIN (SELECT unnest(range(0, 8)) AS k) ks""",
-    "m5_perceptual_hash" -> """
-      WITH imgs AS (
-        SELECT doc_id, text, CAST(length(text) AS BIGINT) AS n0,
-          CAST(length(text) % 64 + 1 AS BIGINT) AS w
-        FROM documents WHERE doc_id % 3 = 0),
-      gs AS (
-        SELECT doc_id, text, n0, w,
-          greatest((n0 + w - 1) // w, 1) AS h,
-          w * greatest((n0 + w - 1) // w, 1) AS np,
-          CAST(COALESCE(list_sum(list_transform(range(1, CAST(n0 AS INT) + 1),
-            j -> CAST(ascii(substr(text, CAST(j AS INT), 1)) AS BIGINT))), 0)
-            AS BIGINT) AS gsum
-        FROM imgs),
-      blocks AS (
-        SELECT doc_id, np, gsum, bi.b AS bi, bj.b AS bj,
-          CAST(COALESCE(list_sum(flatten(
-            list_transform(range(bi.b * h // 8, (bi.b + 1) * h // 8), r ->
-              list_transform(range(bj.b * w // 8, (bj.b + 1) * w // 8), c ->
-                CASE WHEN r * w + c < n0
-                  THEN CAST(ascii(substr(text, CAST(r * w + c + 1 AS INT), 1))
-                    AS BIGINT)
-                  ELSE 0 END)))), 0) AS BIGINT) AS bs,
-          ((bi.b + 1) * h // 8 - bi.b * h // 8)
-            * ((bj.b + 1) * w // 8 - bj.b * w // 8) AS bc
-        FROM gs CROSS JOIN (SELECT unnest(range(0, 8)) AS b) bi
-                CROSS JOIN (SELECT unnest(range(0, 8)) AS b) bj),
-      ah AS (
-        SELECT doc_id,
-          CAST(sum(CASE WHEN bs * np > gsum * bc
-            THEN CASE WHEN bi * 8 + bj = 63 THEN -9223372036854775808
-              ELSE 1::BIGINT << CAST(bi * 8 + bj AS INT) END
-            ELSE 0 END) AS BIGINT) AS ahash
-        FROM blocks GROUP BY doc_id),
-      segs AS (
-        SELECT doc_id, np, gsum, s.s AS s,
-          CAST(COALESCE(list_sum(
-            list_transform(range(s.s * np // 64, (s.s + 1) * np // 64), k ->
-              CASE WHEN k < n0
-                THEN CAST(ascii(substr(text, CAST(k + 1 AS INT), 1)) AS BIGINT)
-                ELSE 0 END)), 0) AS BIGINT) AS ss,
-          ((s.s + 1) * np // 64 - s.s * np // 64) AS sc
-        FROM gs CROSS JOIN (SELECT unnest(range(0, 64)) AS s) s),
-      sh AS (
-        SELECT doc_id,
-          CAST(sum(CASE WHEN ss * np > gsum * sc
-            THEN CASE WHEN s = 63 THEN -9223372036854775808
-              ELSE 1::BIGINT << CAST(s AS INT) END
-            ELSE 0 END) AS BIGINT) AS shash
-        FROM segs GROUP BY doc_id)
-      SELECT g.doc_id, CAST(g.w AS INT) AS width, CAST(g.h AS INT) AS height,
-        ahash, shash
-      FROM gs g JOIN ah USING (doc_id) JOIN sh USING (doc_id)""",
-    "m6_audio_energy" -> """
-      WITH a AS (SELECT doc_id, text FROM documents WHERE doc_id % 3 = 1),
-      s AS (
-        SELECT doc_id, list_transform(range(1, length(text) + 1),
-          i -> CAST(ord(text[i]) AS BIGINT) - 128) AS v
-        FROM a),
-      w AS (
-        SELECT doc_id, unnest(range(0, (len(v) + 49) // 50)) AS win_idx, v
-        FROM s),
-      e AS (
-        SELECT doc_id, win_idx,
-          list_slice(v, win_idx * 50 + 1, (win_idx + 1) * 50) AS wv
-        FROM w)
-      SELECT doc_id, win_idx,
-        CAST(len(wv) AS BIGINT) AS win_len,
-        CAST(list_sum(list_transform(wv, x -> x * x)) AS BIGINT) AS energy,
-        (CAST(list_sum(list_transform(wv, x -> x * x)) AS BIGINT)
-          >= 2000 * len(wv)) AS active
-      FROM e""",
-    "m4_frame_sample" -> """
-      WITH v AS (
-        SELECT doc_id, CAST(length(text) % 30 + 1 AS INT) AS n_frames
-        FROM documents WHERE doc_id % 3 = 2)
-      SELECT doc_id, n_frames,
-        CAST(unnest(range(0, n_frames, greatest(n_frames // 4, 1))) AS INT)
-          AS frame_idx
-      FROM v""",
-    // m7 replays the video generator's pixel arithmetic: frame f of doc
-    // d is 16 bytes of (d+f)%256 ⇒ luma_sum = 16·((d+f)%256); the only
-    // deltas ≥ 1024 (thr 64/pixel × 16 pixels) are the 255→0 wraps
-    "m7_scene_cuts" -> """
-      WITH v AS (
-        SELECT doc_id, CAST(length(text) % 30 + 1 AS INT) AS n_frames
-        FROM documents WHERE doc_id % 3 = 2),
-      fr AS (
-        SELECT doc_id, CAST(unnest(range(0, n_frames)) AS BIGINT)
-          AS frame_idx
-        FROM v),
-      lum AS (
-        SELECT doc_id, frame_idx,
-          CAST(16 * ((doc_id + frame_idx) % 256) AS BIGINT) AS luma_sum,
-          CAST(CASE WHEN frame_idx = 0 THEN 0
-            ELSE abs(16 * ((doc_id + frame_idx) % 256)
-                   - 16 * ((doc_id + frame_idx - 1) % 256)) END AS BIGINT)
-            AS delta
-        FROM fr)
-      SELECT doc_id, frame_idx, luma_sum, delta,
-        (frame_idx > 0 AND delta >= 64 * 16) AS is_cut
-      FROM lum""",
   )
 }

@@ -105,15 +105,6 @@ package object functions {
   /** Split a raw JSON array token into raw element tokens. */
   def json_arr_raw(c: Column): Column = column(JsonArrRaw(expression(c)))
 
-  /** get_json_object with a DYNAMIC path column (the public function only
-    * accepts a literal String path; the Catalyst expression itself takes
-    * any expression — non-foldable paths re-compile per row, which is the
-    * price of schema-on-read).
-    */
-  def get_json_dyn(json: Column, path: Column): Column =
-    column(org.apache.spark.sql.catalyst.expressions.GetJsonObject(
-      expression(json), expression(path)))
-
   /** Register the library's expressions in the session's function registry
     * so plain SQL can call them: parse_turn(text), simhash64(arr),
     * rolling_hash(text).

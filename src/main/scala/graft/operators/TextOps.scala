@@ -2912,8 +2912,8 @@ object TextOps {
   // ------------------------------------------------------ C4 cleaning pass
 
   /** t34 generator — deterministic line-structured rendering of the flat
-    * synthetic corpus (the m-tier synthesizeMedia pattern: the engine
-    * consumes the STRUCTURE, the oracle replays the derivation). The
+    * synthetic corpus (the engine consumes the STRUCTURE, the oracle
+    * replays the derivation). The
     * driver's documents have no newlines or sentence punctuation, so a
     * line-level gate over them would be vacuous; this renders each doc
     * as k-word lines (k = doc_id % 7 + 3) with a terminal-punctuation

@@ -93,7 +93,7 @@ tool_dim AS (
     spark.read.parquet(s"$sfDir/events.parquet").createOrReplaceTempView("events")
 
   // the derived table is immutable per (session, sfDir): cache it so each
-  // of the driver's 36 queries doesn't re-run the derivation window
+  // SparkEntry query doesn't re-run the derivation window
   private val derived =
     scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame]
 

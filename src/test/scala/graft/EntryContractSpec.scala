@@ -16,10 +16,25 @@ class EntryContractSpec extends SparkSuite {
   test("oracleSql keys EQUAL queries keys — no query ships without a full oracle") {
     val orphaned = SparkEntry.oracleSql.keySet -- SparkEntry.queries.keySet
     assert(orphaned.isEmpty, s"oracles without queries: $orphaned")
-    // as of round 2 every query is DuckDB-expressible (arithmetic hash
-    // families) — a new rows-only query is a coverage regression
+    // every query is DuckDB-expressible — a new rows-only query is a
+    // coverage regression
     val unoracled = SparkEntry.queries.keySet -- SparkEntry.oracleSql.keySet
     assert(unoracled.isEmpty, s"queries without oracles: $unoracled")
+    // the tiers are p* (pipeline), q* (relational), t* (text curation),
+    // d* (dedup) and e* (ANN); the media tier (m*) is gone
+    val offTier = SparkEntry.queries.keySet.filterNot(_.matches("[pqtde][0-9]+_.*"))
+    assert(offTier.isEmpty, s"queries outside the p/q/t/d/e tiers: $offTier")
+    assert(SparkEntry.queries.size == 135, s"${SparkEntry.queries.size} queries")
+    // the benchmark reads these oracles by key (perfbench's OracleSql.used);
+    // a missing one would otherwise surface only when the benchmark runs
+    val src = new String(java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(
+      "perfbench/src/main/scala/perfbench/OracleSql.scala")), "UTF-8")
+    val usedBlock = "val used[^=]*= Seq\\(([^)]*)\\)".r.findFirstMatchIn(src)
+      .map(_.group(1)).getOrElse(fail("OracleSql.used not found"))
+    val used = "\"([a-z0-9_]+)\"".r.findAllMatchIn(usedBlock).map(_.group(1)).toSet
+    assert(used.contains("p1_parse"), s"OracleSql.used parsed as $used")
+    val missing = used -- SparkEntry.oracleSql.keySet
+    assert(missing.isEmpty, s"oracles the benchmark reads but oracleSql lacks: $missing")
   }
 
   test("every query runs at sf0.001, non-empty unless whitelisted, deterministic") {

@@ -146,38 +146,6 @@ class StreamingSpec extends SparkSuite {
       s"evicted rep must not pair, within-horizon twin must: $pairs")
   }
 
-  test("perceptual media fingerprints are stream-transparent: a tailing " +
-    "media ingest hashes identically to batch") {
-    import spark.implicits._
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    import graft.operators.Multimodal
-    implicit val ctx: org.apache.spark.sql.SQLContext = spark.sqlContext
-
-    // real PNG containers from the committed generator (ids ≡ 0 mod 3)
-    val docs = Seq(3L -> ("a" * 41 + "z" * 150), 6L -> ("z" * 150 + "a" * 41))
-      .toDF("doc_id", "text")
-    val media = Multimodal.synthesizeMedia(spark, docs).collect()
-    val batch = Multimodal.perceptualHash(spark,
-        media.toSeq.map(m => (m.doc_id, m.media_type, m.media))
-          .toDF("doc_id", "media_type", "media"))
-      .collect().map(f => (f.doc_id, f.ahash, f.shash)).sortBy(_._1).toSeq
-
-    val ms = MemoryStream[(Long, String, Array[Byte])]
-    val q = Multimodal.perceptualHash(spark,
-        ms.toDF().toDF("doc_id", "media_type", "media"))
-      .toDF().writeStream.format("memory").queryName("mediafp")
-      .outputMode("append").start()
-    try {
-      ms.addData(media.toSeq.map(m => (m.doc_id, m.media_type, m.media)): _*)
-      q.processAllAvailable()
-    } finally q.stop()
-    val streamed = spark.sql("SELECT doc_id, ahash, shash FROM mediafp")
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
-      .sortBy(_._1).toSeq
-    assert(streamed == batch, s"stream $streamed vs batch $batch")
-    assert(batch.size == 2)
-  }
-
   test("streaming decontamination: stateless verdicts match the batch op row-for-row") {
     import spark.implicits._
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream

@@ -7,8 +7,9 @@ import graft.sources.Transcripts
 
 /** Plan auditor: prints the formatted physical plan of the headline
   * pipeline and key queries, and greps for the properties that must hold
-  * at scale — broadcast join on the enrich dim, pushed filters / pruned
-  * schema on scans, whole-stage codegen coverage. Dev/CI aid.
+  * at scale — a join-free enrich (driver-built dim lookup), pushed
+  * filters / pruned schema on scans, whole-stage codegen coverage.
+  * Dev/CI aid.
   */
 object ExplainAudit {
   def main(args: Array[String]): Unit = {
@@ -48,9 +49,13 @@ object ExplainAudit {
     val turns = Transcripts.transcripts(spark, sfDir)
     val headline = Pipeline.sinkCounts(Pipeline.route(Pipeline.enrich(
       Pipeline.filterValid(Pipeline.parse(turns)), Transcripts.toolDim(spark))))
-    // "*(" = whole-stage-codegen stage marker in the executed plan tree
+    // "*(" = whole-stage-codegen stage marker in the executed plan tree;
+    // the enrich is a projection through the dim lookup: no join, and no
+    // broadcast exchange for the dim
+    val noEnrichJoin = Seq("BroadcastHashJoin", "BroadcastExchange",
+      "SortMergeJoin", "CartesianProduct", "BroadcastNestedLoopJoin")
     audit("headline", headline,
-      Seq("BroadcastHashJoin", "*(", "HashAggregate"))
+      Seq("tool_dim_lookup", "*(", "HashAggregate"), forbid = noEnrichJoin)
 
     // scan-level pushdown: a selective filter + narrow projection on events
     val pushed = Transcripts.events(spark, sfDir)
@@ -461,15 +466,13 @@ object ExplainAudit {
       forbid = Seq("Window", "CartesianProduct", "BroadcastNestedLoopJoin",
         "SortMergeJoin"))
 
-    // p17 composed pipeline rollup: the dim enrich must be a BROADCAST
-    // join (never a shuffle of the fact side), the session window is
-    // BOUNDED by one conversation (the p12/p14 contract), the rollup is
-    // a two-phase hash aggregate; no product joins anywhere
+    // p17 composed pipeline rollup: the dim enrich is the lookup
+    // projection (no join, no broadcast exchange, never a shuffle of the
+    // fact side), the session window is BOUNDED by one conversation (the
+    // p12/p14 contract), the rollup is a two-phase hash aggregate
     audit("p17_pipeline_rollup",
       SparkEntry.queries("p17_pipeline_rollup")(spark, sfDir),
-      Seq("BroadcastHashJoin", "HashAggregate"),
-      forbid = Seq("CartesianProduct", "BroadcastNestedLoopJoin",
-        "SortMergeJoin"))
+      Seq("tool_dim_lookup", "HashAggregate"), forbid = noEnrichJoin)
 
     // d16 edit-distance rung: same candidate shape as d7 (band buckets,
     // ids-only semi restriction) with the bounded-Levenshtein verify a

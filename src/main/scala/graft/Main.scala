@@ -15,11 +15,16 @@ import graft.streaming.TranscriptStream
   *     --output <path | jdbc-url> [--output-type sql|db] \
   *     [--ledger <dir>] [--master local[*]]
   *
-  * - `--input-type json` reads a file/dir of turn records with the
-  *   transcript schema (the reference's `-input-type json`); `parquet`
-  *   reads the table form. `mongodb` is rejected with an explanation:
-  *   a live oplog tail needs network egress this build doesn't assume —
-  *   the streaming file tail (TranscriptStream) is the supported analog.
+  * - `--input-type json` reads a file/dir of turn records (the
+  *   reference's `-input-type json`); `parquet` reads the table form.
+  *   Both are read with the transcript schema
+  *   (TranscriptStream.turnSchema), columns matched by name: a column it
+  *   lacks is ignored, and a parquet column of another type (a BIGINT
+  *   `turn_idx`) fails the run, naming the column. No schema is
+  *   inferred, so the read runs no Spark job. `mongodb` is rejected with
+  *   an explanation: a live oplog tail needs network egress this build
+  *   doesn't assume — the streaming file tail (TranscriptStream) is the
+  *   supported analog.
   * - `--output-type sql` appends the ordered statement stream to a text
   *   sink (reference W1, main.go:205-226); `db` executes it over JDBC in
   *   a transaction per batch, DDL strictly before DML (reference W2 with
@@ -73,11 +78,8 @@ object Main {
   }
 
   def readTurns(spark: SparkSession, conf: Conf): DataFrame =
-    conf.inputType match {
-      case "json" =>
-        spark.read.schema(TranscriptStream.turnSchema).json(conf.input)
-      case _ => spark.read.parquet(conf.input)
-    }
+    spark.read.schema(TranscriptStream.turnSchema).format(conf.inputType)
+      .load(conf.input)
 
   /** One batch run; returns (statements emitted, rejects dead-lettered).
     * With a ledger, only the files it has not seen run, and none new
@@ -110,22 +112,27 @@ object Main {
       if (nRejects > 0)
         System.err.println(s"[graft] dead-lettered $nRejects unknown-op/denied-db turns")
 
-      // the render DAG executes exactly once per run, in the sink
-      val stmts = Pipeline.renderAllStatements(valid)
-        .orderBy(col("phase"), col("ord"), col("turn_idx"), col("stmt"))
+      // the render DAG executes exactly once per run, in the sink. Both
+      // sinks write one partition in stream order, so the stream is
+      // gathered into one partition and sorted there: a global sort would
+      // first run a sampling job over the render branches to pick range
+      // bounds for partitions that are merged anyway. The sort key is a
+      // total order, so the stream is the same either way.
+      val stmts = Pipeline.renderAllStatements(valid).repartition(1)
+        .sortWithinPartitions(col("phase"), col("ord"), col("turn_idx"), col("stmt"))
       val n = conf.outputType match {
         case "sql" =>
           // this run's emissions (the sink is append-only), observed
           // during the write rather than counted in a second pass
           val emitted = Observation()
-          stmts.select(col("stmt")).coalesce(1)
+          stmts.select(col("stmt"))
             .observe(emitted, count(lit(1)).as("n"))
             .write.mode("append").text(conf.output)
           emitted.get("n").asInstanceOf[Long]
         case _ =>
-          // one ordered partition, so execution order equals stream
-          // order; the sink commits the DDL phases before any DML runs
-          JdbcSink.executeStatements(stmts.coalesce(1), conf.output)
+          // execution order equals stream order; the sink commits the
+          // DDL phases before any DML runs
+          JdbcSink.executeStatements(stmts, conf.output)
       }
       (n, nRejects)
     } finally fresh.unpersist()

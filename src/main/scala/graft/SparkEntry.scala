@@ -82,7 +82,7 @@ object SparkEntry {
     "p14_sessionize" -> ((s, dir) =>
       Pipeline.sessionize(Transcripts.transcripts(s, dir))),
     // the p-tier composed flagship (t11's role on the pipeline side):
-    // parse -> filter -> broadcast enrich -> route -> sessionize ->
+    // parse -> filter -> dim-lookup enrich -> route -> sessionize ->
     // per-sink rollup, ONE query with a chained-CTE oracle. Session
     // boundaries are computed over the routed relation (post-filter,
     // post-enrich) so the rollup counts sessions each sink touches.

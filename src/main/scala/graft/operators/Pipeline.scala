@@ -1,8 +1,10 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row}
+import org.apache.spark.sql.api.java.UDF1
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 import graft.functions.{json_arr_raw, json_kv_raw, json_unquote, parse_turn, valid_turn}
 
 /** The log-pipeline operators: parse → filter → enrich → route → aggregate,
@@ -13,8 +15,9 @@ import graft.functions.{json_arr_raw, json_kv_raw, json_unquote, parse_turn, val
   *
   * Everything is declarative DataFrame API so Catalyst gets full pushdown /
   * pruning / whole-stage-codegen; the only custom surface is the fused
-  * ParseTurn expression. No collect(), no RDDs, no driver-side loops — each
-  * stage is a distributed transform that scales by partition count.
+  * ParseTurn expression and the enrich lookup. No RDDs and no driver-side
+  * loops over turns — the one collect() is of the small enrich dimension;
+  * each stage is a distributed transform that scales by partition count.
   */
 object Pipeline {
 
@@ -55,12 +58,45 @@ object Pipeline {
 
   // --------------------------------------------------------------- enrich
 
-  /** Enrich stage: attach tool metadata via broadcast hash join — the dim
-    * side is tiny (≤ thousands of tools) so this is a map-side join with NO
-    * shuffle of the 10^12-turn fact side at any scale.
+  /** Enrich stage: attach the tool dimension's columns to each turn — a
+    * left join on `tool`, run as one projection. The dim is tiny (≤
+    * thousands of tools), so its rows are collected on the driver into a
+    * hash lookup that each turn probes once: O(1) per row, no exchange,
+    * no shuffle of the fact side at any scale. Collecting a literal dim
+    * (a LocalRelation, as [[graft.sources.Transcripts.toolDim]]) runs no
+    * Spark job; any other dim runs the one job its broadcast would. (The
+    * lookup rides in the task closure; a dim grown large would go in a
+    * `sparkContext.broadcast`, which starts no job either.)
+    *
+    * The join's semantics and output schema: `tool`, the fact columns,
+    * then the dim's other columns, all nullable. A turn whose tool is null
+    * or absent from the dim gets nulls; a dim row whose key is null
+    * matches nothing. Keys must be unique — a join would emit the turn
+    * once per match — so a duplicate fails with IllegalArgumentException.
     */
-  def enrich(parsed: DataFrame, toolDim: DataFrame): DataFrame =
-    parsed.join(broadcast(toolDim), Seq("tool"), "left")
+  def enrich(parsed: DataFrame, toolDim: DataFrame): DataFrame = {
+    val dimCols = toolDim.schema.filterNot(_.name == "tool")
+    val lookup = new java.util.HashMap[String, Row]()
+    toolDim.collect().foreach { r =>
+      val key = r.getAs[String]("tool")
+      val value = Row.fromSeq(dimCols.map(f => r.getAs[Any](f.name)))
+      if (key != null && lookup.put(key, value) != null)
+        throw new IllegalArgumentException(
+          s"tool dimension has more than one row for key '$key'")
+    }
+    val probe = udf(new UDF1[String, Row] {
+      def call(tool: String): Row = lookup.get(tool)
+    }, StructType(dimCols.map(_.copy(nullable = true))))
+      .withName("tool_dim_lookup")
+    // two projections: the probe runs once per turn, and its struct's
+    // fields are read in the next (CollapseProject keeps a non-cheap
+    // expression that is read twice in its own projection)
+    val facts = parsed.columns.toSeq.filterNot(_ == "tool").map(col)
+    val dim = col("__tool_dim")
+    parsed.withColumn("__tool_dim", probe(col("tool")))
+      .select((col("tool") +: facts) ++
+        dimCols.map(f => dim.getField(f.name).as(f.name)): _*)
+  }
 
   // ---------------------------------------------------------------- route
 
@@ -421,9 +457,10 @@ object Pipeline {
     * and ALTERs from it in a single aggregate, and one INSERT renderer
     * covers parent and child rows alike. The plan is five branches with
     * four shuffles in all (schema distinct, per-key and per-table DDL
-    * aggregates, the caller's global sort).
+    * aggregates, and the caller's gather into the one partition it sorts).
     *
-    * Output: (phase, ord, turn_idx, stmt) — callers order by all four.
+    * Output: (phase, ord, turn_idx, stmt) — callers order by all four, a
+    * total order of the stream.
     */
   def renderAllStatements(parsed: DataFrame): DataFrame = {
     val docs = parsed.filter(col("op") === "INS")

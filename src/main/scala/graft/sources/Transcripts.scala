@@ -74,8 +74,9 @@ transcripts AS (
   FROM _ev
 )"""
 
-  /** Broadcast-side enrich dimension (SURVEY.md §2.7 joins row; FIXTURES.md
-    * §2). VALUES-literal so the identical text runs in both dialects.
+  /** Enrich dimension (SURVEY.md §2.7 joins row; FIXTURES.md §2).
+    * VALUES-literal so the identical text runs in both dialects; in Spark
+    * it is a LocalRelation, which Pipeline.enrich collects with no job.
     */
   val toolDimCte: String = """
 tool_dim AS (

@@ -70,7 +70,7 @@ object TranscriptStream {
   /** Stream-stream join: turns against a live tool-status stream, matched
     * within a 1-hour validity interval — both sides watermarked so join
     * state is bounded (Spark buffers only rows inside the watermark
-    * horizon). The batch enrich (broadcast dim) is the static analog; this
+    * horizon). The batch enrich (driver-built dim lookup) is the static analog; this
     * is its streaming-metadata form.
     */
   def streamStreamEnrich(turns: DataFrame, toolStatus: DataFrame): DataFrame = {

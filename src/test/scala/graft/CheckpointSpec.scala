@@ -167,22 +167,30 @@ class CheckpointSpec extends SparkSuite {
     assertOnce(sink, 2)
   }
 
-  test("job budget: new files cost one query, the sink write, scanning only them; a replay none") {
+  test("job budget: an increment runs one Spark job, the write; a replay none") {
     val base = tmp()
     val (in, sink, ledger) = (s"$base/in", s"$base/sink", s"$base/ledger")
     land(turns(ins("c1", "o1", T1), ins("c2", "o2", T1)), in)
     increment(in, sink, ledger)
     land(turns(ins("c3", "o3", T2)), in)
-    val scan = spark.read.parquet(in)
+    // read with the transcript schema: no footer job for schema inference
+    val scan = TranscriptTable.read(spark, in)
+    assert(jobsRun(TranscriptTable.read(spark, in)) == 0)
     val inc = Checkpoint.pending(scan, ledger).get
     assert(inc.files.size == 1)
     assert(TranscriptTable.scannedFileCount(inc.turns) == inc.files.size)
+    // the tool dim is collected on the driver (a literal relation: no
+    // job) rather than broadcast, so the sink write is the only job
     assert(queriesRun(Checkpoint.runIncrement(scan, toolDim, sink, ledger)) ==
-      Seq("command"))
-    val again = spark.read.parquet(in)
+      Seq("collect", "command"))
+    land(turns(ins("c4", "o4", T2)), in)
+    assert(jobsRun(Checkpoint.runIncrement(TranscriptTable.read(spark, in),
+      toolDim, sink, ledger)) == 1)
+    val again = TranscriptTable.read(spark, in)
     assert(queriesRun(Checkpoint.runIncrement(again, toolDim, sink, ledger)) ==
       Nil)
-    assertOnce(sink, 3)
+    assert(jobsRun(Checkpoint.runIncrement(again, toolDim, sink, ledger)) == 0)
+    assertOnce(sink, 4)
   }
 
   test("commitBatch is idempotent: same batch id overwrites, never duplicates") {

@@ -2,6 +2,10 @@ package graft
 
 import java.nio.file.Files
 
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.functions.{col, lit}
+import graft.streaming.TranscriptStream
+
 /** The CLI driver end-to-end (reference main.go analog): json turn log in,
   * ordered DDL+DML statement stream out, ledger-gated resume, flag
   * validation, and the full-stream assembly convention.
@@ -144,6 +148,44 @@ class MainSpec extends SparkSuite {
     // the dead-letter count and the write — the write carries the
     // statement count, so no second pass over the render DAG
     assert(queriesRun(Main.run(spark, conf)) == Seq("count", "command"))
+  }
+
+  private lazy val allTurns = turns(day1 ++ day2: _*)
+
+  /** `df` as parquet input in `<base>/in`, rendered to `<base>/out.sql`. */
+  private def parquetInput(base: String, df: DataFrame): Main.Conf = {
+    df.write.parquet(s"$base/in")
+    Main.Conf(s"$base/in", "parquet", s"$base/out.sql", "sql", None, "local[4]")
+  }
+
+  test("parquet input is read with the transcript schema: no job, an extra column ignored") {
+    val base = tmp()
+    val conf = parquetInput(base, allTurns.withColumn("note", lit("x")))
+    assert(jobsRun(Main.readTurns(spark, conf)) == 0)
+    assert(jobsRun(Main.readTurns(spark, conf.copy(inputType = "json"))) == 0)
+    val read = Main.readTurns(spark, conf)
+    assert(read.schema == TranscriptStream.turnSchema)
+    assert(read.collect().toSet == allTurns.collect().toSet)
+  }
+
+  test("parquet input whose turn_idx is BIGINT fails naming the column") {
+    val base = tmp()
+    val conf = parquetInput(base,
+      allTurns.withColumn("turn_idx", col("turn_idx").cast("bigint")))
+    val e = intercept[Exception](Main.run(spark, conf))
+    val messages = Iterator.iterate[Throwable](e)(_.getCause)
+      .takeWhile(_ != null).map(t => String.valueOf(t.getMessage)).mkString("\n")
+    assert(messages.contains("turn_idx"), messages)
+    assert(!new java.io.File(conf.output).exists()) // nothing rendered
+  }
+
+  test("job budget: the sql path over parquet input runs 8 Spark jobs") {
+    val base = tmp()
+    val conf = parquetInput(base, allTurns)
+    // the cached batch's reject count, then the render's adaptive stages;
+    // no schema-inference job, no range-sort sampling job
+    assert(jobsRun(Main.run(spark, conf)) == 8)
+    assert(lines(conf.output).length == 8)
   }
 
   test("a failed run releases its cached batch") {

@@ -2,6 +2,7 @@ package graft
 
 import java.util.concurrent.{LinkedBlockingQueue, TimeUnit}
 
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.execution.QueryExecution
 import org.apache.spark.sql.functions._
@@ -61,19 +62,47 @@ trait SparkSuite extends AnyFunSuite {
       def onFailure(func: String, qe: QueryExecution, e: Exception): Unit =
         note(func, qe)
     }
-    // listener events arrive asynchronously but in order: a marker query
-    // returns once everything executed before it has been seen
-    def executedUntilMarker(tag: String): Seq[String] = {
-      spark.sql(s"SELECT 1 AS marker_$tag").collect()
+    spark.listenerManager.register(listener)
+    try untilMarkers(seen, tag => spark.sql(s"SELECT 1 AS marker_$tag").collect())(body)
+    finally spark.listenerManager.unregister(listener)
+  }
+
+  /** The number of Spark jobs `body` runs — every job, also those no
+    * query execution reports (parquet schema inference, a broadcast).
+    */
+  def jobsRun(body: => Any): Int = {
+    val sc = spark.sparkContext
+    val seen = new LinkedBlockingQueue[String]()
+    val listener = new SparkListener {
+      override def onJobStart(job: SparkListenerJobStart): Unit =
+        seen.put(Option(job.properties).flatMap(p => Option(p.getProperty("marker")))
+          .getOrElse("job"))
+    }
+    // the marker is a one-task job, tagged through a local property
+    def marker(tag: String): Unit = {
+      sc.setLocalProperty("marker", s"marker_$tag")
+      try sc.parallelize(Seq(1), 1).count() finally sc.setLocalProperty("marker", null)
+    }
+    sc.addSparkListener(listener)
+    try untilMarkers(seen, marker)(body).size
+    finally sc.removeSparkListener(listener)
+  }
+
+  /** What a listener put into `seen` while `body` ran. Listener events
+    * arrive asynchronously but in order: once a marker run after `body`
+    * arrives, everything `body` ran has been seen. `marker(tag)` must
+    * make the listener see `marker_<tag>`.
+    */
+  private def untilMarkers(seen: LinkedBlockingQueue[String],
+                           marker: String => Unit)(body: => Any): Seq[String] = {
+    def untilMarker(tag: String): Seq[String] = {
+      marker(tag)
       Iterator.continually(Option(seen.poll(60, TimeUnit.SECONDS))
         .getOrElse(fail(s"marker_$tag never arrived")))
         .takeWhile(_ != s"marker_$tag").toSeq
     }
-    spark.listenerManager.register(listener)
-    try {
-      executedUntilMarker("before")
-      body
-      executedUntilMarker("after")
-    } finally spark.listenerManager.unregister(listener)
+    untilMarker("before")
+    body
+    untilMarker("after")
   }
 }

@@ -4,6 +4,7 @@ import java.nio.file.Files
 
 import org.apache.spark.sql.functions._
 import graft.sources.{Transcripts, TranscriptTable}
+import graft.streaming.TranscriptStream
 
 /** Iceberg-analog layout: resume-style reads must PRUNE day partitions at
   * planning time (the distributed replacement for the reference's
@@ -16,7 +17,11 @@ class TranscriptTableSpec extends SparkSuite {
     val turns = Transcripts.transcripts(spark, "/root/testdata/sf0.001")
     TranscriptTable.materialize(turns, path)
 
+    // read with the transcript schema: no footer job infers one, and the
+    // discovered event_day partition column is dropped
+    assert(jobsRun(TranscriptTable.read(spark, path)) == 0)
     val all = TranscriptTable.read(spark, path)
+    assert(all.schema == TranscriptStream.turnSchema)
     assert(all.count() == turns.count())
 
     val wm = "2024-01-25 00:00:00"

@@ -81,7 +81,8 @@ object Main {
     spark.read.schema(TranscriptStream.turnSchema).format(conf.inputType)
       .load(conf.input)
 
-  /** One batch run; returns (statements emitted, rejects dead-lettered).
+  /** One batch run; returns (statements emitted, turns dead-lettered: an
+    * unknown op, a denied db or no table).
     * With a ledger, only the files it has not seen run, and none new
     * means nothing renders. Session lifecycle belongs to the caller
     * (main() owns it; tests pass their shared session).
@@ -100,17 +101,22 @@ object Main {
   }
 
   private def render(turns: DataFrame, conf: Conf): (Long, Long) = {
-    // pin the batch: two actions read it (the reject count and the sink
-    // write or JDBC run) — the cache keeps them on one snapshot, and the
-    // render DAG's branches scan it instead of the source
-    val fresh = turns.cache()
+    // pin the batch, parsed, admitted and tokenized once per turn: two
+    // actions read it (the reject count and the sink write or JDBC run) —
+    // the cache keeps them on one snapshot, and every branch of the render
+    // DAG scans its columns instead of re-parsing the source
+    val batch = Pipeline.tokenize(turns).cache()
     try {
-      val parsed = Pipeline.parse(fresh)
-      val valid = Pipeline.filterValid(parsed)
-      // unknown-op guard (transformer.go:26-28): count + log, never crash
-      val nRejects = Pipeline.rejects(parsed).count()
+      // unknown-op guard (transformer.go:26-28): count + log, never crash;
+      // a turn without a table (`INS nonamespace {…}`) dead-letters too.
+      // The count builds the cache in one job: counted as an RDD, the
+      // rejects are one narrow scan, where a Dataset count plans an
+      // aggregate whose adaptive stages run three. (Left to the write, the
+      // cache would start a job in each render branch's cache stage.)
+      val nRejects = batch.filter(!col("admitted")).rdd.count()
       if (nRejects > 0)
-        System.err.println(s"[graft] dead-lettered $nRejects unknown-op/denied-db turns")
+        System.err.println(
+          s"[graft] dead-lettered $nRejects unknown-op/denied-db/no-table turns")
 
       // the render DAG executes exactly once per run, in the sink. Both
       // sinks write one partition in stream order, so the stream is
@@ -118,7 +124,7 @@ object Main {
       // first run a sampling job over the render branches to pick range
       // bounds for partitions that are merged anyway. The sort key is a
       // total order, so the stream is the same either way.
-      val stmts = Pipeline.renderAllStatements(valid).repartition(1)
+      val stmts = Pipeline.renderTokens(batch.filter(col("admitted"))).repartition(1)
         .sortWithinPartitions(col("phase"), col("ord"), col("turn_idx"), col("stmt"))
       val n = conf.outputType match {
         case "sql" =>
@@ -135,7 +141,7 @@ object Main {
           JdbcSink.executeStatements(stmts, conf.output)
       }
       (n, nRejects)
-    } finally fresh.unpersist()
+    } finally batch.unpersist()
   }
 
   def main(args: Array[String]): Unit =

@@ -56,6 +56,26 @@ object Pipeline {
   /** Dead-letter path (P3, unknown-op guard transformer.go:26-28). */
   def rejects(parsed: DataFrame): DataFrame = parsed.filter(!validCond)
 
+  /** A turn renders only into a table: `INS nonamespace {…}` passes
+    * ValidTurn with db = ns and tbl NULL, and would render NULL statements.
+    */
+  private def hasTable: Column = col("tbl").isNotNull && col("tbl") =!= ""
+
+  /** The render's input, one row per turn: (conv_id, turn_idx, ts,
+    * admitted, op, db, tbl, payload, kv). Each turn is parsed once
+    * (parse_turn), admitted once (valid_turn and a table) and, if
+    * admitted, its payload tokenized once (`kv`, json_kv_raw). `admitted`
+    * is never NULL: every turn either renders or is dead-lettered. Main
+    * caches this projection, so its reject count and every branch of
+    * [[renderTokens]] read these columns instead of re-deriving them.
+    */
+  def tokenize(turns: DataFrame): DataFrame =
+    parse(turns)
+      .select(col("conv_id"), col("turn_idx"), col("ts"),
+        (validCond && hasTable).as("admitted"), col("op"), col("db"),
+        col("tbl"), col("payload"))
+      .withColumn("kv", when(col("admitted"), json_kv_raw(col("payload"))))
+
   // --------------------------------------------------------------- enrich
 
   /** Enrich stage: attach the tool dimension's columns to each turn — a
@@ -130,21 +150,36 @@ object Pipeline {
   // semantics (map[string]interface{} payloads, transformer.go:54-114) —
   // so no caller supplies a key list.
   //
-  // All renderers share ONE tokenizer pass per row: json_kv_raw parses the
-  // payload once into map<key, raw-json-token> (aliased as `kv`, so the
-  // optimizer's CollapseProject keeps the non-cheap multi-consumer
-  // expression in its own projection and everything downstream is map
-  // lookups). Raw tokens keep their JSON quoting, so the renderer switches
-  // on the ACTUAL value type like the reference does (transformer.go:34-52)
-  // — a numeric-looking JSON *string* "89799" stays quoted and VARCHAR.
+  // Every renderer reads ONE tokenizer pass per row: the `kv` column,
+  // json_kv_raw's map<key, raw-json-token> of the payload; everything
+  // downstream is map lookups. Each kind has one core over kv-carrying rows
+  // (conv_id, turn_idx, ts, op, db, tbl, payload, kv). Main feeds the cores
+  // [[tokenize]]'s cached projection, so no branch re-parses or
+  // re-tokenizes a turn; the public per-kind renderers take parse-shaped
+  // rows and add kv with [[withKv]]. Raw tokens keep their JSON quoting, so
+  // the renderer switches on the ACTUAL value type like the reference does
+  // (transformer.go:34-52) — a numeric-looking JSON *string* "89799" stays
+  // quoted and VARCHAR.
 
   private def jval(key: String): Column =
     get_json_object(col("payload"), "$." + key)
 
   private def kv: Column = col("kv")
 
-  private def withKv(df: DataFrame): DataFrame =
-    df.withColumn("kv", json_kv_raw(col("payload")))
+  /** Parse-shaped rows → the cores' input: the turns with a table, their
+    * payloads tokenized (aliased as `kv`, so CollapseProject keeps the
+    * non-cheap multi-consumer expression in its own projection).
+    */
+  private def withKv(parsed: DataFrame): DataFrame =
+    parsed.filter(hasTable).withColumn("kv", json_kv_raw(col("payload")))
+
+  /** The rows of one op whose payload tokenized: a NULL kv (a payload that
+    * is not a JSON object) renders nothing rather than broken SQL. Guard
+    * kv, never stmt: a pushed-down isnotnull(stmt) would inline the whole
+    * statement expression into the filter.
+    */
+  private def opRows(tok: DataFrame, op: String): DataFrame =
+    tok.filter(col("op") === op && kv.isNotNull)
 
   /** Raw token present and renderable as a scalar literal (JSON null keys
     * are omitted from INSERT column lists, matching round-1 semantics).
@@ -192,12 +227,10 @@ object Pipeline {
     * map and are dropped rather than emitting broken SQL — route them via
     * [[rejects]]-style auditing upstream if they must be counted.
     */
-  def renderInsertDynamic(parsed: DataFrame): DataFrame =
-    withKv(parsed.filter(col("op") === "INS"))
-      // null-guard on kv, NOT on stmt: a pushed-down isnotnull(stmt) would
-      // inline the whole stmt expression (and ~10 json_kv_raw calls) into
-      // the filter below the kv projection
-      .filter(kv.isNotNull)
+  def renderInsertDynamic(parsed: DataFrame): DataFrame = inserts(withKv(parsed))
+
+  private def inserts(tok: DataFrame): DataFrame =
+    opRows(tok, "INS")
       .withColumn("stmt",
         concat(lit("INSERT INTO "), col("db"), lit("."), col("tbl"),
           lit(" ("), array_join(scalarKeysOf(kv), ", "),
@@ -223,7 +256,9 @@ object Pipeline {
     * (all scalar root keys — the o2 analog). SET NULL is driven by diff.d
     * KEY PRESENCE (the value is ignored, transformer.go:279-282).
     */
-  def renderUpdateDynamic(parsed: DataFrame): DataFrame = {
+  def renderUpdateDynamic(parsed: DataFrame): DataFrame = updates(withKv(parsed))
+
+  private def updates(tok: DataFrame): DataFrame = {
     val empty = array().cast("array<string>")
     val setKeys = array_sort(array_union(
       coalesce(map_keys(col("ukv")), empty),
@@ -238,7 +273,7 @@ object Pipeline {
       when(isScalarRaw(u), concat(k, lit(" = "), sqlLiteralRaw(u)))
         .otherwise(concat(k, lit(" = NULL")))
     })
-    withDiffKv(withKv(parsed.filter(col("op") === "UPD")).filter(kv.isNotNull))
+    withDiffKv(opRows(tok, "UPD"))
       .withColumn("stmt",
         concat(lit("UPDATE "), col("db"), lit("."), col("tbl"), lit(" SET "),
           array_join(setParts, ", "), lit(" WHERE "), dynWhere, lit(";")))
@@ -246,9 +281,10 @@ object Pipeline {
   }
 
   /** DELETE synthesis: WHERE from ALL payload keys (transformer.go:301-319). */
-  def renderDeleteDynamic(parsed: DataFrame): DataFrame =
-    withKv(parsed.filter(col("op") === "DEL"))
-      .filter(kv.isNotNull)
+  def renderDeleteDynamic(parsed: DataFrame): DataFrame = deletes(withKv(parsed))
+
+  private def deletes(tok: DataFrame): DataFrame =
+    opRows(tok, "DEL")
       .withColumn("stmt",
         concat(lit("DELETE FROM "), col("db"), lit("."), col("tbl"),
           lit(" WHERE "), dynWhere, lit(";")))
@@ -280,10 +316,10 @@ object Pipeline {
   // ITSELF at runtime (transformer.go:74-108): the child doc's keys drive
   // the child CREATE/ALTER/INSERT, with `_id` + `<parentTbl>__id` FK
   // synthesized only when the child lacks `_id` (transformer.go:127-134).
-  // childDocs re-shapes every nested value into a parsed-shaped row
-  // (db, tbl = <parentTbl>_<key>, payload = canonical child JSON), so the
-  // SAME dynamic renderers and DDL operators run unchanged on child
-  // tables — discovery, drift and rendering share one code path.
+  // childDocs re-shapes every nested value into a kv-carrying row (db,
+  // tbl = <parentTbl>_<key>, kv = the child's merged map), so the SAME
+  // INSERT and DDL cores run unchanged on child tables — discovery, drift
+  // and rendering share one code path.
 
   private def escJsonKey(k: Column): Column =
     regexp_replace(k, "([\"\\\\])", "\\\\$1")
@@ -294,20 +330,28 @@ object Pipeline {
       k => concat(lit("\""), escJsonKey(k), lit("\":"), element_at(m, k))),
       ","), lit("}"))
 
-  /** One parsed-shaped row per nested child document. Array values explode
-    * per element; a non-object element becomes a single `value` column
-    * (conscious divergence: the reference type-asserts object elements and
-    * would panic on scalars, transformer.go:87). Surrogate `_id` is the
-    * deterministic position-stable sha2 (T2 fix; reference uuid.New at
+  /** One row per nested child document: (conv_id, turn_idx, ts, db, tbl,
+    * op, payload, kv). Array values explode per element; a non-object
+    * element becomes a single `value` column (conscious divergence: the
+    * reference type-asserts object elements and would panic on scalars,
+    * transformer.go:87). Surrogate `_id` is the deterministic
+    * position-stable sha2 (T2 fix; reference uuid.New at
     * transformer.go:131).
+    *
+    * `kv` is the child's merged map itself, never re-tokenized, and it is
+    * never NULL, so the cores' null guard folds away on child rows.
+    * `payload` is the map's canonical JSON text (sorted keys); it serves
+    * only as the DDL first-doc tie-break. Where the text re-tokenizes,
+    * json_kv_raw(payload) equals kv (RenderFuzzSpec).
     */
-  def childDocs(parsed: DataFrame): DataFrame = {
+  def childDocs(parsed: DataFrame): DataFrame = children(withKv(parsed))
+
+  private def children(tok: DataFrame): DataFrame = {
     val nestedKeys = filter(array_sort(map_keys(kv)), k => {
       val raw = element_at(kv, k)
       raw.startsWith("{") || raw.startsWith("[")
     })
-    val base = withKv(parsed.filter(col("op") === "INS"))
-      .filter(kv.isNotNull)
+    val base = opRows(tok, "INS")
       .withColumn("nk", explode(nestedKeys))
       .withColumn("nraw", element_at(kv, col("nk")))
       .withColumn("child_tbl", concat(col("tbl"), lit("_"), col("nk")))
@@ -340,12 +384,12 @@ object Pipeline {
               concat(col("tbl"), lit("__id")), col("parent_raw")))))
       .select(col("conv_id"), col("turn_idx"), col("ts"), col("db"),
         col("child_tbl").as("tbl"), lit("INS").as("op"),
-        jsonOfKv(col("full")).as("payload"))
+        jsonOfKv(col("full")).as("payload"), col("full").as("kv"))
   }
 
   /** Child INSERT synthesis with runtime-discovered columns (F1 + T3). */
   def renderChildInsertsDynamic(parsed: DataFrame): DataFrame =
-    renderInsertDynamic(childDocs(parsed))
+    inserts(childDocs(parsed))
 
   // ------------------------------------------------------------------ DDL
   // Every table's CREATE and drift ALTERs come from ONE two-level
@@ -377,8 +421,7 @@ object Pipeline {
     * declares it as the PRIMARY KEY.
     */
   private def tableDdl(docs: DataFrame): DataFrame = {
-    val perKey = withKv(docs.filter(col("op") === "INS"))
-      .filter(kv.isNotNull)
+    val perKey = opRows(docs, "INS")
       .select(col("db"), col("tbl"), col("ts"), col("conv_id"),
         col("turn_idx"), col("payload"), kv,
         explode_outer(scalarKeysOf(kv)).as("key"))
@@ -421,11 +464,11 @@ object Pipeline {
     * columns, inferred types, _id leading as PRIMARY KEY.
     */
   def ddlCreateTablesDynamic(parsed: DataFrame): DataFrame =
-    tableDdlPhase(parsed, 1)
+    tableDdlPhase(withKv(parsed), 1)
 
   /** ALTER ... ADD per parent-table drift key. */
   def ddlAlterTablesDynamic(parsed: DataFrame): DataFrame =
-    tableDdlPhase(parsed, 2)
+    tableDdlPhase(withKv(parsed), 2)
 
   /** Child CREATE TABLE from each child table's first document. */
   def ddlCreateChildTablesDynamic(parsed: DataFrame): DataFrame =
@@ -435,9 +478,14 @@ object Pipeline {
   def ddlAlterChildTablesDynamic(parsed: DataFrame): DataFrame =
     tableDdlPhase(childDocs(parsed), 2)
 
-  /** CREATE SCHEMA dedup (D1, transformer.go:62-67,230-232). */
+  /** CREATE SCHEMA dedup (D1, transformer.go:62-67,230-232) over the
+    * admitted turns that have a table.
+    */
   def ddlCreateSchemas(parsed: DataFrame): DataFrame =
-    filterValid(parsed).select(col("db")).distinct()
+    schemas(filterValid(parsed).filter(hasTable))
+
+  private def schemas(tok: DataFrame): DataFrame =
+    tok.select(col("db")).distinct()
       .withColumn("stmt",
         concat(lit("CREATE SCHEMA IF NOT EXISTS "), col("db"), lit(";")))
 
@@ -452,31 +500,43 @@ object Pipeline {
     * interleaving is goroutine-arrival-racy, so a deterministic convention
     * is strictly stronger, not a divergence.
     *
-    * Parent INS rows and their runtime-discovered child docs form one
-    * document set, built once: [[tableDdl]] derives every table's CREATE
-    * and ALTERs from it in a single aggregate, and one INSERT renderer
-    * covers parent and child rows alike. The plan is five branches with
-    * four shuffles in all (schema distinct, per-key and per-table DDL
-    * aggregates, and the caller's gather into the one partition it sorts).
+    * `parsed` is parse-shaped; its admitted turns render, exactly as the
+    * union of the public per-kind renderers would render them.
     *
     * Output: (phase, ord, turn_idx, stmt) — callers order by all four, a
     * total order of the stream.
     */
-  def renderAllStatements(parsed: DataFrame): DataFrame = {
-    val docs = parsed.filter(col("op") === "INS")
-      .select("conv_id", "turn_idx", "ts", "db", "tbl", "op", "payload")
-      .unionByName(childDocs(parsed))
+  def renderAllStatements(parsed: DataFrame): DataFrame =
+    renderTokens(withKv(filterValid(parsed)))
+
+  /** [[renderAllStatements]] over admitted turns that already carry `kv`
+    * ([[tokenize]]'s rows where `admitted`; Main passes its cached batch).
+    *
+    * Parent INS rows and their runtime-discovered child docs form one
+    * document set, each row with its kv: [[tableDdl]] derives every
+    * table's CREATE and ALTERs from it in a single aggregate, and one
+    * INSERT core covers parent and child rows alike. No branch parses a
+    * turn or tokenizes a payload; over a cached input each branch scans
+    * the cache. The plan is five branches with four shuffles in all
+    * (schema distinct, per-key and per-table DDL aggregates, and the
+    * caller's gather into the one partition it sorts); the child docs are
+    * built in the DDL and the INSERT branch alike.
+    */
+  def renderTokens(tok: DataFrame): DataFrame = {
+    val docs = tok.filter(col("op") === "INS")
+      .select("conv_id", "turn_idx", "ts", "db", "tbl", "op", "payload", "kv")
+      .unionByName(children(tok))
     def ddl(df: DataFrame, phase: Column): DataFrame =
       df.select(phase.as("phase"), col("stmt").as("ord"),
         lit(0).as("turn_idx"), col("stmt"))
     def dml(df: DataFrame): DataFrame =
       df.select(lit(3).as("phase"), col("conv_id").as("ord"),
         col("turn_idx"), col("stmt"))
-    ddl(ddlCreateSchemas(parsed), lit(0))
+    ddl(schemas(tok), lit(0))
       .unionByName(ddl(tableDdl(docs), col("phase")))
-      .unionByName(dml(renderInsertDynamic(docs)))
-      .unionByName(dml(renderUpdateDynamic(parsed)))
-      .unionByName(dml(renderDeleteDynamic(parsed)))
+      .unionByName(dml(inserts(docs)))
+      .unionByName(dml(updates(tok)))
+      .unionByName(dml(deletes(tok)))
   }
 
   // ----------------------------------------------------------------- skew

@@ -3,7 +3,11 @@ package graft
 import java.nio.file.Files
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.{FilterExec, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
 import org.apache.spark.sql.functions.{col, lit}
+import graft.functions.{JsonKvRaw, ParseTurn, ValidTurn}
 import graft.streaming.TranscriptStream
 
 /** The CLI driver end-to-end (reference main.go analog): json turn log in,
@@ -145,9 +149,66 @@ class MainSpec extends SparkSuite {
     writeInput(s"$base/in", upToDay2 = true)
     val conf = Main.Conf(s"$base/in", "json", s"$base/out.sql", "sql",
       None, "local[4]")
-    // the dead-letter count and the write — the write carries the
-    // statement count, so no second pass over the render DAG
-    assert(queriesRun(Main.run(spark, conf)) == Seq("count", "command"))
+    // the dead-letter count (an RDD count of the cached batch) and the
+    // write — the write carries the statement count, so no second pass
+    // over the render DAG
+    assert(queriesRun(Main.run(spark, conf)) == Seq("rdd", "command"))
+  }
+
+  /** Every operator of an executed plan, through the adaptive stages,
+    * down to and including the cached relations' scans (a cache's own
+    * plan is not among them).
+    */
+  private object Operators extends AdaptiveSparkPlanHelper {
+    def apply(plan: SparkPlan): Seq[SparkPlan] = collect(plan) { case p => p }
+  }
+
+  test("plan audit: the sql path parses, admits and tokenizes each turn once, below its cache") {
+    val base = tmp()
+    writeInput(s"$base/in", upToDay2 = true)
+    val conf = Main.Conf(s"$base/in", "json", s"$base/out.sql", "sql",
+      None, "local[4]")
+    val writes = executionsRun(Main.run(spark, conf)).collect { case ("command", qe) => qe }
+    assert(writes.size == 1)
+    val ops = Operators(writes.head.executedPlan)
+    assert(ops.exists(_.isInstanceOf[InMemoryTableScanExec]), "the write reads no cache")
+    val above = ops.flatMap(op => op.expressions.flatMap(_.collect {
+      case e: ParseTurn => s"${op.nodeName}: $e"
+      case e: ValidTurn => s"${op.nodeName}: $e"
+      case e: JsonKvRaw if e.child.references.exists(_.name == "payload") =>
+        s"${op.nodeName}: $e"
+    }))
+    assert(above.isEmpty, "the write re-derives a turn above its cache")
+    // a null guard pushed through the child docs' projection inlines
+    // their map builder into an interpreted filter
+    val filters = ops.collect { case f: FilterExec => f.condition }
+      .filter(_.exists(_.isInstanceOf[JsonKvRaw]))
+    assert(filters.isEmpty, s"the write tokenizes in a filter: $filters")
+  }
+
+  test("a turn without a table dead-letters; no NULL statement reaches the sink") {
+    val base = tmp()
+    turns(day1 ++ Seq(
+      ("c3", 1, "user", """INS nonamespace {"_id":"n1"}""", "tool_0", T1),
+      ("c3", 2, "user", """INS shop. {"_id":"n2"}""", "tool_0", T1)): _*)
+      .write.json(s"$base/in")
+    val conf = Main.Conf(s"$base/in", "json", s"$base/out.sql", "sql",
+      None, "local[4]")
+    val (n, rejects) = Main.run(spark, conf)
+    assert(rejects == 3) // SYS and both table-less turns
+    val got = lines(conf.output)
+    assert(n == got.length.toLong)
+    assert(got == Seq(
+      "CREATE SCHEMA IF NOT EXISTS shop;",
+      "CREATE TABLE IF NOT EXISTS shop.orders (_id VARCHAR(255) PRIMARY KEY, total FLOAT);",
+      "CREATE TABLE IF NOT EXISTS shop.orders_tags (_id VARCHAR(255) PRIMARY KEY, " +
+        "orders__id VARCHAR(255), value VARCHAR(255));",
+      "INSERT INTO shop.orders (_id, total) VALUES ('o1', 9.5);",
+      s"INSERT INTO shop.orders_tags (_id, orders__id, value) " +
+        s"VALUES ('${sha256hex("o1|orders_tags|0")}', 'o1', 'a');",
+      s"INSERT INTO shop.orders_tags (_id, orders__id, value) " +
+        s"VALUES ('${sha256hex("o1|orders_tags|1")}', 'o1', 'b');",
+      "UPDATE shop.orders SET total = 11.5 WHERE _id = 'o1';"))
   }
 
   private lazy val allTurns = turns(day1 ++ day2: _*)
@@ -179,12 +240,13 @@ class MainSpec extends SparkSuite {
     assert(!new java.io.File(conf.output).exists()) // nothing rendered
   }
 
-  test("job budget: the sql path over parquet input runs 8 Spark jobs") {
+  test("job budget: the sql path over parquet input runs 6 Spark jobs") {
     val base = tmp()
     val conf = parquetInput(base, allTurns)
-    // the cached batch's reject count, then the render's adaptive stages;
-    // no schema-inference job, no range-sort sampling job
-    assert(jobsRun(Main.run(spark, conf)) == 8)
+    // one job builds the cached batch and counts its rejects, then the
+    // render's adaptive stages run five; no schema-inference job, no
+    // range-sort sampling job
+    assert(jobsRun(Main.run(spark, conf)) == 6)
     assert(lines(conf.output).length == 8)
   }
 

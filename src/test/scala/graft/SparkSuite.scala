@@ -51,19 +51,23 @@ trait SparkSuite extends AnyFunSuite {
   /** The query executions `body` runs, in order, each named by its action
     * (`count`, `collect`, `command` for a write …).
     */
-  def queriesRun(body: => Any): Seq[String] = {
-    val seen = new LinkedBlockingQueue[String]()
+  def queriesRun(body: => Any): Seq[String] = executionsRun(body).map(_._1)
+
+  /** The query executions `body` runs, in order, with their names. */
+  def executionsRun(body: => Any): Seq[(String, QueryExecution)] = {
+    val seen = new LinkedBlockingQueue[(String, QueryExecution)]()
     val listener = new QueryExecutionListener {
       private def note(func: String, qe: QueryExecution): Unit =
-        seen.put(qe.analyzed.output.headOption.map(_.name)
-          .filter(_.startsWith("marker_")).getOrElse(func))
+        seen.put((qe.analyzed.output.headOption.map(_.name)
+          .filter(_.startsWith("marker_")).getOrElse(func), qe))
       def onSuccess(func: String, qe: QueryExecution, ns: Long): Unit =
         note(func, qe)
       def onFailure(func: String, qe: QueryExecution, e: Exception): Unit =
         note(func, qe)
     }
     spark.listenerManager.register(listener)
-    try untilMarkers(seen, tag => spark.sql(s"SELECT 1 AS marker_$tag").collect())(body)
+    try untilMarkers(seen, (tag: String) =>
+      spark.sql(s"SELECT 1 AS marker_$tag").collect())(_._1)(body)
     finally spark.listenerManager.unregister(listener)
   }
 
@@ -84,22 +88,22 @@ trait SparkSuite extends AnyFunSuite {
       try sc.parallelize(Seq(1), 1).count() finally sc.setLocalProperty("marker", null)
     }
     sc.addSparkListener(listener)
-    try untilMarkers(seen, marker)(body).size
+    try untilMarkers(seen, marker)(identity)(body).size
     finally sc.removeSparkListener(listener)
   }
 
   /** What a listener put into `seen` while `body` ran. Listener events
     * arrive asynchronously but in order: once a marker run after `body`
     * arrives, everything `body` ran has been seen. `marker(tag)` must
-    * make the listener see `marker_<tag>`.
+    * make the listener see an event that `name`s `marker_<tag>`.
     */
-  private def untilMarkers(seen: LinkedBlockingQueue[String],
-                           marker: String => Unit)(body: => Any): Seq[String] = {
-    def untilMarker(tag: String): Seq[String] = {
+  private def untilMarkers[T](seen: LinkedBlockingQueue[T], marker: String => Unit)(
+      name: T => String)(body: => Any): Seq[T] = {
+    def untilMarker(tag: String): Seq[T] = {
       marker(tag)
       Iterator.continually(Option(seen.poll(60, TimeUnit.SECONDS))
         .getOrElse(fail(s"marker_$tag never arrived")))
-        .takeWhile(_ != s"marker_$tag").toSeq
+        .takeWhile(e => name(e) != s"marker_$tag").toSeq
     }
     untilMarker("before")
     body

@@ -30,7 +30,7 @@ object DocsScalingBench {
     val expected = src.count() * mult
     // content signature in the key: a (count, sfDir)-only fingerprint
     // silently reuses a stale bench table if the source corpus is
-    // regenerated with the same row count (the AnnScalingBench fix)
+    // regenerated with the same row count
     // coalesce: sum() is NULL on an empty source — surface that as a
     // clear require instead of an opaque NPE on getLong (ADVICE r4)
     val contentSig = src

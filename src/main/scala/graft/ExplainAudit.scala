@@ -70,84 +70,6 @@ object ExplainAudit {
     val q4 = SparkEntry.queries("q4_semi_join")(spark, sfDir)
     audit("q4_semi", q4, Seq("LeftSemi", "PushedFilters: [IsNotNull(o_totalprice)"))
 
-    // e3 IVF: cell assignment is IN-ROW (HOF argmin over fixed anchors) —
-    // exactly one join in the whole plan (candidates x broadcast probes),
-    // no corpus x centroid cross join, no per-vector assignment window
-    // (the r1 scale bug). WindowGroupLimit + one Window = the top-k only.
-    // Window is forbidden on the whole ANN serving tier: all of e2/e3/e6
-    // reduce per-query top-k through the heap-merge aggregator, so no
-    // plan may shuffle the full scored/candidate set into |queries|
-    // reducer partitions
-    val e3 = SparkEntry.queries("e3_knn_ivf")(spark, sfDir)
-    audit("e3_ivf", e3, Seq("BroadcastHashJoin"),
-      forbid = Seq("CartesianProduct", "BroadcastNestedLoopJoin", "Window"))
-    audit("e2_lsh", SparkEntry.queries("e2_knn_lsh")(spark, sfDir),
-      Seq("ObjectHashAggregate", "partial_topkaggregator"),
-      forbid = Seq("CartesianProduct", "Window"))
-    audit("e6_ivf_kmeans", SparkEntry.queries("e6_knn_ivfk")(spark, sfDir),
-      Seq("ObjectHashAggregate", "partial_topkaggregator"),
-      forbid = Seq("CartesianProduct", "Window"))
-
-    // recall harnesses: ground truth comes from knnBruteAgg, so the
-    // Window prohibition holds on the WHOLE e-tier — recall queries
-    // included (the r3 verdict's last Window on an ANN path)
-    // e9 PQ-ADC serves top-k through the same heap-merge reducer (code
-    // assignment and ADC tables are in-row vs literal codebooks — no
-    // codebook join); e10 composes it with the knnBruteAgg ground truth
-    // e11/e12: the refine stage adds only broadcast joins of the KB-sized
-    // candidate relation plus the same heap-merge reducer
-    // e13/e14: the composed IVF-PQ stack — cell-restricted equi-join
-    // candidates, in-row codes/ADC tables, broadcast refine joins, the
-    // same heap-merge reducer at both ranking tiers
-    // e15/e16: the model-SERVED IVF-PQ path inherits e13's exact serving
-    // plan (the model only replaces where centroids/codebooks came from),
-    // so the same prohibitions apply — and auditing it here also proves
-    // no training aggregate sneaks into the served plan
-    // e17/e18: SQ8's bounds come from one aggregate (no Lloyd's) and the
-    // 8-bit round trip is a literal-bounds pure projection on the corpus
-    // side, so the served plan is e1's broadcast-queries single pass —
-    // the same heap-merge ban applies
-    // e28: the ingest-encoded serving path — the codes-table scan joins
-    // the broadcast probe relation by cell, the late-materialized
-    // re-rank adds only broadcast joins of the KB candidate relation,
-    // both ranking tiers heap-merge; no re-encode of the corpus can
-    // appear because the plan reads (cell, codes) columns, not embedding
-    Seq("e4_lsh_recall", "e5_ivf_recall", "e7_ivfk_recall", "e9_knn_pq",
-      "e10_pq_recall", "e11_knn_pq_refine", "e12_pq_refine_recall",
-      "e13_knn_ivfpq", "e14_ivfpq_recall", "e15_knn_ivfpq_model",
-      "e16_ivfpq_model_recall", "e17_knn_sq8", "e18_sq8_recall",
-      "e19_knn_ivfsq8", "e20_ivfsq8_recall", "e21_knn_filtered",
-      "e23_filtered_recall", "e24_knn_graph", "e25_knn_graph_recall",
-      "e26_knn_sq8_model", "e27_sq8_model_recall",
-      "e28_knn_ivfpq_codes",
-      // e33: the nProbe sweep UNIONs four audited e3-serving + e5-recall
-      // passes — the whole operating curve inherits the heap-merge ban
-      "e33_nprobe_sweep",
-      // e34: the composed stack (model-served IVF-PQ candidates → MMR)
-      // — candidate reduction heap-merges, the greedy runs inside the
-      // typed MmrAggregator, and NO stage may reintroduce a rank window
-      // or a product join across the composition boundary
-      "e34_mmr_ivfpq_model",
-      // e29/e30: stage 1 is the e1 heap-merge serving pass; the MMR
-      // greedy runs inside a second ObjectHashAggregate (typed
-      // MmrAggregator) over the broadcast-late-materialized candidates —
-      // same prohibitions (no product join, no rank window anywhere)
-      "e29_mmr_rerank", "e30_mmr_diversity").foreach { q =>
-      audit(q, SparkEntry.queries(q)(spark, sfDir),
-        Seq("ObjectHashAggregate", "partial_topkaggregator"),
-        forbid = Seq("CartesianProduct", "Window"))
-    }
-
-    // e22 filtered IVF: the attribute predicate must reach the parquet
-    // scan (pre-filter strategy — at selectivity s the scan reads s·N
-    // rows before any cell-assignment work), candidates still join
-    // probes by cell equi-join, top-k still heap-merges
-    audit("e22_knn_ivf_filtered",
-      SparkEntry.queries("e22_knn_ivf_filtered")(spark, sfDir),
-      Seq("EqualTo(label,3)", "BroadcastHashJoin",
-        "ObjectHashAggregate", "partial_topkaggregator"),
-      forbid = Seq("CartesianProduct", "Window"))
-
     // e8 SemDeDup: cell assignment is in-row against literal centroids
     // (no centroid join), the within-cell pair join is an equi-join on
     // cell (every collision IS a candidate — no cross join), dup verdicts
@@ -156,17 +78,6 @@ object ExplainAudit {
     audit("e8_semdedup", SparkEntry.queries("e8_semdedup")(spark, sfDir),
       Seq("partial_min"),
       forbid = Seq("CartesianProduct", "BroadcastNestedLoopJoin", "Window"))
-
-    // e1 brute top-k: heap-merge aggregation (TopKAggregator) — ≤k rows
-    // per (query, partition) through the exchange (partial_topkaggregator
-    // = the map-side half; a final-only aggregate would be exactly the
-    // full-scored-set shuffle this form exists to avoid); a Window over
-    // the scored cross join would shuffle the FULL scored set into
-    // |queries| reducer partitions (the r2 verdict's remaining scale hole)
-    val e1 = SparkEntry.queries("e1_knn_brute")(spark, sfDir)
-    audit("e1_brute_topk", e1,
-      Seq("ObjectHashAggregate", "partial_topkaggregator"),
-      forbid = Seq("Window", "CartesianProduct"))
 
     // q20 as-of: union-merge window form — no join at all, one exchange
     audit("q20_asof", SparkEntry.queries("q20_asof_join")(spark, sfDir),
@@ -337,7 +248,7 @@ object ExplainAudit {
     // t18 token-budget sample: both verdict tables (fully-kept buckets,
     // boundary bucket + base) must come back as BROADCAST joins onto the
     // per-row projection (the histogram aggregate ran two-phase at
-    // construction, like the d11/e6 training collects); a SortMergeJoin
+    // construction, like the d11/e8 training collects); a SortMergeJoin
     // or product join would mean the corpus shuffled for a KB-sized
     // verdict, and the only Window allowed is the one over the boundary
     // bucket's rows (post-broadcast-filter)
@@ -554,22 +465,10 @@ object ExplainAudit {
       Seq("Union", "ExistingRDD", "HashAggregate"),
       forbid = Seq("Window", "CartesianProduct", "BroadcastNestedLoopJoin"))
 
-    // e32 index cartography: cell assignment is in-row vs the model's
-    // LITERAL centroids (no training aggregate, no assignment join may
-    // appear), reduced by one two-phase count whose exchange carries
-    // nCells rows; the dead-cell recovery is an equi-join of two
-    // nCells-row relations — never a product
-    audit("e32_ivf_cell_stats",
-      SparkEntry.queries("e32_ivf_cell_stats")(spark, sfDir),
-      Seq("HashAggregate", "partial_count"),
-      forbid = Seq("Window", "CartesianProduct", "BroadcastNestedLoopJoin",
-        "SortAggregate"))
-
     // e31 hybrid RRF: the dense list must come from the heap-merge
-    // serving pass (e-tier posture) and the final fused top-k from
-    // TakeOrdered — the ONE allowed Window ranks the lexical list AFTER
-    // its LIMIT (≤ kEach rows, driver-bounded by construction), which is
-    // why e31 sits outside the blanket e-tier Window ban above
+    // top-k (no Window over the scored set) and the final fused top-k
+    // from TakeOrdered — the ONE allowed Window ranks the lexical list
+    // AFTER its LIMIT (≤ kEach rows, driver-bounded by construction)
     audit("e31_hybrid_rrf",
       SparkEntry.queries("e31_hybrid_rrf")(spark, sfDir),
       Seq("ObjectHashAggregate", "partial_topkaggregator",

@@ -82,7 +82,8 @@ object Main {
       .load(conf.input)
 
   /** One batch run; returns (statements emitted, turns dead-lettered: an
-    * unknown op, a denied db or no table).
+    * unknown op, a denied db, no table or a payload that is not a JSON
+    * object).
     * With a ledger, only the files it has not seen run, and none new
     * means nothing renders. Session lifecycle belongs to the caller
     * (main() owns it; tests pass their shared session).
@@ -108,15 +109,18 @@ object Main {
     val batch = Pipeline.tokenize(turns).cache()
     try {
       // unknown-op guard (transformer.go:26-28): count + log, never crash;
-      // a turn without a table (`INS nonamespace {…}`) dead-letters too.
+      // a turn without a table (`INS nonamespace {…}`) dead-letters too,
+      // and so does one whose payload is not a JSON object (`INS db.t
+      // not-json`), which renders no DML. Every such turn, and only such a
+      // turn, has a NULL kv, so one predicate counts them all.
       // The count builds the cache in one job: counted as an RDD, the
       // rejects are one narrow scan, where a Dataset count plans an
       // aggregate whose adaptive stages run three. (Left to the write, the
       // cache would start a job in each render branch's cache stage.)
-      val nRejects = batch.filter(!col("admitted")).rdd.count()
+      val nRejects = batch.filter(col("kv").isNull).rdd.count()
       if (nRejects > 0)
-        System.err.println(
-          s"[graft] dead-lettered $nRejects unknown-op/denied-db/no-table turns")
+        System.err.println(s"[graft] dead-lettered $nRejects " +
+          "unknown-op/denied-db/no-table/bad-payload turns")
 
       // the render DAG executes exactly once per run, in the sink. Both
       // sinks write one partition in stream order, so the stream is

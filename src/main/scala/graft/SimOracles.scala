@@ -2,16 +2,17 @@ package graft
 
 import graft.operators.Similarity._
 
-/** DuckDB-dialect oracle SQL for the similarity/ANN queries, generated
-  * from the SAME constants the Spark operators use (graft.operators
-  * .Similarity) — hyperplane/anchor signs, band packing, quantization and
-  * thresholds are mirrored digit-for-digit, so e2/e3/e4/d8 get full
-  * rows+schema+hash oracles instead of rows-only checks.
+/** DuckDB-dialect oracle SQL for the embedding queries, generated from
+  * the SAME constants the Spark operators use (graft.operators
+  * .Similarity) — hyperplane signs, band packing, quantization, k-means
+  * seeding and thresholds are mirrored digit-for-digit, so e8/e31/d8 get
+  * full rows+schema+hash oracles instead of rows-only checks.
   */
 object SimOracles {
 
   /** ±1 sign of (plane p, dim i) under `salt` — DuckDB rendering of
-    * Similarity.hashSign (all-positive int64 arithmetic, no overflow).
+    * VectorOps.SignProjections' sign family (all-positive int64
+    * arithmetic, no overflow).
     */
   private def sign(p: String, i: String, salt: Long): String =
     s"(CASE WHEN (((($p)*131071 + ($i) + 1)*$HashMul + $salt) % $HashMod)" +
@@ -29,14 +30,14 @@ eq AS MATERIALIZED (
       s"i -> $a[i] * $b[i])) AS BIGINT)"
 
   /** Sign-bit array + per-band bucket ids (Similarity.planeBits/bandBuckets). */
-  private def bandedCtes(bands: Int, rowsPerBand: Int, salt: Long): String = {
+  private def bandedCtes(bands: Int, rowsPerBand: Int): String = {
     val nPlanes = bands * rowsPerBand
     s""",
 bits AS (
   SELECT vec_id, q,
     list_transform(range(0, $nPlanes), p ->
       CASE WHEN CAST(list_sum(list_transform(range(0, len(q)), i ->
-        q[i+1] * ${sign("p", "i", salt)})) AS BIGINT) > 0
+        q[i+1] * ${sign("p", "i", PlaneSalt)})) AS BIGINT) > 0
       THEN 1 ELSE 0 END) AS bits
   FROM eq),
 banded AS (
@@ -45,69 +46,6 @@ banded AS (
       bits[band * $rowsPerBand + j + 1] * (1 << j))) AS BIGINT) AS bucket
   FROM bits CROSS JOIN (SELECT unnest(range(0, $bands)) AS band) bs)"""
   }
-
-  /** Banded-LSH top-k chain ending in a `lshtop` CTE (qid,nid,dot,rnk). */
-  private def lshChain(nQueries: Int, bands: Int, rowsPerBand: Int): String =
-    bandedCtes(bands, rowsPerBand, PlaneSalt) + s""",
-lshscored AS (
-  SELECT DISTINCT p.vec_id AS qid, c.vec_id AS nid,
-    ${dotSql("p.q", "c.q")} AS dot
-  FROM banded c JOIN banded p ON c.band = p.band AND c.bucket = p.bucket
-  WHERE p.vec_id < $nQueries AND c.vec_id != p.vec_id),
-lshtop AS (
-  SELECT qid, nid, dot,
-    row_number() OVER (PARTITION BY qid ORDER BY dot DESC, nid) AS rnk
-  FROM lshscored)"""
-
-  /** e2: banded-LSH ANN, exact re-rank within candidates. */
-  def knnLshSql(nQueries: Int = 10, k: Int = 5, bands: Int = 28,
-                rowsPerBand: Int = 3): String =
-    s"WITH $eqCte ${lshChain(nQueries, bands, rowsPerBand)}\n" +
-      s"SELECT qid, nid, dot, CAST(rnk AS INT) AS rnk FROM lshtop WHERE rnk <= $k"
-
-  /** Fixed-anchor IVF chain ending in an `ivftop` CTE (qid,nid,dot,rnk) —
-    * in-row cell dots, rank-0 assignment, nProbe probing, exact re-rank
-    * (mirrors Similarity.knnIvf).
-    */
-  private def ivfChain(nQueries: Int, nCells: Int, nProbe: Int,
-                       candCond: String = ""): String =
-    s""",
-cells AS (
-  SELECT vec_id, q,
-    list_transform(range(0, $nCells), c ->
-      CAST(list_sum(list_transform(range(0, len(q)), i ->
-        q[i+1] * ${sign("c", "i", AnchorSalt)})) AS BIGINT)) AS cdots
-  FROM eq),
-ranked AS (
-  SELECT vec_id, q,
-    list_transform(range(0, $nCells), c ->
-      len(list_filter(range(0, $nCells), c2 ->
-        cdots[c2+1] > cdots[c+1]
-        OR (cdots[c2+1] = cdots[c+1] AND c2 < c)))) AS rnks
-  FROM cells),
-assigned AS (
-  SELECT vec_id AS nid, q AS qn,
-    CAST(list_position(rnks, 0) - 1 AS INT) AS cell
-  FROM ranked),
-probes AS (
-  SELECT vec_id AS qid, q AS qq,
-    CAST(unnest(list_filter(range(0, $nCells), c -> rnks[c+1] < $nProbe))
-      AS INT) AS cell
-  FROM ranked WHERE vec_id < $nQueries),
-ivfscored AS (
-  SELECT qid, nid, ${dotSql("qq", "qn")} AS dot
-  FROM assigned JOIN probes USING (cell)
-  WHERE nid != qid$candCond),
-ivftop AS (
-  SELECT qid, nid, dot,
-    row_number() OVER (PARTITION BY qid ORDER BY dot DESC, nid) AS rnk
-  FROM ivfscored)"""
-
-  /** e3: fixed-anchor IVF ANN top-k. */
-  def knnIvfSql(nQueries: Int = 10, k: Int = 5, nCells: Int = 16,
-                nProbe: Int = 3): String =
-    s"WITH $eqCte ${ivfChain(nQueries, nCells, nProbe)}\n" +
-      s"SELECT qid, nid, dot, CAST(rnk AS INT) AS rnk FROM ivftop WHERE rnk <= $k"
 
   /** L2 distance surrogate to a centroid: ||c||² − 2·x·c (the ||x||² term
     * is constant per vector, so argmin is the true L2 argmin) — mirrors
@@ -127,441 +65,34 @@ ivftop AS (
     */
   // `dim` must match the corpus's embedding width (the Spark side is
   // dim-agnostic via posexplode; the SQL mirror needs it explicitly —
-  // testdata embeddings are 64-wide). Exposed through the e6/e7 builders.
-  // `src`/`pfx` let the SAME unrolled-Lloyd's generator serve the full-
-  // vector quantizer (e6/e7/e8: src=eq, pfx=k → kc0/ka1/…, unchanged)
-  // and the per-block PQ codebooks (e9/e10: src=eqb$b, pfx=pq$b).
-  private def kmeansCtes(nCells: Int, iters: Int, dim: Int,
-                         src: String = "eq", pfx: String = "k"): String = {
+  // testdata embeddings are 64-wide). Exposed through the e8 builder.
+  private def kmeansCtes(nCells: Int, iters: Int, dim: Int): String = {
     val sb = new StringBuilder
     sb.append(s""",
-${pfx}c0 AS MATERIALIZED (
-  SELECT CAST(vec_id AS INT) AS cell, q AS cv FROM $src WHERE vec_id < $nCells)""")
+kc0 AS MATERIALIZED (
+  SELECT CAST(vec_id AS INT) AS cell, q AS cv FROM eq WHERE vec_id < $nCells)""")
     for (t <- 1 to iters) {
-      val prev = s"${pfx}c${t - 1}"
+      val prev = s"kc${t - 1}"
       sb.append(s""",
-${pfx}a$t AS (
+ka$t AS (
   SELECT vec_id, q, cell FROM (
     SELECT e.vec_id, e.q, c.cell,
       row_number() OVER (PARTITION BY e.vec_id
         ORDER BY ${distSql("e.q", "c.cv")}, c.cell) AS rn
-    FROM $src e CROSS JOIN $prev c)
+    FROM eq e CROSS JOIN $prev c)
   WHERE rn = 1),
-${pfx}s$t AS (
+ks$t AS (
   SELECT cell, i, CAST(sum(q[i + 1]) AS BIGINT) AS s, count(*) AS n
-  FROM ${pfx}a$t CROSS JOIN (SELECT unnest(range(0, $dim)) AS i) d
+  FROM ka$t CROSS JOIN (SELECT unnest(range(0, $dim)) AS i) d
   GROUP BY cell, i),
-${pfx}c$t AS MATERIALIZED (
+kc$t AS MATERIALIZED (
   SELECT p.cell, COALESCE(u.cv, p.cv) AS cv
   FROM $prev p LEFT JOIN (
-    SELECT cell, list(s // n ORDER BY i) AS cv FROM ${pfx}s$t GROUP BY cell) u
+    SELECT cell, list(s // n ORDER BY i) AS cv FROM ks$t GROUP BY cell) u
   ON u.cell = p.cell)""")
     }
     sb.toString
   }
-
-  /** Learned-centroid IVF chain ending in a `ktop` CTE (qid,nid,dot,rnk)
-    * — mirrors Similarity.knnIvfKmeans over the kc_iters centroids.
-    */
-  private def ivfkChain(nQueries: Int, nCells: Int, nProbe: Int,
-                        iters: Int, dim: Int): String =
-    kmeansCtes(nCells, iters, dim) + s""",
-kassigned AS (
-  SELECT vec_id AS nid, q AS qn, cell FROM (
-    SELECT e.vec_id, e.q, c.cell,
-      row_number() OVER (PARTITION BY e.vec_id
-        ORDER BY ${distSql("e.q", "c.cv")}, c.cell) AS rn
-    FROM eq e CROSS JOIN kc$iters c)
-  WHERE rn = 1),
-kprobes AS (
-  SELECT vec_id AS qid, q AS qq, cell FROM (
-    SELECT e.vec_id, e.q, c.cell,
-      row_number() OVER (PARTITION BY e.vec_id
-        ORDER BY ${distSql("e.q", "c.cv")}, c.cell) AS rn
-    FROM eq e CROSS JOIN kc$iters c
-    WHERE e.vec_id < $nQueries)
-  WHERE rn <= $nProbe),
-kscored AS (
-  SELECT qid, nid, ${dotSql("qq", "qn")} AS dot
-  FROM kassigned JOIN kprobes USING (cell)
-  WHERE nid != qid),
-ktop AS (
-  SELECT qid, nid, dot,
-    row_number() OVER (PARTITION BY qid ORDER BY dot DESC, nid) AS rnk
-  FROM kscored)"""
-
-  /** e6: learned-centroid (k-means) IVF ANN top-k. */
-  def knnIvfKmeansSql(nQueries: Int = 10, k: Int = 5, nCells: Int = 16,
-                      nProbe: Int = 3, iters: Int = 4, dim: Int = 64): String =
-    s"WITH $eqCte ${ivfkChain(nQueries, nCells, nProbe, iters, dim)}\n" +
-      s"SELECT qid, nid, dot, CAST(rnk AS INT) AS rnk FROM ktop WHERE rnk <= $k"
-
-  /** e7: recall@k of the learned-centroid IVF vs exact brute force. */
-  def ivfKmeansRecallSql(nQueries: Int = 10, k: Int = 5, nCells: Int = 16,
-                         nProbe: Int = 3, iters: Int = 4, dim: Int = 64): String =
-    s"""WITH $eqCte ${ivfkChain(nQueries, nCells, nProbe, iters, dim)}${bruteCte(nQueries, k)},
-kk AS (SELECT qid, nid FROM ktop WHERE rnk <= $k)
-SELECT count(l.qid) AS hits, count(*) AS total
-FROM brute b LEFT JOIN kk l ON b.qid = l.qid AND b.nid = l.nid"""
-
-  /** Exact brute-force top-k CTE chain ending in `brute` (qid,nid). */
-  private def bruteCte(nQueries: Int, k: Int): String = s""",
-bscored AS (
-  SELECT p.vec_id AS qid, c.vec_id AS nid, ${dotSql("p.q", "c.q")} AS dot
-  FROM eq c CROSS JOIN eq p
-  WHERE p.vec_id < $nQueries AND c.vec_id != p.vec_id),
-brute AS (
-  SELECT qid, nid FROM (
-    SELECT qid, nid,
-      row_number() OVER (PARTITION BY qid ORDER BY dot DESC, nid) AS rnk
-    FROM bscored)
-  WHERE rnk <= $k)"""
-
-  /** e4: recall@k of the banded-LSH tier vs exact brute force, as exact
-    * integer hits/total.
-    */
-  def lshRecallSql(nQueries: Int = 10, k: Int = 5, bands: Int = 28,
-                   rowsPerBand: Int = 3): String =
-    s"""WITH $eqCte ${lshChain(nQueries, bands, rowsPerBand)}${bruteCte(nQueries, k)},
-lshk AS (SELECT qid, nid FROM lshtop WHERE rnk <= $k)
-SELECT count(l.qid) AS hits, count(*) AS total
-FROM brute b LEFT JOIN lshk l ON b.qid = l.qid AND b.nid = l.nid"""
-
-  /** e5: recall@k of the IVF tier vs exact brute force (same shape as e4). */
-  def ivfRecallSql(nQueries: Int = 10, k: Int = 5, nCells: Int = 16,
-                   nProbe: Int = 3): String =
-    s"""WITH $eqCte ${ivfChain(nQueries, nCells, nProbe)}${bruteCte(nQueries, k)},
-ivfk AS (SELECT qid, nid FROM ivftop WHERE rnk <= $k)
-SELECT count(l.qid) AS hits, count(*) AS total
-FROM brute b LEFT JOIN ivfk l ON b.qid = l.qid AND b.nid = l.nid"""
-
-  /** Filtered exact-k-NN chain ending in `fbtop` (qid,nid,dot,rnk):
-    * candidates restricted to `label = lbl`, queries unrestricted
-    * (mirrors Similarity.knnBruteFiltered).
-    */
-  private def filteredBruteChain(nQueries: Int, lbl: Int): String = s""",
-fscored AS (
-  SELECT p.vec_id AS qid, c.vec_id AS nid, ${dotSql("p.q", "c.q")} AS dot
-  FROM eq c CROSS JOIN eq p
-  WHERE p.vec_id < $nQueries AND c.vec_id != p.vec_id
-    AND c.vec_id IN (SELECT vec_id FROM embeddings WHERE label = $lbl)),
-fbtop AS (
-  SELECT qid, nid, dot,
-    row_number() OVER (PARTITION BY qid ORDER BY dot DESC, nid) AS rnk
-  FROM fscored)"""
-
-  private def labelCond(lbl: Int): String =
-    s" AND nid IN (SELECT vec_id FROM embeddings WHERE label = $lbl)"
-
-  /** e21: filtered exact k-NN (attribute-constrained search). */
-  def knnBruteFilteredSql(nQueries: Int = 10, k: Int = 5,
-                          lbl: Int = 3): String =
-    s"WITH $eqCte ${filteredBruteChain(nQueries, lbl)}\n" +
-      s"SELECT qid, nid, dot, CAST(rnk AS INT) AS rnk FROM fbtop WHERE rnk <= $k"
-
-  /** e22: filtered IVF — the ivf chain with the candidate side label-
-    * restricted (assignment is per-row against static anchors, so
-    * filter-before-assignment ≡ restrict-after-join).
-    */
-  def knnIvfFilteredSql(nQueries: Int = 10, k: Int = 5, nCells: Int = 16,
-                        nProbe: Int = 6, lbl: Int = 3): String =
-    s"WITH $eqCte ${ivfChain(nQueries, nCells, nProbe, labelCond(lbl))}\n" +
-      s"SELECT qid, nid, dot, CAST(rnk AS INT) AS rnk FROM ivftop WHERE rnk <= $k"
-
-  /** e23: recall@k of filtered IVF vs filtered exact (the truth set is
-    * the FILTERED brute top-k — recall vs global brute would conflate
-    * predicate loss with probe loss).
-    */
-  def filteredRecallSql(nQueries: Int = 10, k: Int = 5, nCells: Int = 16,
-                        nProbe: Int = 6, lbl: Int = 3): String =
-    s"""WITH $eqCte ${ivfChain(nQueries, nCells, nProbe, labelCond(lbl))}${filteredBruteChain(nQueries, lbl)},
-fk AS (SELECT qid, nid FROM ivftop WHERE rnk <= $k)
-SELECT count(l.qid) AS hits, count(*) AS total
-FROM (SELECT qid, nid FROM fbtop WHERE rnk <= $k) b
-LEFT JOIN fk l ON b.qid = l.qid AND b.nid = l.nid"""
-
-  /** NN-descent k-NN graph chain (mirrors Similarity.knnGraph):
-    * deterministic hash init g0, then per round r the candidate UNION
-    * (current ∪ 2-hop ∪ reverse), scored relation s_r, ranked t_r and
-    * pruned graph g_r — unrolled like the Lloyd's CTEs.
-    */
-  private def knnGraphCtes(k: Int, rounds: Int): String = {
-    val sb = new StringBuilder(s""",
-nn AS (SELECT count(*) AS n FROM embeddings),
-g0 AS (
-  SELECT DISTINCT u, w FROM (
-    SELECT e.vec_id AS u,
-      (e.vec_id * 131 + j.j * 97) % (SELECT n FROM nn) AS w
-    FROM eq e CROSS JOIN (SELECT unnest(range(0, $k)) AS j) j)
-  WHERE w != u)""")
-    for (r <- 1 to rounds) {
-      val prev = s"g${r - 1}"
-      sb.append(s""",
-c$r AS (
-  SELECT u, w FROM $prev
-  UNION
-  SELECT a.u, b.w FROM $prev a JOIN $prev b ON a.w = b.u WHERE b.w != a.u
-  UNION
-  SELECT w AS u, u AS w FROM $prev),
-s$r AS (
-  SELECT c.u, c.w, ${dotSql("p.q", "q.q")} AS dot
-  FROM c$r c JOIN eq p ON p.vec_id = c.u JOIN eq q ON q.vec_id = c.w),
-t$r AS (
-  SELECT u, w, dot,
-    row_number() OVER (PARTITION BY u ORDER BY dot DESC, w) AS rnk
-  FROM s$r),
-g$r AS (SELECT u, w FROM t$r WHERE rnk <= $k)""")
-    }
-    sb.toString
-  }
-
-  /** e24: the NN-descent k-NN graph adjacency after `rounds` rounds. */
-  def knnGraphSql(k: Int = 8, rounds: Int = 2): String =
-    s"WITH $eqCte ${knnGraphCtes(k, rounds)}\n" +
-      s"SELECT u, w, dot, CAST(rnk AS INT) AS rnk FROM t$rounds WHERE rnk <= $k"
-
-  /** e25: graph recall vs the true k-NN graph on nodes < nSample. */
-  def knnGraphRecallSql(k: Int = 8, rounds: Int = 2,
-                        nSample: Int = 50): String =
-    s"""WITH $eqCte ${knnGraphCtes(k, rounds)}${bruteCte(nSample, k)},
-gk AS (SELECT u, w FROM t$rounds WHERE rnk <= $k AND u < $nSample)
-SELECT count(l.u) AS hits, count(*) AS total
-FROM brute b LEFT JOIN gk l ON b.qid = l.u AND b.nid = l.w"""
-
-  /** e9/e10: PQ chain — per block b: the quantized-slice relation
-    * eqb$b, its unrolled per-block Lloyd's (pq${b}c0…), the in-row
-    * argmin code assignment, and the per-block ADC contribution
-    * dot(query-slice, centroid-of-candidate's-code); pqscored sums the
-    * m contributions (mirrors Similarity.knnPq digit-for-digit).
-    */
-  /** Per-block PQ code assignment CTEs only — eqb$b (quantized slice),
-    * its unrolled Lloyd's (pq${b}c0…), and pqcode$b (in-row argmin code)
-    * — shared by the whole-corpus ADC chain (e9/e10) and the
-    * cell-restricted IVF-PQ chain (e13/e14).
-    */
-  // `trainSrc` redirects ONLY the Lloyd's training relation: None trains
-  // each block codebook on the full corpus slice eqb$b (e9–e14); Some(s)
-  // slices relation `s` into ${s}b$b and trains there instead, while code
-  // ASSIGNMENT still runs over the full-corpus slices — the e15/e16
-  // subsample-trained model posture (mirrors Similarity.trainAnnModel).
-  private def pqCodeCtes(m: Int, kCb: Int, iters: Int, dim: Int,
-                         trainSrc: Option[String] = None): String = {
-    val bd = dim / m
-    val sb = new StringBuilder
-    for (b <- 0 until m) {
-      val lo = b * bd + 1; val hi = (b + 1) * bd
-      sb.append(s""",
-eqb$b AS MATERIALIZED (SELECT vec_id, q[$lo:$hi] AS q FROM eq)""")
-      trainSrc.foreach { s =>
-        sb.append(s""",
-${s}b$b AS MATERIALIZED (SELECT vec_id, q[$lo:$hi] AS q FROM $s)""")
-      }
-      sb.append(kmeansCtes(kCb, iters, bd,
-        trainSrc.map(s => s"${s}b$b").getOrElse(s"eqb$b"), s"pq$b"))
-      sb.append(s""",
-pqcode$b AS MATERIALIZED (
-  SELECT vec_id, cell FROM (
-    SELECT e.vec_id, c.cell,
-      row_number() OVER (PARTITION BY e.vec_id
-        ORDER BY ${distSql("e.q", "c.cv")}, c.cell) AS rn
-    FROM eqb$b e CROSS JOIN pq${b}c$iters c)
-  WHERE rn = 1)""")
-    }
-    sb.toString
-  }
-
-  private def pqChain(nQueries: Int, m: Int, kCb: Int, iters: Int,
-                      dim: Int): String = {
-    val sb = new StringBuilder(pqCodeCtes(m, kCb, iters, dim))
-    for (b <- 0 until m) {
-      sb.append(s""",
-adc$b AS (
-  SELECT p.vec_id AS qid, n.vec_id AS nid, ${dotSql("p.q", "cb.cv")} AS dot
-  FROM eqb$b p
-  CROSS JOIN pqcode$b n
-  JOIN pq${b}c$iters cb ON cb.cell = n.cell
-  WHERE p.vec_id < $nQueries)""")
-    }
-    val sum = (0 until m).map(b => s"a$b.dot").mkString(" + ")
-    val joins = (1 until m)
-      .map(b => s"JOIN adc$b a$b USING (qid, nid)").mkString("\n  ")
-    sb.append(s""",
-pqscored AS (
-  SELECT qid, nid, $sum AS dot
-  FROM adc0 a0
-  $joins
-  WHERE qid != nid),
-pqtop AS (
-  SELECT qid, nid, dot,
-    row_number() OVER (PARTITION BY qid ORDER BY dot DESC, nid) AS rnk
-  FROM pqscored)""")
-    sb.toString
-  }
-
-  /** e9: PQ-ADC ANN top-k. */
-  def knnPqSql(nQueries: Int = 10, k: Int = 5, m: Int = 8, kCb: Int = 16,
-               iters: Int = 2, dim: Int = 64): String =
-    s"WITH $eqCte ${pqChain(nQueries, m, kCb, iters, dim)}\n" +
-      s"SELECT qid, nid, dot, CAST(rnk AS INT) AS rnk FROM pqtop WHERE rnk <= $k"
-
-  /** e10: recall@k of PQ-ADC vs exact brute force. */
-  def pqRecallSql(nQueries: Int = 10, k: Int = 5, m: Int = 8, kCb: Int = 16,
-                  iters: Int = 2, dim: Int = 64): String =
-    s"""WITH $eqCte ${pqChain(nQueries, m, kCb, iters, dim)}${bruteCte(nQueries, k)},
-pqk AS (SELECT qid, nid FROM pqtop WHERE rnk <= $k)
-SELECT count(l.qid) AS hits, count(*) AS total
-FROM brute b LEFT JOIN pqk l ON b.qid = l.qid AND b.nid = l.nid"""
-
-  /** e11/e12: exact re-rank of the top k·refine ADC candidates — the
-    * two-stage refine chain shared by knnPqRefineSql and
-    * pqRefineRecallSql (mirrors Similarity.knnPqRefine).
-    */
-  private def pqRefineCtes(nQueries: Int, k: Int, refine: Int, m: Int,
-                           kCb: Int, iters: Int, dim: Int): String =
-    s"""${pqChain(nQueries, m, kCb, iters, dim)},
-rcand AS (SELECT qid, nid FROM pqtop WHERE rnk <= ${k * refine}),
-rescored AS (
-  SELECT c.qid, c.nid, ${dotSql("p.q", "n.q")} AS dot
-  FROM rcand c
-  JOIN eq p ON p.vec_id = c.qid
-  JOIN eq n ON n.vec_id = c.nid),
-rtop AS (
-  SELECT qid, nid, dot,
-    row_number() OVER (PARTITION BY qid ORDER BY dot DESC, nid) AS rnk
-  FROM rescored)"""
-
-  /** e13/e14: composed IVF-PQ chain — coarse k-means cells restrict the
-    * candidate pairs, PQ-ADC scores only those, exact re-rank to k
-    * (mirrors Similarity.knnIvfPq). Ends in `ipfinal` (qid,nid,dot,rnk).
-    */
-  // `sampleEvery` = Some(S) trains BOTH quantizers on the deterministic
-  // subsample eqs (every S-th vector, re-id'd vec_id // S so the seed
-  // rule picks the first nCells/kCb sampled vectors) while assignment,
-  // probing, ADC and re-rank all run over the full corpus — the
-  // digit-for-digit mirror of Similarity.trainAnnModel + knnIvfPqModel.
-  private def ivfPqChain(nQueries: Int, k: Int, refine: Int, nCells: Int,
-                         nProbe: Int, cIters: Int, m: Int, kCb: Int,
-                         pqIters: Int, dim: Int,
-                         sampleEvery: Option[Int] = None): String = {
-    val sb = new StringBuilder
-    sampleEvery.foreach { s =>
-      sb.append(s""",
-eqs AS MATERIALIZED (SELECT vec_id // $s AS vec_id, q FROM eq WHERE vec_id % $s = 0)""")
-    }
-    sb.append(kmeansCtes(nCells, cIters, dim,
-      sampleEvery.map(_ => "eqs").getOrElse("eq")))
-    sb.append(pqCodeCtes(m, kCb, pqIters, dim,
-      sampleEvery.map(_ => "eqs")))
-    sb.append(s""",
-ipassign AS MATERIALIZED (
-  SELECT vec_id AS nid, cell FROM (
-    SELECT e.vec_id, c.cell,
-      row_number() OVER (PARTITION BY e.vec_id
-        ORDER BY ${distSql("e.q", "c.cv")}, c.cell) AS rn
-    FROM eq e CROSS JOIN kc$cIters c)
-  WHERE rn = 1),
-ipprobe AS (
-  SELECT vec_id AS qid, cell FROM (
-    SELECT e.vec_id, c.cell,
-      row_number() OVER (PARTITION BY e.vec_id
-        ORDER BY ${distSql("e.q", "c.cv")}, c.cell) AS rn
-    FROM eq e CROSS JOIN kc$cIters c
-    WHERE e.vec_id < $nQueries)
-  WHERE rn <= $nProbe),
-ipcand AS MATERIALIZED (
-  SELECT p.qid, a.nid FROM ipassign a JOIN ipprobe p USING (cell)
-  WHERE a.nid != p.qid)""")
-    for (b <- 0 until m) {
-      sb.append(s""",
-ipadc$b AS (
-  SELECT cp.qid, cp.nid, ${dotSql("p.q", "cb.cv")} AS dot
-  FROM ipcand cp
-  JOIN eqb$b p ON p.vec_id = cp.qid
-  JOIN pqcode$b n ON n.vec_id = cp.nid
-  JOIN pq${b}c$pqIters cb ON cb.cell = n.cell)""")
-    }
-    val sum = (0 until m).map(b => s"a$b.dot").mkString(" + ")
-    val joins = (1 until m)
-      .map(b => s"JOIN ipadc$b a$b USING (qid, nid)").mkString("\n  ")
-    sb.append(s""",
-ipscored AS (
-  SELECT qid, nid, $sum AS dot
-  FROM ipadc0 a0
-  $joins),
-iptop AS (
-  SELECT qid, nid,
-    row_number() OVER (PARTITION BY qid ORDER BY dot DESC, nid) AS rnk
-  FROM ipscored),
-iprcand AS (SELECT qid, nid FROM iptop WHERE rnk <= ${k * refine}),
-iprescore AS (
-  SELECT c.qid, c.nid, ${dotSql("p.q", "n.q")} AS dot
-  FROM iprcand c
-  JOIN eq p ON p.vec_id = c.qid
-  JOIN eq n ON n.vec_id = c.nid),
-ipfinal AS (
-  SELECT qid, nid, dot,
-    row_number() OVER (PARTITION BY qid ORDER BY dot DESC, nid) AS rnk
-  FROM iprescore)""")
-    sb.toString
-  }
-
-  /** e13: composed IVF-PQ (cells → ADC → exact re-rank) top-k. */
-  def knnIvfPqSql(nQueries: Int = 10, k: Int = 5, nCells: Int = 16,
-                  nProbe: Int = 4, cIters: Int = 4, m: Int = 8,
-                  kCb: Int = 16, pqIters: Int = 2, dim: Int = 64,
-                  refine: Int = 3): String =
-    s"WITH $eqCte ${ivfPqChain(nQueries, k, refine, nCells, nProbe, cIters, m, kCb, pqIters, dim)}\n" +
-      s"SELECT qid, nid, dot, CAST(rnk AS INT) AS rnk FROM ipfinal WHERE rnk <= $k"
-
-  /** e14: recall@k of the composed IVF-PQ stack vs exact brute force. */
-  def ivfPqRecallSql(nQueries: Int = 10, k: Int = 5, nCells: Int = 16,
-                     nProbe: Int = 4, cIters: Int = 4, m: Int = 8,
-                     kCb: Int = 16, pqIters: Int = 2, dim: Int = 64,
-                     refine: Int = 3): String =
-    s"""WITH $eqCte ${ivfPqChain(nQueries, k, refine, nCells, nProbe, cIters, m, kCb, pqIters, dim)}${bruteCte(nQueries, k)},
-ipk AS (SELECT qid, nid FROM ipfinal WHERE rnk <= $k)
-SELECT count(l.qid) AS hits, count(*) AS total
-FROM brute b LEFT JOIN ipk l ON b.qid = l.qid AND b.nid = l.nid"""
-
-  /** e15: IVF-PQ served from the subsample-trained model — identical
-    * chain to e13 except BOTH Lloyd's trainers read the deterministic
-    * subsample (`vec_id % sampleEvery = 0`, re-id'd); the serving stages
-    * are byte-identical. Because training is exact int64 and the
-    * subsample rule is pure arithmetic, the oracle reconstructs the
-    * PERSISTED model digit-for-digit without reading the artifact.
-    */
-  def knnIvfPqModelSql(nQueries: Int = 10, k: Int = 5, sampleEvery: Int = 4,
-                       nCells: Int = 16, nProbe: Int = 4, cIters: Int = 4,
-                       m: Int = 8, kCb: Int = 16, pqIters: Int = 2,
-                       dim: Int = 64, refine: Int = 10): String =
-    s"WITH $eqCte ${ivfPqChain(nQueries, k, refine, nCells, nProbe, cIters, m, kCb, pqIters, dim, Some(sampleEvery))}\n" +
-      s"SELECT qid, nid, dot, CAST(rnk AS INT) AS rnk FROM ipfinal WHERE rnk <= $k"
-
-  /** e16: recall@k of the model-served IVF-PQ stack vs exact brute force. */
-  def ivfPqModelRecallSql(nQueries: Int = 10, k: Int = 5, sampleEvery: Int = 4,
-                          nCells: Int = 16, nProbe: Int = 4, cIters: Int = 4,
-                          m: Int = 8, kCb: Int = 16, pqIters: Int = 2,
-                          dim: Int = 64, refine: Int = 10): String =
-    s"""WITH $eqCte ${ivfPqChain(nQueries, k, refine, nCells, nProbe, cIters, m, kCb, pqIters, dim, Some(sampleEvery))}${bruteCte(nQueries, k)},
-ipk AS (SELECT qid, nid FROM ipfinal WHERE rnk <= $k)
-SELECT count(l.qid) AS hits, count(*) AS total
-FROM brute b LEFT JOIN ipk l ON b.qid = l.qid AND b.nid = l.nid"""
-
-  /** e11: PQ-ADC top-(k·refine) candidates, exact-dot re-ranked to k. */
-  def knnPqRefineSql(nQueries: Int = 10, k: Int = 5, refine: Int = 3,
-                     m: Int = 8, kCb: Int = 16, iters: Int = 2,
-                     dim: Int = 64): String =
-    s"WITH $eqCte ${pqRefineCtes(nQueries, k, refine, m, kCb, iters, dim)}\n" +
-      s"SELECT qid, nid, dot, CAST(rnk AS INT) AS rnk FROM rtop WHERE rnk <= $k"
-
-  /** e12: recall@k of refined PQ vs exact brute force. */
-  def pqRefineRecallSql(nQueries: Int = 10, k: Int = 5, refine: Int = 3,
-                        m: Int = 8, kCb: Int = 16, iters: Int = 2,
-                        dim: Int = 64): String =
-    s"""WITH $eqCte ${pqRefineCtes(nQueries, k, refine, m, kCb, iters, dim)}${bruteCte(nQueries, k)},
-rk AS (SELECT qid, nid FROM rtop WHERE rnk <= $k)
-SELECT count(l.qid) AS hits, count(*) AS total
-FROM brute b LEFT JOIN rk l ON b.qid = l.qid AND b.nid = l.nid"""
 
   /** e8: SemDeDup semantic dedup — the unrolled k-means chain assigns
     * every vector a cell, within-cell pairs above the quantized-dot
@@ -587,134 +118,12 @@ sddup AS (
 SELECT s.vec_id, s.cell, d.dup_of, d.dup_of IS NULL AS keep
 FROM sdassigned s LEFT JOIN sddup d ON s.vec_id = d.vec_id"""
 
-  /** SQ8 chain ending in a `sqtop` CTE (qid,nid,dot,rnk) — per-dimension
-    * min/max bounds in one aggregate, in-row 8-bit encode/decode round
-    * trip, ADC scoring of exact queries against reconstructions (mirrors
-    * Similarity.knnSq8). All `//` numerators are ≥ 0, so DuckDB's
-    * integer division agrees with Spark's `div` unconditionally.
-    */
-  // `sampleEvery` = Some(S): bounds from the deterministic training
-  // slice (vec_id % S = 0 — re-iding is irrelevant to min/max) with the
-  // CLAMPED code (corpus values may fall outside slice bounds; the
-  // greatest(·,0) clamp also erases the one Spark-div-vs-DuckDB-floor
-  // divergence, which only occurs below zero). None: full-corpus bounds,
-  // where every numerator is ≥ 0 by construction and no clamp is needed.
-  private def sq8ReconCtes(dim: Int,
-                           sampleEvery: Option[Int] = None): String = {
-    val where = sampleEvery.map(s => s"\n  WHERE vec_id % $s = 0")
-      .getOrElse("")
-    val code = sampleEvery match {
-      case Some(_) =>
-        "least(greatest(((q[i] - mn[i]) * 255) // (mx[i] - mn[i]), 0), 255)"
-      case None => "(((q[i] - mn[i]) * 255) // (mx[i] - mn[i]))"
-    }
-    s""",
-sqbounds AS (
-  SELECT d, min(q[d]) AS mn, max(q[d]) AS mx
-  FROM eq CROSS JOIN (SELECT unnest(range(1, $dim + 1)) AS d) ds$where
-  GROUP BY d),
-sqbl AS (
-  SELECT list(mn ORDER BY d) AS mn, list(mx ORDER BY d) AS mx FROM sqbounds),
-sqrecon AS (
-  SELECT vec_id, list_transform(range(1, $dim + 1), i ->
-    CASE WHEN mx[i] = mn[i] THEN mn[i]
-    ELSE mn[i] + ($code
-      * (mx[i] - mn[i])) // 255 END) AS re
-  FROM eq CROSS JOIN sqbl)"""
-  }
-
-  private def sq8Chain(nQueries: Int, dim: Int,
-                       sampleEvery: Option[Int] = None): String =
-    sq8ReconCtes(dim, sampleEvery) + s""",
-sqscored AS (
-  SELECT p.vec_id AS qid, c.vec_id AS nid, ${dotSql("p.q", "c.re")} AS dot
-  FROM sqrecon c CROSS JOIN eq p
-  WHERE p.vec_id < $nQueries AND c.vec_id != p.vec_id),
-sqtop AS (
-  SELECT qid, nid, dot,
-    row_number() OVER (PARTITION BY qid ORDER BY dot DESC, nid) AS rnk
-  FROM sqscored)"""
-
-  /** e17: SQ8 scalar-quantized ANN top-k. */
-  def knnSq8Sql(nQueries: Int = 10, k: Int = 5, dim: Int = 64): String =
-    s"WITH $eqCte ${sq8Chain(nQueries, dim)}\n" +
-      s"SELECT qid, nid, dot, CAST(rnk AS INT) AS rnk FROM sqtop WHERE rnk <= $k"
-
-  /** e18: recall@k of SQ8 vs exact brute force. */
-  def sq8RecallSql(nQueries: Int = 10, k: Int = 5, dim: Int = 64): String =
-    s"""WITH $eqCte ${sq8Chain(nQueries, dim)}${bruteCte(nQueries, k)},
-sqk AS (SELECT qid, nid FROM sqtop WHERE rnk <= $k)
-SELECT count(l.qid) AS hits, count(*) AS total
-FROM brute b LEFT JOIN sqk l ON b.qid = l.qid AND b.nid = l.nid"""
-
-  /** e26: SQ8 served from the persisted model — slice-trained bounds,
-    * clamped codes (mirror of Similarity.knnSq8Model).
-    */
-  def knnSq8ModelSql(nQueries: Int = 10, k: Int = 5, sampleEvery: Int = 4,
-                     dim: Int = 64): String =
-    s"WITH $eqCte ${sq8Chain(nQueries, dim, Some(sampleEvery))}\n" +
-      s"SELECT qid, nid, dot, CAST(rnk AS INT) AS rnk FROM sqtop WHERE rnk <= $k"
-
-  /** e27: recall@k of model-served SQ8 vs exact brute force. */
-  def sq8ModelRecallSql(nQueries: Int = 10, k: Int = 5, sampleEvery: Int = 4,
-                        dim: Int = 64): String =
-    s"""WITH $eqCte ${sq8Chain(nQueries, dim, Some(sampleEvery))}${bruteCte(nQueries, k)},
-sqk AS (SELECT qid, nid FROM sqtop WHERE rnk <= $k)
-SELECT count(l.qid) AS hits, count(*) AS total
-FROM brute b LEFT JOIN sqk l ON b.qid = l.qid AND b.nid = l.nid"""
-
-  /** IVF-SQ8 chain ending in a `kstop` CTE (qid,nid,dot,rnk) — e6's
-    * learned cells + e17's 8-bit reconstructions on the candidate side
-    * (mirrors Similarity.knnIvfSq8).
-    */
-  private def ivfSq8Chain(nQueries: Int, nCells: Int, nProbe: Int,
-                          iters: Int, dim: Int): String =
-    kmeansCtes(nCells, iters, dim) + sq8ReconCtes(dim) + s""",
-ksassigned AS (
-  SELECT nid, cell, re FROM (
-    SELECT e.vec_id AS nid, c.cell,
-      row_number() OVER (PARTITION BY e.vec_id
-        ORDER BY ${distSql("e.q", "c.cv")}, c.cell) AS rn
-    FROM eq e CROSS JOIN kc$iters c) a
-  JOIN sqrecon r ON r.vec_id = a.nid
-  WHERE rn = 1),
-ksprobes AS (
-  SELECT vec_id AS qid, q AS qq, cell FROM (
-    SELECT e.vec_id, e.q, c.cell,
-      row_number() OVER (PARTITION BY e.vec_id
-        ORDER BY ${distSql("e.q", "c.cv")}, c.cell) AS rn
-    FROM eq e CROSS JOIN kc$iters c
-    WHERE e.vec_id < $nQueries)
-  WHERE rn <= $nProbe),
-ksscored AS (
-  SELECT qid, nid, ${dotSql("qq", "re")} AS dot
-  FROM ksassigned JOIN ksprobes USING (cell)
-  WHERE nid != qid),
-kstop AS (
-  SELECT qid, nid, dot,
-    row_number() OVER (PARTITION BY qid ORDER BY dot DESC, nid) AS rnk
-  FROM ksscored)"""
-
-  /** e19: IVF-SQ8 ANN top-k. */
-  def knnIvfSq8Sql(nQueries: Int = 10, k: Int = 5, nCells: Int = 16,
-                   nProbe: Int = 3, iters: Int = 4, dim: Int = 64): String =
-    s"WITH $eqCte ${ivfSq8Chain(nQueries, nCells, nProbe, iters, dim)}\n" +
-      s"SELECT qid, nid, dot, CAST(rnk AS INT) AS rnk FROM kstop WHERE rnk <= $k"
-
-  /** e20: recall@k of IVF-SQ8 vs exact brute force. */
-  def ivfSq8RecallSql(nQueries: Int = 10, k: Int = 5, nCells: Int = 16,
-                      nProbe: Int = 3, iters: Int = 4, dim: Int = 64): String =
-    s"""WITH $eqCte ${ivfSq8Chain(nQueries, nCells, nProbe, iters, dim)}${bruteCte(nQueries, k)},
-ksk AS (SELECT qid, nid FROM kstop WHERE rnk <= $k)
-SELECT count(l.qid) AS hits, count(*) AS total
-FROM brute b LEFT JOIN ksk l ON b.qid = l.qid AND b.nid = l.nid"""
-
   /** d8: embedding near-dup ladder — banded-LSH candidates, exact
     * quantized-dot verify (mirrors Similarity.embeddingNearDupLadder).
     */
   def embeddingLadderSql(bands: Int = 5, rowsPerBand: Int = 6,
                          threshold: Long = 40000000L): String =
-    s"""WITH $eqCte ${bandedCtes(bands, rowsPerBand, PlaneSalt)},
+    s"""WITH $eqCte ${bandedCtes(bands, rowsPerBand)},
 scored AS (
   SELECT DISTINCT a.vec_id AS id1, b.vec_id AS id2,
     ${dotSql("a.q", "b.q")} AS qdot
@@ -722,149 +131,10 @@ scored AS (
     ON a.band = b.band AND a.bucket = b.bucket AND a.vec_id < b.vec_id)
 SELECT id1, id2, qdot FROM scored WHERE qdot >= $threshold"""
 
-  /** Shared CTE chain for e29/e30: exact top-m candidates per query, the
-    * candidate-pair dot table, then the k greedy MMR selection steps
-    * UNROLLED (each step = exclude already-selected, penalty = max pair
-    * dot against the selected set, argmax of dot − penalty with the
-    * aggregator's (score desc, dot desc, nid) tie-break). Ends at
-    * sel$k(qid, nid, dot, penalty, mmr_rank).
-    */
-  private def mmrCtes(nQueries: Int, k: Int, m: Int): String =
-    s""",
-cscored AS (
-  SELECT p.vec_id AS qid, c.vec_id AS nid, ${dotSql("p.q", "c.q")} AS dot
-  FROM eq c CROSS JOIN eq p
-  WHERE p.vec_id < $nQueries AND c.vec_id != p.vec_id),
-cand AS (
-  SELECT qid, nid, dot FROM (
-    SELECT qid, nid, dot,
-      row_number() OVER (PARTITION BY qid ORDER BY dot DESC, nid) AS rn
-    FROM cscored)
-  WHERE rn <= $m)${mmrStepsCtes(k)}"""
-
-  /** The greedy-MMR CTE unroll over a `cand(qid, nid, dot)` relation the
-    * caller defines upstream — shared by [[mmrCtes]] (brute candidates,
-    * e29/e30) and [[mmrOverIvfPqModelSql]] (model-served IVF-PQ
-    * candidates, e34). Ends at sel$k.
-    */
-  private def mmrStepsCtes(k: Int): String = {
-    val steps = (2 to k).map { t =>
-      val prev = s"sel${t - 1}"
-      s""",
-s$t AS (
-  SELECT qid, nid, dot, pen AS penalty, CAST($t AS BIGINT) AS mmr_rank FROM (
-    SELECT c.qid, c.nid, c.dot, p.pen,
-      row_number() OVER (PARTITION BY c.qid
-        ORDER BY (c.dot - p.pen) DESC, c.dot DESC, c.nid) AS rn
-    FROM cand c
-    JOIN (SELECT pd.qid, pd.n1 AS nid, max(pd.pdot) AS pen
-          FROM pd JOIN $prev s ON s.qid = pd.qid AND s.nid = pd.n2
-          GROUP BY pd.qid, pd.n1) p
-      ON p.qid = c.qid AND p.nid = c.nid
-    WHERE NOT EXISTS (SELECT 1 FROM $prev s
-                      WHERE s.qid = c.qid AND s.nid = c.nid))
-  WHERE rn = 1),
-sel$t AS (SELECT * FROM $prev UNION ALL SELECT * FROM s$t)"""
-    }.mkString
-    s""",
-cv AS (SELECT cand.qid, cand.nid, eq.q FROM cand JOIN eq ON eq.vec_id = cand.nid),
-pd AS (
-  SELECT a.qid, a.nid AS n1, b.nid AS n2, ${dotSql("a.q", "b.q")} AS pdot
-  FROM cv a JOIN cv b ON a.qid = b.qid AND a.nid != b.nid),
-sel1 AS (
-  SELECT qid, nid, dot, CAST(0 AS BIGINT) AS penalty,
-    CAST(1 AS BIGINT) AS mmr_rank FROM (
-    SELECT qid, nid, dot,
-      row_number() OVER (PARTITION BY qid ORDER BY dot DESC, nid) AS rn
-    FROM cand)
-  WHERE rn = 1)$steps"""
-  }
-
-  /** e34: MMR over the model-served IVF-PQ stack's exact-reranked top-m
-    * (mirrors Similarity.mmrOverIvfPqModel) — the e15 chain builds
-    * `cand`, the shared greedy unroll re-ranks it.
-    */
-  def mmrOverIvfPqModelSql(nQueries: Int = 10, k: Int = 5, m: Int = 20,
-                           sampleEvery: Int = 4, nCells: Int = 16,
-                           nProbe: Int = 4, cIters: Int = 4, mPq: Int = 8,
-                           kCb: Int = 16, pqIters: Int = 2, dim: Int = 64,
-                           refine: Int = 10): String =
-    s"""WITH $eqCte ${ivfPqChain(nQueries, m, refine, nCells, nProbe,
-      cIters, mPq, kCb, pqIters, dim, Some(sampleEvery))},
-cand AS (SELECT qid, nid, dot FROM ipfinal WHERE rnk <= $m)${mmrStepsCtes(k)}
-SELECT qid, nid, mmr_rank, dot, penalty FROM sel$k"""
-
-  /** e29: MMR diversity re-rank (mirrors Similarity.mmrRerank). */
-  def mmrSql(nQueries: Int = 10, k: Int = 5, m: Int = 20): String =
-    s"""WITH $eqCte ${mmrCtes(nQueries, k, m)}
-SELECT qid, nid, mmr_rank, dot, penalty FROM sel$k"""
-
-  /** e30: per-query worst within-set redundancy, MMR k-set vs plain
-    * top-k (mirrors Similarity.mmrDiversity).
-    */
-  def mmrDiversitySql(nQueries: Int = 10, k: Int = 5, m: Int = 20): String =
-    s"""WITH $eqCte ${mmrCtes(nQueries, k, m)},
-topk AS (
-  SELECT qid, nid FROM (
-    SELECT qid, nid,
-      row_number() OVER (PARTITION BY qid ORDER BY dot DESC, nid) AS rn
-    FROM cscored)
-  WHERE rn <= $k),
-tpair AS (
-  SELECT a.qid, max(${dotSql("ea.q", "eb.q")}) AS mx
-  FROM topk a JOIN topk b ON a.qid = b.qid AND a.nid < b.nid
-  JOIN eq ea ON ea.vec_id = a.nid JOIN eq eb ON eb.vec_id = b.nid
-  GROUP BY a.qid),
-mpair AS (
-  SELECT a.qid, max(${dotSql("ea.q", "eb.q")}) AS mx
-  FROM sel$k a JOIN sel$k b ON a.qid = b.qid AND a.nid < b.nid
-  JOIN eq ea ON ea.vec_id = a.nid JOIN eq eb ON eb.vec_id = b.nid
-  GROUP BY a.qid)
-SELECT t.qid, t.mx AS topk_max_pairdot, m.mx AS mmr_max_pairdot,
-  (m.mx <= t.mx) AS diversified
-FROM tpair t JOIN mpair m ON m.qid = t.qid"""
-
-  /** e33: the nProbe operating curve — one e5-style recall chain per
-    * probe width, UNIONed (mirrors Similarity.nprobeSweep; each
-    * parenthesized subquery scopes its own CTE chain).
-    */
-  def nprobeSweepSql(probes: Seq[Int] = Seq(1, 2, 4, 8), nQueries: Int = 10,
-                     k: Int = 5, nCells: Int = 16): String =
-    probes.map(p =>
-      s"SELECT CAST($p AS INT) AS n_probe, hits, total FROM (\n" +
-        s"${ivfRecallSql(nQueries, k, nCells, p)})")
-      .mkString("\nUNION ALL\n")
-
-  /** e32: per-cell population of the model's coarse quantizer over the
-    * full corpus, dead cells included (mirrors Similarity.ivfCellStats).
-    * The centroids are reconstructed from the same deterministic
-    * subsample + exact-int64 Lloyd's as the e15/e16 oracles, so the
-    * model-derived stats stay hash-exact without reading the artifact.
-    */
-  def ivfCellStatsSql(nCells: Int = 16, cIters: Int = 4, dim: Int = 64,
-                      sampleEvery: Int = 4): String =
-    s"""WITH $eqCte,
-eqs AS (SELECT vec_id // $sampleEvery AS vec_id, q FROM eq
-        WHERE vec_id % $sampleEvery = 0)${kmeansCtes(nCells, cIters, dim, "eqs")},
-casn AS (
-  SELECT vec_id, cell FROM (
-    SELECT e.vec_id, c.cell,
-      row_number() OVER (PARTITION BY e.vec_id
-        ORDER BY ${distSql("e.q", "c.cv")}, c.cell) AS rn
-    FROM eq e CROSS JOIN kc$cIters c)
-  WHERE rn = 1),
-ccnt AS (SELECT cell, count(*) AS n_vecs FROM casn GROUP BY cell),
-cells AS (SELECT CAST(unnest(range(0, $nCells)) AS INT) AS cell),
-tot AS (SELECT count(*) AS n FROM eq)
-SELECT cells.cell, COALESCE(n_vecs, 0) AS n_vecs,
-  CAST(COALESCE(n_vecs, 0) * 1000000 // (SELECT n FROM tot) AS BIGINT)
-    AS share_x1m
-FROM cells LEFT JOIN ccnt USING (cell)"""
-
   /** e31: hybrid lexical+dense RRF fusion (mirrors Similarity.hybridRrf).
     * Lexical list = the t16 BM25 oracle at kEach (embedded as a derived
-    * table, so both engines rank the SAME scorer); dense list = the e1
-    * brute chain for query vec_id 0 at kEach. Fusion replays the
+    * table, so both engines rank the SAME scorer); dense list = the exact
+    * brute-force top-kEach of query vec_id 0. Fusion replays the
     * integer-exact Σ 1000000 // (c + rank) with absent ranks → 0.
     */
   def hybridRrfSql(queryTerms: Seq[String], kEach: Int = 20,

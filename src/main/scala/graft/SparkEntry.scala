@@ -23,12 +23,6 @@ object SparkEntry {
   /** t16's fixed probe query — terms of varying corpus frequency. */
   private val Bm25Terms = Seq("vector", "hash", "spark", "dup")
 
-  /** Where e15/e16's persisted ANN model artifacts live (fingerprint-keyed
-    * subdirs, so corpora/settings coexist; see Similarity.annModelFor).
-    */
-  private val AnnModelDir =
-    sys.env.getOrElse("SPARK_GRAFT_MODEL_DIR", "target/ann_model")
-
   private val BpeModelDir =
     sys.env.getOrElse("SPARK_GRAFT_BPE_MODEL_DIR", "target/bpe_model")
 
@@ -580,9 +574,9 @@ object SparkEntry {
         operators.TextOps.bpeTrainMerges(d))
     }),
     // the same gate served from the PERSISTED tokenizer artifact with
-    // ZERO training jobs (train-once/serve-many, the e15 posture for
-    // the tokenizer tier): first call trains + persists merges + the
-    // corpus-mean fertility, every later call (and RUN) loads ~KBs.
+    // ZERO training jobs (train-once/serve-many): first call trains +
+    // persists merges + the corpus-mean fertility, every later call (and
+    // RUN) loads ~KBs.
     // Oracle is t36's verbatim — the artifact reconstructs the same
     // deterministic merges, so model-served stays hash-exact
     "t37_fertility_model" -> ((s, dir) => {
@@ -731,159 +725,17 @@ object SparkEntry {
           col("doc_id").cast("string"),
           lit("@corp.example.com call +1 (555) 123-"),
           lpad((col("doc_id") % 10000).cast("string"), 4, "0"))))),
-    // heap-merge top-k (TopKAggregator): ≤k rows per (query, partition)
-    // through the exchange — the window form would shuffle every scored
-    // row into |queries| partitions (10¹⁰ rows through 10 reducers at
-    // 10⁹×10); spec-asserted row-identical to the window form and plan-
-    // audited Window-free (ExplainAudit e1)
-    "e1_knn_brute" -> ((s, dir) =>
-      operators.Similarity.knnBruteAgg(t(s, dir, "embeddings"))),
-    "e2_knn_lsh" -> ((s, dir) =>
-      operators.Similarity.knnLsh(t(s, dir, "embeddings"))),
-    "e3_knn_ivf" -> ((s, dir) =>
-      operators.Similarity.knnIvf(t(s, dir, "embeddings"))),
-    "e4_lsh_recall" -> ((s, dir) =>
-      operators.Similarity.lshRecall(t(s, dir, "embeddings"))),
-    "e5_ivf_recall" -> ((s, dir) =>
-      operators.Similarity.ivfRecall(t(s, dir, "embeddings"))),
-    // learned (k-means) coarse quantizer: recall 0.84-1.00 at nProbe 3-4
-    // on the uniform corpus vs the sign anchors' 0.44-0.60 (e7 measures)
-    "e6_knn_ivfk" -> ((s, dir) =>
-      operators.Similarity.knnIvfKmeans(t(s, dir, "embeddings"))),
-    "e7_ivfk_recall" -> ((s, dir) =>
-      operators.Similarity.ivfKmeansRecall(t(s, dir, "embeddings"))),
     // SemDeDup (Abbas et al. 2023): k-means cells bound the pair space,
     // within-cell quantized-cosine prune, keep-min-id verdicts
     "e8_semdedup" -> ((s, dir) =>
       operators.Similarity.semanticDedup(t(s, dir, "embeddings"))),
-    // PQ-ADC (Jégou et al. 2011): 4×3-bit codes, per-query lookup
-    // tables, heap-merge top-k; e10 measures the compression/recall dial
-    "e9_knn_pq" -> ((s, dir) =>
-      operators.Similarity.knnPq(t(s, dir, "embeddings"))),
-    "e10_pq_recall" -> ((s, dir) =>
-      operators.Similarity.pqRecall(t(s, dir, "embeddings"))),
-    // PQ + exact re-rank (the canonical IVF-PQ refine stage): top k·3 by
-    // ADC, exact dot on candidates only; e12 shows the recall buy-back
-    "e11_knn_pq_refine" -> ((s, dir) =>
-      operators.Similarity.knnPqRefine(t(s, dir, "embeddings"))),
-    "e12_pq_refine_recall" -> ((s, dir) =>
-      operators.Similarity.pqRefineRecall(t(s, dir, "embeddings"))),
-    // composed IVF-PQ (FAISS IVFADC): learned cells restrict the scan,
-    // ADC scores candidates through in-row codes, exact re-rank to k
-    "e13_knn_ivfpq" -> ((s, dir) =>
-      operators.Similarity.knnIvfPq(t(s, dir, "embeddings"))),
-    "e14_ivfpq_recall" -> ((s, dir) =>
-      operators.Similarity.ivfPqRecall(t(s, dir, "embeddings"))),
-    // train-ONCE / serve-many IVF-PQ: the model (subsample-trained
-    // centroids + codebooks) persists as a parquet artifact keyed by
-    // corpus fingerprint; serving runs ZERO Lloyd's jobs. e15 and e16
-    // share the artifact — the first call in a Verify run trains it,
-    // every later call (and every later RUN) loads it.
-    "e15_knn_ivfpq_model" -> ((s, dir) => {
-      val emb = t(s, dir, "embeddings")
-      operators.Similarity.knnIvfPqModel(emb,
-        operators.Similarity.annModelFor(emb, AnnModelDir))
-    }),
-    // the nProbe operating curve: recall@k per probe width in one table
-    // — the scan-fraction-vs-recall tuning artifact (FAISS nprobe sweep)
-    "e33_nprobe_sweep" -> ((s, dir) =>
-      operators.Similarity.nprobeSweep(t(s, dir, "embeddings"))),
-    // index cartography from the SAME persisted model: per-cell corpus
-    // population incl. dead cells — the imbalance/index-health table an
-    // ANN deployment monitors for retrain-on-drift decisions
-    "e32_ivf_cell_stats" -> ((s, dir) => {
-      val emb = t(s, dir, "embeddings")
-      operators.Similarity.ivfCellStats(emb,
-        operators.Similarity.annModelFor(emb, AnnModelDir))
-    }),
-    "e16_ivfpq_model_recall" -> ((s, dir) => {
-      val emb = t(s, dir, "embeddings")
-      operators.Similarity.ivfPqModelRecall(emb,
-        operators.Similarity.annModelFor(emb, AnnModelDir))
-    }),
-    // SQ8 served from the SAME persisted artifact (v2 carries the
-    // slice-trained bounds): zero aggregates at serve time — the
-    // train-once story now covers every quantization rung
-    "e26_knn_sq8_model" -> ((s, dir) => {
-      val emb = t(s, dir, "embeddings")
-      operators.Similarity.knnSq8Model(emb,
-        operators.Similarity.annModelFor(emb, AnnModelDir))
-    }),
-    "e27_sq8_model_recall" -> ((s, dir) => {
-      val emb = t(s, dir, "embeddings")
-      operators.Similarity.sq8ModelRecall(emb,
-        operators.Similarity.annModelFor(emb, AnnModelDir))
-    }),
-    // IVF-PQ served from the PERSISTED CODES table (the read side of
-    // encodeIvfPq's ingest write): codes materialize once per (corpus,
-    // model) next to the model artifact and every query batch serves
-    // from them — no per-query re-encode of the corpus, re-rank
-    // quantizes candidate rows only. Row-identical to e15 (the oracle
-    // is the same unrolled chain), so the gate proves the persisted
-    // codes round-trip bit-exactly.
-    "e28_knn_ivfpq_codes" -> ((s, dir) => {
-      val emb = t(s, dir, "embeddings")
-      val model = operators.Similarity.annModelFor(emb, AnnModelDir)
-      operators.Similarity.knnIvfPqCodes(
-        operators.Similarity.codesFor(emb, model, AnnModelDir + "_codes"),
-        emb, model)
-    }),
-    // MMR diversity re-rank (Carbonell & Goldstein 1998): the serving
-    // stack's LAST stage — greedy relevance-minus-redundancy selection
-    // over heap-merged top-m candidates, per-query greedy inside a typed
-    // MmrAggregator (zero driver iteration). e30 evidences the point:
-    // worst within-set redundancy, MMR k-set vs plain top-k.
-    "e29_mmr_rerank" -> ((s, dir) =>
-      operators.Similarity.mmrRerank(t(s, dir, "embeddings"))),
-    "e30_mmr_diversity" -> ((s, dir) =>
-      operators.Similarity.mmrDiversity(t(s, dir, "embeddings"))),
-    // the COMPOSED production serving stack: persisted-model IVF-PQ
-    // candidates (e15, zero training) -> exact re-rank -> MMR diversity
-    // (e29) in one query — every stage individually audited, here
-    // proven to compose end-to-end and stay oracle-exact
-    "e34_mmr_ivfpq_model" -> ((s, dir) => {
-      val emb = t(s, dir, "embeddings")
-      operators.Similarity.mmrOverIvfPqModel(emb,
-        operators.Similarity.annModelFor(emb, AnnModelDir))
-    }),
     // hybrid lexical+dense retrieval: BM25 top-20 (t16's scorer) fused
-    // with the dense top-20 of the id-0 embedding query (e1's scorer)
-    // by reciprocal-rank fusion — rank-only, calibration-free, the
+    // with the exact dense top-20 of the id-0 embedding query by
+    // reciprocal-rank fusion — rank-only, calibration-free, the
     // Elasticsearch/Vespa hybrid default. Integer-exact Σ 1e6 div (60+r).
     "e31_hybrid_rrf" -> ((s, dir) =>
       operators.Similarity.hybridRrf(
         t(s, dir, "documents"), t(s, dir, "embeddings"), Bm25Terms)),
-    // SQ8 scalar quantization (FAISS QT_8bit): the compression rung
-    // between exact float (e1) and PQ (e9) — 1 byte/dim, bounds trained
-    // in ONE aggregate (no Lloyd's), encode/decode a pure in-row
-    // projection. e18 measures the recall the 8-bit rung keeps.
-    "e17_knn_sq8" -> ((s, dir) =>
-      operators.Similarity.knnSq8(t(s, dir, "embeddings"))),
-    "e18_sq8_recall" -> ((s, dir) =>
-      operators.Similarity.sq8Recall(t(s, dir, "embeddings"))),
-    // IVF-SQ8 (FAISS IndexIVFScalarQuantizer): cell restriction
-    // compounding with the 8-bit rung — e20 vs e7 isolates what the
-    // bytes cost on top of the cells at the same scan fraction
-    "e19_knn_ivfsq8" -> ((s, dir) =>
-      operators.Similarity.knnIvfSq8(t(s, dir, "embeddings"))),
-    "e20_ivfsq8_recall" -> ((s, dir) =>
-      operators.Similarity.ivfSq8Recall(t(s, dir, "embeddings"))),
-    // filtered (attribute-constrained) search — the vector-DB metadata-
-    // filter capability: predicate selectivity compounds with the IVF
-    // scan fraction; e23's truth set is the FILTERED exact top-k
-    "e21_knn_filtered" -> ((s, dir) =>
-      operators.Similarity.knnBruteFiltered(t(s, dir, "embeddings"))),
-    "e22_knn_ivf_filtered" -> ((s, dir) =>
-      operators.Similarity.knnIvfFiltered(t(s, dir, "embeddings"))),
-    "e23_filtered_recall" -> ((s, dir) =>
-      operators.Similarity.filteredRecall(t(s, dir, "embeddings"))),
-    // distributed k-NN GRAPH construction (NN-descent posture): the
-    // offline primitive graph-ANN indexes are built from at 10^9
-    // vectors — ids-only edges, linear candidate volume per round
-    "e24_knn_graph" -> ((s, dir) =>
-      operators.Similarity.knnGraph(t(s, dir, "embeddings"))),
-    "e25_knn_graph_recall" -> ((s, dir) =>
-      operators.Similarity.knnGraphRecall(t(s, dir, "embeddings"))),
     "d8_embedding_ladder" -> ((s, dir) =>
       operators.Similarity.embeddingNearDupLadder(t(s, dir, "embeddings"))),
   )
@@ -1287,45 +1139,8 @@ object SparkEntry {
     "d12_incremental_dedup" -> TextOracles.incrementalDedupSql(),
     // identical semantics through the persisted index — same oracle
     "d22_incremental_indexed" -> TextOracles.incrementalDedupSql(),
-    "e2_knn_lsh" -> SimOracles.knnLshSql(),
-    "e3_knn_ivf" -> SimOracles.knnIvfSql(),
-    "e4_lsh_recall" -> SimOracles.lshRecallSql(),
-    "e5_ivf_recall" -> SimOracles.ivfRecallSql(),
-    "e6_knn_ivfk" -> SimOracles.knnIvfKmeansSql(),
-    "e7_ivfk_recall" -> SimOracles.ivfKmeansRecallSql(),
     "e8_semdedup" -> SimOracles.semanticDedupSql(),
-    "e9_knn_pq" -> SimOracles.knnPqSql(),
-    "e10_pq_recall" -> SimOracles.pqRecallSql(),
-    "e11_knn_pq_refine" -> SimOracles.knnPqRefineSql(),
-    "e12_pq_refine_recall" -> SimOracles.pqRefineRecallSql(),
-    "e13_knn_ivfpq" -> SimOracles.knnIvfPqSql(),
-    "e14_ivfpq_recall" -> SimOracles.ivfPqRecallSql(),
-    // the oracle reconstructs the persisted model digit-for-digit from
-    // the same deterministic subsample + exact-int64 Lloyd's, so the
-    // model-served path stays hash-exact without the oracle reading the
-    // artifact file
-    "e15_knn_ivfpq_model" -> SimOracles.knnIvfPqModelSql(),
-    "e16_ivfpq_model_recall" -> SimOracles.ivfPqModelRecallSql(),
-    "e32_ivf_cell_stats" -> SimOracles.ivfCellStatsSql(),
-    "e33_nprobe_sweep" -> SimOracles.nprobeSweepSql(),
-    "e26_knn_sq8_model" -> SimOracles.knnSq8ModelSql(),
-    "e27_sq8_model_recall" -> SimOracles.sq8ModelRecallSql(),
-    // e28 serves from persisted codes but is row-identical to e15 by
-    // construction — the SAME unrolled training+serving chain oracles it
-    "e28_knn_ivfpq_codes" -> SimOracles.knnIvfPqModelSql(),
-    "e29_mmr_rerank" -> SimOracles.mmrSql(),
-    "e30_mmr_diversity" -> SimOracles.mmrDiversitySql(),
-    "e34_mmr_ivfpq_model" -> SimOracles.mmrOverIvfPqModelSql(),
     "e31_hybrid_rrf" -> SimOracles.hybridRrfSql(Bm25Terms),
-    "e17_knn_sq8" -> SimOracles.knnSq8Sql(),
-    "e18_sq8_recall" -> SimOracles.sq8RecallSql(),
-    "e19_knn_ivfsq8" -> SimOracles.knnIvfSq8Sql(),
-    "e20_ivfsq8_recall" -> SimOracles.ivfSq8RecallSql(),
-    "e21_knn_filtered" -> SimOracles.knnBruteFilteredSql(),
-    "e22_knn_ivf_filtered" -> SimOracles.knnIvfFilteredSql(),
-    "e23_filtered_recall" -> SimOracles.filteredRecallSql(),
-    "e24_knn_graph" -> SimOracles.knnGraphSql(),
-    "e25_knn_graph_recall" -> SimOracles.knnGraphRecallSql(),
     "d8_embedding_ladder" -> SimOracles.embeddingLadderSql(),
     "d1_dedup_exact" -> """
       SELECT doc_id, sha256(text) AS fingerprint,
@@ -1386,20 +1201,5 @@ object SparkEntry {
           AS INT) AS bpe_tokens,
         CAST(length(text) AS INT) AS n_chars
       FROM documents""",
-    "e1_knn_brute" -> """
-      WITH q AS (SELECT vec_id AS qid, embedding AS qe FROM embeddings
-                 WHERE vec_id < 10),
-      d AS (
-        SELECT qid, e.vec_id AS nid,
-          CAST(list_sum(list_transform(range(1, 65),
-            i -> CAST(round(CAST(qe[i] AS DOUBLE) * 10000) AS BIGINT)
-                 * CAST(round(CAST(e.embedding[i] AS DOUBLE) * 10000) AS BIGINT)))
-            AS BIGINT) AS dot
-        FROM q, embeddings e WHERE e.vec_id != qid)
-      SELECT qid, nid, dot, CAST(rnk AS INT) AS rnk
-      FROM (SELECT *, row_number() OVER (PARTITION BY qid
-                                         ORDER BY dot DESC, nid) AS rnk
-            FROM d)
-      WHERE rnk <= 5""",
   )
 }

@@ -5,7 +5,7 @@ import org.apache.spark.sql.expressions.Aggregator
 
 /** Typed partial+final top-k aggregator: each partition keeps only its k
   * best (score, id) pairs, merge combines heaps — the custom-UDAF form of
-  * TakeOrdered. Used as the ANN per-query reducer alternative to a
+  * TakeOrdered. Used as the per-query k-NN reducer alternative to a
   * row_number window: the window shuffles ALL candidate rows per query;
   * this moves at most k rows per (query, partition) — the right shape when
   * candidate lists are large (SURVEY §2.7 UDF/UDAF surface).

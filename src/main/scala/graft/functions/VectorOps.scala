@@ -9,10 +9,10 @@ import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, 
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types._
 
-/** Codegen'd vector kernels for the similarity tier. The declarative HOF
+/** Codegen'd vector kernels for the embedding queries. The declarative HOF
   * forms (`aggregate(zip_with(...))`, `transform(sequence...)`) execute
   * through interpreted per-element lambdas — measured as the dominant cost
-  * of every ANN/near-dup query at sf0.1 (same lesson as Shingles3). These
+  * of every embedding query at sf0.1 (same lesson as Shingles3). These
   * loops keep the arithmetic IDENTICAL (the DuckDB oracles mirror the
   * formulas, not the execution), so results are bit-equal.
   */
@@ -58,7 +58,7 @@ case class DotLong(left: Expression, right: Expression)
 /** The n projections of a quantized vector onto the deterministic ±1
   * direction family `sign(p, i) = ((((p·131071 + i + 1)·HashMul + salt)
   * mod 2³²) >> 16) & 1 ? 1 : -1` — one Java loop instead of n interpreted
-  * HOF dot products. Used as LSH sign bits (proj > 0) and IVF anchor dots.
+  * HOF dot products. Used as LSH sign bits (proj > 0).
   */
 case class SignProjections(child: Expression, n: Int, salt: Long)
     extends UnaryExpression {
@@ -91,11 +91,11 @@ case class SignProjections(child: Expression, n: Int, salt: Long)
   * The arithmetic is IDENTICAL (dist = ||c||² − 2·x·c in exact int64,
   * struct order (dist, cell) so min/sort tie-breaks lexicographically);
   * what changes is plan size: Catalyst walked ~nCells·dim literal leaves
-  * per optimizer rule per e-tier query, which dominated the tier's
-  * driver time at bench scale. Null contract matches the tree form: a
-  * null input array or a length-mismatched/null-element vector yields
-  * null DISTS (dot_long's contract) inside non-null structs — the
-  * expression itself never returns null.
+  * per optimizer rule per query, which dominated the driver time at
+  * bench scale. Null contract matches the tree form: a null input array
+  * or a length-mismatched/null-element vector yields null DISTS
+  * (dot_long's contract) inside non-null structs — the expression itself
+  * never returns null.
   */
 case class CellDists(child: Expression, cents: Array[Array[Long]])
     extends UnaryExpression {
@@ -137,54 +137,8 @@ case class CellDists(child: Expression, cents: Array[Array[Long]])
     copy(child = newChild)
 }
 
-/** Dot products of a quantized vector (block) against every row of a
-  * LITERAL codebook — the PQ ADC-table kernel, one node per block where
-  * the tree form inlined kCb × blockDim literal leaves
-  * (`array(dot_long(typedLit(cv), slice(qe, …)))`). Entries follow
-  * dot_long's null contract (null on length mismatch or null element);
-  * a null input array yields an all-null entry array, like the tree
-  * form's per-entry null dots.
-  */
-case class BlockDots(child: Expression, book: Array[Array[Long]])
-    extends UnaryExpression {
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(LongType, _) => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"block_dots expects array<bigint>, got ${other.catalogString}")
-  }
-
-  override def dataType: DataType =
-    ArrayType(LongType, containsNull = true)
-
-  override def nullable: Boolean = false
-
-  override def eval(input: InternalRow): Any = {
-    val v = child.eval(input)
-    VectorOps.blockDots(
-      if (v == null) null else v.asInstanceOf[ArrayData], book)
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val childGen = child.genCode(ctx)
-    val ref = ctx.addReferenceObj("book", book, "long[][]")
-    ev.copy(
-      code = childGen.code +
-        code"""
-        org.apache.spark.sql.catalyst.util.ArrayData ${ev.value} =
-          graft.functions.VectorOps.blockDots(
-            ${childGen.isNull} ? null : ${childGen.value}, $ref);""",
-      isNull = FalseLiteral)
-  }
-
-  override def prettyName: String = "block_dots"
-
-  override protected def withNewChildInternal(newChild: Expression): BlockDots =
-    copy(child = newChild)
-}
-
 /** `transform(e, x => round(cast(x as double) * 10000).cast("long"))` as
-  * one codegen'd loop — the e-tier's quantization projection ran through
+  * one codegen'd loop — the embedding quantization projection ran through
   * interpreted HOF lambdas on every corpus scan. Semantics replicated
   * exactly: widening float→double cast, ×10000 double multiply, Spark
   * `round` = decimal HALF_UP at scale 0 (away-from-zero midpoints —
@@ -221,51 +175,6 @@ case class QuantizeVec(child: Expression) extends UnaryExpression {
   override def prettyName: String = "quantize_vec"
 
   override protected def withNewChildInternal(newChild: Expression): QuantizeVec =
-    copy(child = newChild)
-}
-
-/** The SQ8 encode→decode round trip of a quantized vector against LITERAL
-  * per-dimension bounds — one codegen'd loop replacing the interpreted
-  * `transform((x, i) -> CASE …)` HOF of `Similarity.sq8ReconSql` /
-  * `sq8ReconClampedSql`, whose per-element lambda ran two `element_at`
-  * probes into 64-entry literal arrays plus the arithmetic, interpreted,
-  * on every corpus row of e17/e19/e26. Semantics replicated exactly:
-  *   rg_i = 0      → mn_i (even for null x — the CASE guards first)
-  *   null x        → null element
-  *   i ≥ |bounds|  → null element (benign extension: no real vector is
-  *                   longer than the bounds arrays; the HOF form would
-  *                   error there under ANSI element_at)
-  *   else code = ((x − mn_i)·255) div rg_i, clamped to [0,255] when
-  *   `clamped` (the model-trained-bounds variant), recon = mn_i +
-  *   (code·rg_i) div 255 — Java `/` IS Spark `div` (truncate toward
-  *   zero) on longs, so the integers agree unconditionally.
-  * Differential-checked bit-identical vs the HOF form over the corpus +
-  * adversarial rows (tools.Sq8KernelCheck).
-  */
-case class Sq8Recon(child: Expression, mn: Array[Long], rg: Array[Long],
-                    clamped: Boolean) extends UnaryExpression {
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(LongType, _) => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"sq8_recon expects array<bigint>, got ${other.catalogString}")
-  }
-
-  override def dataType: DataType = ArrayType(LongType, containsNull = true)
-
-  override def nullSafeEval(input: Any): Any =
-    VectorOps.sq8Recon(input.asInstanceOf[ArrayData], mn, rg, clamped)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val mnRef = ctx.addReferenceObj("mn", mn, "long[]")
-    val rgRef = ctx.addReferenceObj("rg", rg, "long[]")
-    defineCodeGen(ctx, ev,
-      c => s"graft.functions.VectorOps.sq8Recon($c, $mnRef, $rgRef, $clamped)")
-  }
-
-  override def prettyName: String = "sq8_recon"
-
-  override protected def withNewChildInternal(newChild: Expression): Sq8Recon =
     copy(child = newChild)
 }
 
@@ -342,41 +251,6 @@ object VectorOps {
             .setScale(0, java.math.RoundingMode.HALF_UP).doubleValue().toLong)
         }
       i += 1
-    }
-    new GenericArrayData(out)
-  }
-
-  def sq8Recon(q: ArrayData, mn: Array[Long], rg: Array[Long],
-               clamped: Boolean): ArrayData = {
-    val n = q.numElements()
-    val out = new Array[Any](n)
-    var i = 0
-    while (i < n) {
-      out(i) =
-        if (i >= mn.length) null
-        else if (rg(i) == 0L) java.lang.Long.valueOf(mn(i))
-        else if (q.isNullAt(i)) {
-          // clamped: greatest(null, 0L) SKIPS the null (Spark semantics),
-          // so a null element clamps to code 0 and reconstructs to mn_i;
-          // unclamped: the null poisons the arithmetic
-          if (clamped) java.lang.Long.valueOf(mn(i)) else null
-        } else {
-          val x = q.getLong(i)
-          var c = ((x - mn(i)) * 255L) / rg(i)
-          if (clamped) { if (c < 0L) c = 0L else if (c > 255L) c = 255L }
-          java.lang.Long.valueOf(mn(i) + (c * rg(i)) / 255L)
-        }
-      i += 1
-    }
-    new GenericArrayData(out)
-  }
-
-  def blockDots(q: ArrayData, book: Array[Array[Long]]): ArrayData = {
-    val out = new Array[Any](book.length)
-    var ci = 0
-    while (ci < book.length) {
-      out(ci) = if (q == null) null else dotRef(q, book(ci))
-      ci += 1
     }
     new GenericArrayData(out)
   }

@@ -56,24 +56,10 @@ package object functions {
   def cell_dists(c: Column, cents: Array[Array[Long]]): Column =
     column(CellDists(expression(c), cents))
 
-  /** Dots of a vector (block) vs every row of a literal codebook
-    * (codegen'd loop — the PQ ADC-table kernel).
-    */
-  def block_dots(c: Column, book: Array[Array[Long]]): Column =
-    column(BlockDots(expression(c), book))
-
   /** round(x·10⁴) int64 quantization of a float/double vector (codegen'd
     * loop, exact Spark-round HALF_UP semantics).
     */
   def quantize_vec(c: Column): Column = column(QuantizeVec(expression(c)))
-
-  /** SQ8 encode→decode round trip vs literal per-dim bounds (codegen'd
-    * loop — replaces the interpreted transform-CASE of sq8ReconSql;
-    * `clamped` = the model-trained-bounds variant).
-    */
-  def sq8_recon(c: Column, mn: Array[Long], rg: Array[Long],
-                clamped: Boolean): Column =
-    column(Sq8Recon(expression(c), mn, rg, clamped))
 
   /** Adjacent-token bigram (f2, f1) hash-pair structs in one codegen'd
     * pass (byte-identical to poly_hash31 over concat_ws / its

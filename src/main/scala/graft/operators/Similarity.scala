@@ -12,8 +12,9 @@ import org.apache.spark.sql.functions._
   * overflow-free (64 dims × (3e4)² ≈ 5.8e10 « 2^63), and bit-identical
   * to the DuckDB oracle. Float dot products would differ in ulps across
   * engines and make top-k nondeterministic at ties. The LSH hyperplanes
-  * and IVF anchor directions are likewise pure integer arithmetic, so the
-  * approximate tiers (e2/e3) have full cross-engine oracles too.
+  * (d8's banded candidates) and the k-means centroids (e8's cells) are
+  * likewise pure integer arithmetic, so every embedding query has a full
+  * cross-engine oracle (SimOracles).
   */
 object Similarity {
 
@@ -22,25 +23,23 @@ object Similarity {
   // arithmetic, mirrored digit-for-digit in the DuckDB oracle SQL
   // (SimOracles). A small-modulus formula like ((p*131+i*31)%7)%2 is NOT
   // enough: it repeats with period 7 in p, so planes 7+ duplicate planes
-  // 0+ and extra bands add no recall (found when wiring the e4 recall
-  // gate). Max operand: (84*131071+65)*2654435761 ≈ 2.9e16 « 2^63.
+  // 0+ and extra bands add no recall. Max operand at 84 planes:
+  // (84*131071+65)*2654435761 ≈ 2.9e16 « 2^63.
   val HashMul: Long = graft.functions.VectorOps.HashMul
   val HashMod: Long = graft.functions.VectorOps.HashMod
-  /** hyperplane family salt (knnLsh, embeddingNearDupLadder) */
+  /** hyperplane family salt (embeddingNearDupLadder) */
   val PlaneSalt = 0L
-  /** IVF anchor family salt — distinct so cells decorrelate from buckets */
-  val AnchorSalt = 2463534242L
 
   private def quantized(e: Column): Column =
     // codegen'd loop (functions.QuantizeVec) — the HOF transform ran an
-    // interpreted round/cast lambda per element on every corpus scan of
-    // every e-tier query; values are bit-identical (differential-checked
-    // incl. ±midpoints, tools.QuantizeKernelCheck)
+    // interpreted round/cast lambda per element on every corpus scan;
+    // values are bit-identical (differential-checked incl. ±midpoints,
+    // tools.QuantizeKernelCheck)
     graft.functions.quantize_vec(e)
 
   /** ±1 hyperplane sign-bit array (one per plane) for a quantized vector —
     * a codegen'd SignProjections loop (the HOF form ran n interpreted
-    * lambda dot products per row and dominated e2/d8 wall time);
+    * lambda dot products per row and dominated d8 wall time);
     * materialize the result as a column before fanning out per band, or
     * projection collapse re-inlines it per consumer.
     */
@@ -64,8 +63,7 @@ object Similarity {
     * partition), so ≤ k·tasks rows cross the exchange. The row_number
     * window form shuffles EVERY scored row into |queries| reducer
     * partitions — fatal once the scored set is a large corpus fraction
-    * (brute force scores all of it; LSH candidates are ~73% on the
-    * uniform corpus; IVF probes ~19%). Row-identical to the window form
+    * (brute force scores all of it). Row-identical to the window form
     * (ties by smaller nid), spec-asserted.
     */
   private def topKByDot(scored: DataFrame, k: Int): DataFrame = {
@@ -86,11 +84,9 @@ object Similarity {
   /** Exact top-k by quantized dot product, brute force: broadcast the
     * query set (small) against the full corpus — one pass, no shuffle of
     * the corpus side. The final per-query top-k here is the row_number
-    * WINDOW form — kept as the oracle-tier reference implementation (it
-    * mirrors the SQL oracle structurally); every serving-path op
-    * ([[knnBruteAgg]]/[[knnLsh]]/[[knnIvf]]/[[knnIvfKmeans]]) uses the
-    * heap-merge [[topKByDot]] instead, which is spec-asserted
-    * row-identical.
+    * WINDOW form — kept as the reference implementation (it mirrors the
+    * SQL oracle structurally); [[knnBruteAgg]] uses the heap-merge
+    * [[topKByDot]] instead, which is spec-asserted row-identical.
     */
   def knnBrute(emb: DataFrame, nQueries: Int = 10, k: Int = 5): DataFrame = {
     val corpus = emb.select(col("vec_id").as("nid"),
@@ -112,16 +108,8 @@ object Similarity {
     * (query, partition) instead of shuffling every candidate row. Same
     * results as [[knnBrute]] (asserted in SimilaritySpec).
     */
-  def knnBruteAgg(emb: DataFrame, nQueries: Int = 10, k: Int = 5): DataFrame =
-    knnBruteAggQ(
-      emb.select(col("vec_id"), quantized(col("embedding")).as("qe")),
-      nQueries, k)
-
-  /** [[knnBruteAgg]] over an already-quantized (vec_id, qe) relation —
-    * split out so composite queries (e25's truth side) can share one
-    * quantize pass with the structure they evaluate.
-    */
-  private def knnBruteAggQ(eq: DataFrame, nQueries: Int, k: Int): DataFrame = {
+  def knnBruteAgg(emb: DataFrame, nQueries: Int = 10, k: Int = 5): DataFrame = {
+    val eq = emb.select(col("vec_id"), quantized(col("embedding")).as("qe"))
     val corpus = eq.select(col("vec_id").as("nid"), col("qe").as("qe_n"))
     val queries = eq.filter(col("vec_id") < nQueries)
       .select(col("vec_id").as("qid"), col("qe").as("qe_q"))
@@ -198,153 +186,7 @@ object Similarity {
       .select(col("id1"), col("id2"), col("qdot"))
   }
 
-  /** IVF-style ANN with a FIXED-size arithmetic coarse quantizer: nCells
-    * anchor directions whose components are deterministic ±1 signs. Every
-    * vector computes its nCells anchor dots IN-ROW with array HOFs and
-    * takes argmin-by-rank — no centroid join, no assignment window, no
-    * shuffle of the corpus. (The round-1 form crossJoined the corpus with
-    * a centroid set that GREW with the corpus and ranked it through a
-    * window — n²/37 rows through an exchange at 10⁹ vectors; this one
-    * moves only the probed candidates.) Queries probe their nProbe
-    * nearest cells; exact quantized dot re-ranks within probed cells.
-    * Probe cost ≈ nProbe/nCells of the corpus per query.
-    */
-  /** (vid, qv, cdots): quantized vector + its dot against each of the
-    * nCells fixed sign-anchors. Shared by the corpus-assignment and
-    * probe sides of [[knnIvf]]/[[knnIvfFiltered]].
-    */
-  private def ivfBase(emb: DataFrame, nCells: Int): DataFrame =
-    emb.select(col("vec_id").as("vid"),
-        quantized(col("embedding")).as("qv"))
-      .withColumn("cdots",
-        graft.functions.sign_projections(col("qv"), nCells, AnchorSalt))
-
-  /** Corpus side: each row with only its ARGMAX cell (ties by smaller
-    * index) — array_max over (dot, -cell) structs, literal-indexed,
-    * fully codegen'd, O(nCells)/row. The O(nCells²) interpreted
-    * rank-array HOF lives in [[ivfProbes]] and runs on the nQueries
-    * probe rows ONLY (r4: it previously ran per corpus row — the file's
-    * own interpreted-HOF tax, measured on the 4.1M-vector bench as the
-    * e3 hot path).
-    */
-  private def ivfAssigned(emb: DataFrame, nCells: Int): DataFrame = {
-    val cellStructs = array((0 until nCells).map(c =>
-      struct(element_at(col("cdots"), c + 1).as("d"),
-        lit(-c).as("nc"))): _*)
-    ivfBase(emb, nCells).select(col("vid").as("nid"), col("qv").as("qe_n"),
-      (-array_max(cellStructs).getField("nc")).cast("int").as("cell"))
-  }
-
-  /** Probe side: (qid, qe_q, cell) exploded to the nProbe nearest cells
-    * per query — rank of each cell among the dots (0 = nearest), ties by
-    * cell index.
-    */
-  private def ivfProbes(emb: DataFrame, nQueries: Int, nCells: Int,
-                        nProbe: Int): DataFrame = {
-    val cellSeq = sequence(lit(0), lit(nCells - 1))
-    ivfBase(emb, nCells).filter(col("vid") < nQueries)
-      .withColumn("rnks", transform(cellSeq, c =>
-        size(filter(cellSeq, c2 =>
-          element_at(col("cdots"), c2 + 1) > element_at(col("cdots"), c + 1) ||
-            (element_at(col("cdots"), c2 + 1) === element_at(col("cdots"), c + 1) &&
-              c2 < c)))))
-      .select(col("vid").as("qid"), col("qv").as("qe_q"),
-        explode(filter(cellSeq, c =>
-          element_at(col("rnks"), c + 1) < nProbe)).as("cell"))
-  }
-
-  def knnIvf(emb: DataFrame, nQueries: Int = 10, k: Int = 5,
-             nCells: Int = 16, nProbe: Int = 3): DataFrame =
-    topKByDot(ivfAssigned(emb, nCells)
-      .join(broadcast(ivfProbes(emb, nQueries, nCells, nProbe)), Seq("cell"))
-      .filter(col("nid") =!= col("qid"))
-      .select(col("qid"), col("nid"),
-        dotCols(col("qe_q"), col("qe_n")).as("dot")), k)
-
-  /** e33 — the nProbe operating curve: recall@k of the IVF tier at each
-    * probe width, in one table — (n_probe, hits, total) per sweep point.
-    * This is THE tuning artifact of an ANN deployment: nProbe/nCells is
-    * the scan fraction you pay, recall is what it buys, and the curve's
-    * knee is where you operate (FAISS's standard nprobe sweep). Each
-    * point is the audited e3 serving pass + the e5 recall harness —
-    * heap-merge top-k, broadcast probes, Window-free — UNIONed; the
-    * sweep is offline tuning, so recomputing the corpus cell assignment
-    * per point (4 linear scans here) is the intended cost model, not a
-    * serving-path concern.
-    */
-  def nprobeSweep(emb: DataFrame, probes: Seq[Int] = Seq(1, 2, 4, 8),
-                  nQueries: Int = 10, k: Int = 5,
-                  nCells: Int = 16): DataFrame = {
-    require(probes.nonEmpty, "nprobeSweep needs at least one probe width")
-    probes.map { p =>
-      recallVsBrute(emb, knnIvf(emb, nQueries, k, nCells, p), nQueries, k)
-        .select(lit(p).as("n_probe"), col("hits"), col("total"))
-    }.reduce(_ unionByName _)
-  }
-
-  // ------------------------------------------------ filtered (attribute-
-  // constrained) search — the vector-DB "metadata filter" capability
-
-  /** e21 — filtered exact k-NN (the PRE-filter strategy): top-k among
-    * corpus vectors satisfying an attribute predicate (`label = lbl`),
-    * queries drawn from the full corpus. The predicate lands in the
-    * parquet scan as a pushed filter (ExplainAudit asserts PushedFilters
-    * on e21), so at selectivity s the scan reads s·N rows — the reason
-    * pre-filtering beats post-filtering top-k' > k results whenever the
-    * predicate is selective (post-filtering an ANN result can return
-    * FEWER than k valid hits; the pre-filter form never does unless the
-    * matching population itself is < k). Exact tier = the ground truth
-    * for [[knnIvfFiltered]]'s compounding claim.
-    */
-  def knnBruteFiltered(emb: DataFrame, nQueries: Int = 10, k: Int = 5,
-                       lbl: Int = 3): DataFrame = {
-    val corpus = emb.filter(col("label") === lbl)
-      .select(col("vec_id").as("nid"), quantized(col("embedding")).as("qe_n"))
-    val queries = emb.filter(col("vec_id") < nQueries)
-      .select(col("vec_id").as("qid"), quantized(col("embedding")).as("qe_q"))
-    topKByDot(corpus.crossJoin(broadcast(queries))
-      .filter(col("nid") =!= col("qid"))
-      .select(col("qid"), col("nid"),
-        dotCols(col("qe_q"), col("qe_n")).as("dot")), k)
-  }
-
-  /** e22 — filtered IVF: attribute predicate compounding with cell
-    * restriction — the scan touches ~(nProbe/nCells)·s·N rows (both
-    * cuts multiply; at 10⁹ vectors with s=0.1 and 3/16 probing that is
-    * ~2% of the corpus). Probes come from the FULL corpus (a query need
-    * not satisfy the predicate it filters by); only the candidate side
-    * is restricted, BEFORE cell assignment, so the filter reaches the
-    * scan and the per-row argmax work is never spent on non-matching
-    * rows.
-    */
-  def knnIvfFiltered(emb: DataFrame, nQueries: Int = 10, k: Int = 5,
-                     nCells: Int = 16, nProbe: Int = 6,
-                     lbl: Int = 3): DataFrame =
-    topKByDot(ivfAssigned(emb.filter(col("label") === lbl), nCells)
-      .join(broadcast(ivfProbes(emb, nQueries, nCells, nProbe)), Seq("cell"))
-      .filter(col("nid") =!= col("qid"))
-      .select(col("qid"), col("nid"),
-        dotCols(col("qe_q"), col("qe_n")).as("dot")), k)
-
-  /** e23 — recall@k of filtered IVF vs filtered exact: the truth set is
-    * [[knnBruteFiltered]] (recall against GLOBAL brute would conflate
-    * predicate loss with probe loss — a filtered result can never
-    * contain out-of-predicate neighbors).
-    */
-  def filteredRecall(emb: DataFrame, nQueries: Int = 10, k: Int = 5,
-                     nCells: Int = 16, nProbe: Int = 6,
-                     lbl: Int = 3): DataFrame = {
-    val truth = knnBruteFiltered(emb, nQueries, k, lbl)
-      .select(col("qid"), col("nid"))
-    val a = knnIvfFiltered(emb, nQueries, k, nCells, nProbe, lbl)
-      .select(col("qid").as("q2"), col("nid").as("n2"))
-    truth.join(a, col("qid") === col("q2") && col("nid") === col("n2"),
-        "left")
-      .agg(count(lit(1)).as("total"), count(col("q2")).as("hits"))
-      .select(col("hits"), col("total"))
-  }
-
-  // ------------------------------------------------ learned IVF (k-means)
+  // ------------------------------------------------ learned cells (k-means)
 
   /** Per-row array of (dist, cell) structs against LITERAL centroids:
     * dist = ||c||² − 2·x·c (the ||x||² term is constant per row, so the
@@ -353,22 +195,20 @@ object Similarity {
     * min/sort lexicographic ⇒ deterministic cell tie-break, mirrored by
     * the oracle's ORDER BY dist, cell.
     */
-  private def cellDists(cents: Array[Array[Long]],
-                        q: Column = col("qe")): Column =
+  private def cellDists(cents: Array[Array[Long]]): Column =
     // one codegen'd kernel node (functions.CellDists) instead of the
     // nCells × dim inlined-literal array(struct(lit(c2) − 2·dot(...)))
     // tree: identical exact-int64 arithmetic and (dist, cell) struct
     // order, but Catalyst no longer walks ~1k literal leaves per rule
-    // per e-tier query (measured as the tier's dominant driver cost)
-    graft.functions.cell_dists(q, cents)
+    // per query (measured as the dominant driver cost)
+    graft.functions.cell_dists(col("qe"), cents)
 
   /** Deterministic seeded Lloyd's k-means over the quantized vectors —
-    * the LEARNED coarse quantizer (vs [[knnIvf]]'s arithmetic sign
-    * anchors). Seeds are the vectors with vec_id < nCells (fixed,
-    * replayable); `iters` fixed iterations of assign → integer-mean
-    * update (component = Σx DIV n, truncating division — identical in
-    * Scala `/` and DuckDB `//`); empty cells keep their previous
-    * centroid. All arithmetic is exact int64, so the DuckDB oracle
+    * the learned cells of [[semanticDedup]]. Seeds are the vectors with
+    * vec_id < nCells (fixed, replayable); `iters` fixed iterations of
+    * assign → integer-mean update (component = Σx DIV n, truncating
+    * division — identical in Scala `/` and DuckDB `//`); empty cells
+    * keep their previous centroid. All arithmetic is exact int64, so the DuckDB oracle
     * (SimOracles.kmeansCtes) unrolls the same iterations digit-for-digit.
     *
     * Scale shape: each iteration is one corpus pass (assignment is
@@ -376,7 +216,7 @@ object Similarity {
     * aggregate collected to the driver, exactly Lloyd's on Spark (MLlib
     * KMeans does the same treeAggregate-to-driver). At 100 TB train the
     * quantizer on a deterministic subsample (e.g. pmod(hash(id), S) = 0)
-    * — the assignment/probe path below is unchanged.
+    * — the in-row assignment is unchanged.
     */
   def kmeansCentroids(emb: DataFrame, nCells: Int = 16,
                       iters: Int = 4): Array[Array[Long]] = {
@@ -385,17 +225,7 @@ object Similarity {
     // and re-runs the quantization projection
     val q = emb.select(col("vec_id"), quantized(col("embedding")).as("qe"))
       .cache()
-    try kmeansCentroidsQ(q, nCells, iters)
-    finally { q.unpersist(): Unit }
-  }
-
-  /** Core Lloyd's loop over an ALREADY-CACHED (vec_id, qe) relation —
-    * shared so [[knnIvfPq]] can train the coarse quantizer and the PQ
-    * codebooks off ONE cache fill instead of two quantize+cache cycles.
-    */
-  private def kmeansCentroidsQ(q: DataFrame, nCells: Int,
-                               iters: Int): Array[Array[Long]] = {
-    {
+    try {
       var cents: Array[Array[Long]] = q.filter(col("vec_id") < nCells)
         .orderBy(col("vec_id")).collect()
         .map(_.getAs[scala.collection.Seq[Long]]("qe").toArray)
@@ -425,927 +255,7 @@ object Similarity {
         cents = next
       }
       cents
-    }
-  }
-
-  /** IVF ANN over the LEARNED k-means cells: same probe shape as
-    * [[knnIvf]] (in-row assignment, no centroid join, broadcast probes,
-    * exact re-rank inside probed cells) with the Voronoi cells of
-    * [[kmeansCentroids]] instead of sign anchors — sharper cells lift
-    * recall at the same nProbe/nCells scan fraction (measured in e7).
-    */
-  def knnIvfKmeans(emb: DataFrame, nQueries: Int = 10, k: Int = 5,
-                   nCells: Int = 16, nProbe: Int = 3,
-                   iters: Int = 4): DataFrame = {
-    val cents = kmeansCentroids(emb, nCells, iters)
-    val withD = emb.select(col("vec_id"), quantized(col("embedding")).as("qe"))
-      .withColumn("dists", cellDists(cents))
-    val assigned = withD
-      .select(col("vec_id").as("nid"), col("qe").as("qe_n"),
-        array_min(col("dists")).getField("cell").as("cell"))
-    val probes = withD.filter(col("vec_id") < nQueries)
-      .select(col("vec_id").as("qid"), col("qe").as("qe_q"),
-        explode(transform(slice(array_sort(col("dists")), 1, nProbe),
-          s => s.getField("cell"))).as("cell"))
-    topKByDot(assigned.join(broadcast(probes), Seq("cell"))
-      .filter(col("nid") =!= col("qid"))
-      .select(col("qid"), col("nid"),
-        dotCols(col("qe_q"), col("qe_n")).as("dot")), k)
-  }
-
-  /** Recall@k of the learned-centroid IVF vs brute force (e7). */
-  def ivfKmeansRecall(emb: DataFrame, nQueries: Int = 10, k: Int = 5,
-                      nCells: Int = 16, nProbe: Int = 3,
-                      iters: Int = 4): DataFrame =
-    recallVsBrute(emb, knnIvfKmeans(emb, nQueries, k, nCells, nProbe, iters),
-      nQueries, k)
-
-  // ------------------------------------------------ product quantization
-
-  /** Per-block PQ codebooks (Jégou et al., "Product Quantization for
-    * Nearest Neighbor Search", TPAMI 2011): the vector splits into `m`
-    * contiguous blocks of dim/m components and each block gets its own
-    * Lloyd's codebook of `kCb` centroids — [[kmeansCentroids]] run on the
-    * sliced corpus, so training inherits its exact-int64 determinism and
-    * its subsample-at-100TB note.
-    */
-  def pqCodebooks(emb: DataFrame, m: Int = 8, kCb: Int = 16, iters: Int = 2,
-                  dim: Int = 64): Array[Array[Array[Long]]] = {
-    require(dim % m == 0, s"dim $dim must split into $m equal blocks")
-    val bd = dim / m
-    // ALL m block-Lloyd's run in ONE Spark job per iteration (r4: the
-    // m-sequential form cost m·iters driver round-trips — the serial
-    // Amdahl term of the whole PQ family). Arithmetic is digit-identical
-    // to per-block kmeansCentroids on the sliced relation: quantize is
-    // elementwise so slice∘quantize = quantize∘slice; seeds, argmin
-    // tie-break (min dist, then min cell), truncating integer mean and
-    // empty-cells-keep-previous all match (spec- and oracle-asserted).
-    val q = emb.select(col("vec_id"), quantized(col("embedding")).as("qe"))
-      .cache()
-    try pqCodebooksQ(q, m, kCb, iters, dim)
-    finally { q.unpersist(): Unit }
-  }
-
-  /** Core fused block-Lloyd's over an ALREADY-CACHED (vec_id, qe)
-    * relation (see [[kmeansCentroidsQ]] for why it is split out).
-    */
-  private def pqCodebooksQ(q: DataFrame, m: Int, kCb: Int, iters: Int,
-                           dim: Int): Array[Array[Array[Long]]] = {
-    val bd = dim / m
-    locally {
-      val seedRows = q.filter(col("vec_id") < kCb)
-        .orderBy(col("vec_id")).collect()
-      require(seedRows.nonEmpty,
-        s"pqCodebooks: no seed vectors (need rows with vec_id < $kCb" +
-          " — corpus vec_ids must start at 0)")
-      if (seedRows.length < kCb)
-        System.err.println(s"[pqCodebooks] WARN: only ${seedRows.length} of " +
-          s"$kCb seed vectors present (sparse vec_ids) — fewer codes")
-      var books: Array[Array[Array[Long]]] = Array.tabulate(m) { b =>
-        seedRows.map(_.getAs[scala.collection.Seq[Long]]("qe")
-          .slice(b * bd, (b + 1) * bd).toArray)
-      }
-      for (_ <- 0 until iters) {
-        // the m argmins live in a PROJECT (whose codegen splits large
-        // expression trees into helper methods), and the generator input
-        // is the small raw vector — feeding an array-of-structs carrying
-        // the slices straight into explode() inlined all m·kCb dot
-        // products into the Generate's single doConsume and blew janino's
-        // 64 KB method limit (codegen fell back to interpreted on the
-        // training hot path)
-        val cells = array((0 until m).map { b =>
-          array_min(cellDists(books(b), slice(col("qe"), b * bd + 1, bd)))
-            .getField("cell")
-        }: _*)
-        val blk = floor(col("i") / bd).cast("int")
-        val sums = q.select(col("qe"), cells.as("cells"))
-          .select(col("cells"), posexplode(col("qe")).as(Seq("i", "x")))
-          .select(blk.as("blk"),
-            element_at(col("cells"), blk + 1).as("cell"),
-            pmod(col("i"), lit(bd)).cast("int").as("ib"), col("x"))
-          .groupBy(col("blk"), col("cell"), col("ib"))
-          .agg(sum(col("x")).as("s"), count(lit(1)).as("n"))
-          .collect()
-        val next = books.map(_.map(_.clone()))
-        sums.foreach { r =>
-          next(r.getAs[Int]("blk"))(r.getAs[Int]("cell"))(r.getAs[Int]("ib")) =
-            r.getAs[Long]("s") / r.getAs[Long]("n")
-        }
-        books = next
-      }
-      books
-    }
-  }
-
-  // --- shared PQ building blocks (knnPq / knnPqRefine / knnIvfPq): one
-  // definition each, so the ADC estimator and the exact re-rank
-  // tie-break can never diverge between e9/e11/e13 and their oracles
-  private def pqBlockOf(b: Int, bd: Int): Column =
-    slice(col("qe"), b * bd + 1, bd)
-
-  /** In-row PQ code per block: argmin cell of the block slice. */
-  private def pqCodes(books: Array[Array[Array[Long]]], bd: Int): Column =
-    array(books.indices.map { b =>
-      array_min(cellDists(books(b), pqBlockOf(b, bd))).getField("cell")
-    }: _*)
-
-  /** Per-query m×kCb lookup tables of block-dots (ADC tables) — one
-    * codegen'd BlockDots kernel per block (same dot_long null contract)
-    * instead of m×kCb inlined literal dot trees.
-    */
-  private def pqTabs(books: Array[Array[Array[Long]]], bd: Int): Column =
-    array(books.indices.map { b =>
-      graft.functions.block_dots(pqBlockOf(b, bd), books(b))
-    }: _*)
-
-  /** The ADC estimator: m lookups `tabs[b][codes[b]]` summed. */
-  private def adcSum(m: Int): Column =
-    (0 until m).map { b =>
-      element_at(element_at(col("tabs"), b + 1),
-        element_at(col("codes"), b + 1) + 1)
-    }.reduce(_ + _)
-
-  /** Exact-dot re-rank of a KB-sized (qid, nid) candidate relation to
-    * the final k — stage 2 of [[knnPqRefine]] and stage 3 of
-    * [[knnIvfPq]]: both candidate joins broadcast, the exact tier
-    * touches candidate rows only.
-    */
-  private def exactRerank(emb: DataFrame, cand: DataFrame, nQueries: Int,
-                          k: Int): DataFrame = {
-    val qv = emb.select(col("vec_id"), quantized(col("embedding")).as("q"))
-    topKByDot(qv.select(col("vec_id").as("nid"), col("q").as("nq"))
-      .join(broadcast(cand), Seq("nid"))
-      .join(broadcast(qv.filter(col("vec_id") < nQueries)
-        .select(col("vec_id").as("qid"), col("q").as("qq"))), Seq("qid"))
-      .select(col("qid"), col("nid"),
-        dotCols(col("qq"), col("nq")).as("dot")), k)
-  }
-
-  /** PQ ANN with asymmetric-distance (ADC) scoring: every corpus vector
-    * compresses to `m` codes of log₂(kCb) bits (here 8×4 bits — a 128×
-    * reduction from the 64×int64 quantized form), assigned IN-ROW
-    * against the literal codebooks exactly like [[knnIvfKmeans]]'s cells
-    * (no codebook join, no assignment window). Each query precomputes
-    * its m×kCb table of block-dots ONCE (broadcast with the probe row);
-    * scoring a candidate is m table lookups, not a dim-length dot —
-    * dot(q,x) ≈ Σ_b table_b[code_b], the ADC estimator. All arithmetic
-    * is exact int64, so the approximation itself is deterministic and
-    * fully DuckDB-oracled (the oracle unrolls every per-block Lloyd's).
-    *
-    * Scale shape: this is the PQ-SCAN regime — every query still visits
-    * every code row (as FAISS's IndexPQ does); what scales is the
-    * memory/bandwidth footprint (codes are bytes, the raw vectors never
-    * leave the scan) and the per-candidate cost (lookups). For
-    * sublinear candidate visits compose with the IVF tier (e3/e6 probe
-    * filter, then ADC inside probed cells) — IVF-PQ. Top-k closes
-    * through the heap-merge aggregator like every e-tier path.
-    */
-  def knnPq(emb: DataFrame, nQueries: Int = 10, k: Int = 5, m: Int = 8,
-            kCb: Int = 16, iters: Int = 2, dim: Int = 64): DataFrame = {
-    val bd = dim / m
-    val books = pqCodebooks(emb, m, kCb, iters, dim)
-    val q = emb.select(col("vec_id"), quantized(col("embedding")).as("qe"))
-    val encoded = q.select(col("vec_id").as("nid"),
-      pqCodes(books, bd).as("codes"))
-    val probes = q.filter(col("vec_id") < nQueries)
-      .select(col("vec_id").as("qid"), pqTabs(books, bd).as("tabs"))
-    topKByDot(encoded.crossJoin(broadcast(probes))
-      .filter(col("nid") =!= col("qid"))
-      .select(col("qid"), col("nid"), adcSum(m).as("dot")), k)
-  }
-
-  /** Recall@k of PQ-ADC vs exact brute force (e10) — the compression/
-    * recall dial: more blocks or bigger codebooks sharpen the estimator.
-    */
-  def pqRecall(emb: DataFrame, nQueries: Int = 10, k: Int = 5, m: Int = 8,
-               kCb: Int = 16, iters: Int = 2, dim: Int = 64): DataFrame =
-    recallVsBrute(emb, knnPq(emb, nQueries, k, m, kCb, iters, dim),
-      nQueries, k)
-
-  /** e11 — PQ-ADC with EXACT RE-RANK (the canonical two-stage IVF-PQ
-    * serving shape, Jégou et al. 2011 §IV-A "re-ranking with source
-    * coding"): stage 1 takes the top `k·refine` candidates per query by
-    * the lossy ADC estimate ([[knnPq]]); stage 2 rescores ONLY those
-    * candidates with the exact quantized dot product and re-ranks to the
-    * final k. Buys back most of the recall the 8-bit codes lose (e12
-    * measures it) while the exact tier touches `nQueries·k·refine` rows
-    * instead of the corpus.
-    *
-    * Scale shape: the candidate relation is KB-sized (queries × k·refine
-    * id pairs) so BOTH stage-2 joins broadcast it against the corpus
-    * vectors; the final top-k is the same heap-merge reducer as every
-    * serving tier. Stage 1's shape is e9's (codes and ADC tables in-row
-    * vs literal codebooks, no codebook join).
-    */
-  def knnPqRefine(emb: DataFrame, nQueries: Int = 10, k: Int = 5,
-                  refine: Int = 3, m: Int = 8, kCb: Int = 16,
-                  iters: Int = 2, dim: Int = 64): DataFrame = {
-    val cand = knnPq(emb, nQueries, k * refine, m, kCb, iters, dim)
-      .select(col("qid"), col("nid"))
-    // late-materialized rerank (row-identical to exactRerank by
-    // construction — same pairs, same dots, same ties): quantize only
-    // the ~nQueries·k·refine surviving rows instead of the whole corpus
-    exactRerankLate(emb, cand, nQueries, k)
-  }
-
-  /** Recall@k of refined PQ vs exact brute force (e12) — with re-rank the
-    * ADC estimate only has to land the true neighbor in the top k·refine,
-    * so recall jumps vs e10 at the same code budget.
-    */
-  def pqRefineRecall(emb: DataFrame, nQueries: Int = 10, k: Int = 5,
-                     refine: Int = 3, m: Int = 8, kCb: Int = 16,
-                     iters: Int = 2, dim: Int = 64): DataFrame =
-    recallVsBrute(emb, knnPqRefine(emb, nQueries, k, refine, m, kCb, iters,
-      dim), nQueries, k)
-
-  /** e13 — composed IVF-PQ with exact re-rank: the full FAISS-style
-    * serving stack (Jégou et al. 2011 §V "IVFADC"). Three tiers, each
-    * cutting the next tier's work: (1) the learned coarse quantizer
-    * ([[kmeansCentroids]]) restricts the scan to the query's `nProbe`
-    * nearest cells — a `nProbe/nCells` corpus fraction; (2) PQ-ADC
-    * ([[pqCodebooks]]) scores ONLY those candidates through m table
-    * lookups against in-row codes — no full vectors touched; (3) the
-    * top `k·refine` survivors are exactly re-scored ([[knnPqRefine]]'s
-    * stage 2) and re-ranked to the final k. e14 measures the recall of
-    * the composition.
-    *
-    * Scale shape: cell assignment and codes are IN-ROW against literal
-    * centroids/codebooks (no training-table join); the probe join is an
-    * equi-join on cell with the KB-sized exploded probe relation
-    * broadcast; ADC candidates reduce through the heap-merge aggregator
-    * (≤ k·refine per (query, partition) cross the exchange); the exact
-    * tier touches nQueries·k·refine rows. At 10⁹ vectors this is the
-    * architecture that serves from RAM: 4-byte codes in place of
-    * 256-byte vectors, 1/4 of cells scanned, full vectors only for
-    * ~15 ids per query.
-    */
-  def knnIvfPq(emb: DataFrame, nQueries: Int = 10, k: Int = 5,
-               nCells: Int = 16, nProbe: Int = 4, cIters: Int = 4,
-               m: Int = 8, kCb: Int = 16, pqIters: Int = 2,
-               dim: Int = 64, refine: Int = 3): DataFrame = {
-    // both trainers run off ONE cached quantized relation (previously
-    // each ran its own quantize+cache+unpersist cycle — a redundant
-    // corpus scan and block-manager fill per call)
-    val qt = emb.select(col("vec_id"), quantized(col("embedding")).as("qe"))
-      .cache()
-    val (cents, books) =
-      try (kmeansCentroidsQ(qt, nCells, cIters),
-        pqCodebooksQ(qt, m, kCb, pqIters, dim))
-      finally { qt.unpersist(): Unit }
-    ivfPqServe(emb, cents, books, nQueries, k, nProbe, m, dim, refine)
-  }
-
-  /** The SERVING path of the composed IVF-PQ stack — everything after
-    * training, over LITERAL centroids/codebooks: in-row cell assignment
-    * + PQ codes, broadcast probes, ADC scoring inside probed cells,
-    * heap-merge to k·refine candidates, exact re-rank to k. Shared by
-    * [[knnIvfPq]] (trains in-query, the oracle posture) and
-    * [[knnIvfPqModel]] (serves from a persisted [[AnnModel]] with ZERO
-    * training — the 100 TB posture), so the two can never diverge.
-    */
-  private def ivfPqServe(emb: DataFrame, cents: Array[Array[Long]],
-                         books: Array[Array[Array[Long]]], nQueries: Int,
-                         k: Int, nProbe: Int, m: Int, dim: Int,
-                         refine: Int): DataFrame = {
-    val bd = dim / m
-    val q = emb.select(col("vec_id"), quantized(col("embedding")).as("qe"))
-      .withColumn("dists", cellDists(cents))
-    val encoded = q.select(col("vec_id").as("nid"),
-      pqCodes(books, bd).as("codes"),
-      array_min(col("dists")).getField("cell").as("cell"))
-    val probes = q.filter(col("vec_id") < nQueries)
-      .select(col("vec_id").as("qid"), pqTabs(books, bd).as("tabs"),
-        explode(transform(slice(array_sort(col("dists")), 1, nProbe),
-          s => s.getField("cell"))).as("cell"))
-    val cand = topKByDot(encoded.join(broadcast(probes), Seq("cell"))
-      .filter(col("nid") =!= col("qid"))
-      .select(col("qid"), col("nid"), adcSum(m).as("dot")), k * refine)
-      .select(col("qid"), col("nid"))
-    // late-materialized rerank (row-identical to exactRerank by
-    // construction): the refine tier reads raw embeddings for candidate
-    // ids only instead of re-quantizing the full corpus a third time —
-    // the refine-path bytes the e15 scaling lane was short on (r5
-    // verdict item 2); serving from the persisted model now touches
-    // nQueries·k·refine vectors in its exact stage, like e28
-    exactRerankLate(emb, cand, nQueries, k)
-  }
-
-  /** Recall@k of the composed IVF-PQ stack vs exact brute force (e14):
-    * the end-to-end price of scanning nProbe/nCells of the corpus
-    * through 32-bit codes — vs e7 (exact dots in probed cells) it
-    * isolates what ADC loses, vs e12 (PQ-refine over the whole corpus)
-    * what cell restriction loses.
-    */
-  def ivfPqRecall(emb: DataFrame, nQueries: Int = 10, k: Int = 5,
-                  nCells: Int = 16, nProbe: Int = 4, cIters: Int = 4,
-                  m: Int = 8, kCb: Int = 16, pqIters: Int = 2,
-                  dim: Int = 64, refine: Int = 3): DataFrame =
-    recallVsBrute(emb, knnIvfPq(emb, nQueries, k, nCells, nProbe, cIters,
-      m, kCb, pqIters, dim, refine), nQueries, k)
-
-  // ------------------------------------ train-once / serve-many ANN model
-
-  /** The persisted ANN model artifact: the coarse k-means centroids and
-    * per-block PQ codebooks of the IVF-PQ stack, trained ONCE on a
-    * deterministic corpus SUBSAMPLE and reused by every query via
-    * [[knnIvfPqModel]] with ZERO per-query training — the 100 TB serving
-    * posture SCALE.md documents (at 10⁹ vectors you never re-run Lloyd's
-    * inside a query; you train on a hash subsample, persist ~KBs of
-    * centroids, and serve from them until the corpus drifts).
-    *
-    * All values are exact int64 (the quantized-arithmetic convention of
-    * the whole e-tier), so the artifact round-trips parquet bit-exactly
-    * and a model-served query is as hash-oracleable as a train-in-query
-    * one.
-    */
-  case class AnnModel(nCells: Int, cIters: Int, m: Int, kCb: Int,
-                      pqIters: Int, dim: Int, sampleEvery: Int,
-                      centroids: Array[Array[Long]],
-                      books: Array[Array[Array[Long]]],
-                      sq8Mn: Array[Long], sq8Mx: Array[Long])
-
-  /** The deterministic training slice: every `sampleEvery`-th vector,
-    * re-id'd contiguously (vec_id div sampleEvery) so the Lloyd's seed
-    * rule "vec_id < nCells" picks the first nCells SAMPLED vectors — no
-    * RNG, replayable, and exactly expressible in the DuckDB oracle
-    * (`WHERE vec_id % S = 0`, `vec_id // S`). At 100 TB this is the whole
-    * point: training cost is corpus/S regardless of corpus size, and the
-    * serving path never touches the slice again.
-    */
-  private def trainingSlice(emb: DataFrame, sampleEvery: Int): DataFrame =
-    emb.filter(pmod(col("vec_id"), lit(sampleEvery.toLong)) === 0)
-      .select(expr(s"vec_id div $sampleEvery").as("vec_id"),
-        quantized(col("embedding")).as("qe"))
-
-  /** Train the IVF-PQ model on the subsample — the ONLY Lloyd's runs in
-    * the model-serving world. One cached slice feeds both trainers
-    * (the knnIvfPq single-cache-fill shape).
-    */
-  def trainAnnModel(emb: DataFrame, sampleEvery: Int = 4, nCells: Int = 16,
-                    cIters: Int = 4, m: Int = 8, kCb: Int = 16,
-                    pqIters: Int = 2, dim: Int = 64): AnnModel = {
-    require(sampleEvery >= 1, s"sampleEvery must be >= 1, got $sampleEvery")
-    val slice = trainingSlice(emb, sampleEvery).cache()
-    val (cents, books, (mn, mx)) =
-      try (kmeansCentroidsQ(slice, nCells, cIters),
-        pqCodebooksQ(slice, m, kCb, pqIters, dim),
-        sq8BoundsQ(slice, dim))
-      finally { slice.unpersist(): Unit }
-    AnnModel(nCells, cIters, m, kCb, pqIters, dim, sampleEvery, cents, books,
-      mn, mx)
-  }
-
-  /** Persist the model as a long-format parquet table
-    * (kind, blk, cell, i, v): 'param' rows carry the hyperparameters in a
-    * fixed order, 'cent' rows the coarse centroids, 'book' rows the PQ
-    * codebooks. Long-format (not nested arrays) so ANY engine — DuckDB
-    * included — can read the artifact with a plain scan.
-    */
-  def saveAnnModel(spark: org.apache.spark.sql.SparkSession, model: AnnModel,
-                   path: String): Unit = {
-    import spark.implicits._
-    val params = Seq(model.nCells, model.cIters, model.m, model.kCb,
-      model.pqIters, model.dim, model.sampleEvery).zipWithIndex
-      .map { case (v, i) => ("param", 0, 0, i, v.toLong) }
-    val cents = for {
-      (cv, c) <- model.centroids.toSeq.zipWithIndex
-      (v, i) <- cv.toSeq.zipWithIndex
-    } yield ("cent", 0, c, i, v)
-    val books = for {
-      (bk, b) <- model.books.toSeq.zipWithIndex
-      (cv, c) <- bk.toSeq.zipWithIndex
-      (v, i) <- cv.toSeq.zipWithIndex
-    } yield ("book", b, c, i, v)
-    val sq8 = model.sq8Mn.toSeq.zipWithIndex.map { case (v, i) =>
-      ("sq8mn", 0, 0, i, v) } ++
-      model.sq8Mx.toSeq.zipWithIndex.map { case (v, i) => ("sq8mx", 0, 0, i, v) }
-    (params ++ cents ++ books ++ sq8).toDF("kind", "blk", "cell", "i", "v")
-      .coalesce(1).write.mode("overwrite").parquet(path)
-  }
-
-  /** Load a persisted model — exact inverse of [[saveAnnModel]] (int64
-    * round-trips parquet bit-exactly; spec-asserted).
-    */
-  def loadAnnModel(spark: org.apache.spark.sql.SparkSession,
-                   path: String): AnnModel = {
-    val rows = spark.read.parquet(path).collect()
-    val byKind = rows.groupBy(_.getAs[String]("kind"))
-    def p(i: Int): Int = byKind("param").find(_.getAs[Int]("i") == i)
-      .getOrElse(sys.error(s"loadAnnModel: missing param $i in $path"))
-      .getAs[Long]("v").toInt
-    val (nCells, cIters, m, kCb, pqIters, dim, sampleEvery) =
-      (p(0), p(1), p(2), p(3), p(4), p(5), p(6))
-    val bd = dim / m
-    def grid(kind: String, blk: Int, cells: Int, width: Int) = {
-      val g = Array.fill(cells)(new Array[Long](width))
-      byKind.getOrElse(kind, Array.empty)
-        .filter(_.getAs[Int]("blk") == blk)
-        .foreach(r => g(r.getAs[Int]("cell"))(r.getAs[Int]("i")) =
-          r.getAs[Long]("v"))
-      g
-    }
-    AnnModel(nCells, cIters, m, kCb, pqIters, dim, sampleEvery,
-      grid("cent", 0, nCells, dim),
-      Array.tabulate(m)(b => grid("book", b, kCb, bd)),
-      grid("sq8mn", 0, 1, dim)(0), grid("sq8mx", 0, 1, dim)(0))
-  }
-
-  /** Train-if-absent / load-if-present: the driver-facing composition.
-    * The artifact directory is keyed by a SHA-256 fingerprint of the
-    * corpus content signature + every hyperparameter, so models for
-    * different corpora (sf0.01 vs sf0.1 vs a bench-replicated table) and
-    * different settings coexist and a regenerated corpus never reuses a
-    * stale model. The content signature coalesces to 0 on an empty
-    * corpus (trainAnnModel then fails loudly on the seed require).
-    */
-  def annModelFor(emb: DataFrame, baseDir: String, sampleEvery: Int = 4,
-                  nCells: Int = 16, cIters: Int = 4, m: Int = 8,
-                  kCb: Int = 16, pqIters: Int = 2,
-                  dim: Int = 64): AnnModel = {
-    val spark = emb.sparkSession
-    val contentSig = emb
-      .agg(coalesce(sum(hash(col("vec_id"), col("embedding"))), lit(0L)))
-      .collect()(0).getLong(0)
-    val key = s"annmodel-v2|$contentSig|$sampleEvery|$nCells|$cIters" +
-      s"|$m|$kCb|$pqIters|$dim"
-    val fp = java.security.MessageDigest.getInstance("SHA-256")
-      .digest(key.getBytes("UTF-8")).map("%02x".format(_)).mkString
-    val path = s"$baseDir/$fp"
-    val marker = java.nio.file.Paths.get(path, "_trained")
-    if (java.nio.file.Files.exists(marker)) loadAnnModel(spark, path)
-    else {
-      val model = trainAnnModel(emb, sampleEvery, nCells, cIters, m, kCb,
-        pqIters, dim)
-      saveAnnModel(spark, model, path)
-      java.nio.file.Files.writeString(marker, key)
-      // serve from the ARTIFACT, not the in-memory trainer output — the
-      // round-trip is the contract (spec-asserted exact)
-      loadAnnModel(spark, path)
-    }
-  }
-
-  /** e15 — IVF-PQ ANN served from a persisted [[AnnModel]]: identical
-    * serving plan to [[knnIvfPq]] (in-row assignment/codes against
-    * literal centroids, broadcast probes, ADC + exact re-rank) with ZERO
-    * training jobs — no Lloyd's pass, no driver collect beyond the final
-    * action. This is what a 10⁹-vector deployment runs per query batch;
-    * [[trainAnnModel]] amortizes across every query until retrain.
-    */
-  def knnIvfPqModel(emb: DataFrame, model: AnnModel, nQueries: Int = 10,
-                    k: Int = 5, nProbe: Int = 4, refine: Int = 10): DataFrame =
-    ivfPqServe(emb, model.centroids, model.books, nQueries, k, nProbe,
-      model.m, model.dim, refine)
-
-  /** e16 — recall@k of the model-served IVF-PQ stack vs exact brute
-    * force: measures what SUBSAMPLE training costs vs e14's
-    * full-corpus-trained recall at the same nProbe/nCells scan fraction.
-    */
-  def ivfPqModelRecall(emb: DataFrame, model: AnnModel, nQueries: Int = 10,
-                       k: Int = 5, nProbe: Int = 4,
-                       refine: Int = 10): DataFrame =
-    recallVsBrute(emb, knnIvfPqModel(emb, model, nQueries, k, nProbe, refine),
-      nQueries, k)
-
-  /** e32 — index cartography: per-cell population of the persisted
-    * model's coarse quantizer over the FULL corpus, INCLUDING dead cells
-    * (n_vecs = 0) — the index-health report every ANN deployment
-    * monitors (FAISS's imbalance_factor reads off this table): a hot
-    * cell means every probe that lands there scans far more than
-    * N·nProbe/nCells candidates, a dead cell means wasted quantizer
-    * capacity — both are re-train-the-model signals under corpus drift.
-    * share_x1m = n_vecs·10⁶ div N (positive integer division, engine-
-    * exact).
-    *
-    * Scale shape: cell assignment is in-row vs the model's LITERAL
-    * centroids (zero training, zero join for assignment — the e15
-    * serving posture), reduced by ONE two-phase count aggregate whose
-    * exchange carries nCells rows; the dead-cell recovery joins the
-    * nCells-row range relation against the nCells-row counts. The corpus
-    * count feeding the share denominator is one driver-sized aggregate
-    * (the bm25TopK stats pattern).
-    */
-  def ivfCellStats(emb: DataFrame, model: AnnModel): DataFrame = {
-    val n = emb.count()
-    require(n > 0, "ivfCellStats: empty corpus")
-    val counts = emb
-      .select(array_min(cellDists(model.centroids,
-        quantized(col("embedding")))).getField("cell").as("cell"))
-      .groupBy(col("cell")).agg(count(lit(1)).as("n_vecs"))
-    emb.sparkSession.range(model.nCells)
-      .select(col("id").cast("int").as("cell"))
-      .join(counts, Seq("cell"), "left")
-      .select(col("cell"),
-        coalesce(col("n_vecs"), lit(0L)).as("n_vecs"),
-        expr(s"coalesce(n_vecs, 0) * 1000000 div $n").as("share_x1m"))
-  }
-
-  /** INGEST-side IVF-PQ encode from a persisted [[AnnModel]]:
-    * (vec_id, cell, codes) per arriving vector — cell assignment and
-    * per-block code assignment run in-row against LITERAL centroids and
-    * codebooks (no join, no aggregate, no state), so the stage is
-    * stream-transparent: exactly what a 10⁹-vector store runs on arrival,
-    * persisting a cell id + m small codes (4 bytes here) instead of the
-    * float vector, with the serving path ([[knnIvfPqModel]]) reading the
-    * codes back. Batch/stream row-identical is spec-asserted
-    * (StreamingSpec), the same contract as the t17/t28 in-row scorers —
-    * train-once/serve-many now covers the WRITE path too.
-    */
-  def encodeIvfPq(emb: DataFrame, model: AnnModel): DataFrame =
-    emb.select(col("vec_id"), quantized(col("embedding")).as("qe"))
-      .withColumn("dists", cellDists(model.centroids))
-      .select(col("vec_id"),
-        array_min(col("dists")).getField("cell").as("cell"),
-        pqCodes(model.books, model.dim / model.m).as("codes"))
-
-  /** Encode-if-absent / reuse-if-present persistence of the
-    * [[encodeIvfPq]] codes table — the codes-side sibling of
-    * [[annModelFor]]: the artifact directory is keyed by a SHA-256
-    * fingerprint of the corpus content signature + every model
-    * hyperparameter, so codes for different corpora (sf0.01 vs sf0.1 vs
-    * a bench-replicated table) and different models coexist, and a
-    * regenerated corpus or retrained model never serves stale codes.
-    * Returns the materialized path; [[codesFor]] reads it back. The
-    * int64/int32 columns round-trip parquet bit-exactly, so serving from
-    * the persisted table is code-identical to serving from the in-query
-    * encode (spec-asserted).
-    */
-  def codesPathFor(emb: DataFrame, model: AnnModel, baseDir: String): String = {
-    val contentSig = emb
-      .agg(coalesce(sum(hash(col("vec_id"), col("embedding"))), lit(0L)))
-      .collect()(0).getLong(0)
-    val key = s"anncodes-v1|$contentSig|${model.nCells}|${model.cIters}" +
-      s"|${model.m}|${model.kCb}|${model.pqIters}|${model.dim}" +
-      s"|${model.sampleEvery}"
-    val fp = java.security.MessageDigest.getInstance("SHA-256")
-      .digest(key.getBytes("UTF-8")).map("%02x".format(_)).mkString
-    val path = s"$baseDir/$fp"
-    val marker = java.nio.file.Paths.get(path, "_encoded")
-    if (!java.nio.file.Files.exists(marker)) {
-      encodeIvfPq(emb, model).write.mode("overwrite").parquet(path)
-      java.nio.file.Files.writeString(marker, key)
-    }
-    path
-  }
-
-  /** The persisted codes relation for (corpus, model) — see
-    * [[codesPathFor]].
-    */
-  def codesFor(emb: DataFrame, model: AnnModel, baseDir: String): DataFrame =
-    emb.sparkSession.read.parquet(codesPathFor(emb, model, baseDir))
-
-  /** [[exactRerank]] with LATE materialization: join the KB-sized
-    * candidate relation on the raw scan FIRST, quantize only the
-    * surviving rows. [[exactRerank]] quantizes every corpus row and lets
-    * the broadcast join discard the misses — structurally fine (the scan
-    * still reads every embedding byte either way), but the per-row array
-    * transform is pure waste for the ~nQueries·k·refine rows that
-    * survive, and at serving bandwidth that waste is measurable (the
-    * e15-lane profile). Same pairs, same dots, same heap-merge ties —
-    * row-identical to [[exactRerank]] by construction.
-    */
-  private def exactRerankLate(emb: DataFrame, cand: DataFrame,
-                              nQueries: Int, k: Int): DataFrame = {
-    val nbr = emb.join(broadcast(cand), col("vec_id") === col("nid"))
-      .select(col("qid"), col("nid"), quantized(col("embedding")).as("nq"))
-    val qs = emb.filter(col("vec_id") < nQueries)
-      .select(col("vec_id").as("qid"), quantized(col("embedding")).as("qq"))
-    topKByDot(nbr.join(broadcast(qs), Seq("qid"))
-      .select(col("qid"), col("nid"),
-        dotCols(col("qq"), col("nq")).as("dot")), k)
-  }
-
-  /** e28 — IVF-PQ served from the PRE-ENCODED codes table: the read
-    * side of [[encodeIvfPq]]'s write path, and the shape a 10⁹-vector
-    * deployment actually runs per query batch (FAISS stores codes at
-    * add() time; no production store re-encodes the corpus per query).
-    * The timed work drops from three heavy corpus passes
-    * ([[knnIvfPqModel]]: in-row re-encode, ADC over the re-encode, and a
-    * quantize-everything re-rank) to ONE light pass over 4-byte codes
-    * (+cell int) joined with the broadcast probe relation, ADC lookups,
-    * heap-merge, and a late-materialized exact re-rank that quantizes
-    * only candidate rows. Row-identical to [[knnIvfPqModel]] at the same
-    * (model, nProbe, refine) — spec-asserted, and the driver oracle is
-    * the same unrolled chain as e15's.
-    */
-  def knnIvfPqCodes(codes: DataFrame, emb: DataFrame, model: AnnModel,
-                    nQueries: Int = 10, k: Int = 5, nProbe: Int = 4,
-                    refine: Int = 10): DataFrame = {
-    val bd = model.dim / model.m
-    val probes = emb.filter(col("vec_id") < nQueries)
-      .select(col("vec_id"), quantized(col("embedding")).as("qe"))
-      .withColumn("dists", cellDists(model.centroids))
-      .select(col("vec_id").as("qid"), pqTabs(model.books, bd).as("tabs"),
-        explode(transform(slice(array_sort(col("dists")), 1, nProbe),
-          s => s.getField("cell"))).as("cell"))
-    val cand = topKByDot(
-      codes.select(col("vec_id").as("nid"), col("cell"), col("codes"))
-        .join(broadcast(probes), Seq("cell"))
-        .filter(col("nid") =!= col("qid"))
-        .select(col("qid"), col("nid"), adcSum(model.m).as("dot")),
-      k * refine)
-      .select(col("qid"), col("nid"))
-    exactRerankLate(emb, cand, nQueries, k)
-  }
-
-  // ———————————————————— e17/e18: SQ8 scalar quantization ————————————————————
-
-  /** Per-dimension [min, max] of the quantized corpus — SQ8 "training"
-    * (FAISS ScalarQuantizer QT_8bit posture): ONE full-corpus aggregate
-    * with no groupBy (partial min/max per partition, a 2·dim-long final
-    * row to the driver — KB-sized at any corpus scale, zero iteration).
-    * Contrast with the PQ tier's Lloyd's loops: SQ has no codebook to
-    * converge, which is why it's the default first rung of the FAISS
-    * compression ladder.
-    */
-  def sq8Bounds(emb: DataFrame, dim: Int = 64): (Array[Long], Array[Long]) =
-    sq8BoundsQ(emb.select(quantized(col("embedding")).as("qe")), dim)
-
-  /** Bounds over an ALREADY-QUANTIZED (…, qe) relation — shared by the
-    * full-corpus oracle tier ([[sq8Bounds]]) and the model trainer
-    * ([[trainAnnModel]]), which computes them on the cached training
-    * slice so the persisted artifact is wholly subsample-derived.
-    */
-  private def sq8BoundsQ(q: DataFrame,
-                         dim: Int): (Array[Long], Array[Long]) = {
-    val row = q.agg(
-      array((1 to dim).map(i => min(element_at(col("qe"), i))): _*).as("mn"),
-      array((1 to dim).map(i => max(element_at(col("qe"), i))): _*).as("mx"))
-      .head()
-    (row.getSeq[Long](0).toArray, row.getSeq[Long](1).toArray)
-  }
-
-  /** SQL for the in-row SQ8 round trip (encode to a uint8 level, decode
-    * to the level's reconstruction) over a quantized-vector column —
-    * integer-exact, bounds baked in as literal arrays so it's a pure
-    * projection (stream-transparent, broadcast-free):
-    *   code_i = ((q_i − mn_i)·255) div (mx_i − mn_i)   ∈ [0, 255]
-    *   recon_i = mn_i + (code_i·(mx_i − mn_i)) div 255
-    * Every numerator is ≥ 0, so Spark's truncate-toward-zero `div` and
-    * DuckDB's `//` agree unconditionally (the t29 clamp lesson, solved
-    * here by construction). Constant dims (mx = mn) encode as level 0 and
-    * reconstruct to mn. Max operand (2·10⁴)·255 ≈ 5.1e6 « 2⁶³.
-    */
-  private[graft] def sq8ReconSql(qCol: String, mn: Array[Long],
-                                 mx: Array[Long]): String = {
-    val mnA = mn.mkString("array(", ",", ")")
-    val rgA = mn.indices.map(i => mx(i) - mn(i)).mkString("array(", ",", ")")
-    s"""transform($qCol, (x, i) -> CASE
-      WHEN element_at($rgA, i + 1) = 0 THEN CAST(element_at($mnA, i + 1) AS BIGINT)
-      ELSE CAST(element_at($mnA, i + 1)
-        + ((((x - element_at($mnA, i + 1)) * 255) div element_at($rgA, i + 1))
-           * element_at($rgA, i + 1)) div 255 AS BIGINT) END)"""
-  }
-
-  /** The per-dimension SQ8 codes themselves (array<long>, each ∈ [0,255])
-    * — the 1-byte-per-dim representation a 10⁹-vector store persists
-    * (16× smaller than float32; SimilaritySpec bounds the levels and the
-    * reconstruction error). Same literal-bounds pure projection as
-    * [[sq8ReconSql]].
-    */
-  def sq8Codes(emb: DataFrame, mn: Array[Long], mx: Array[Long]): DataFrame = {
-    val mnA = mn.mkString("array(", ",", ")")
-    val rgA = mn.indices.map(i => mx(i) - mn(i)).mkString("array(", ",", ")")
-    emb.select(col("vec_id"), quantized(col("embedding")).as("qe"))
-      .withColumn("codes", expr(
-        s"""transform(qe, (x, i) -> CASE
-          WHEN element_at($rgA, i + 1) = 0 THEN 0L
-          ELSE CAST(((x - element_at($mnA, i + 1)) * 255)
-            div element_at($rgA, i + 1) AS BIGINT) END)"""))
-      .select(col("vec_id"), col("codes"))
-  }
-
-  /** e17 — SQ8 scalar-quantized ANN: full-scan asymmetric distance (exact
-    * query vector against each neighbor's 8-bit reconstruction — the ADC
-    * convention), heap-merge top-k. The serving shape at 10⁹ vectors: the
-    * scan reads dim BYTES per vector instead of dim floats, bounds come
-    * from a persisted KB-sized artifact (here re-derived in one aggregate
-    * — no Lloyd's), and the reconstruction is a pure in-row projection, so
-    * the plan is exactly e1's broadcast-queries single pass with a 16×
-    * lighter corpus side. Recall sits far above PQ's at the same scan
-    * fraction (e18 vs e10: 8 bits/dim vs 4 bits/block-of-8-dims) — the
-    * standard accuracy/compression rung between exact float and PQ.
-    */
-  def knnSq8(emb: DataFrame, nQueries: Int = 10, k: Int = 5,
-             dim: Int = 64): DataFrame = {
-    val (mn, mx) = sq8Bounds(emb, dim)
-    val corpus = emb.select(col("vec_id").as("nid"),
-      quantized(col("embedding")).as("qe"))
-      .withColumn("re", sq8ReconCol(col("qe"), mn, mx, clamped = false))
-    val queries = emb.filter(col("vec_id") < nQueries)
-      .select(col("vec_id").as("qid"), quantized(col("embedding")).as("qe_q"))
-    topKByDot(corpus.crossJoin(broadcast(queries))
-      .filter(col("nid") =!= col("qid"))
-      .select(col("qid"), col("nid"),
-        dotCols(col("qe_q"), col("re")).as("dot")), k)
-  }
-
-  /** The codegen'd kernel form of [[sq8ReconSql]]/[[sq8ReconClampedSql]]
-    * (functions.Sq8Recon) — the interpreted transform-CASE ran two
-    * element_at probes into 64-entry literal arrays per element per
-    * corpus row on e17/e19/e26's scan side; integers are identical
-    * (differential-checked, tools.Sq8KernelCheck; Sq8KernelSpec).
-    */
-  private def sq8ReconCol(qe: Column, mn: Array[Long], mx: Array[Long],
-                          clamped: Boolean): Column =
-    graft.functions.sq8_recon(qe, mn,
-      mn.indices.map(i => mx(i) - mn(i)).toArray, clamped)
-
-  /** e18 — recall@k of SQ8 vs exact brute force (hits/total, integer-
-    * exact): quantifies what the 8-bit rung costs vs e10/e14's coarser
-    * rungs at full scan fraction.
-    */
-  def sq8Recall(emb: DataFrame, nQueries: Int = 10, k: Int = 5,
-                dim: Int = 64): DataFrame =
-    recallVsBrute(emb, knnSq8(emb, nQueries, k, dim), nQueries, k)
-
-  /** Clamped SQ8 round trip for MODEL-trained bounds: a subsample's
-    * [mn, mx] may not cover the full corpus, so the code clamps to
-    * [0, 255] before reconstruction — exactly FAISS's QT_8bit behavior
-    * when `train()` saw a slice. Cross-engine note: for x < mn the
-    * pre-clamp quotient is negative, where Spark `div` truncates toward
-    * zero and DuckDB `//` floors — they differ by at most 1, but BOTH
-    * land below 0, so greatest(·, 0) erases the divergence and the
-    * clamped code is engine-exact by construction.
-    */
-  private[graft] def sq8ReconClampedSql(qCol: String, mn: Array[Long],
-                                        mx: Array[Long]): String = {
-    val mnA = mn.mkString("array(", ",", ")")
-    val rgA = mn.indices.map(i => mx(i) - mn(i)).mkString("array(", ",", ")")
-    s"""transform($qCol, (x, i) -> CASE
-      WHEN element_at($rgA, i + 1) = 0 THEN CAST(element_at($mnA, i + 1) AS BIGINT)
-      ELSE CAST(element_at($mnA, i + 1)
-        + (least(greatest(
-            ((x - element_at($mnA, i + 1)) * 255) div element_at($rgA, i + 1),
-            0L), 255L)
-           * element_at($rgA, i + 1)) div 255 AS BIGINT) END)"""
-  }
-
-  /** e26 — SQ8 ANN served from the persisted [[AnnModel]]: the bounds
-    * were trained ONCE on the model's subsample (zero training
-    * aggregates at serve time — not even e17's one bounds pass), baked
-    * in as literals, with the clamped round trip guarding corpus values
-    * outside the slice's range. Completes the train-once story across
-    * every quantization rung: IVF-PQ serves from the model (e15), and
-    * now so does the 8-bit scalar rung.
-    */
-  def knnSq8Model(emb: DataFrame, model: AnnModel, nQueries: Int = 10,
-                  k: Int = 5): DataFrame = {
-    val corpus = emb.select(col("vec_id").as("nid"),
-      quantized(col("embedding")).as("qe"))
-      .withColumn("re", sq8ReconCol(col("qe"), model.sq8Mn, model.sq8Mx,
-        clamped = true))
-    val queries = emb.filter(col("vec_id") < nQueries)
-      .select(col("vec_id").as("qid"), quantized(col("embedding")).as("qe_q"))
-    topKByDot(corpus.crossJoin(broadcast(queries))
-      .filter(col("nid") =!= col("qid"))
-      .select(col("qid"), col("nid"),
-        dotCols(col("qe_q"), col("re")).as("dot")), k)
-  }
-
-  /** e27 — recall@k of model-served SQ8 vs exact brute force: what the
-    * subsample-trained bounds cost vs e18's full-corpus bounds at the
-    * same 8 bits/dim.
-    */
-  def sq8ModelRecall(emb: DataFrame, model: AnnModel, nQueries: Int = 10,
-                     k: Int = 5): DataFrame =
-    recallVsBrute(emb, knnSq8Model(emb, model, nQueries, k), nQueries, k)
-
-  /** e19 — IVF-SQ8 (FAISS IndexIVFScalarQuantizer): learned k-means
-    * cells restrict the scan to nProbe/nCells of the corpus (e6's coarse
-    * quantizer), SQ8 reconstructions score the candidates (e17's 8-bit
-    * rung) — the composition an operator picks when cell restriction
-    * must compound with byte-width compression but PQ's 4-bit recall
-    * loss is too steep. Same plan skeleton as e13 minus the ADC/refine
-    * tiers: in-row assignment against literal centroids, broadcast
-    * exploded probes, heap-merge top-k; the candidate side carries dim
-    * BYTES per row. Recall ≈ e7's at the same scan fraction (e20): the
-    * 8-bit rung costs almost nothing on top of cell restriction.
-    */
-  def knnIvfSq8(emb: DataFrame, nQueries: Int = 10, k: Int = 5,
-                nCells: Int = 16, nProbe: Int = 3, cIters: Int = 4,
-                dim: Int = 64): DataFrame = {
-    val cents = kmeansCentroids(emb, nCells, cIters)
-    val (mn, mx) = sq8Bounds(emb, dim)
-    val q = emb.select(col("vec_id"), quantized(col("embedding")).as("qe"))
-      .withColumn("dists", cellDists(cents))
-    val corpus = q.select(col("vec_id").as("nid"),
-      sq8ReconCol(col("qe"), mn, mx, clamped = false).as("re"),
-      array_min(col("dists")).getField("cell").as("cell"))
-    val probes = q.filter(col("vec_id") < nQueries)
-      .select(col("vec_id").as("qid"), col("qe").as("qe_q"),
-        explode(transform(slice(array_sort(col("dists")), 1, nProbe),
-          s => s.getField("cell"))).as("cell"))
-    topKByDot(corpus.join(broadcast(probes), Seq("cell"))
-      .filter(col("nid") =!= col("qid"))
-      .select(col("qid"), col("nid"),
-        dotCols(col("qe_q"), col("re")).as("dot")), k)
-  }
-
-  /** e20 — recall@k of IVF-SQ8 vs exact brute force: isolates what the
-    * 8-bit rung costs ON TOP of cell restriction (vs e7's exact dots in
-    * the same probed cells).
-    */
-  def ivfSq8Recall(emb: DataFrame, nQueries: Int = 10, k: Int = 5,
-                   nCells: Int = 16, nProbe: Int = 3, cIters: Int = 4,
-                   dim: Int = 64): DataFrame =
-    recallVsBrute(emb, knnIvfSq8(emb, nQueries, k, nCells, nProbe, cIters,
-      dim), nQueries, k)
-
-  // ------------------------------------------------ k-NN graph (NN-descent)
-
-  /** e24 — distributed k-NN GRAPH construction, NN-descent posture
-    * (Dong et al. 2011, "Efficient k-nearest neighbor graph construction
-    * for generic similarity measures"): the offline primitive behind
-    * every graph ANN index (HNSW/NSG base layers are refined k-NN
-    * graphs, and at 10⁹ vectors the graph is built exactly like this —
-    * iterative candidate expansion on a cluster, not per-point search).
-    * Start from a DETERMINISTIC pseudo-random graph (hash formula, no
-    * RNG — the oracle replays it digit-for-digit), then each round
-    * expands every node's candidates to current ∪ reverse ∪ 2-hop
-    * neighbors ("a neighbor of my neighbor is likely my neighbor" — the
-    * NN-descent local-join insight) and keeps the top-k by quantized
-    * dot. Converges in O(log n)-ish rounds on clustered data; 2 rounds
-    * already lift recall well above the random start (e25 measures it).
-    *
-    * Scale shape: edges are (id, id) pairs — ids ONLY ever shuffle; the
-    * per-round candidate set is ≤ n·k(k+2) rows (k² two-hop + k reverse
-    * + k current per node), LINEAR in n for fixed k — never n². Scoring
-    * joins the candidate list to the quantized-vector relation twice
-    * (keyed equi-joins on a cached relation); per-node top-k is the
-    * heap-merge aggregator (≤ k rows per (node, partition) across the
-    * exchange — the e1 argument); each round localCheckpoints so plan
-    * lineage stays flat (the d11 lesson). Output: (u, w, dot, rnk) for
-    * every node — the adjacency a downstream HNSW/NSG builder consumes.
-    */
-  def knnGraph(emb: DataFrame, k: Int = 8, rounds: Int = 2): DataFrame =
-    knnGraphQ(
-      emb.select(col("vec_id"), quantized(col("embedding")).as("qe"))
-        .localCheckpoint(), k, rounds)
-
-  /** Core NN-descent over an ALREADY-CHECKPOINTED (vec_id, qe) relation —
-    * split out (the kmeansCentroidsQ discipline) so [[knnGraphRecall]]
-    * can score the graph AND its brute-force truth off ONE quantize pass
-    * instead of two, and so n comes off the checkpoint instead of a
-    * second source scan.
-    */
-  private def knnGraphQ(eq: DataFrame, k: Int, rounds: Int): DataFrame = {
-    require(k >= 1 && rounds >= 1, s"need k,rounds >= 1, got $k,$rounds")
-    val n = eq.count()
-    // deterministic init: node u proposes (u*131 + j*97) mod n for
-    // j < k — self-loops dropped, collisions dedup'd (a node may start
-    // with < k neighbors; expansion refills)
-    var g = eq.select(col("vec_id").as("u"),
-        explode(sequence(lit(0), lit(k - 1))).as("j"))
-      .select(col("u"), ((col("u") * 131 + col("j") * 97) % n).as("w"))
-      .filter(col("w") =!= col("u")).distinct()
-      .localCheckpoint()
-    var top: DataFrame = null
-    for (_ <- 1 to rounds) {
-      val twoHop = g.as("a").join(g.as("b"), col("a.w") === col("b.u"))
-        .select(col("a.u").as("u"), col("b.w").as("w"))
-        .filter(col("w") =!= col("u"))
-      val rev = g.select(col("w").as("u"), col("u").as("w"))
-      val cand = g.unionByName(twoHop).unionByName(rev).distinct()
-      val scored = cand
-        .join(eq.select(col("vec_id").as("u"), col("qe").as("qu")), Seq("u"))
-        .join(eq.select(col("vec_id").as("w"), col("qe").as("qw")), Seq("w"))
-        .select(col("u").as("qid"), col("w").as("nid"),
-          dotCols(col("qu"), col("qw")).as("dot"))
-      // checkpoint the scored top-k itself (not just its ids-projection):
-      // g's checkpoint already materialized the round's scoring, but the
-      // RETURNED `top` kept the un-checkpointed lineage, so the final
-      // round's candidate join + heap-merge re-executed at action time
-      // (measured on e24: warm 2.7→2.1 s, jobs 26→20, taskSec 1.7→1.2).
-      // Same rows (a materialization barrier, no reordering); g becomes
-      // a narrow projection of the checkpoint.
-      top = topKByDot(scored, k).localCheckpoint()
-      g = top.select(col("qid").as("u"), col("nid").as("w"))
-    }
-    top.select(col("qid").as("u"), col("nid").as("w"), col("dot"),
-      col("rnk"))
-  }
-
-  /** e25 — recall of the NN-descent graph vs the TRUE k-NN graph on a
-    * node sample: edges of [[knnGraph]] hit in [[knnBruteAgg]]'s exact
-    * top-k for nodes < nSample. The metric an offline graph build is
-    * accepted/rejected on before the (expensive) index refinement
-    * consumes it.
-    */
-  def knnGraphRecall(emb: DataFrame, k: Int = 8, rounds: Int = 2,
-                     nSample: Int = 50): DataFrame = {
-    // one quantize pass for both sides: the truth's brute-force scoring
-    // and the graph build read the same checkpointed (vec_id, qe)
-    // relation (values identical to each side quantizing on its own —
-    // quantize is per-row deterministic)
-    val eq = emb.select(col("vec_id"), quantized(col("embedding")).as("qe"))
-      .localCheckpoint()
-    val truth = knnBruteAggQ(eq, nSample, k).select(col("qid"), col("nid"))
-    val g = knnGraphQ(eq, k, rounds).filter(col("u") < nSample)
-      .select(col("u").as("q2"), col("w").as("n2"))
-    truth.join(g, col("qid") === col("q2") && col("nid") === col("n2"),
-        "left")
-      .agg(count(lit(1)).as("total"), count(col("q2")).as("hits"))
-      .select(col("hits"), col("total"))
+    } finally { q.unpersist(): Unit }
   }
 
   /** SemDeDup-style SEMANTIC deduplication (Abbas et al. 2023,
@@ -1394,205 +304,12 @@ object Similarity {
         col("dup_of").isNull.as("keep"))
   }
 
-  /** LSH-bucketed ANN — the scale path: banded random-hyperplane LSH
-    * (bands independent hash tables of rowsPerBand sign bits each; a
-    * candidate shares ANY band bucket with the query), then exact
-    * quantized dot re-ranks the candidates. Banding is the multi-probe
-    * mechanism: recall 1-(1-(1-θ/π)^rowsPerBand)^bands is tuned by
-    * (bands, rowsPerBand); the defaults give recall@5 ≥ 0.9 vs brute
-    * force on the test corpus (SimilaritySpec; driver query
-    * e4_lsh_recall). NOTE the test corpus is uniform-random (top-5 cosine
-    * only ~0.3-0.5), the hardest case for LSH — candidates there are ~73%
-    * of the corpus; on a corpus with real near-dup structure (θ small)
-    * the same banding prunes orders of magnitude harder.
-    */
-  def knnLsh(emb: DataFrame, nQueries: Int = 10, k: Int = 5,
-             bands: Int = 28, rowsPerBand: Int = 3): DataFrame = {
-    val base = emb.select(col("vec_id"), quantized(col("embedding")).as("qe"))
-      .withColumn("bits", planeBits(col("qe"), bands * rowsPerBand))
-      // four consumers (band self-join sides + both vector join-backs),
-      // no exchange reuse between them — checkpoint so quantize +
-      // 84 sign projections run one corpus pass (the
-      // embeddingNearDupLadder discipline)
-      .localCheckpoint()
-    // the band join moves only (id, band, bucket); vectors join back after
-    // the (qid, nid) dedup (same reasoning as embeddingNearDupLadder)
-    val banded = base.select(col("vec_id"),
-      posexplode(bandBuckets(col("bits"), bands, rowsPerBand))
-        .as(Seq("band", "bucket")))
-    val queries = banded.filter(col("vec_id") < nQueries)
-      .select(col("vec_id").as("qid"), col("band"), col("bucket"))
-    val cand = banded.join(broadcast(queries), Seq("band", "bucket"))
-      .filter(col("vec_id") =!= col("qid"))
-      .select(col("qid"), col("vec_id").as("nid"))
-      .distinct()
-    val qe = base.select(col("vec_id"), col("qe"))
-    topKByDot(cand
-      .join(broadcast(qe.filter(col("vec_id") < nQueries)
-        .select(col("vec_id").as("qid"), col("qe").as("qe_q"))), "qid")
-      .join(qe.select(col("vec_id").as("nid"), col("qe").as("qe_n")), "nid")
-      .select(col("qid"), col("nid"),
-        dotCols(col("qe_q"), col("qe_n")).as("dot")), k)
-  }
-
-  /** Recall@k of the multi-probe LSH tier against exact brute force, as
-    * exact integers (hits of 10·k possible) — the quality metric the
-    * approximate tier is graded by.
-    */
-  def lshRecall(emb: DataFrame, nQueries: Int = 10, k: Int = 5): DataFrame =
-    recallVsBrute(emb, knnLsh(emb, nQueries, k), nQueries, k)
-
-  /** Recall@k of the IVF tier against exact brute force — same exact-integer
-    * (hits, total) shape as [[lshRecall]]. IVF recall is bounded by the
-    * probe fraction: a true neighbor in an unprobed cell is unreachable, so
-    * recall tracks P(neighbor's cell ∈ query's nProbe nearest cells) —
-    * tune (nCells, nProbe) against this metric. Measured on the
-    * uniform-random test corpus (sf0.1, the hardest geometry — top-5
-    * cosines are only ~0.3-0.5): nProbe 3→0.44, 4→0.60, 6→0.78, 8→0.84,
-    * vs a random-probe baseline of nProbe/nCells (0.19 at 3/16) — the
-    * anchor correlation buys ~2.3× over blind probing at a 19% scan
-    * fraction. On clustered corpora (real near-dup structure) the cell
-    * assignment is far sharper; see SimilaritySpec's cluster test. The
-    * LEARNED quantizer ([[knnIvfKmeans]], measured by e7) reaches
-    * 0.84–1.00 at the same scan fraction — prefer it; this fixed-anchor
-    * tier remains as the zero-training baseline.
-    */
-  def ivfRecall(emb: DataFrame, nQueries: Int = 10, k: Int = 5,
-                nCells: Int = 16, nProbe: Int = 3): DataFrame =
-    recallVsBrute(emb, knnIvf(emb, nQueries, k, nCells, nProbe), nQueries, k)
-
-  private def recallVsBrute(emb: DataFrame, approx: DataFrame,
-                            nQueries: Int, k: Int): DataFrame = {
-    // ground truth via the heap-merge form (knnBruteAgg), NOT the window
-    // form: the recall harness would otherwise contain the exact
-    // full-scored-set row_number shuffle the serving tier bans — the one
-    // Window the r3 verdict found left on the e4/e5/e7 paths. The two
-    // forms are spec-asserted row-identical (SimilaritySpec), so the
-    // recall numbers are unchanged; ExplainAudit now extends the Window
-    // prohibition to the recall queries too.
-    val brute = knnBruteAgg(emb, nQueries, k).select(col("qid"), col("nid"))
-    val a = approx.select(col("qid").as("q2"), col("nid").as("n2"))
-    brute.join(a, col("qid") === col("q2") && col("nid") === col("n2"),
-        "left")
-      .agg(count(lit(1)).as("total"), count(col("q2")).as("hits"))
-      .select(col("hits"), col("total"))
-  }
-
-  // --------------------------------------------------- MMR diversity re-rank
-
-  /** e29 — Maximal-Marginal-Relevance diversity re-rank (Carbonell &
-    * Goldstein 1998), the standard LAST stage of an ANN serving stack:
-    * retrieval-augmented pipelines dedup their retrieved contexts by
-    * re-ranking the candidate list so each pick maximizes relevance to
-    * the query minus redundancy against what's already picked —
-    * score(c) = dot(q,c) − max_{s∈selected} dot(c,s) (λ = 1/2 MMR).
-    * Output: (qid, nid, mmr_rank, dot, penalty), all exact int64 over
-    * the quantized vectors, penalty = the redundancy term at selection
-    * time (0 for the first pick).
-    *
-    * Scale shape: stage 1 is the e1 serving pass — queries broadcast,
-    * ONE corpus scan, per-query top-m closed through the heap-merge
-    * aggregator (ids+dot only cross the exchange). Stage 2
-    * late-materializes the m·nQueries candidate VECTORS by broadcasting
-    * the KB candidate relation back onto the scan (the e11 refine
-    * shape — the corpus is never shuffled), then runs the greedy O(k·m)
-    * selection inside a typed [[graft.functions.MmrAggregator]] per
-    * query group — distributed where the (tiny) groups land, zero
-    * driver-side iteration. Composes with any candidate tier: swap
-    * stage 1 for IVF/PQ probes and nothing downstream changes.
-    */
-  def mmrRerank(emb: DataFrame, nQueries: Int = 10, k: Int = 5,
-                m: Int = 20): DataFrame = {
-    val corpus = emb.select(col("vec_id").as("nid"),
-      quantized(col("embedding")).as("nq"))
-    val queries = emb.filter(col("vec_id") < nQueries)
-      .select(col("vec_id").as("qid"), quantized(col("embedding")).as("qq"))
-    val cand = topKByDot(corpus.crossJoin(broadcast(queries))
-      .filter(col("nid") =!= col("qid"))
-      .select(col("qid"), col("nid"),
-        dotCols(col("qq"), col("nq")).as("dot")), m)
-      .select(col("qid"), col("nid"), col("dot"))
-    mmrRerankFrom(emb, cand, k)
-  }
-
-  /** The MMR stage over an EXTERNAL candidate relation (qid, nid, dot) —
-    * what lets the greedy diversity pass sit on top of ANY retrieval
-    * tier: [[mmrRerank]] feeds it brute top-m (the e29 oracle posture),
-    * e34 feeds it the model-served IVF-PQ stack's exact-reranked top-m
-    * (the full production serving composition). Candidates are KB-sized
-    * by construction, so the vector late-materialization join broadcasts
-    * and the greedy runs inside the typed per-query aggregator.
-    */
-  def mmrRerankFrom(emb: DataFrame, cand: DataFrame, k: Int = 5): DataFrame = {
-    val spark = emb.sparkSession
-    import spark.implicits._
-    val corpus = emb.select(col("vec_id").as("nid"),
-      quantized(col("embedding")).as("nq"))
-    val withVec = corpus.join(broadcast(cand), Seq("nid"))
-    val mmr = new graft.functions.MmrAggregator(k).toColumn
-    withVec.select(col("qid"), col("nid"), col("dot"), col("nq"))
-      .as[(Long, Long, Long, Seq[Long])]
-      .groupByKey(_._1)
-      .mapValues { case (_, n, d, v) => (n, d, v) }
-      .agg(mmr.name("sel"))
-      .flatMap { case (qid, sel) =>
-        sel.map { case (n, d, p, r) => (qid, n, r, d, p) } }
-      .toDF("qid", "nid", "mmr_rank", "dot", "penalty")
-  }
-
-  /** e34 — the COMPOSED production serving stack in one query: the
-    * persisted-model IVF-PQ path (e15: in-row cells + codes vs literal
-    * model, ADC inside probed cells, exact re-rank — ZERO training jobs)
-    * produces the top-`m` candidates, and the MMR diversity stage (e29)
-    * greedily re-ranks them to `k`. This is the end-to-end shape a
-    * retrieval deployment actually serves: artifact-backed ANN
-    * candidates → exact scores → diversity — every stage individually
-    * audited, here proven to compose (and to stay inside the e-tier
-    * bans: heap-merge candidate reduction, broadcast late-materialized
-    * vectors, aggregator-internal greedy, no rank window anywhere).
-    */
-  def mmrOverIvfPqModel(emb: DataFrame, model: AnnModel, nQueries: Int = 10,
-                        k: Int = 5, m: Int = 20, nProbe: Int = 4,
-                        refine: Int = 10): DataFrame =
-    mmrRerankFrom(emb,
-      knnIvfPqModel(emb, model, nQueries, m, nProbe, refine)
-        .select(col("qid"), col("nid"), col("dot")), k)
-
-  /** e30 — the diversity evidence for e29: per query, the worst (max)
-    * pairwise redundancy inside the MMR-selected k-set vs inside the
-    * plain relevance top-k. MMR exists to push this number down; the
-    * query makes the claim measurable (and the spec asserts
-    * mmr ≤ topk on every query). Exact int64 like everything else —
-    * the k-sets are 5 ids per query, so the within-set pair joins are
-    * KB-sized broadcasts.
-    */
-  def mmrDiversity(emb: DataFrame, nQueries: Int = 10, k: Int = 5,
-                   m: Int = 20): DataFrame = {
-    val qv = emb.select(col("vec_id").as("id"),
-      quantized(col("embedding")).as("q"))
-    def maxPair(sel: DataFrame, out: String): DataFrame = {
-      val a = sel.join(qv, col("nid") === col("id")).select(
-        col("qid"), col("nid"), col("q"))
-      val b = a.select(col("qid").as("q2"), col("nid").as("n2"),
-        col("q").as("qb"))
-      a.join(b, col("qid") === col("q2") && col("nid") < col("n2"))
-        .groupBy(col("qid"))
-        .agg(max(dotCols(col("q"), col("qb"))).as(out))
-    }
-    val mmrSel = mmrRerank(emb, nQueries, k, m).select(col("qid"), col("nid"))
-    val topSel = knnBruteAgg(emb, nQueries, k).select(col("qid"), col("nid"))
-    maxPair(topSel, "topk_max_pairdot")
-      .join(maxPair(mmrSel, "mmr_max_pairdot"), Seq("qid"))
-      .select(col("qid"), col("topk_max_pairdot"), col("mmr_max_pairdot"),
-        (col("mmr_max_pairdot") <= col("topk_max_pairdot")).as("diversified"))
-  }
-
   // ------------------------------------------------ hybrid lexical + dense
 
   /** e31 — hybrid retrieval by reciprocal-rank fusion (RRF, Cormack et
     * al. 2009): fuse the BM25 lexical top-`kEach` (TextOps.bm25TopK over
     * `documents`, t16's scorer) with the dense top-`kEach` of the id-0
-    * embedding query (the heap-merge knnBruteAgg, e1's scorer) —
+    * embedding query (the heap-merge [[knnBruteAgg]]) —
     * `documents.doc_id` and `embeddings.vec_id` share an id space, the
     * doc↔its-embedding pairing every hybrid search index maintains.
     * score = Σ_lists 1/(c + rank), the rank-only fusion that needs NO
@@ -1609,8 +326,7 @@ object Similarity {
     * ranking the lexical list runs AFTER its LIMIT (kEach rows, one
     * partition, the t10 bounded-window argument). At 100 TB the only
     * heavy work is inside the two retrieval tiers, which swap freely
-    * for their ANN/pruned forms (e15/e28, t16) without touching the
-    * fusion.
+    * for approximate or pruned forms without touching the fusion.
     */
   def hybridRrf(docs: DataFrame, emb: DataFrame, queryTerms: Seq[String],
                 kEach: Int = 20, kOut: Int = 10, c: Int = 60): DataFrame = {

@@ -648,7 +648,7 @@ object TextOps {
   }
 
   /** Build-if-absent / load-if-present banded index artifact (the
-    * bpeModelFor/annModelFor composition for the DEDUP tier): the index
+    * bpeModelFor composition for the DEDUP tier): the index
     * is written ONCE per crawl (content-addressed by corpus signature +
     * k/bands, so crawls and settings coexist and a regenerated corpus
     * never probes a stale index) and every subsequent batch probes the
@@ -1145,9 +1145,8 @@ object TextOps {
   // --------------------------------- train-once / serve-many BPE tokenizer
 
   /** The persisted tokenizer artifact: the ordered merge table plus the
-    * corpus-mean fertility — the ANN tier's train-once posture
-    * (AnnModel) applied to the TOKENIZER: at 100 TB you train merges on
-    * one pass, persist ~KBs, and every downstream consumer (token
+    * corpus-mean fertility — a train-once posture for the TOKENIZER: at
+    * 100 TB you train merges on one pass, persist ~KBs, and every downstream consumer (token
     * budgets, fertility gates, packing) serves from the artifact with
     * ZERO training jobs until the corpus drifts. Long-format parquet so
     * any engine reads it with a plain scan.
@@ -1181,7 +1180,7 @@ object TextOps {
     BpeModel(merges.length, merges, param(1))
   }
 
-  /** Train-if-absent / load-if-present (the annModelFor composition):
+  /** Train-if-absent / load-if-present:
     * the artifact directory is keyed by a SHA-256 of the corpus content
     * signature + nMerges, so models for different corpora/settings
     * coexist and a regenerated corpus never reuses a stale tokenizer.

@@ -190,15 +190,20 @@ class MainSpec extends SparkSuite {
     val base = tmp()
     turns(day1 ++ Seq(
       ("c3", 1, "user", """INS nonamespace {"_id":"n1"}""", "tool_0", T1),
-      ("c3", 2, "user", """INS shop. {"_id":"n2"}""", "tool_0", T1)): _*)
+      ("c3", 2, "user", """INS shop. {"_id":"n2"}""", "tool_0", T1),
+      ("c3", 3, "user", "INS other.t9 not-json", "tool_0", T1)): _*)
       .write.json(s"$base/in")
     val conf = Main.Conf(s"$base/in", "json", s"$base/out.sql", "sql",
       None, "local[4]")
     val (n, rejects) = Main.run(spark, conf)
-    assert(rejects == 3) // SYS and both table-less turns
+    // SYS, both table-less turns and the payload that is not a JSON object
+    assert(rejects == 4)
     val got = lines(conf.output)
     assert(n == got.length.toLong)
     assert(got == Seq(
+      // the bad-payload turn still declares its schema (p9 counts every
+      // admitted turn with a table); it renders no table DDL and no DML
+      "CREATE SCHEMA IF NOT EXISTS other;",
       "CREATE SCHEMA IF NOT EXISTS shop;",
       "CREATE TABLE IF NOT EXISTS shop.orders (_id VARCHAR(255) PRIMARY KEY, total FLOAT);",
       "CREATE TABLE IF NOT EXISTS shop.orders_tags (_id VARCHAR(255) PRIMARY KEY, " +

@@ -3,8 +3,9 @@ package graft
 import org.apache.spark.sql.DataFrame
 import graft.operators.Similarity
 
-/** ANN correctness on constructed clusters: brute force must return the
-  * true cluster; LSH must agree with brute force on clear separations.
+/** Embedding-query correctness on constructed clusters: brute force must
+  * return the true cluster, and the k-means and fusion operators must
+  * match independent reimplementations.
   */
 class SimilaritySpec extends SparkSuite {
 
@@ -45,131 +46,6 @@ class SimilaritySpec extends SparkSuite {
     val agged = Similarity.knnBruteAgg(emb, nQueries = 2, k = 3).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getInt(3))).toSet
     assert(agged == window)
-  }
-
-  test("IVF: probed-cell search stays in-cluster and recalls brute force") {
-    val brute = Similarity.knnBrute(emb, nQueries = 2, k = 3).collect()
-      .map(r => (r.getLong(0), r.getLong(1))).toSet
-    val ivf = Similarity.knnIvf(emb, nQueries = 2, k = 3,
-        nCells = 8, nProbe = 2)
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    ivf.foreach { case (q, n) => assert(q % 2 == n % 2) }
-    assert(ivf.intersect(brute).size * 3 >= brute.size * 2,
-      s"ivf=$ivf brute=$brute")
-  }
-
-  test("LSH recall: on clearly separated clusters it matches brute force") {
-    val brute = Similarity.knnBrute(emb, nQueries = 2, k = 3).collect()
-      .map(r => (r.getLong(0), r.getLong(1))).toSet
-    val lsh = Similarity.knnLsh(emb, nQueries = 2, k = 3)
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    // every LSH hit is a true same-cluster pair...
-    lsh.foreach { case (q, n) => assert(q % 2 == n % 2) }
-    // ...and recall on this easy geometry is at least 2/3 of brute's set
-    assert(lsh.intersect(brute).size * 3 >= brute.size * 2,
-      s"lsh=$lsh brute=$brute")
-  }
-
-  test("multi-probe LSH recall@5 vs brute force >= 0.9 on the real corpus (sf0.1)") {
-    val embReal = spark.read.parquet("/root/testdata/sf0.1/embeddings.parquet")
-    val r = Similarity.lshRecall(embReal).collect()(0)
-    val (hits, total) = (r.getLong(0), r.getLong(1))
-    assert(total == 50L)
-    assert(hits * 10 >= total * 9, s"recall=$hits/$total")
-  }
-
-  test("IVF recall@5 at serving settings beats random probing 2x on sf0.1") {
-    val embReal = spark.read.parquet("/root/testdata/sf0.1/embeddings.parquet")
-    val r = Similarity.ivfRecall(embReal).collect()(0)
-    val (hits, total) = (r.getLong(0), r.getLong(1))
-    assert(total == 50L)
-    // uniform corpus, nProbe 3 of 16 cells = 19% scan fraction: random
-    // probing recalls 0.19; the anchor correlation must clear 0.4
-    // (measured 0.44 — deterministic arithmetic, fixed corpus)
-    assert(hits * 50 >= total * 20, s"recall=$hits/$total")
-  }
-
-  test("learned-centroid IVF recall@5 >= 0.8 at nProbe=3 and beats the sign anchors (sf0.01)") {
-    val embReal = spark.read.parquet("/root/testdata/sf0.01/embeddings.parquet")
-    val km = Similarity.ivfKmeansRecall(embReal).collect()(0)
-    val (kh, kt) = (km.getLong(0), km.getLong(1))
-    assert(kt == 50L)
-    // k-means Voronoi cells at the SAME 19% scan fraction (nProbe 3/16):
-    // measured 0.84 here, 0.90 at sf0.1 — vs the sign anchors' 0.44.
-    // Deterministic arithmetic + fixed corpus, so the bound is stable.
-    assert(kh * 10 >= kt * 8, s"kmeans recall=$kh/$kt")
-    val anchors = Similarity.ivfRecall(embReal).collect()(0)
-    assert(kh > anchors.getLong(0),
-      s"kmeans $kh should beat anchors ${anchors.getLong(0)}")
-  }
-
-  test("PQ-ADC: cluster structure survives 3-bit-per-block compression; real-corpus recall measured") {
-    // constructed orthogonal clusters: ADC scoring must keep neighbors
-    // in-cluster (cross-cluster ADC dots are near zero by construction)
-    val pq = Similarity.knnPq(emb, nQueries = 2, k = 3, m = 2, kCb = 4,
-      iters = 2, dim = 4).collect()
-    assert(pq.length == 6)
-    pq.foreach { r =>
-      assert(r.getLong(0) % 2 == r.getLong(1) % 2,
-        s"query ${r.getLong(0)} got cross-cluster ${r.getLong(1)} under PQ")
-    }
-    // real corpus: 8x16 codebooks (32 bits/vector, 128x compression)
-    // measure recall 0.30 on the UNIFORM corpus — the adversarial case
-    // for PQ (true top-5 cosines ~0.3-0.5, barely above noise; config
-    // sweep 4x8→0.22, 4x16→0.28, 16x16→0.34) — vs ~0.01 blind ranking.
-    // Deterministic arithmetic + fixed corpus, so the bound is stable.
-    val embReal = spark.read.parquet("/root/testdata/sf0.01/embeddings.parquet")
-    val r = Similarity.pqRecall(embReal).collect()(0)
-    val (hits, total) = (r.getLong(0), r.getLong(1))
-    assert(total == 50L)
-    info(s"PQ recall@5 on sf0.01: $hits/$total")
-    assert(hits * 4 >= total, s"recall=$hits/$total below 0.25")
-  }
-
-  test("PQ exact re-rank: in-cluster on constructed data; lifts real-corpus recall over raw ADC") {
-    // constructed clusters: refined neighbors must stay in-cluster (the
-    // exact re-rank can only improve on the ADC estimate)
-    val rf = Similarity.knnPqRefine(emb, nQueries = 2, k = 3, refine = 2,
-      m = 2, kCb = 4, iters = 2, dim = 4).collect()
-    assert(rf.length == 6)
-    rf.foreach { r =>
-      assert(r.getLong(0) % 2 == r.getLong(1) % 2,
-        s"query ${r.getLong(0)} got cross-cluster ${r.getLong(1)} refined")
-    }
-    // real corpus: with re-rank the lossy ADC only has to land the true
-    // neighbor in the top k·refine — recall jumps vs e10's raw ranking
-    // at the SAME 32-bit codes. Deterministic arithmetic, fixed corpus.
-    val embReal = spark.read.parquet("/root/testdata/sf0.01/embeddings.parquet")
-    val raw = Similarity.pqRecall(embReal).collect()(0).getLong(0)
-    val r = Similarity.pqRefineRecall(embReal).collect()(0)
-    val (hits, total) = (r.getLong(0), r.getLong(1))
-    assert(total == 50L)
-    info(s"refined PQ recall@5 on sf0.01: $hits/$total vs raw ADC $raw/$total")
-    assert(hits > raw, s"refine $hits should beat raw ADC $raw")
-  }
-
-  test("composed IVF-PQ: in-cluster on constructed data; real-corpus recall within the expected ladder") {
-    // constructed clusters: the full stack (cells → ADC → re-rank) must
-    // keep neighbors in-cluster
-    val ip = Similarity.knnIvfPq(emb, nQueries = 2, k = 3, nCells = 4,
-      nProbe = 2, cIters = 2, m = 2, kCb = 4, pqIters = 2, dim = 4,
-      refine = 2).collect()
-    assert(ip.length == 6)
-    ip.foreach { r =>
-      assert(r.getLong(0) % 2 == r.getLong(1) % 2,
-        s"query ${r.getLong(0)} got cross-cluster ${r.getLong(1)} via IVF-PQ")
-    }
-    // real corpus, the recall ladder: the composed stack scans 1/4 of
-    // cells through 32-bit codes — it must land between the raw ADC
-    // floor (e10, 0.30 here) and the exact-dot-in-probed-cells ceiling
-    // (e7-at-nProbe-4); measured 0.56 at sf0.001, 0.58 at sf0.01
-    val embReal = spark.read.parquet("/root/testdata/sf0.01/embeddings.parquet")
-    val raw = Similarity.pqRecall(embReal).collect()(0).getLong(0)
-    val r = Similarity.ivfPqRecall(embReal).collect()(0)
-    val (hits, total) = (r.getLong(0), r.getLong(1))
-    assert(total == 50L)
-    info(s"IVF-PQ recall@5 on sf0.01: $hits/$total vs raw ADC $raw/$total")
-    assert(hits > raw, s"composed stack $hits should beat raw ADC $raw")
   }
 
   test("semanticDedup matches an independent brute-force SemDeDup (and keeps cluster minima)") {
@@ -216,395 +92,6 @@ class SimilaritySpec extends SparkSuite {
       assert(keep == dupOf.isEmpty)
     }
     assert(res.count(!_._4) > 0, "corpus has within-cluster dups by construction")
-  }
-
-  test("SQ8: codes are 8-bit, reconstruction under-approximates within the " +
-    "level width, and cluster structure survives") {
-    val (mn, mx) = Similarity.sq8Bounds(emb, dim = 4)
-    assert(mn.length == 4 && mx.length == 4)
-    mn.indices.foreach(i => assert(mn(i) <= mx(i)))
-    // codes all in [0, 255]
-    val codes = Similarity.sq8Codes(emb, mn, mx).collect()
-    codes.foreach { r =>
-      r.getSeq[Long](1).foreach(c => assert(c >= 0L && c <= 255L, s"code $c"))
-    }
-    // double-floor encode/decode never exceeds the source and errs by at
-    // most one level width (+2 covers both integer-div floors)
-    import org.apache.spark.sql.functions._
-    val q = emb.select(col("vec_id"),
-      expr("transform(embedding, x -> CAST(round(CAST(x AS DOUBLE) * 10000)" +
-        " AS BIGINT))").as("qe"))
-    val re = q.withColumn("re", expr(
-      Similarity.sq8ReconSql("qe", mn, mx))).collect()
-    re.foreach { r =>
-      val qe = r.getSeq[Long](1); val rec = r.getSeq[Long](2)
-      qe.indices.foreach { i =>
-        val err = qe(i) - rec(i)
-        val width = (mx(i) - mn(i)) / 255 + 2
-        assert(err >= 0L && err <= width,
-          s"dim $i: q=${qe(i)} recon=${rec(i)} err=$err width=$width")
-      }
-    }
-    // ranking through the 8-bit round trip stays in-cluster
-    val res = Similarity.knnSq8(emb, nQueries = 2, k = 3, dim = 4).collect()
-    assert(res.length == 6)
-    res.foreach { r =>
-      assert(r.getLong(0) % 2 == r.getLong(1) % 2,
-        s"query ${r.getLong(0)} got cross-cluster neighbor ${r.getLong(1)}")
-    }
-  }
-
-  test("Sq8Recon kernel is bit-identical to the transform-CASE HOF forms " +
-    "(incl. null elements and the clamped greatest-skips-null rule)") {
-    import org.apache.spark.sql.functions._
-    import spark.implicits._
-    val (mn, mx) = Similarity.sq8Bounds(emb, dim = 4)
-    val rg = mn.indices.map(i => mx(i) - mn(i)).toArray
-    val q = emb.select(col("vec_id"),
-      graft.functions.quantize_vec(col("embedding")).as("qe"))
-    // adversarial: a null element, an exact-bound value, values outside
-    // the bounds on both sides (the clamp's reason to exist)
-    val adv = Seq(
-      (9001L, Seq[Option[Long]](None, Some(0L), Some(mn(2) - 77L),
-        Some(mx(3) + 99L))),
-      (9002L, Seq[Option[Long]](Some(mn(0)), Some(mx(1)), Some(-5L),
-        Some(5L)))).toDF("vec_id", "qe")
-    val docs = q.unionByName(adv)
-    for (clamped <- Seq(false, true)) {
-      val hof = expr(if (clamped) Similarity.sq8ReconClampedSql("qe", mn, mx)
-                     else Similarity.sq8ReconSql("qe", mn, mx))
-      val bad = docs.select(hof.as("a"),
-          graft.functions.sq8_recon(col("qe"), mn, rg, clamped).as("b"))
-        .filter(not(col("a") <=> col("b"))).count()
-      assert(bad == 0L, s"kernel diverges from HOF at clamped=$clamped")
-    }
-    // the subtle rule the first kernel draft got wrong: under the clamped
-    // form greatest(null, 0L) SKIPS the null, so a null element encodes
-    // as code 0 and reconstructs to mn_i (not null)
-    val r = Seq((1L, Seq[Option[Long]](None, None, None, None)))
-      .toDF("vec_id", "qe")
-      .select(graft.functions.sq8_recon(col("qe"), mn, rg,
-        clamped = true).as("b"))
-      .head.getSeq[Long](0)
-    assert(r.toArray.sameElements(mn))
-  }
-
-  test("SQ8 recall@5 on the real corpus: 8 bits/dim keeps near-exact " +
-    "ranking (>= 0.9) and beats PQ's 4-bit blocks (sf0.01)") {
-    val embReal = spark.read.parquet("/root/testdata/sf0.01/embeddings.parquet")
-    val r = Similarity.sq8Recall(embReal).collect()(0)
-    val (hits, total) = (r.getLong(0), r.getLong(1))
-    assert(total == 50L)
-    assert(hits * 10 >= total * 9, s"sq8 recall=$hits/$total")
-    val pq = Similarity.pqRecall(embReal).collect()(0)
-    assert(hits > pq.getLong(0),
-      s"sq8 $hits should beat pq-adc ${pq.getLong(0)}")
-  }
-
-  test("IVF-SQ8: in-cluster on constructed data; real-corpus recall stays " +
-    "within a few hits of exact-dot IVF at the same probed cells (sf0.01)") {
-    // constructed clusters: probing the query's own cells through 8-bit
-    // reconstructions must stay in-cluster
-    val res = Similarity.knnIvfSq8(emb, nQueries = 2, k = 3, nCells = 4,
-      nProbe = 2, cIters = 2, dim = 4).collect()
-    assert(res.nonEmpty)
-    res.foreach { r =>
-      assert(r.getLong(0) % 2 == r.getLong(1) % 2,
-        s"query ${r.getLong(0)} got cross-cluster neighbor ${r.getLong(1)}")
-    }
-    // real corpus: same cells as e7, so the recall gap isolates the
-    // 8-bit rung — a few hits of 50 at most (measured: identical)
-    val embReal = spark.read.parquet("/root/testdata/sf0.01/embeddings.parquet")
-    val sq = Similarity.ivfSq8Recall(embReal).collect()(0)
-    val ex = Similarity.ivfKmeansRecall(embReal).collect()(0)
-    assert(sq.getLong(1) == 50L)
-    assert(sq.getLong(0) >= ex.getLong(0) - 5,
-      s"ivf-sq8 ${sq.getLong(0)} fell too far under exact-ivf ${ex.getLong(0)}")
-    assert(sq.getLong(0) * 10 >= sq.getLong(1) * 7,
-      s"ivf-sq8 recall=${sq.getLong(0)}/${sq.getLong(1)}")
-  }
-
-  test("filtered search: predicate constrains candidates (not queries), " +
-    "filtered-IVF recalls filtered-brute on the real corpus") {
-    // constructed clusters, predicate = label 1 (cluster B): query 0
-    // lives in cluster A but its FILTERED neighbors must all be odd —
-    // the defining behavior of attribute-constrained search (an
-    // unfiltered top-k would never leave cluster A)
-    val res = Similarity.knnBruteFiltered(emb, nQueries = 2, k = 3, lbl = 1)
-      .collect()
-    assert(res.length == 6)
-    res.foreach(r => assert(r.getLong(1) % 2 == 1,
-      s"filtered result ${r.getLong(1)} violates the label predicate"))
-    // filtered-IVF on the same fixture obeys the predicate too
-    Similarity.knnIvfFiltered(emb, nQueries = 2, k = 3, nCells = 4,
-        nProbe = 4, lbl = 1).collect()
-      .foreach(r => assert(r.getLong(1) % 2 == 1))
-    // real corpus: recall of filtered-IVF vs filtered-brute at the
-    // e3 probe settings — same scan fraction, so comparable recall
-    val embReal = spark.read.parquet("/root/testdata/sf0.01/embeddings.parquet")
-    val rec = Similarity.filteredRecall(embReal).collect()(0)
-    assert(rec.getLong(1) == 50L)
-    assert(rec.getLong(0) * 10 >= rec.getLong(1) * 5,
-      s"filtered recall ${rec.getLong(0)}/${rec.getLong(1)} below 0.5")
-  }
-
-  test("knnGraph (NN-descent): descends — recall strictly improves with " +
-    "rounds, edges are well-formed, clusters lock in on constructed data") {
-    // constructed clusters: with enough rounds the graph edges settle
-    // in-cluster (in-cluster dots ~1e8, cross ~1e6·eps)
-    val g = Similarity.knnGraph(emb, k = 3, rounds = 4).collect()
-    assert(g.nonEmpty)
-    val inCluster = g.count(r => r.getLong(0) % 2 == r.getLong(1) % 2)
-    assert(inCluster * 10 >= g.length * 8,
-      s"only $inCluster/${g.length} edges in-cluster after 4 rounds")
-    // well-formed: no self loops, rnk within 1..k, <= k edges per node
-    g.foreach { r =>
-      assert(r.getLong(0) != r.getLong(1))
-      assert(r.getInt(3) >= 1 && r.getInt(3) <= 3)
-    }
-    assert(g.groupBy(_.getLong(0)).values.map(_.size).max <= 3)
-    // real corpus: the descent property — more rounds, strictly more
-    // true-k-NN edges recovered (this is the paper's convergence claim
-    // at benchmark scale), and round-2 recall far above the random init
-    val embReal = spark.read.parquet("/root/testdata/sf0.01/embeddings.parquet")
-    val r1 = Similarity.knnGraphRecall(embReal, rounds = 1).collect()(0)
-    val r2 = Similarity.knnGraphRecall(embReal, rounds = 2).collect()(0)
-    assert(r2.getLong(1) == 400L)
-    assert(r2.getLong(0) > r1.getLong(0),
-      s"round 2 recall ${r2.getLong(0)} not above round 1 ${r1.getLong(0)}")
-    assert(r2.getLong(0) * 10 >= r2.getLong(1) * 3,
-      s"graph recall ${r2.getLong(0)}/${r2.getLong(1)} below 0.3")
-  }
-
-  test("AnnModel: save/load round-trips bit-exactly and the loaded model " +
-    "serves identically to the in-memory one") {
-    val dir = java.nio.file.Files.createTempDirectory("annmodel").toString
-    val model = Similarity.trainAnnModel(emb, sampleEvery = 2, nCells = 4,
-      cIters = 2, m = 2, kCb = 4, pqIters = 2, dim = 4)
-    Similarity.saveAnnModel(spark, model, s"$dir/m")
-    val loaded = Similarity.loadAnnModel(spark, s"$dir/m")
-    assert(loaded.nCells == model.nCells && loaded.cIters == model.cIters &&
-      loaded.m == model.m && loaded.kCb == model.kCb &&
-      loaded.pqIters == model.pqIters && loaded.dim == model.dim &&
-      loaded.sampleEvery == model.sampleEvery)
-    assert(loaded.centroids.map(_.toSeq).toSeq ==
-      model.centroids.map(_.toSeq).toSeq)
-    assert(loaded.books.map(_.map(_.toSeq).toSeq).toSeq ==
-      model.books.map(_.map(_.toSeq).toSeq).toSeq)
-    assert(loaded.sq8Mn.toSeq == model.sq8Mn.toSeq &&
-      loaded.sq8Mx.toSeq == model.sq8Mx.toSeq)
-    // the slice-trained SQ8 rung serves identically from the artifact,
-    // and clamping keeps every reconstruction inside the model bounds
-    val sqA = Similarity.knnSq8Model(emb, loaded, nQueries = 2, k = 3)
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
-    val sqB = Similarity.knnSq8Model(emb, model, nQueries = 2, k = 3)
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
-    assert(sqA == sqB && sqA.nonEmpty)
-    val served = Similarity.knnIvfPqModel(emb, loaded, nQueries = 2, k = 3,
-      nProbe = 2, refine = 2).collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getInt(3))).toSet
-    val inMem = Similarity.knnIvfPqModel(emb, model, nQueries = 2, k = 3,
-      nProbe = 2, refine = 2).collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getInt(3))).toSet
-    assert(served == inMem)
-    // and the serving results stay in-cluster like the trained-in-query
-    // stack's (the model only changes WHERE training data came from)
-    served.foreach { case (q, n, _, _) =>
-      assert(q % 2 == n % 2, s"query $q got cross-cluster $n via model serve")
-    }
-  }
-
-  test("annModelFor trains once then loads: second call touches no Lloyd's " +
-    "(same artifact), and model serving runs zero training jobs") {
-    val dir = java.nio.file.Files.createTempDirectory("annmodelfor").toString
-    val m1 = Similarity.annModelFor(emb, dir, sampleEvery = 2, nCells = 4,
-      cIters = 2, m = 2, kCb = 4, pqIters = 2, dim = 4)
-    // artifact exists with exactly one fingerprint subdir + marker
-    val subdirs = new java.io.File(dir).listFiles().filter(_.isDirectory)
-    assert(subdirs.length == 1)
-    assert(new java.io.File(subdirs(0), "_trained").exists())
-    val m2 = Similarity.annModelFor(emb, dir, sampleEvery = 2, nCells = 4,
-      cIters = 2, m = 2, kCb = 4, pqIters = 2, dim = 4)
-    assert(m2.centroids.map(_.toSeq).toSeq == m1.centroids.map(_.toSeq).toSeq)
-    assert(m2.books.map(_.map(_.toSeq).toSeq).toSeq ==
-      m1.books.map(_.map(_.toSeq).toSeq).toSeq)
-    // ZERO training in the serving path: count Spark jobs via a listener
-    // — the model-served query must run strictly fewer jobs than the
-    // trained-in-query stack with the SAME params (which adds 2 seed
-    // collects + cIters + pqIters Lloyd's aggregates on top of the
-    // identical serving pipeline).
-    def jobsOf(action: => Unit): Int = {
-      val ran = new java.util.concurrent.atomic.AtomicInteger(0)
-      val listener = new org.apache.spark.scheduler.SparkListener {
-        override def onJobStart(
-            js: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-          ran.incrementAndGet(): Unit
-        }
-      }
-      spark.sparkContext.addSparkListener(listener)
-      try {
-        action
-        // listener events are async — poll briefly for the bus to drain
-        val deadline = System.nanoTime() + 5_000_000_000L
-        var last = -1
-        while (System.nanoTime() < deadline && last != ran.get()) {
-          last = ran.get(); Thread.sleep(100)
-        }
-        ran.get()
-      } finally spark.sparkContext.removeSparkListener(listener)
-    }
-    val servingJobs = jobsOf(Similarity.knnIvfPqModel(emb, m2, nQueries = 2,
-      k = 3, nProbe = 2, refine = 2).collect(): Unit)
-    val trainingJobs = jobsOf(Similarity.knnIvfPq(emb, nQueries = 2, k = 3,
-      nCells = 4, nProbe = 2, cIters = 2, m = 2, kCb = 4, pqIters = 2,
-      dim = 4, refine = 2).collect(): Unit)
-    assert(servingJobs + 4 <= trainingJobs,
-      s"model serving ran $servingJobs jobs vs $trainingJobs trained-in-" +
-        "query — training leaked into the serving path?")
-  }
-
-  test("persisted codes table: codesFor encodes once then reuses, and " +
-    "serving from codes is row-identical to the in-query-encode path") {
-    val dir = java.nio.file.Files.createTempDirectory("anncodes").toString
-    val model = Similarity.trainAnnModel(emb, sampleEvery = 2, nCells = 4,
-      cIters = 2, m = 2, kCb = 4, pqIters = 2, dim = 4)
-    val p1 = Similarity.codesPathFor(emb, model, dir)
-    val marker = new java.io.File(p1, "_encoded")
-    assert(marker.exists())
-    val stamp = marker.lastModified()
-    // second call must REUSE the artifact, not re-encode
-    val p2 = Similarity.codesPathFor(emb, model, dir)
-    assert(p2 == p1 && marker.lastModified() == stamp)
-    // the persisted table round-trips the in-row encode bit-exactly
-    val direct = Similarity.encodeIvfPq(emb, model).collect()
-      .map(r => (r.getLong(0), r.getInt(1), r.getSeq[Int](2))).toSet
-    val persisted = Similarity.codesFor(emb, model, dir).collect()
-      .map(r => (r.getLong(0), r.getInt(1), r.getSeq[Int](2))).toSet
-    assert(persisted == direct && persisted.size == 20)
-    // e28 == e15: serving from the codes table reproduces the re-encode
-    // path row-for-row (dot AND rank — the heap-merge tie contract)
-    val fromCodes = Similarity.knnIvfPqCodes(
-      Similarity.codesFor(emb, model, dir), emb, model, nQueries = 2,
-      k = 3, nProbe = 2, refine = 2).collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getInt(3))).toSet
-    val reEncode = Similarity.knnIvfPqModel(emb, model, nQueries = 2, k = 3,
-      nProbe = 2, refine = 2).collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getInt(3))).toSet
-    assert(fromCodes == reEncode && fromCodes.nonEmpty)
-  }
-
-  test("subsample training slice: re-id'd ids are contiguous so Lloyd's " +
-    "seeds come from the sample (not original id space)") {
-    // sampleEvery=2 on ids 0..19 keeps originals 0,2,..,18 re-id'd 0..9;
-    // trainAnnModel must succeed with nCells=8 even though only ids < 8
-    // of the ORIGINAL space would give just 4 even seeds
-    val model = Similarity.trainAnnModel(emb, sampleEvery = 2, nCells = 8,
-      cIters = 1, m = 2, kCb = 8, pqIters = 1, dim = 4)
-    assert(model.centroids.length == 8)
-    assert(model.books.length == 2 && model.books(0).length == 8)
-  }
-
-  test("IVF assignment is in-row (no corpus x centroid join/window in the plan)") {
-    val plan = Similarity.knnIvf(emb, nQueries = 2, k = 3, nCells = 8,
-      nProbe = 2).queryExecution.optimizedPlan.toString
-    // exactly one join (candidates x broadcast probes); the r1 scale bug
-    // was a crossJoin with a data-dependent centroid set plus a per-vector
-    // assignment window
-    assert("Join".r.findAllIn(plan).length == 1, plan)
-    // one top-k Window (plus Spark's WindowGroupLimit pushdown, which is
-    // the partial top-k we want) — NO per-vector assignment window
-    assert("Window \\[".r.findAllIn(plan).length <= 1, plan)
-  }
-
-  test("mmrRerank skips the redundant twin for the diverse candidate; " +
-      "partition-invariant; e30 diversity invariant holds") {
-    import spark.implicits._
-    // query 0; candidates: 1 and 2 are near-twins highly similar to the
-    // query, 3 is a different direction — plain top-2 = {1, 2}, MMR's
-    // second pick must be 3 (2's redundancy vs 1 wipes its relevance)
-    val d = Seq(
-      (0L, Array(1.0f, 0f, 0f, 0f), 0),
-      (1L, Array(0.99f, 0.14f, 0f, 0f), 0),
-      (2L, Array(0.98f, 0.19f, 0f, 0f), 0),
-      (3L, Array(0.70f, 0.0f, 0.71f, 0f), 0)).toDF("vec_id", "embedding", "label")
-    val res = Similarity.mmrRerank(d, nQueries = 1, k = 2, m = 3)
-      .collect().sortBy(_.getLong(2))
-    assert(res.map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSeq ==
-      Seq((0L, 1L, 1L), (0L, 3L, 2L)), res.mkString(", "))
-    assert(res(0).getLong(4) == 0L)   // first pick: empty selected set
-    assert(res(1).getLong(4) > 0L)    // second pick paid a redundancy term
-    // the aggregator's merge path: result invariant under repartitioning
-    val res2 = Similarity.mmrRerank(d.repartition(5), nQueries = 1, k = 2,
-        m = 3).collect().sortBy(_.getLong(2))
-    assert(res.map(_.toSeq).toSeq == res2.map(_.toSeq).toSeq)
-    // e30 on the clustered corpus: MMR's worst within-set redundancy
-    // never exceeds plain top-k's, for every query
-    val div = Similarity.mmrDiversity(emb, nQueries = 2, k = 3, m = 6)
-      .collect()
-    assert(div.length == 2 && div.forall(_.getBoolean(3)),
-      div.mkString(", "))
-  }
-
-  test("mmrOverIvfPqModel: the composed serving stack selects only from " +
-      "the model-served candidates, first pick is the top candidate, " +
-      "ranks are 1..k per query") {
-    val model = Similarity.trainAnnModel(emb, sampleEvery = 1, nCells = 2,
-      cIters = 2, m = 2, kCb = 4, pqIters = 1, dim = 4)
-    val cand = Similarity.knnIvfPqModel(emb, model, nQueries = 2, k = 6,
-        nProbe = 2, refine = 3).collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getInt(3)))
-    val out = Similarity.mmrOverIvfPqModel(emb, model, nQueries = 2, k = 3,
-        m = 6, nProbe = 2, refine = 3).collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3)))
-    (0L to 1L).foreach { q =>
-      val cq = cand.filter(_._1 == q)
-      val oq = out.filter(_._1 == q).sortBy(_._3)
-      assert(oq.map(_._3).toSeq == Seq(1L, 2L, 3L), s"q$q ranks")
-      val candIds = cq.map(_._2).toSet
-      assert(oq.forall(r => candIds.contains(r._2)),
-        s"q$q selected outside the candidate set")
-      // greedy's first pick is pure relevance: the rank-1 candidate
-      val top = cq.minBy(_._4)
-      assert(oq.head._2 == top._2 && oq.head._4 == top._3,
-        s"q$q first pick ${oq.head} != top candidate $top")
-    }
-  }
-
-  test("nprobeSweep: one row per probe width, recall non-decreasing in " +
-      "nProbe, full-width probe reaches brute-force recall 1") {
-    val sweep = Similarity.nprobeSweep(emb, probes = Seq(1, 2, 4),
-        nQueries = 2, k = 3, nCells = 4)
-      .collect().map(r => (r.getInt(0), r.getLong(1), r.getLong(2)))
-      .sortBy(_._1)
-    assert(sweep.map(_._1).toSeq == Seq(1, 2, 4))
-    assert(sweep.forall(_._3 == 6L), s"total must be nQueries*k: $sweep")
-    val hits = sweep.map(_._2).toSeq
-    assert(hits == hits.sorted, s"recall must be monotone in nProbe: $sweep")
-    // probing EVERY cell makes IVF exhaustive — recall must be 1
-    assert(hits.last == 6L, s"full-width probe must match brute: $sweep")
-  }
-
-  test("ivfCellStats: every model cell appears, populations sum to the " +
-      "corpus, shares are exact integer millionths, clusters separate") {
-    val model = Similarity.trainAnnModel(emb, sampleEvery = 1, nCells = 2,
-      cIters = 3, m = 2, kCb = 4, pqIters = 1, dim = 4)
-    val rows = Similarity.ivfCellStats(emb, model).collect()
-      .map(r => r.getInt(0) -> ((r.getLong(1), r.getLong(2)))).toMap
-    assert(rows.keySet == Set(0, 1))
-    assert(rows.values.map(_._1).sum == 20L)
-    rows.foreach { case (cell, (n, share)) =>
-      assert(share == n * 1000000L / 20L, s"cell $cell share mismatch")
-    }
-    // seeds are vec 0 (cluster A) and vec 1 (cluster B): Lloyd's on the
-    // two orthogonal clusters must balance them 10/10
-    assert(rows(0)._1 == 10L && rows(1)._1 == 10L, rows.toString)
-    // dead-cell recovery: a 3-cell model over 2 real clusters leaves at
-    // most one cell starved but ALL THREE cells must be reported
-    val m3 = Similarity.trainAnnModel(emb, sampleEvery = 1, nCells = 3,
-      cIters = 3, m = 2, kCb = 4, pqIters = 1, dim = 4)
-    val r3 = Similarity.ivfCellStats(emb, m3).collect()
-    assert(r3.map(_.getInt(0)).toSet == Set(0, 1, 2))
-    assert(r3.map(_.getLong(1)).sum == 20L)
   }
 
   test("hybridRrf fuses lexical and dense ranks by integer RRF, " +

@@ -308,50 +308,6 @@ class StreamingSpec extends SparkSuite {
       TextOps.bpeFertilityScoreInRow(_, fertMerges, 700L))
   }
 
-  test("vector-ingest encode from a persisted AnnModel is stream-transparent: " +
-    "cells and PQ codes identical on stream vs batch") {
-    import spark.implicits._
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    import graft.operators.Similarity
-    implicit val ctx: org.apache.spark.sql.SQLContext = spark.sqlContext
-
-    // two orthogonal-ish clusters in R^4 (the SimilaritySpec corpus shape)
-    val rows = (0 until 24).map { i =>
-      val eps = 0.01f * (i / 2)
-      val v = if (i % 2 == 0) Array(1.0f, eps, 0.0f, 0.0f)
-              else Array(eps, 1.0f, 0.0f, 0.0f)
-      (i.toLong, v, i % 2)
-    }
-    val batch = rows.toDF("vec_id", "embedding", "label")
-    val model = Similarity.trainAnnModel(batch, sampleEvery = 2, nCells = 4,
-      cIters = 2, m = 2, kCb = 4, pqIters = 2, dim = 4)
-
-    val want = Similarity.encodeIvfPq(batch, model).collect()
-      .map(_.toString).sorted.toSeq
-    val ms = MemoryStream[(Long, Array[Float], Int)]
-    val q = Similarity.encodeIvfPq(
-      ms.toDF().toDF("vec_id", "embedding", "label"), model)
-      .writeStream.format("memory").queryName("vec_ingest")
-      .outputMode("append").start()
-    try {
-      // codes must not depend on micro-batch boundaries
-      ms.addData(rows.take(13): _*)
-      q.processAllAvailable()
-      ms.addData(rows.drop(13): _*)
-      q.processAllAvailable()
-    } finally q.stop()
-    val got = spark.sql("SELECT * FROM vec_ingest").collect()
-      .map(_.toString).sorted.toSeq
-    assert(got == want, "streamed encode != batch encode")
-    // and the encode really is the serving representation: every cell in
-    // range, every code a valid codebook index
-    val enc = Similarity.encodeIvfPq(batch, model).collect()
-    enc.foreach { r =>
-      assert(r.getInt(1) >= 0 && r.getInt(1) < 4)
-      r.getSeq[Int](2).foreach(c => assert(c >= 0 && c < 4, s"code $c"))
-    }
-  }
-
   test("kill-resume: shutdown-hook drain stops queries; restart loses nothing, dupes nothing (K4)") {
     val base = tmp()
     val in = s"$base/in"

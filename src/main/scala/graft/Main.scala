@@ -82,8 +82,8 @@ object Main {
       .load(conf.input)
 
   /** One batch run; returns (statements emitted, turns dead-lettered: an
-    * unknown op, a denied db, no table or a payload that is not a JSON
-    * object).
+    * unknown op, a denied db, no namespace or a payload that is not a JSON
+    * object). The count per reason goes to stderr.
     * With a ledger, only the files it has not seen run, and none new
     * means nothing renders. Session lifecycle belongs to the caller
     * (main() owns it; tests pass their shared session).
@@ -103,24 +103,22 @@ object Main {
 
   private def render(turns: DataFrame, conf: Conf): (Long, Long) = {
     // pin the batch, parsed, admitted and tokenized once per turn: two
-    // actions read it (the reject count and the sink write or JDBC run) —
-    // the cache keeps them on one snapshot, and every branch of the render
-    // DAG scans its columns instead of re-parsing the source
+    // actions read it (the registry's fold and the sink write or JDBC run)
+    // — the cache keeps them on one snapshot, and every branch of the
+    // render DAG scans its columns instead of re-parsing the source
     val batch = Pipeline.tokenize(turns).cache()
     try {
-      // unknown-op guard (transformer.go:26-28): count + log, never crash;
-      // a turn without a table (`INS nonamespace {…}`) dead-letters too,
-      // and so does one whose payload is not a JSON object (`INS db.t
-      // not-json`), which renders no DML. Every such turn, and only such a
-      // turn, has a NULL kv, so one predicate counts them all.
-      // The count builds the cache in one job: counted as an RDD, the
-      // rejects are one narrow scan, where a Dataset count plans an
-      // aggregate whose adaptive stages run three. (Left to the write, the
-      // cache would start a job in each render branch's cache stage.)
-      val nRejects = batch.filter(col("kv").isNull).rdd.count()
+      // one job builds the cache and folds it into the schema registry:
+      // the dead letters by reason and, decided on the driver, the DDL.
+      // Unknown-op guard (transformer.go:26-28): count + log, never crash;
+      // a turn without a namespace (`INS nonamespace {…}`) dead-letters
+      // too, and so does one whose payload is not a JSON object (`INS db.t
+      // not-json`), which renders no DML.
+      val reg = Pipeline.registry(batch)
+      val nRejects = reg.deadLetters.map(_._2).sum
       if (nRejects > 0)
-        System.err.println(s"[graft] dead-lettered $nRejects " +
-          "unknown-op/denied-db/no-table/bad-payload turns")
+        System.err.println(s"[graft] dead-lettered $nRejects turns: " +
+          reg.deadLetters.map { case (reason, k) => s"$reason $k" }.mkString(", "))
 
       // the render DAG executes exactly once per run, in the sink. Both
       // sinks write one partition in stream order, so the stream is
@@ -128,7 +126,7 @@ object Main {
       // first run a sampling job over the render branches to pick range
       // bounds for partitions that are merged anyway. The sort key is a
       // total order, so the stream is the same either way.
-      val stmts = Pipeline.renderTokens(batch.filter(col("admitted"))).repartition(1)
+      val stmts = Pipeline.renderTokens(batch, reg).repartition(1)
         .sortWithinPartitions(col("phase"), col("ord"), col("turn_idx"), col("stmt"))
       val n = conf.outputType match {
         case "sql" =>

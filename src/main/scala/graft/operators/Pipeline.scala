@@ -1,10 +1,16 @@
 package graft.operators
 
+import scala.collection.mutable
+
 import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.api.java.UDF1
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.InterpretedOrdering
+import org.apache.spark.sql.execution.SQLExecution
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.StructType
+import org.apache.spark.sql.types.{DataType, StructType}
+import org.apache.spark.unsafe.types.UTF8String
 import graft.functions.{json_arr_raw, json_kv_raw, json_unquote, parse_turn, valid_turn}
 
 /** The log-pipeline operators: parse → filter → enrich → route → aggregate,
@@ -14,10 +20,13 @@ import graft.functions.{json_arr_raw, json_kv_raw, json_unquote, parse_turn, val
   * /root/reference/transformer/transformer.go:15-319).
   *
   * Everything is declarative DataFrame API so Catalyst gets full pushdown /
-  * pruning / whole-stage-codegen; the only custom surface is the fused
-  * ParseTurn expression and the enrich lookup. No RDDs and no driver-side
-  * loops over turns — the one collect() is of the small enrich dimension;
-  * each stage is a distributed transform that scales by partition count.
+  * pruning / whole-stage-codegen; the custom surface is the fused
+  * ParseTurn expression, the enrich lookup and the schema registry's
+  * fold. No driver-side loops over turns: the driver collects the small
+  * enrich dimension, and the registry's partials — per partition, the
+  * dead-letter counts, the schema names and at most one entry per (db,
+  * tbl, key), never a turn — which it merges to decide the DDL. Each stage
+  * is a distributed transform that scales by partition count.
   */
 object Pipeline {
 
@@ -66,11 +75,14 @@ object Pipeline {
     * (parse_turn), admitted once (valid_turn and a table) and, if
     * admitted, its payload tokenized once (`kv`, json_kv_raw). `admitted`
     * is never NULL: every turn either renders or is dead-lettered. Main
-    * caches this projection, so its reject count and every branch of
+    * caches this projection, so the [[registry]] fold and every branch of
     * [[renderTokens]] read these columns instead of re-deriving them.
     */
-  def tokenize(turns: DataFrame): DataFrame =
-    parse(turns)
+  def tokenize(turns: DataFrame): DataFrame = tokens(parse(turns))
+
+  /** [[tokenize]] over parse-shaped rows. */
+  private def tokens(parsed: DataFrame): DataFrame =
+    parsed
       .select(col("conv_id"), col("turn_idx"), col("ts"),
         (validCond && hasTable).as("admitted"), col("op"), col("db"),
         col("tbl"), col("payload"))
@@ -392,102 +404,221 @@ object Pipeline {
     inserts(childDocs(parsed))
 
   // ------------------------------------------------------------------ DDL
-  // Every table's CREATE and drift ALTERs come from ONE two-level
-  // aggregate over its documents ([[tableDdl]]) — the distributed
-  // replacement for the reference's mutex-guarded first-writer-wins
-  // registry (constants/config_manager.go:31-52) with a
-  // deterministic (ts, conv_id, turn_idx, payload) order instead of the
-  // goroutine arrival race. Parent and child tables share it: the child
-  // docs are parsed-shaped rows, so one aggregate serves both. Both
-  // levels are two-phase min-struct/collect aggregates — map-side
-  // partials reduce every scan partition to ≤|keys| rows before the
-  // exchange; there is no window over all rows (a window would shuffle
-  // EVERY insert into |tables| partitions, a skew cliff at corpus scale).
+  // Every CREATE SCHEMA, CREATE TABLE and drift ALTER is decided on the
+  // driver, from one schema registry per batch ([[registry]]): the
+  // reference's mutex-guarded first-writer-wins registry
+  // (constants/config_manager.go:31-52), with a deterministic (ts, conv_id,
+  // turn_idx, payload) order instead of the goroutine arrival race. One
+  // Spark job folds each partition to a partial registry: dead-letter
+  // counts by reason, schema names and, per (db, tbl, key), two minima —
+  // at most |keys| entries, never a turn. The driver merges the partials
+  // and decides the statements, which join the stream as a literal
+  // relation, so the DDL adds no exchange to the render. Parent and child
+  // tables share the fold: child docs are kv-carrying rows like parent INS
+  // rows. Catalyst still computes every type (sqlTypeOfRaw) and the fold
+  // takes minima by Catalyst's own ordering of the projected structs, so
+  // it orders exactly as a `min(struct)` aggregate would: field by field,
+  // nulls first, strings by their UTF-8 bytes.
 
-  /** CREATE (phase 1) and ALTER (phase 2) statements per table, as
-    * (phase, db, tbl, stmt). Only documents that render an INSERT (a
-    * payload json_kv_raw accepts) take part, so a malformed first payload
-    * never decides a table's columns.
-    *
-    * Per (db, tbl, key) — explode_outer, so a key-less doc still competes
-    * for first place — `fd` is the key's first doc with the key's type
-    * there, and `ea` the key's earliest occurrence by (ts, conv_id,
-    * turn_idx) with its type. Per (db, tbl), `first` is the smallest
-    * `fd.at`: the table's first doc. A key belongs to that doc iff its own
-    * `fd.at` equals `first`; those keys, sorted, are the CREATE columns
-    * typed from the first doc (transformer.go:205-228). Every other key is
+  /** Dead-letter reasons, in order of precedence. The reference's guard
+    * skips a record whose op is unknown or whose db is denied
+    * (transformer.go:26-28); a turn with no db, or with a missing or empty
+    * table, has no namespace to render into; an admitted turn whose
+    * payload is not a JSON object renders no DML.
+    */
+  val deadLetterReasons: Seq[String] =
+    Seq("unknown_op", "denied_db", "no_namespace", "bad_payload")
+
+  /** The index of a [[tokenize]] row's dead-letter reason in
+    * [[deadLetterReasons]]; NULL for a turn that renders. Every turn with a
+    * NULL kv, and only such a turn, gets a reason.
+    */
+  private def deadLetter: Column =
+    when(!coalesce(col("op").isin(allowedOps: _*), lit(false)), 0)
+      .when(coalesce(col("db").isin(deniedDbs: _*), lit(false)), 1)
+      .when(!col("admitted"), 2)
+      .when(kv.isNull, 3)
+
+  /** One DDL statement: phase 0 is CREATE SCHEMA (`tbl` NULL), 1 CREATE
+    * TABLE, 2 ALTER TABLE ... ADD.
+    */
+  final case class Ddl(phase: Int, db: String, tbl: String, stmt: String)
+
+  /** A batch's schema registry, decided on the driver: its dead-lettered
+    * turns per reason, in [[deadLetterReasons]] order, and its DDL.
+    */
+  final case class Registry(deadLetters: Seq[(String, Long)], ddl: Seq[Ddl])
+
+  /** The registry of a [[tokenize]]-shaped batch, from ONE Spark job; over
+    * a cached batch, that job also builds the cache.
+    */
+  def registry(batch: DataFrame): Registry =
+    fold(Some(batch), docs(batch.filter(col("admitted"))))
+
+  /** Admitted turns → the document set: parent INS rows and their
+    * runtime-discovered child docs, each with its kv.
+    */
+  private def docs(tok: DataFrame): DataFrame =
+    parentDocs(tok).unionByName(children(tok))
+
+  private def parentDocs(tok: DataFrame): DataFrame =
+    tok.filter(col("op") === "INS")
+      .select("conv_id", "turn_idx", "ts", "db", "tbl", "op", "payload", "kv")
+
+  /** One row per (doc, scalar key) of the docs that render an INSERT, so a
+    * malformed payload never decides a table's columns. A key-less doc
+    * gives one row with a NULL key: it still competes for its table's
+    * first doc. `fd` is the doc's position (ts, conv_id, turn_idx,
+    * payload) with the key's type there; `ea` is the position (ts,
+    * conv_id, turn_idx) with the type.
+    */
+  private def keyRows(docs: DataFrame): DataFrame = {
+    val ktype = sqlTypeOfRaw(element_at(kv, col("key"))).as("ktype")
+    opRows(docs, "INS")
+      .select(col("db"), col("tbl"), col("ts"), col("conv_id"),
+        col("turn_idx"), col("payload"), kv,
+        explode_outer(scalarKeysOf(kv)).as("key"))
+      .select(col("db"), col("tbl"), col("key"),
+        struct(struct(col("ts"), col("conv_id"), col("turn_idx"),
+          col("payload")).as("at"), ktype).as("fd"),
+        struct(col("ts"), col("conv_id"), col("turn_idx"), ktype).as("ea"))
+  }
+
+  /** The registry of `batch`'s turns, if given, and `docs`' tables. The
+    * fold reads one row per turn (its schema if admitted, its dead-letter
+    * reason) and one per doc key; a NULL `tbl` marks a turn row.
+    */
+  private def fold(batch: Option[DataFrame], docs: DataFrame): Registry = {
+    val keys = keyRows(docs)
+    val rows = batch
+      .fold(keys.withColumn("reason", lit(null).cast("int"))) { b =>
+        b.select(when(col("admitted"), col("db")).as("db"),
+            deadLetter.as("reason"))
+          .unionByName(keys, allowMissingColumns = true)
+      }
+      .select("db", "tbl", "key", "fd", "ea", "reason")
+    def ordering(t: DataType): Ordering[InternalRow] =
+      InterpretedOrdering.forSchema(t.asInstanceOf[StructType].map(_.dataType))
+    val fdType = rows.schema("fd").dataType
+    val minima = new Minima(ordering(fdType), ordering(rows.schema("ea").dataType))
+    val qe = rows.queryExecution
+    val partials = SQLExecution.withNewExecutionId(qe, Some("registry")) {
+      qe.toRdd.mapPartitions(it => Iterator.single(minima.partial(it))).collect()
+    }
+    decide(partials.reduce(minima.merge),
+      ordering(fdType.asInstanceOf[StructType]("at").dataType))
+  }
+
+  /** A registry before its statements are decided. */
+  private final class Partial extends Serializable {
+    val deadLetters = new Array[Long](deadLetterReasons.size)
+    val schemas = mutable.HashSet.empty[UTF8String]
+    /** (db, tbl, key) → the least (fd, ea) seen. */
+    val keys = mutable.HashMap.empty[(UTF8String, UTF8String, UTF8String),
+      (InternalRow, InternalRow)]
+  }
+
+  /** The fold's minima: partials merge by the same minima that build them,
+    * so the driver's merge equals one fold over the whole batch.
+    */
+  private final class Minima(fdOrd: Ordering[InternalRow],
+                             eaOrd: Ordering[InternalRow]) extends Serializable {
+    private def offer(p: Partial, k: (UTF8String, UTF8String, UTF8String),
+                      fd: InternalRow, ea: InternalRow): Unit =
+      p.keys(k) = p.keys.get(k).fold((fd, ea)) { case (f, e) =>
+        (fdOrd.min(f, fd), eaOrd.min(e, ea))
+      }
+
+    /** One partition of the fold's (db, tbl, key, fd, ea, reason) rows.
+      * They may be reused buffers, so what the partial keeps is copied.
+      */
+    def partial(rows: Iterator[InternalRow]): Partial = {
+      val p = new Partial
+      def str(r: InternalRow, i: Int): UTF8String =
+        if (r.isNullAt(i)) null else r.getUTF8String(i).clone()
+      rows.foreach { r =>
+        if (r.isNullAt(1)) {
+          if (!r.isNullAt(0)) p.schemas += str(r, 0)
+          if (!r.isNullAt(5)) p.deadLetters(r.getInt(5)) += 1
+        } else offer(p, (str(r, 0), str(r, 1), str(r, 2)),
+          r.getStruct(3, 2).copy(), r.getStruct(4, 4).copy())
+      }
+      p
+    }
+
+    def merge(a: Partial, b: Partial): Partial = {
+      b.deadLetters.indices.foreach(i => a.deadLetters(i) += b.deadLetters(i))
+      a.schemas ++= b.schemas
+      b.keys.foreach { case (k, (fd, ea)) => offer(a, k, fd, ea) }
+      a
+    }
+  }
+
+  /** The statements of a merged registry. Per table, the first doc is the
+    * least `fd.at` over its keys. A key belongs to that doc iff its own
+    * `fd.at` equals it: those keys, sorted, are the CREATE columns typed
+    * from the first doc (transformer.go:205-228). Every other key is
     * drift: ALTER ... ADD typed from its earliest occurrence
     * (transformer.go:176-195). `_id` is never drift — CREATE always
     * declares it as the PRIMARY KEY.
     */
-  private def tableDdl(docs: DataFrame): DataFrame = {
-    val perKey = opRows(docs, "INS")
-      .select(col("db"), col("tbl"), col("ts"), col("conv_id"),
-        col("turn_idx"), col("payload"), kv,
-        explode_outer(scalarKeysOf(kv)).as("key"))
-      .withColumn("ktype", sqlTypeOfRaw(element_at(kv, col("key"))))
-      .groupBy(col("db"), col("tbl"), col("key"))
-      .agg(
-        min(struct(struct(col("ts"), col("conv_id"), col("turn_idx"),
-          col("payload")).as("at"), col("ktype"))).as("fd"),
-        min(struct(col("ts"), col("conv_id"), col("turn_idx"),
-          col("ktype"))).as("ea"))
-    val perTable = perKey
-      .groupBy(col("db"), col("tbl"))
-      .agg(min(col("fd.at")).as("first"),
-        // key-less docs (null key) and _id only count towards `first`;
-        // collect_list drops the nulls
-        collect_list(when(col("key").isNotNull && col("key") =!= "_id",
-          struct(col("key"), col("fd.at").as("at"),
-            col("fd.ktype").as("ctype"), col("ea.ktype").as("atype"))))
-          .as("keys"))
-    val defs = array_join(transform(
-      array_sort(filter(col("keys"), k => k("at") === col("first"))),
-      k => concat(k("key"), lit(" "), k("ctype"))), ", ")
-    val create = concat(lit("CREATE TABLE IF NOT EXISTS "), col("db"),
-      lit("."), col("tbl"), lit(" (_id VARCHAR(255) PRIMARY KEY"),
-      when(defs === "", lit("")).otherwise(concat(lit(", "), defs)),
-      lit(");"))
-    val alters = transform(filter(col("keys"), k => k("at") =!= col("first")),
-      k => struct(lit(2).as("phase"),
-        concat(lit("ALTER TABLE "), col("db"), lit("."), col("tbl"),
-          lit(" ADD "), k("key"), lit(" "), k("atype"), lit(";")).as("stmt")))
-    perTable.select(col("db"), col("tbl"),
-      inline(concat(array(struct(lit(1).as("phase"), create.as("stmt"))),
-        alters)))
+  private def decide(p: Partial, atOrd: Ordering[InternalRow]): Registry = {
+    val schemas = p.schemas.toSeq.map(db =>
+      Ddl(0, db.toString, null, s"CREATE SCHEMA IF NOT EXISTS $db;"))
+    val tables = p.keys.groupBy { case ((db, tbl, _), _) => (db, tbl) }.toSeq
+      .flatMap { case ((db, tbl), keys) =>
+        def at(fd: InternalRow): InternalRow = fd.getStruct(0, 4)
+        val first = keys.values.map { case (fd, _) => at(fd) }.min(atOrd)
+        val (create, drift) = keys.toSeq
+          .collect { case ((_, _, k), facts) if k != null && k.toString != "_id" =>
+            (k, facts) }
+          .partition { case (_, (fd, _)) => atOrd.equiv(at(fd), first) }
+        val defs = create.sortWith((a, b) => a._1.binaryCompare(b._1) < 0)
+          .map { case (k, (fd, _)) => s", $k ${fd.getUTF8String(1)}" }.mkString
+        val name = s"$db.$tbl"
+        Ddl(1, db.toString, tbl.toString,
+          s"CREATE TABLE IF NOT EXISTS $name (_id VARCHAR(255) PRIMARY KEY$defs);") +:
+          drift.map { case (k, (_, ea)) =>
+            Ddl(2, db.toString, tbl.toString,
+              s"ALTER TABLE $name ADD $k ${ea.getUTF8String(3)};")
+          }
+      }
+    Registry(deadLetterReasons.zip(p.deadLetters.toSeq), schemas ++ tables)
   }
 
-  private def tableDdlPhase(docs: DataFrame, phase: Int): DataFrame =
-    tableDdl(docs).filter(col("phase") === phase).select("db", "tbl", "stmt")
+  /** The `phase` statements of a registry, as a literal relation. */
+  private def ddlPhase(parsed: DataFrame, reg: Registry, phase: Int): DataFrame =
+    parsed.sparkSession.createDataFrame(reg.ddl.filter(_.phase == phase))
+
+  /** The registry of the tables of `parsed`'s turns with a table: the
+    * docs `docsOf` picks from them, whether or not a turn is admitted.
+    */
+  private def tables(parsed: DataFrame, docsOf: DataFrame => DataFrame): Registry =
+    fold(None, docsOf(withKv(parsed)))
 
   /** CREATE TABLE per parent table from its first doc: runtime-derived
     * columns, inferred types, _id leading as PRIMARY KEY.
     */
   def ddlCreateTablesDynamic(parsed: DataFrame): DataFrame =
-    tableDdlPhase(withKv(parsed), 1)
+    ddlPhase(parsed, tables(parsed, parentDocs), 1).select("db", "tbl", "stmt")
 
   /** ALTER ... ADD per parent-table drift key. */
   def ddlAlterTablesDynamic(parsed: DataFrame): DataFrame =
-    tableDdlPhase(withKv(parsed), 2)
+    ddlPhase(parsed, tables(parsed, parentDocs), 2).select("db", "tbl", "stmt")
 
   /** Child CREATE TABLE from each child table's first document. */
   def ddlCreateChildTablesDynamic(parsed: DataFrame): DataFrame =
-    tableDdlPhase(childDocs(parsed), 1)
+    ddlPhase(parsed, tables(parsed, children), 1).select("db", "tbl", "stmt")
 
   /** Child ALTER on drift inside nested documents (transformer_test.go:116-144). */
   def ddlAlterChildTablesDynamic(parsed: DataFrame): DataFrame =
-    tableDdlPhase(childDocs(parsed), 2)
+    ddlPhase(parsed, tables(parsed, children), 2).select("db", "tbl", "stmt")
 
   /** CREATE SCHEMA dedup (D1, transformer.go:62-67,230-232) over the
     * admitted turns that have a table.
     */
   def ddlCreateSchemas(parsed: DataFrame): DataFrame =
-    schemas(filterValid(parsed).filter(hasTable))
-
-  private def schemas(tok: DataFrame): DataFrame =
-    tok.select(col("db")).distinct()
-      .withColumn("stmt",
-        concat(lit("CREATE SCHEMA IF NOT EXISTS "), col("db"), lit(";")))
+    ddlPhase(parsed, registry(tokens(parsed)), 0).select("db", "stmt")
 
   // ------------------------------------------------------- full SQL stream
 
@@ -501,40 +632,36 @@ object Pipeline {
     * is strictly stronger, not a divergence.
     *
     * `parsed` is parse-shaped; its admitted turns render, exactly as the
-    * union of the public per-kind renderers would render them.
+    * union of the public per-kind renderers would render them. Building
+    * the frame runs the registry's job.
     *
     * Output: (phase, ord, turn_idx, stmt) — callers order by all four, a
     * total order of the stream.
     */
-  def renderAllStatements(parsed: DataFrame): DataFrame =
-    renderTokens(withKv(filterValid(parsed)))
+  def renderAllStatements(parsed: DataFrame): DataFrame = {
+    val batch = tokens(parsed)
+    renderTokens(batch, registry(batch))
+  }
 
-  /** [[renderAllStatements]] over admitted turns that already carry `kv`
-    * ([[tokenize]]'s rows where `admitted`; Main passes its cached batch).
+  /** [[renderAllStatements]] over a [[tokenize]]-shaped batch and its
+    * [[registry]] (Main passes its cached batch).
     *
-    * Parent INS rows and their runtime-discovered child docs form one
-    * document set, each row with its kv: [[tableDdl]] derives every
-    * table's CREATE and ALTERs from it in a single aggregate, and one
-    * INSERT core covers parent and child rows alike. No branch parses a
-    * turn or tokenizes a payload; over a cached input each branch scans
-    * the cache. The plan is five branches with four shuffles in all
-    * (schema distinct, per-key and per-table DDL aggregates, and the
-    * caller's gather into the one partition it sorts); the child docs are
-    * built in the DDL and the INSERT branch alike.
+    * The registry's DDL is a literal relation. Parent INS rows and their
+    * runtime-discovered child docs form one document set, each row with
+    * its kv, and one INSERT core covers both. No branch parses a turn or
+    * tokenizes a payload; over a cached batch each branch scans the cache.
+    * The plan is four branches and no exchange: the only shuffle is the
+    * caller's gather into the one partition it sorts.
     */
-  def renderTokens(tok: DataFrame): DataFrame = {
-    val docs = tok.filter(col("op") === "INS")
-      .select("conv_id", "turn_idx", "ts", "db", "tbl", "op", "payload", "kv")
-      .unionByName(children(tok))
-    def ddl(df: DataFrame, phase: Column): DataFrame =
-      df.select(phase.as("phase"), col("stmt").as("ord"),
-        lit(0).as("turn_idx"), col("stmt"))
+  def renderTokens(batch: DataFrame, reg: Registry): DataFrame = {
+    val tok = batch.filter(col("admitted"))
     def dml(df: DataFrame): DataFrame =
       df.select(lit(3).as("phase"), col("conv_id").as("ord"),
         col("turn_idx"), col("stmt"))
-    ddl(schemas(tok), lit(0))
-      .unionByName(ddl(tableDdl(docs), col("phase")))
-      .unionByName(dml(inserts(docs)))
+    batch.sparkSession.createDataFrame(reg.ddl)
+      .select(col("phase"), col("stmt").as("ord"), lit(0).as("turn_idx"),
+        col("stmt"))
+      .unionByName(dml(inserts(docs(tok))))
       .unionByName(dml(updates(tok)))
       .unionByName(dml(deletes(tok)))
   }

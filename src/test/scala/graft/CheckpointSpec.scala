@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.operators.{Checkpoint, Pipeline}
@@ -15,7 +13,7 @@ import graft.sources.{TranscriptTable, Transcripts}
 class CheckpointSpec extends SparkSuite {
 
   private def tmp(): String =
-    Files.createTempDirectory("graft_ckpt").toString
+    tempDir("graft_ckpt").toString
 
   private lazy val allTurns = Transcripts.transcripts(spark, "/root/testdata/sf0.001")
   private lazy val toolDim = Transcripts.toolDim(spark)

@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.operators.Pipeline
@@ -68,7 +66,7 @@ class EnrichSpec extends SparkSuite {
   }
 
   test("job budget: enrich runs no Spark job and adds none to the plan it feeds") {
-    val in = Files.createTempDirectory("graft_enrich").toString + "/in"
+    val in = tempDir("graft_enrich").toString + "/in"
     fixture.write.parquet(in)
     val scan = spark.read.schema(TranscriptStream.turnSchema).parquet(in)
     def noop(df: DataFrame): Unit = df.write.format("noop").mode("overwrite").save()

@@ -64,7 +64,7 @@ class EntryContractSpec extends SparkSuite {
   test("JSON source round-trip (reference S1 file-source analog)") {
     // the reference tails a JSON file of oplog entries (main.go:229-303);
     // the Spark analog is a schema'd JSON scan of turns
-    val dir = java.nio.file.Files.createTempDirectory("graft_json").toString
+    val dir = tempDir("graft_json").toString
     val turns = graft.sources.Transcripts.transcripts(spark, sf)
     turns.write.mode("overwrite").json(dir)
     val back = spark.read

@@ -16,7 +16,7 @@ import graft.streaming.TranscriptStream
   */
 class MainSpec extends SparkSuite {
 
-  private def tmp(): String = Files.createTempDirectory("graft_main").toString
+  private def tmp(): String = tempDir("graft_main").toString
 
   private val T1 = "2024-01-01 10:00:00"
   private val T2 = "2024-01-02 10:00:00"
@@ -149,10 +149,10 @@ class MainSpec extends SparkSuite {
     writeInput(s"$base/in", upToDay2 = true)
     val conf = Main.Conf(s"$base/in", "json", s"$base/out.sql", "sql",
       None, "local[4]")
-    // the dead-letter count (an RDD count of the cached batch) and the
-    // write — the write carries the statement count, so no second pass
-    // over the render DAG
-    assert(queriesRun(Main.run(spark, conf)) == Seq("rdd", "command"))
+    // the registry's fold (it builds the cached batch) and the write —
+    // the write carries the statement count, so no second pass over the
+    // render DAG
+    assert(queriesRun(Main.run(spark, conf)) == Seq("registry", "command"))
   }
 
   /** Every operator of an executed plan, through the adaptive stages,
@@ -186,20 +186,44 @@ class MainSpec extends SparkSuite {
     assert(filters.isEmpty, s"the write tokenizes in a filter: $filters")
   }
 
+  /** What `body` returns, and the lines it printed to stderr. */
+  private def withStderr[T](body: => T): (T, Seq[String]) = {
+    val buf = new java.io.ByteArrayOutputStream()
+    val saved = System.err
+    System.setErr(new java.io.PrintStream(buf, true, "UTF-8"))
+    val result = try body finally System.setErr(saved)
+    (result, buf.toString("UTF-8").linesIterator.toSeq)
+  }
+
   test("a turn without a table dead-letters; no NULL statement reaches the sink") {
     val base = tmp()
-    turns(day1 ++ Seq(
+    val extra = Seq(
       ("c3", 1, "user", """INS nonamespace {"_id":"n1"}""", "tool_0", T1),
       ("c3", 2, "user", """INS shop. {"_id":"n2"}""", "tool_0", T1),
-      ("c3", 3, "user", "INS other.t9 not-json", "tool_0", T1)): _*)
-      .write.json(s"$base/in")
+      ("c3", 3, "user", "INS other.t9 not-json", "tool_0", T1),
+      ("c3", 4, "user", """INS admin.users {"_id":"a1"}""", "tool_0", T1),
+      // the reasons' precedence: an unknown op before a denied db, a
+      // denied db before a missing table
+      ("c3", 5, "user", "SYS admin.users {}", "tool_0", T1),
+      ("c3", 6, "user", """INS admin {"_id":"a2"}""", "tool_0", T1),
+      ("c3", 7, "user", "INS", "tool_0", T1))
+    turns(day1 ++ extra: _*).write.json(s"$base/in")
     val conf = Main.Conf(s"$base/in", "json", s"$base/out.sql", "sql",
       None, "local[4]")
-    val (n, rejects) = Main.run(spark, conf)
-    // SYS, both table-less turns and the payload that is not a JSON object
-    assert(rejects == 4)
+    val ((n, rejects), err) = withStderr(Main.run(spark, conf))
+    // two SYS turns, two denied dbs, three turns without a namespace and
+    // the payload that is not a JSON object
+    assert(rejects == 8)
+    assert(err.filter(_.startsWith("[graft] dead-lettered")) == Seq(
+      "[graft] dead-lettered 8 turns: unknown_op 2, denied_db 2, " +
+        "no_namespace 3, bad_payload 1"))
     val got = lines(conf.output)
     assert(n == got.length.toLong)
+    // every turn in either renders its one parent DML statement or is
+    // dead-lettered
+    val rendered = got.count(s => Seq("INSERT INTO shop.orders ", "UPDATE ",
+      "DELETE ").exists(s.startsWith))
+    assert(day1.size + extra.size == rendered + rejects)
     assert(got == Seq(
       // the bad-payload turn still declares its schema (p9 counts every
       // admitted turn with a table); it renders no table DDL and no DML
@@ -245,13 +269,14 @@ class MainSpec extends SparkSuite {
     assert(!new java.io.File(conf.output).exists()) // nothing rendered
   }
 
-  test("job budget: the sql path over parquet input runs 6 Spark jobs") {
+  test("job budget: the sql path over parquet input runs 3 Spark jobs") {
     val base = tmp()
     val conf = parquetInput(base, allTurns)
-    // one job builds the cached batch and counts its rejects, then the
-    // render's adaptive stages run five; no schema-inference job, no
-    // range-sort sampling job
-    assert(jobsRun(Main.run(spark, conf)) == 6)
+    // one job builds the cached batch and folds it into the registry, then
+    // the write runs two adaptive stages: the gather into one partition
+    // and the sorted write. The DDL is a literal relation, so it adds no
+    // stage; no schema-inference job, no range-sort sampling job
+    assert(jobsRun(Main.run(spark, conf)) == 3)
     assert(lines(conf.output).length == 8)
   }
 

@@ -107,6 +107,55 @@ class PipelineE2ESpec extends SparkSuite {
       Seq("ALTER TABLE shop.orders ADD total FLOAT;"))
   }
 
+  // A table's first doc is the least (ts, conv_id, turn_idx, payload) and a
+  // drift key's ALTER type comes from its least (ts, conv_id, turn_idx,
+  // type), ordered like Catalyst's min(struct): NULLs first, strings by
+  // their UTF-8 bytes. In each case below another order picks the other doc.
+
+  test("DDL tie-break: under a tied ts, conv_id orders by UTF-8 bytes, not UTF-16") {
+    // U+FF5E (UTF-8 EF BD 9E) sorts before U+1F600 (F0 9F 98 80); in UTF-16
+    // units it sorts after (FF5E > D83D)
+    val p = parsedValid(turns(
+      ("\ud83d\ude00", 1, "user", """INS shop.orders {"_id":"b","y":"s"}""", "tool_0", ts(1)),
+      ("\uff5e", 1, "user", """INS shop.orders {"_id":"a","x":1}""", "tool_0", ts(1)),
+      ("\ud83d\ude00", 2, "user", """INS shop.orders {"_id":"d","z":"s"}""", "tool_0", ts(2)),
+      ("\uff5e", 2, "user", """INS shop.orders {"_id":"c","z":1}""", "tool_0", ts(2))))
+    assert(stmtSet(Pipeline.ddlCreateTablesDynamic(p)) == Seq(
+      "CREATE TABLE IF NOT EXISTS shop.orders (_id VARCHAR(255) PRIMARY KEY, x INTEGER);"))
+    assert(stmtSet(Pipeline.ddlAlterTablesDynamic(p)) == Seq(
+      "ALTER TABLE shop.orders ADD y VARCHAR(255);",
+      "ALTER TABLE shop.orders ADD z INTEGER;"))
+  }
+
+  test("DDL tie-break: a NULL ts sorts before every timestamp") {
+    val p = parsedValid(turns(
+      ("c1", 1, "user", """INS shop.orders {"_id":"b","y":true}""", "tool_0", ts(1)),
+      ("c2", 1, "user", """INS shop.orders {"_id":"a","x":1}""", "tool_0", null),
+      ("c1", 2, "user", """INS shop.orders {"_id":"d","z":2}""", "tool_0", ts(2)),
+      ("c2", 2, "user", """INS shop.orders {"_id":"c","z":"s"}""", "tool_0", null)))
+    assert(stmtSet(Pipeline.ddlCreateTablesDynamic(p)) == Seq(
+      "CREATE TABLE IF NOT EXISTS shop.orders (_id VARCHAR(255) PRIMARY KEY, x INTEGER);"))
+    assert(stmtSet(Pipeline.ddlAlterTablesDynamic(p)) == Seq(
+      "ALTER TABLE shop.orders ADD y BOOLEAN;",
+      "ALTER TABLE shop.orders ADD z VARCHAR(255);"))
+  }
+
+  test("DDL tie-break: a tied (ts, conv_id, turn_idx) picks the first doc by payload, the ALTER type by type") {
+    // the same turn logged twice with different payloads: the smaller
+    // payload text is the first doc. The ALTER position has no payload, so
+    // z's tie goes to the smaller type (FLOAT), not to the smaller payload
+    val p = parsedValid(turns(
+      ("c1", 1, "user", """INS shop.orders {"_id":"b","y":1}""", "tool_0", ts(1)),
+      ("c1", 1, "user", """INS shop.orders {"_id":"a","x":"s"}""", "tool_0", ts(1)),
+      ("c1", 2, "user", """INS shop.orders {"_id":"c","z":"s"}""", "tool_0", ts(2)),
+      ("c1", 2, "user", """INS shop.orders {"_id":"d","z":1.5}""", "tool_0", ts(2))))
+    assert(stmtSet(Pipeline.ddlCreateTablesDynamic(p)) == Seq(
+      "CREATE TABLE IF NOT EXISTS shop.orders (_id VARCHAR(255) PRIMARY KEY, x VARCHAR(255));"))
+    assert(stmtSet(Pipeline.ddlAlterTablesDynamic(p)) == Seq(
+      "ALTER TABLE shop.orders ADD y INTEGER;",
+      "ALTER TABLE shop.orders ADD z FLOAT;"))
+  }
+
   test("window ordering: transitions reflect per-conv turn order") {
     val tr = Pipeline.turnTransitions(fixture).collect()
       .map(r => (r.getString(0), r.getString(1)) -> r.getLong(2)).toMap

@@ -1,12 +1,15 @@
 package graft
 
+import java.nio.file.{Files, Path}
 import java.util.concurrent.{LinkedBlockingQueue, TimeUnit}
 
+import org.apache.commons.io.FileUtils
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.execution.QueryExecution
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.util.QueryExecutionListener
+import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 import graft.operators.Pipeline
 
@@ -27,8 +30,27 @@ object TestSpark {
   }
 }
 
-trait SparkSuite extends AnyFunSuite {
+trait SparkSuite extends AnyFunSuite with BeforeAndAfterAll {
   lazy val spark: SparkSession = TestSpark.spark
+
+  /** The suite's temp root, made by the first [[tempDir]]; it is
+    * deleted, with all it holds, once the suite has run.
+    */
+  private var tempRoot: Option[Path] = None
+
+  /** A new empty directory under the suite's temp root. */
+  def tempDir(prefix: String): Path = synchronized {
+    val root = tempRoot.getOrElse {
+      val r = Files.createTempDirectory("graft_suite")
+      tempRoot = Some(r)
+      r
+    }
+    Files.createTempDirectory(root, prefix)
+  }
+
+  override def afterAll(): Unit =
+    try tempRoot.foreach(r => FileUtils.deleteDirectory(r.toFile))
+    finally super.afterAll()
 
   /** Transcript-shaped fixture: (conv_id, turn_idx, role, text, tool, ts). */
   def turns(rows: (String, Int, String, String, String, String)*): DataFrame = {

@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.functions._
 import graft.operators.Pipeline
 import graft.sources.Transcripts
@@ -14,7 +12,7 @@ import graft.streaming.TranscriptStream
 class StreamingSpec extends SparkSuite {
 
   private def tmp(): String =
-    Files.createTempDirectory("graft_stream").toString
+    tempDir("graft_stream").toString
 
   private lazy val batchTurns =
     Transcripts.transcripts(spark, "/root/testdata/sf0.001").cache()

@@ -941,8 +941,7 @@ class TextOpsSpec extends SparkSuite {
       "second call LOADS (no retrain) and a changed corpus re-keys") {
     val d = docs((1L to 12L).map(i =>
       i -> ("the cat sat on the mat row " + i)): _*)
-    val dir = java.nio.file.Files
-      .createTempDirectory("bpe_model_spec").toString
+    val dir = tempDir("bpe_model_spec").toString
     val m1 = TextOps.bpeModelFor(d, dir, nMerges = 6)
     // round-trip: the persisted artifact equals the in-memory model
     assert(m1.merges == TextOps.bpeTrainMerges(d, 6))
@@ -1141,8 +1140,7 @@ class TextOpsSpec extends SparkSuite {
     // d22: probing the PERSISTED index artifact is row-identical; the
     // second dedupIndexFor call LOADS (one artifact dir, no rebuild);
     // a different corpus keys a NEW artifact
-    val dir = java.nio.file.Files
-      .createTempDirectory("dedup_index_spec").toString
+    val dir = tempDir("dedup_index_spec").toString
     val idx = TextOps.dedupIndexFor(corpus, dir)
     val gotIdx = TextOps.incrementalDedupIndexed(corpus, idx, batch)
       .collect()

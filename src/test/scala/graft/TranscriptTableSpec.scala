@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.functions._
 import graft.sources.{Transcripts, TranscriptTable}
 import graft.streaming.TranscriptStream
@@ -13,7 +11,7 @@ import graft.streaming.TranscriptStream
 class TranscriptTableSpec extends SparkSuite {
 
   test("days(ts) layout prunes partitions for watermark reads; data intact") {
-    val path = Files.createTempDirectory("graft_table").toString + "/turns"
+    val path = tempDir("graft_table").toString + "/turns"
     val turns = Transcripts.transcripts(spark, "/root/testdata/sf0.001")
     TranscriptTable.materialize(turns, path)
 

@@ -31,7 +31,7 @@ import graft.streaming.TranscriptStream
   *   the swallowed-error bug fixed — JdbcSink). The DML-to-DB path runs
   *   single-writer in stream order because correctness of UPDATE-after-
   *   INSERT is order-dependent; table-shaped data at scale should use
-  *   Checkpoint.commitBatch / JdbcSink.append instead.
+  *   Checkpoint.commitBatch instead.
   * - `--ledger <dir>` enables resume on Checkpoint's file ledger: only
   *   the input files no ledger entry holds render, and each run that
   *   finds new files records them after its sink write (reference K1-K3,

@@ -14,9 +14,7 @@ import org.apache.spark.sql.functions.{col, lit}
   *    InitializePostgres inside the consume loop, main.go:100).
   *
   * Executes the pipeline's rendered statements per partition in a
-  * transaction; statement count comes back through an accumulator. For
-  * table-shaped data prefer [[append]] (Spark's own JDBC writer with
-  * batching).
+  * transaction; statement count comes back through an accumulator.
   */
 object JdbcSink {
 
@@ -54,12 +52,4 @@ object JdbcSink {
     }
     acc.value
   }
-
-  /** Table-shaped append through Spark's JDBC writer. */
-  def append(df: DataFrame, url: String, table: String): Unit =
-    df.write.mode("append")
-      .format("jdbc")
-      .option("url", url)
-      .option("dbtable", table)
-      .save()
 }

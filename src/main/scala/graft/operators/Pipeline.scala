@@ -485,14 +485,15 @@ object Pipeline {
   }
 
   /** The registry of `batch`'s turns, if given, and `docs`' tables. The
-    * fold reads one row per turn (its schema if admitted, its dead-letter
-    * reason) and one per doc key; a NULL `tbl` marks a turn row.
+    * fold reads one row per turn (its schema if it renders, else its
+    * dead-letter reason) and one per doc key; a NULL `tbl` marks a turn
+    * row. A dead-lettered turn declares no schema.
     */
   private def fold(batch: Option[DataFrame], docs: DataFrame): Registry = {
     val keys = keyRows(docs)
     val rows = batch
       .fold(keys.withColumn("reason", lit(null).cast("int"))) { b =>
-        b.select(when(col("admitted"), col("db")).as("db"),
+        b.select(when(deadLetter.isNull, col("db")).as("db"),
             deadLetter.as("reason"))
           .unionByName(keys, allowMissingColumns = true)
       }
@@ -665,22 +666,6 @@ object Pipeline {
       .unionByName(dml(updates(tok)))
       .unionByName(dml(deletes(tok)))
   }
-
-  // ----------------------------------------------------------------- skew
-
-  /** Salted repartition for hot conversations (north rule): one conv_id
-    * holding half the corpus would pin one task in a plain
-    * repartition(conv_id) — the reference has the same problem with its
-    * FNV(ns) mod 10 channels (/root/reference/main.go:305-310) and never
-    * addresses it. Salting by pmod(hash(turn_idx), buckets) spreads a hot
-    * key over `saltBuckets` partitions; per-conv ordering is restored
-    * downstream by sortWithinPartitions or a window over (conv_id,
-    * turn_idx), both of which only need co-location per (conv_id, salt).
-    */
-  def saltedRepartition(df: DataFrame, numPartitions: Int,
-                        saltBuckets: Int): DataFrame =
-    df.repartition(numPartitions, col("conv_id"),
-      pmod(hash(col("turn_idx")), lit(saltBuckets)))
 
   // ------------------------------------------------------ ordering / state
 

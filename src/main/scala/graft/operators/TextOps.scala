@@ -833,7 +833,7 @@ object TextOps {
     // (ladder candidates, ladder verify, the dedup anti-back) each pay
     // one cached-red scan instead of the pipeline paying a second
     // corpus-sized block-manager copy — memory-bandwidth cost that
-    // scales with data, not cores (measured on DocsScalingBench).
+    // scales with data, not cores.
     val decon = red.join(materialize(contaminatedIds(red, evalDocs)),
       Seq("doc_id"), "left_anti")
     val sp = splitDocs(mixDocs(dropNearDups(decon), mixPct))

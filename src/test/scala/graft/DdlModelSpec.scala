@@ -142,7 +142,9 @@ class DdlModelSpec extends SparkSuite {
   /** The model's DDL lines, in stream order, and its dead-letter count. */
   private def model(turns: Seq[GTurn]): (Seq[String], Long) = {
     val admitted = turns.flatMap(t => namespace(t).map(t -> _))
-    val schemas = admitted.map { case (_, (db, _)) =>
+    // a schema is declared by a turn that renders: a bad payload is
+    // dead-lettered and declares none
+    val schemas = admitted.collect { case (t, (db, _)) if t.fields.nonEmpty =>
       s"CREATE SCHEMA IF NOT EXISTS $db;" }.distinct
     val docs = admitted.collect { case (t, (db, tbl)) if t.op == "INS" && t.fields.nonEmpty =>
       Doc(t, db, tbl)

@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
 import org.apache.spark.sql.functions._
 import graft.operators.Pipeline
 import graft.sources.Transcripts
@@ -73,5 +74,18 @@ class EnrichSpec extends SparkSuite {
     assert(jobsRun(Pipeline.enrich(parsedValid(scan), toolDim)) == 0)
     assert(jobsRun(noop(parsedValid(scan))) == 1)
     assert(jobsRun(noop(Pipeline.enrich(parsedValid(scan), toolDim))) == 1)
+    // the enrich is a projection through the dim lookup: the executed plan
+    // of a routed frame holds no join and no broadcast of the dim
+    val routed = Pipeline.route(Pipeline.enrich(parsedValid(scan), toolDim))
+    routed.collect()
+    val plan = routed.queryExecution.executedPlan match {
+      case a: AdaptiveSparkPlanExec => a.finalPhysicalPlan.toString
+      case p => p.toString
+    }
+    assert(plan.contains("tool_dim_lookup"), plan)
+    Seq("BroadcastHashJoin", "BroadcastExchange", "SortMergeJoin",
+      "CartesianProduct", "BroadcastNestedLoopJoin").foreach { op =>
+      assert(!plan.contains(op), plan)
+    }
   }
 }

@@ -99,12 +99,4 @@ class JdbcSinkSpec extends SparkSuite {
       assert(rs.getInt(1) == 0)
     } finally conn.close()
   }
-
-  test("table-shaped append via Spark's JDBC writer") {
-    setupSchema()
-    import spark.implicits._
-    JdbcSink.append(
-      Seq(("j1", 7), ("j2", 8)).toDF("id", "k"), url, "app.student")
-    assert(queryK("j1").contains(7) && queryK("j2").contains(8))
-  }
 }

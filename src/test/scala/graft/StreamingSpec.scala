@@ -6,8 +6,7 @@ import graft.sources.Transcripts
 import graft.streaming.TranscriptStream
 
 /** Streaming variant: file-source micro-batches through the same operators,
-  * exactly-once foreachBatch sinks, watermarked windows, and custom
-  * per-conversation state.
+  * exactly-once foreachBatch sinks, and the stateful text-tier operators.
   */
 class StreamingSpec extends SparkSuite {
 
@@ -350,160 +349,5 @@ class StreamingSpec extends SparkSuite {
     assert(committed.count() == expected.count())
     assert(committed.select("conv_id", "turn_idx").distinct().count() ==
       committed.count())
-  }
-
-  test("watermarked windowed per-sink counts match batch windows") {
-    val base = tmp()
-    val in = s"$base/in"
-    batchTurns.write.mode("append").parquet(in)
-
-    val q = TranscriptStream.windowedSinkCounts(
-        TranscriptStream.readTurns(spark, in), toolDim)
-      .writeStream.format("memory").queryName("win_counts")
-      .outputMode("update")
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-
-    // normalize LTZ (stream file source) vs NTZ (batch derivation) window
-    // starts through CAST AS STRING in the UTC session
-    val got = spark.sql(
-        "SELECT CAST(win_start AS STRING) w, sink, n FROM win_counts")
-      .collect().map(r => (r.getString(0), r.getString(1)) -> r.getLong(2)).toMap
-    val want = Pipeline.route(Pipeline.enrich(parsedValid(batchTurns), toolDim))
-      .groupBy(window(col("ts"), "1 hour"), col("sink"))
-      .agg(count(lit(1)).as("n"))
-      .select(col("window.start").cast("string"), col("sink"), col("n"))
-      .collect().map(r => (r.getString(0), r.getString(1)) -> r.getLong(2)).toMap
-    assert(got == want)
-  }
-
-  test("event-time sessions close via timeout; late data beyond watermark is dropped") {
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    import graft.streaming.TranscriptStream.TurnEvent
-    import spark.implicits._
-    implicit val ctx: org.apache.spark.sql.SQLContext = spark.sqlContext
-
-    def t(s: String) = java.sql.Timestamp.valueOf(s)
-    val ms = MemoryStream[TurnEvent]
-    val q = graft.streaming.TranscriptStream
-      .eventTimeSessions(spark, ms.toDF())
-      .toDF()
-      .writeStream.format("memory").queryName("sessions")
-      .outputMode("append").start()
-
-    // batch 1: conv A gets 2 turns at 10:00/10:05
-    ms.addData(TurnEvent("A", 1, t("2024-01-01 10:00:00")),
-      TurnEvent("A", 2, t("2024-01-01 10:05:00")))
-    q.processAllAvailable()
-    // batch 2: conv B far later → watermark jumps past A's timeout (10:35)
-    ms.addData(TurnEvent("B", 1, t("2024-01-01 12:00:00")))
-    q.processAllAvailable()
-    // batch 3: drives timeout processing under the advanced watermark; the
-    // A-turn here is LATE (event time far behind watermark 11:50) and must
-    // NOT reopen a counted session row with wrong counts
-    ms.addData(TurnEvent("B", 2, t("2024-01-01 12:10:00")))
-    q.processAllAvailable()
-    q.stop()
-
-    val closed = spark.sql("SELECT conv_id, n_turns FROM sessions WHERE closed")
-      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-    assert(closed.get("A").contains(2L), s"closed=$closed")
-    assert(!closed.contains("B")) // B's session still open at stop
-  }
-
-  test("stream-stream join: tool status attaches within its validity interval") {
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    import spark.implicits._
-    implicit val ctx: org.apache.spark.sql.SQLContext = spark.sqlContext
-
-    def t(s: String) = java.sql.Timestamp.valueOf(s)
-    case class T(conv_id: String, turn_idx: Int, tool: String, ts: java.sql.Timestamp)
-    case class M(tool: String, status: String, mts: java.sql.Timestamp)
-    val turns = MemoryStream[(String, Int, String, java.sql.Timestamp)]
-    val status = MemoryStream[(String, String, java.sql.Timestamp)]
-    val joined = graft.streaming.TranscriptStream.streamStreamEnrich(
-      turns.toDF().toDF("conv_id", "turn_idx", "tool", "ts"),
-      status.toDF().toDF("tool", "status", "mts"))
-    val q = joined.select("conv_id", "turn_idx", "status")
-      .writeStream.format("memory").queryName("ss_join")
-      .outputMode("append").start()
-
-    status.addData(("tool_0", "ok", t("2024-01-01 09:30:00")))
-    // in-interval turn (30min after status) and out-of-interval turn (2h)
-    turns.addData(("A", 1, "tool_0", t("2024-01-01 10:00:00")),
-      ("A", 2, "tool_0", t("2024-01-01 11:45:00")))
-    q.processAllAvailable()
-    q.stop()
-
-    val got = spark.sql("SELECT conv_id, turn_idx, status FROM ss_join")
-      .collect().map(r => (r.getString(0), r.getInt(1), r.getString(2))).toSet
-    assert(got == Set(("A", 1, "ok")), s"got=$got")
-  }
-
-  /** Replay-dedup scenario shared by the provider variants: an
-    * at-least-once upstream re-sends turn (A,1) (the reference's $gte
-    * resume overlap); exactly one copy must survive.
-    */
-  private def runReplayDedup(sinkName: String): Seq[(String, Int)] = {
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    import graft.streaming.TranscriptStream.TurnEvent
-    import spark.implicits._
-    implicit val ctx: org.apache.spark.sql.SQLContext = spark.sqlContext
-
-    def t(s: String) = java.sql.Timestamp.valueOf(s)
-    val ms = MemoryStream[TurnEvent]
-    val q = graft.streaming.TranscriptStream
-      .dedupedTurns(ms.toDF())
-      .writeStream.format("memory").queryName(sinkName)
-      .outputMode("append").start()
-    try {
-      ms.addData(TurnEvent("A", 1, t("2024-01-01 10:00:00")),
-        TurnEvent("A", 2, t("2024-01-01 10:01:00")))
-      q.processAllAvailable()
-      // replay batch: same turns again
-      ms.addData(TurnEvent("A", 1, t("2024-01-01 10:00:00")),
-        TurnEvent("A", 3, t("2024-01-01 10:02:00")))
-      q.processAllAvailable()
-    } finally q.stop()
-    spark.sql(s"SELECT conv_id, turn_idx FROM $sinkName").collect()
-      .map(r => (r.getString(0), r.getInt(1))).sorted.toSeq
-  }
-
-  test("replay dedup: at-least-once duplicates collapse within the watermark") {
-    assert(runReplayDedup("deduped") == Seq(("A", 1), ("A", 2), ("A", 3)))
-  }
-
-  test("replay dedup is identical under the RocksDB state store (at-scale conf)") {
-    // the 100 TB configuration: state on local disk, bounded memtable —
-    // StreamBench measures its cost; this proves it changes no results
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try
-      assert(runReplayDedup("deduped_rocks") == Seq(("A", 1), ("A", 2), ("A", 3)))
-    finally
-      spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-  }
-
-  test("mapGroupsWithState tracks per-conversation running state") {
-    val base = tmp()
-    val in = s"$base/in"
-    batchTurns.write.mode("append").parquet(in)
-
-    val q = TranscriptStream.sessionState(spark,
-        TranscriptStream.readTurns(spark, in))
-      .toDF()
-      .writeStream.format("memory").queryName("conv_state")
-      .outputMode("update")
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-
-    val got = spark.sql("SELECT conv_id, n_turns, last_turn FROM conv_state")
-      .collect().map(r => r.getString(0) -> (r.getLong(1), r.getInt(2))).toMap
-    val want = batchTurns.groupBy("conv_id")
-      .agg(count(lit(1)).as("n"), max(col("turn_idx")).as("m"))
-      .collect().map(r => r.getString(0) -> (r.getLong(1), r.getInt(2))).toMap
-    assert(got == want)
   }
 }

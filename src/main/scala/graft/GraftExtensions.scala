@@ -2,8 +2,7 @@ package graft
 
 import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
-import graft.functions._
+import org.apache.spark.sql.catalyst.expressions.ExpressionInfo
 
 /** SparkSessionExtensions hook — the injection path for clusters where the
   * session is built by infrastructure, not application code:
@@ -12,52 +11,17 @@ import graft.functions._
   *
   * registers every custom expression in the catalog at session build time
   * (the configuration-owned equivalent of `functions.registerAll`, which
-  * remains for sessions the library creates itself — GraftSession).
+  * remains for sessions the library creates itself — GraftSession). Both
+  * read the one list `functions.sqlFunctions`.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
 
   // ExpressionInfo's 3-arg constructor is (className, db, name) — passing
   // usage text there garbles DESCRIBE FUNCTION output; the 2-arg
   // (className, name) form keeps catalog metadata truthful
-  private def fn(name: String, clazz: Class[_],
-                 build: Seq[Expression] => Expression)
-      : (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) =
-    (FunctionIdentifier(name),
-      new ExpressionInfo(clazz.getCanonicalName, name),
-      build)
-
-  override def apply(ext: SparkSessionExtensions): Unit = {
-    ext.injectFunction(fn("parse_turn", classOf[ParseTurn],
-      exprs => ParseTurn(exprs.head)))
-    ext.injectFunction(fn("valid_turn", classOf[ValidTurn],
-      exprs => ValidTurn(exprs.head)))
-    ext.injectFunction(fn("json_kv_raw", classOf[JsonKvRaw],
-      exprs => JsonKvRaw(exprs.head)))
-    ext.injectFunction(fn("json_unquote", classOf[JsonUnquote],
-      exprs => JsonUnquote(exprs.head)))
-    ext.injectFunction(fn("json_arr_raw", classOf[JsonArrRaw],
-      exprs => JsonArrRaw(exprs.head)))
-    ext.injectFunction(fn("simhash64", classOf[SimHash64],
-      exprs => SimHash64(exprs.head)))
-    ext.injectFunction(fn("simhash_poly", classOf[SimHashPoly],
-      exprs => SimHashPoly(exprs.head)))
-    ext.injectFunction(fn("rolling_hash", classOf[RollingHash],
-      exprs => RollingHash(exprs.head)))
-    ext.injectFunction(fn("poly_hash31", classOf[PolyHash31],
-      exprs => PolyHash31(exprs.head)))
-    ext.injectFunction(fn("shingles3", classOf[Shingles3],
-      exprs => Shingles3(exprs.head)))
-    ext.injectFunction(fn("dot_long", classOf[DotLong],
-      exprs => DotLong(exprs(0), exprs(1))))
-    ext.injectFunction(fn("sign_projections", classOf[SignProjections],
-      exprs => SignProjections(exprs(0),
-        litNum(exprs(1)).toInt, litNum(exprs(2)))))
-    ext.injectFunction(fn("cdc_boundaries", classOf[CdcBoundaries],
-      exprs => CdcBoundaries(exprs(0),
-        litNum(exprs(1)).toInt, litNum(exprs(2)))))
-  }
-
-  // literal-argument handling is shared with the registry path:
-  // graft.functions.litNum (one definition, one behavior)
-  private def litNum(e: Expression): Long = graft.functions.litNum(e)
+  override def apply(ext: SparkSessionExtensions): Unit =
+    graft.functions.sqlFunctions.foreach { case (name, clazz, build) =>
+      ext.injectFunction((FunctionIdentifier(name),
+        new ExpressionInfo(clazz.getCanonicalName, name), build))
+    }
 }

@@ -26,9 +26,6 @@ object SparkEntry {
   private val BpeModelDir =
     sys.env.getOrElse("SPARK_GRAFT_BPE_MODEL_DIR", "target/bpe_model")
 
-  private val DedupIndexDir =
-    sys.env.getOrElse("SPARK_GRAFT_DEDUP_INDEX_DIR", "target/dedup_index")
-
   /** Parsed+filtered transcript turns — the pipeline front half. text is
     * dropped so query outputs keep the oracle-matched column set.
     */
@@ -395,90 +392,18 @@ object SparkEntry {
         .filter(col("n") > 0)
     }),
     // ------------------------------ training-data ops (documents/embeddings)
-    "d1_dedup_exact" -> ((s, dir) =>
-      operators.TextOps.exactDedup(t(s, dir, "documents"))),
     "d2_dedup_minhash" -> ((s, dir) =>
       operators.TextOps.minhashCandidates(t(s, dir, "documents"))),
-    "d3_dedup_simhash" -> ((s, dir) =>
-      operators.TextOps.simhashPairs(t(s, dir, "documents"))),
     "d4_ngram_jaccard" -> ((s, dir) =>
       operators.TextOps.ngramJaccardPairs(t(s, dir, "documents"))),
     "d6_dedup_embedding" -> ((s, dir) =>
       operators.Similarity.embeddingNearDupPairs(t(s, dir, "embeddings"))),
     "d7_neardup_ladder" -> ((s, dir) =>
       operators.TextOps.nearDupLadder(t(s, dir, "documents"))),
-    // character-level verify rung: same banded candidates, bounded
-    // Levenshtein instead of shingle Jaccard — catches typo/OCR-noise
-    // boilerplate whose every overlapping 3-gram differs
-    "d16_editdist_pairs" -> ((s, dir) =>
-      operators.TextOps.editDistancePairs(t(s, dir, "documents"))),
-    // governance attribution: verified near-dup pair counts per
-    // unordered source pair — the exact-count sibling of d10's KMV
-    // containment estimates
-    "d17_source_dup_matrix" -> ((s, dir) =>
-      operators.TextOps.sourceDupMatrix(t(s, dir, "documents"))),
-    // typo-family clusters: the d11 components engine over d16's
-    // character-level verified relation
-    "d18_editdist_clusters" -> ((s, dir) =>
-      operators.TextOps.editDistClusters(t(s, dir, "documents"))),
-    // the THIRD blocking strategy (after LSH and SimHash bands):
-    // sorted-neighborhood — global rank with no global sort (t20's
-    // machinery), rank-adjacency window, bounded-Levenshtein verify
-    "d19_sorted_neighbors" -> ((s, dir) =>
-      operators.TextOps.sortedNeighborPairs(t(s, dir, "documents"))),
-    // sub-document boilerplate dedup: content-defined chunk boundaries
-    // (rolling-hash ≡ 0 mod divisor), cross-doc duplicated chunks —
-    // insertion-robust where fixed-size blocks are not
-    "d20_cdc_chunks" -> ((s, dir) =>
-      operators.TextOps.cdcDupChunks(t(s, dir, "documents"))),
-    // the gate a curation pass derives from d20: per-doc character mass
-    // in cross-doc duplicated chunks, keep iff boilerplate < 1/2
-    "d21_cdc_boilerplate" -> ((s, dir) =>
-      operators.TextOps.cdcBoilerplateGate(t(s, dir, "documents"))),
-    // transitive dup clusters: iterative hash-to-min connected components
-    // over the ladder's verified pairs — DuckDB checks the fixpoint with
-    // an independent recursive-CTE transitive closure
-    "d11_dup_clusters" -> ((s, dir) =>
-      operators.TextOps.dupClusters(t(s, dir, "documents"))),
-    // same clustering through the O(log n)-round star-contraction engine
-    // (diameter-proof: a chain-shaped dup graph converges where min-label
-    // propagation would hit its iteration guard); label contract is
-    // identical — component minimum — so the same recursive-CTE oracle
-    // checks both engines
-    "d13_dup_clusters_star" -> ((s, dir) =>
-      operators.TextOps.dupClusters(t(s, dir, "documents"),
-        components = operators.TextOps.starContractComponents(_, _))),
     // integer-exact BM25 top-k keyword retrieval (fixed query, the
     // curation-stack search primitive); TakeOrderedAndProject top-k
     "t16_bm25" -> ((s, dir) =>
       operators.TextOps.bm25TopK(t(s, dir, "documents"), Bm25Terms)),
-    // incremental (crawl-cadence) dedup: the doc_id%5==0 slice is the
-    // "new batch", the rest the existing corpus whose banded index it is
-    // verdicted against — per-batch cost O(batch + candidates), corpus
-    // never re-paired with itself
-    "d12_incremental_dedup" -> ((s, dir) => {
-      val d = t(s, dir, "documents")
-      operators.TextOps.incrementalDedup(
-        d.filter(col("doc_id") % 5 =!= 0), d.filter(col("doc_id") % 5 === 0))
-    }),
-    // d12 probing the PERSISTED band-index artifact (index once per
-    // crawl, probe every batch — the dedup STORE posture): first call
-    // builds + persists (doc_id, band, bucket), later calls (and runs)
-    // probe the parquet relation; verify point-reads corpus text for
-    // candidates only. Oracle = d12's verbatim (identical semantics)
-    "d22_incremental_indexed" -> ((s, dir) => {
-      val d = t(s, dir, "documents")
-      val corpus = d.filter(col("doc_id") % 5 =!= 0)
-      operators.TextOps.incrementalDedupIndexed(corpus,
-        operators.TextOps.dedupIndexFor(corpus, DedupIndexDir),
-        d.filter(col("doc_id") % 5 === 0))
-    }),
-    "d5_fingerprint" -> ((s, dir) =>
-      // the cross-engine fingerprint tier (poly_hash31 / simhash_poly);
-      // rolling_hash + simhash64 stay as the 61/64-bit production exprs
-      t(s, dir, "documents").select(col("doc_id"),
-        graft.functions.poly_hash31(col("text")).as("rhash"),
-        graft.functions.simhash_poly(split(col("text"), " ")).as("simhash"))),
     "t1_lang_id" -> ((s, dir) =>
       operators.TextOps.langId(t(s, dir, "documents"))),
     "t2_quality_counts" -> ((s, dir) =>
@@ -535,10 +460,6 @@ object SparkEntry {
     // longest-duplicated-substring
     "d15_dup_run" -> ((s, dir) =>
       operators.TextOps.dupRunLength(t(s, dir, "documents"))),
-    // cluster-aware split: t4's hash rule keyed on d11's dup-cluster
-    // label, so near-dup families never straddle train/val/test
-    "t24_cluster_split" -> ((s, dir) =>
-      operators.TextOps.clusterSplit(t(s, dir, "documents"))),
     // bigram LM quality (CCNet/KenLM posture): quantized conditional
     // nll under the corpus bigram model — bigrams shuffle as longs
     "t25_bigram_lm" -> ((s, dir) =>
@@ -1081,7 +1002,6 @@ object SparkEntry {
     "d14_fuzzy_decon" -> TextOracles.fuzzyDeconSql(),
     "t23_ngram_coverage" -> TextOracles.ngramCoverageSql(),
     "d15_dup_run" -> TextOracles.dupRunSql(),
-    "t24_cluster_split" -> TextOracles.clusterSplitSql(),
     "t25_bigram_lm" -> TextOracles.bigramLmSql(),
     "t31_perplexity_buckets" -> TextOracles.perplexityBucketsSql(),
     "t29_bigram_pruned" -> TextOracles.bigramLmSql(minCount = 3L),
@@ -1121,32 +1041,11 @@ object SparkEntry {
     "t7_source_filter" -> TextOracles.sourceGateSql(),
     "t8_rep_signal" -> TextOracles.repSignalSql,
     "d2_dedup_minhash" -> TextOracles.minhashCandidatesSql(),
-    "d3_dedup_simhash" -> TextOracles.simhashPairsSql(),
-    "d5_fingerprint" -> TextOracles.fingerprintSql,
     "d7_neardup_ladder" -> TextOracles.nearDupLadderSql(),
-    "d16_editdist_pairs" -> TextOracles.editDistancePairsSql(),
-    "d17_source_dup_matrix" -> TextOracles.sourceDupMatrixSql(),
-    "d18_editdist_clusters" -> TextOracles.editDistClustersSql(),
-    "d19_sorted_neighbors" -> TextOracles.sortedNeighborSql(),
-    "d20_cdc_chunks" -> TextOracles.cdcDupChunksSql(),
-    "d21_cdc_boilerplate" -> TextOracles.cdcBoilerplateGateSql(),
-    "d11_dup_clusters" -> TextOracles.dupClustersSql(),
-    // identical label contract (cluster_id = component min over the same
-    // verified pairs), so the same independent transitive-closure oracle
-    // cross-checks the star-contraction engine
-    "d13_dup_clusters_star" -> TextOracles.dupClustersSql(),
     "t16_bm25" -> TextOracles.bm25Sql(Bm25Terms),
-    "d12_incremental_dedup" -> TextOracles.incrementalDedupSql(),
-    // identical semantics through the persisted index — same oracle
-    "d22_incremental_indexed" -> TextOracles.incrementalDedupSql(),
     "e8_semdedup" -> SimOracles.semanticDedupSql(),
     "e31_hybrid_rrf" -> SimOracles.hybridRrfSql(Bm25Terms),
     "d8_embedding_ladder" -> SimOracles.embeddingLadderSql(),
-    "d1_dedup_exact" -> """
-      SELECT doc_id, sha256(text) AS fingerprint,
-        row_number() OVER (PARTITION BY sha256(text) ORDER BY doc_id) > 1
-          AS is_duplicate
-      FROM documents""",
     "d4_ngram_jaccard" -> """
       WITH sh AS (
         SELECT DISTINCT doc_id, lang, CAST(n_chars // 300 AS INT) AS lb,

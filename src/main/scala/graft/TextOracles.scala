@@ -2,11 +2,11 @@ package graft
 
 import graft.functions.TextHashes.{B31, MaxPolyLen, P31}
 
-/** DuckDB-dialect oracle SQL for the text-dedup queries (d2/d3/d5/d7),
-  * generated from the SAME constants as the Spark operators
-  * (graft.functions.TextHashes, graft.operators.TextOps): the polynomial
-  * hash, MinHash family, band Horner combine, SimHash votes and Jaccard
-  * threshold are mirrored digit-for-digit. The corpus is ASCII, so
+/** DuckDB-dialect oracle SQL for the text-tier queries, generated from
+  * the SAME constants as the Spark operators (graft.functions.TextHashes,
+  * graft.operators.TextOps): the polynomial hash, MinHash family, band
+  * Horner combine and Jaccard threshold are mirrored digit-for-digit.
+  * The corpus is ASCII, so
   * DuckDB's per-character ascii(substr(s,j,1)) equals the Spark
   * expression's per-byte loop.
   */
@@ -97,136 +97,6 @@ JOIN sizes s1 ON s1.doc_id = doc1
 JOIN sizes s2 ON s2.doc_id = doc2
 WHERE inter * 10 >= (s1.n_sh + s2.n_sh - inter) * 7"""
 
-  /** d19: sorted-neighborhood pairs — a plain global rank window over
-    * the same order-preserving prefix key (the oracle may sort
-    * globally; the Spark op must not), rank-adjacency pairing, bounded
-    * Levenshtein verify.
-    */
-  def sortedNeighborSql(window: Int = 4, maxDist: Int = 24): String = {
-    val key8 = (0 until 8).map(i =>
-      s"(CASE WHEN length(text) > $i THEN CAST(ascii(substr(text, ${i + 1}, 1)) AS BIGINT) ELSE 0 END * (1::BIGINT << ${8 * (7 - i)}))")
-      .mkString(" + ")
-    s"""WITH keyed AS (
-  SELECT doc_id, text, $key8 AS key8 FROM documents),
-ranked AS (
-  SELECT doc_id, text,
-    row_number() OVER (ORDER BY key8, doc_id) - 1 AS pos
-  FROM keyed),
-pairs AS (
-  SELECT a.doc_id AS doc1, b.doc_id AS doc2, a.text AS t1, b.text AS t2
-  FROM ranked a JOIN ranked b
-    ON b.pos > a.pos AND b.pos <= a.pos + $window)
-SELECT doc1, doc2, CAST(levenshtein(t1, t2) AS INT) AS lev
-FROM pairs WHERE levenshtein(t1, t2) <= $maxDist"""
-  }
-
-  /** d18: typo-family clusters — recursive-CTE transitive closure over
-    * the d16 edit-distance-verified pairs (same label contract as d11's
-    * oracle, different verify rung).
-    */
-  def editDistClustersSql(k: Int = 32, bands: Int = 8,
-                          minBandHits: Int = 2, maxDist: Int = 24): String =
-    s"""WITH RECURSIVE ${shingleCtes()} ${minhashCtes(k, bands)},
-cand AS (SELECT doc1, doc2 FROM voted WHERE band_hits >= $minBandHits),
-verified AS (
-  SELECT doc1, doc2 FROM cand
-  JOIN documents a ON a.doc_id = doc1
-  JOIN documents b ON b.doc_id = doc2
-  WHERE levenshtein(a.text, b.text) <= $maxDist),
-edges AS (
-  SELECT doc1 AS src, doc2 AS dst FROM verified
-  UNION
-  SELECT doc2 AS src, doc1 AS dst FROM verified),
-reach AS (
-  SELECT src AS id, dst AS r FROM edges
-  UNION
-  SELECT reach.id, e.dst FROM reach JOIN edges e ON reach.r = e.src),
-labels AS (
-  SELECT id, least(id, min(r)) AS cluster_id FROM reach GROUP BY id)
-SELECT d.doc_id, COALESCE(l.cluster_id, d.doc_id) AS cluster_id
-FROM documents d LEFT JOIN labels l ON l.id = d.doc_id"""
-
-  /** d17: cross-source dup attribution — the d7 ladder chain, pairs
-    * joined to their sources, counted per unordered source pair.
-    */
-  def sourceDupMatrixSql(k: Int = 32, bands: Int = 8,
-                         minBandHits: Int = 2): String =
-    s"""WITH ${shingleCtes()} ${minhashCtes(k, bands)},
-cand AS (SELECT doc1, doc2 FROM voted WHERE band_hits >= $minBandHits),
-sizes AS (SELECT doc_id, count(*) AS n_sh FROM sh GROUP BY doc_id),
-inter AS (
-  SELECT doc1, doc2, count(*) AS inter
-  FROM cand
-  JOIN sh s1 ON s1.doc_id = doc1
-  JOIN sh s2 ON s2.doc_id = doc2 AND s2.shingle = s1.shingle
-  GROUP BY doc1, doc2),
-verified AS (
-  SELECT doc1, doc2
-  FROM inter
-  JOIN sizes z1 ON z1.doc_id = doc1
-  JOIN sizes z2 ON z2.doc_id = doc2
-  WHERE inter * 10 >= (z1.n_sh + z2.n_sh - inter) * 7)
-SELECT least(a.source, b.source) AS source_a,
-  greatest(a.source, b.source) AS source_b,
-  count(*) AS dup_pairs
-FROM verified
-JOIN documents a ON a.doc_id = doc1
-JOIN documents b ON b.doc_id = doc2
-GROUP BY 1, 2"""
-
-  /** d16: edit-distance-verified near-dup pairs — same banded candidate
-    * CTEs as d7, verified by DuckDB's `levenshtein` (unit-cost
-    * Wagner-Fischer, agrees integer-exactly with Spark's; the Spark side
-    * merely short-circuits past `maxDist`, which the `<=` filter makes
-    * observationally identical).
-    */
-  def editDistancePairsSql(k: Int = 32, bands: Int = 8,
-                           minBandHits: Int = 2, maxDist: Int = 24): String =
-    s"""WITH ${shingleCtes()} ${minhashCtes(k, bands)},
-cand AS (SELECT doc1, doc2 FROM voted WHERE band_hits >= $minBandHits)
-SELECT doc1, doc2, CAST(levenshtein(a.text, b.text) AS INT) AS lev
-FROM cand
-JOIN documents a ON a.doc_id = doc1
-JOIN documents b ON b.doc_id = doc2
-WHERE levenshtein(a.text, b.text) <= $maxDist"""
-
-  /** d12: incremental dedup — mirror of TextOps.incrementalDedup over a
-    * deterministic doc_id-modulus corpus/batch split: batch docs pair
-    * with ANY colliding corpus doc (no id order) and with LOWER-id batch
-    * docs, ≥`minBandHits` band votes, exact-Jaccard verified, dup_of =
-    * min verified partner. Reuses the shared shingle/minhash CTEs (the
-    * `voted` CTE they define goes unused here — DuckDB only evaluates
-    * referenced CTEs).
-    */
-  def incrementalDedupSql(k: Int = 32, bands: Int = 8,
-                          minBandHits: Int = 2, batchMod: Int = 5): String =
-    s"""WITH ${shingleCtes()} ${minhashCtes(k, bands)},
-ivote AS (
-  SELECT n.doc_id AS new_id, o.doc_id AS other_id, count(*) AS band_hits
-  FROM banded n JOIN banded o
-    ON n.band = o.band AND n.bucket = o.bucket
-   AND n.doc_id % $batchMod = 0
-   AND (o.doc_id % $batchMod <> 0 OR o.doc_id < n.doc_id)
-  GROUP BY n.doc_id, o.doc_id),
-icand AS (SELECT new_id, other_id FROM ivote WHERE band_hits >= $minBandHits),
-isizes AS (SELECT doc_id, count(*) AS n_sh FROM sh GROUP BY doc_id),
-iinter AS (
-  SELECT new_id, other_id, count(*) AS inter
-  FROM icand
-  JOIN sh s1 ON s1.doc_id = new_id
-  JOIN sh s2 ON s2.doc_id = other_id AND s2.shingle = s1.shingle
-  GROUP BY new_id, other_id),
-idups AS (
-  SELECT i.new_id, min(i.other_id) AS dup_of
-  FROM iinter i
-  JOIN isizes s1 ON s1.doc_id = i.new_id
-  JOIN isizes s2 ON s2.doc_id = i.other_id
-  WHERE i.inter * 10 >= (s1.n_sh + s2.n_sh - i.inter) * 7
-  GROUP BY i.new_id)
-SELECT d.doc_id, dup_of IS NOT NULL AS is_dup, dup_of
-FROM documents d LEFT JOIN idups ON idups.new_id = d.doc_id
-WHERE d.doc_id % $batchMod = 0"""
-
   /** t16: integer-exact BM25 top-k — mirror of TextOps.bm25TopK (same
     * rational parameters k1 = 6/5, b = 3/4, same scaled integer kernel,
     * same t14-style log₂ idf quantization; `//` mirrors Spark's `div`).
@@ -263,100 +133,6 @@ GROUP BY tf.doc_id
 ORDER BY score_x1000 DESC, doc_id
 LIMIT $k"""
   }
-
-  /** d11: transitive duplicate clusters — the ladder's verified pairs
-    * (same CTE chain as [[nearDupLadderSql]]) closed transitively by a
-    * RECURSIVE CTE; cluster_id = min doc_id reachable, singletons label
-    * themselves. The independent-algorithm check on the Spark side's
-    * iterative hash-to-min propagation: DuckDB materializes the full
-    * reachability set, Spark converges labels — identical fixpoint.
-    */
-  /** The d11 transitive-closure CTE chain through `labels` (id,
-    * cluster_id) — shared by dupClustersSql and clusterSplitSql (t24).
-    * Caller must open with WITH RECURSIVE.
-    */
-  private def clusterCtes(k: Int, bands: Int, minBandHits: Int): String =
-    s"""${shingleCtes()} ${minhashCtes(k, bands)},
-cand AS (SELECT doc1, doc2 FROM voted WHERE band_hits >= $minBandHits),
-sizes AS (SELECT doc_id, count(*) AS n_sh FROM sh GROUP BY doc_id),
-inter AS (
-  SELECT doc1, doc2, count(*) AS inter
-  FROM cand
-  JOIN sh s1 ON s1.doc_id = doc1
-  JOIN sh s2 ON s2.doc_id = doc2 AND s2.shingle = s1.shingle
-  GROUP BY doc1, doc2),
-verified AS (
-  SELECT doc1, doc2 FROM inter
-  JOIN sizes s1 ON s1.doc_id = doc1
-  JOIN sizes s2 ON s2.doc_id = doc2
-  WHERE inter * 10 >= (s1.n_sh + s2.n_sh - inter) * 7),
-edges AS (
-  SELECT doc1 AS src, doc2 AS dst FROM verified
-  UNION
-  SELECT doc2 AS src, doc1 AS dst FROM verified),
-reach AS (
-  SELECT src AS id, dst AS r FROM edges
-  UNION
-  SELECT reach.id, e.dst FROM reach JOIN edges e ON reach.r = e.src),
-labels AS (
-  SELECT id, least(id, min(r)) AS cluster_id FROM reach GROUP BY id)"""
-
-  def dupClustersSql(k: Int = 32, bands: Int = 8,
-                     minBandHits: Int = 2): String =
-    s"""WITH RECURSIVE ${clusterCtes(k, bands, minBandHits)}
-SELECT d.doc_id, COALESCE(l.cluster_id, d.doc_id) AS cluster_id
-FROM documents d LEFT JOIN labels l ON l.id = d.doc_id"""
-
-  /** t24: cluster-aware split — t4's hash rule keyed on the d11 cluster
-    * label, so near-dup families never straddle train/val/test.
-    */
-  def clusterSplitSql(k: Int = 32, bands: Int = 8,
-                      minBandHits: Int = 2): String =
-    s"""WITH RECURSIVE ${clusterCtes(k, bands, minBandHits)},
-clab AS (
-  SELECT d.doc_id, COALESCE(l.cluster_id, d.doc_id) AS cluster_id
-  FROM documents d LEFT JOIN labels l ON l.id = d.doc_id),
-cbk AS (
-  SELECT doc_id, cluster_id,
-    CAST(${ph("'split|' || CAST(cluster_id AS STRING)")} % 10 AS INT)
-      AS bucket
-  FROM clab)
-SELECT doc_id, cluster_id, bucket,
-  CASE WHEN bucket < 8 THEN 'train' WHEN bucket < 9 THEN 'val'
-       ELSE 'test' END AS split
-FROM cbk"""
-
-  /** The 62-bit SimHash fingerprint of `documents.text` (token-level
-    * PolyHash31 + affine-image bit votes) — mirror of SimHashPoly.
-    */
-  private val simhashFpCtes: String = s""",
-hs AS (SELECT doc_id, list_transform(t, s -> ${ph("s")}) AS hs FROM toks),
-fp AS (
-  SELECT doc_id,
-    CAST(list_sum(list_transform(range(0, 31), b ->
-      CASE WHEN list_sum(list_transform(hs, h ->
-             CASE WHEN (h >> b) & 1 = 1 THEN 1 ELSE -1 END)) > 0
-      THEN (CAST(1 AS BIGINT) << b) ELSE 0 END))
-    + list_sum(list_transform(range(0, 31), b ->
-      CASE WHEN list_sum(list_transform(hs, h ->
-             CASE WHEN (((h * 1000003 + 12345) % $P31) >> b) & 1 = 1
-                  THEN 1 ELSE -1 END)) > 0
-      THEN (CAST(1 AS BIGINT) << (b + 31)) ELSE 0 END))
-    AS BIGINT) AS fp
-  FROM hs)"""
-
-  /** d3: SimHash near-dup pairs via 4×15-bit bands + exact Hamming. */
-  def simhashPairsSql(maxHamming: Int = 8): String =
-    s"""WITH toks AS (SELECT doc_id, string_split(text, ' ') AS t FROM documents)
-$simhashFpCtes,
-banded AS (
-  SELECT doc_id, fp, band, (fp >> (band * 15)) & 32767 AS key
-  FROM fp CROSS JOIN (SELECT unnest(range(0, 4)) AS band) bs)
-SELECT DISTINCT a.doc_id AS doc1, b.doc_id AS doc2,
-  CAST(bit_count(xor(a.fp, b.fp)) AS INT) AS hamming
-FROM banded a JOIN banded b
-  ON a.band = b.band AND a.key = b.key AND a.doc_id < b.doc_id
-WHERE bit_count(xor(a.fp, b.fp)) <= $maxHamming"""
 
   /** t4: deterministic hash-based train/val/test split (8/1/1). */
   def splitSql: String =
@@ -1403,72 +1179,4 @@ SELECT doc_id, n_lines, n_kept,
     - length(regexp_replace(kept_text, '[.!?]', '', 'g')) >= 3
     AND NOT has_brace AND NOT has_lorem) AS pass
 FROM m"""
-
-  /** d20: content-defined chunking dedup — the same boundary rule as
-    * TextOps.cdcDupChunks (rolling window-char PolyHash31 ≡ 0 mod divisor
-    * at 1-based end positions window..L-1; the document tail always
-    * closes the last chunk), chunks identified by sha256, cross-doc
-    * duplicated chunks with doc/occurrence counts.
-    */
-  def cdcDupChunksSql(window: Int = 8, divisor: Long = 64L): String =
-    s"""WITH ${cdcChunkCtes(window, divisor)}
-SELECT chunk_hash,
-  CAST(min(clen) AS BIGINT) AS chunk_len,
-  count(DISTINCT doc_id) AS n_docs,
-  count(*) AS n_occ
-FROM chrows
-GROUP BY 1
-HAVING count(DISTINCT doc_id) >= 2"""
-
-  /** The CDC chunk relation CTEs shared by d20/d21 — mirror of
-    * TextOps.cdcChunkRows.
-    */
-  private def cdcChunkCtes(window: Int, divisor: Long): String =
-    s"""bounds AS (
-  SELECT doc_id, text,
-    list_append(
-      list_filter(range($window, length(text)),
-        i -> ${ph(s"substr(text, i - ${window - 1}, $window)")} % $divisor = 0),
-      length(text)) AS ends
-  FROM documents),
-chunks AS (
-  SELECT doc_id,
-    unnest(list_transform(range(1, len(ends) + 1),
-      j -> substr(text,
-        CAST(CASE WHEN j = 1 THEN 1 ELSE ends[j - 1] + 1 END AS INT),
-        CAST(ends[j] - (CASE WHEN j = 1 THEN 1 ELSE ends[j - 1] + 1 END) + 1
-          AS INT)))) AS chunk
-  FROM bounds),
-chrows AS (
-  SELECT doc_id, sha256(chunk) AS chunk_hash,
-    CAST(length(chunk) AS BIGINT) AS clen
-  FROM chunks)"""
-
-  /** d21: boilerplate-fraction gate — per doc, character mass in chunks
-    * shared with ≥ 2 distinct docs, keep iff dup_chars·den < n_chars·num.
-    */
-  def cdcBoilerplateGateSql(window: Int = 8, divisor: Long = 64L,
-                            num: Int = 1, den: Int = 2): String =
-    s"""WITH ${cdcChunkCtes(window, divisor)},
-dup AS (
-  SELECT chunk_hash FROM chrows
-  GROUP BY chunk_hash HAVING count(DISTINCT doc_id) >= 2),
-per AS (
-  SELECT doc_id, CAST(sum(clen) AS BIGINT) AS dc
-  FROM chrows JOIN dup USING (chunk_hash)
-  GROUP BY doc_id)
-SELECT d.doc_id,
-  CAST(length(d.text) AS BIGINT) AS n_chars,
-  COALESCE(dc, 0) AS dup_chars,
-  (COALESCE(dc, 0) * $den < length(d.text) * $num) AS keep
-FROM documents d LEFT JOIN per USING (doc_id)"""
-
-  /** d5: per-doc content fingerprints (order-sensitive polynomial + 62-bit
-    * SimHash).
-    */
-  def fingerprintSql: String =
-    s"""WITH toks AS (SELECT doc_id, string_split(text, ' ') AS t FROM documents)
-$simhashFpCtes
-SELECT d.doc_id, ${ph("d.text")} AS rhash, fp.fp AS simhash
-FROM documents d JOIN fp ON fp.doc_id = d.doc_id"""
 }

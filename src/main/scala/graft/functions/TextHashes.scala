@@ -7,68 +7,17 @@ import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
-/** Custom codegen'd hash expressions for document fingerprinting — the
-  * per-row hot path of dedup at corpus scale. Both stay inside whole-stage
-  * codegen via static calls; no boxing, no regex, no UDF serialization.
+/** Custom codegen'd text kernels: the cross-engine polynomial hash and
+  * the loops built on it (bigram hash pairs, trained-BPE token counts).
+  * Each stays inside whole-stage codegen via static calls; no boxing, no
+  * regex, no UDF serialization.
   */
-
-/** 64-bit SimHash over a token array: per-token FNV-1a 64 votes each bit
-  * up/down; the sign pattern is the fingerprint. Near-duplicate docs land
-  * within small Hamming distance — banding the 64 bits gives an LSH for
-  * near-dedup that needs only a groupBy, no pairwise compare.
-  */
-case class SimHash64(child: Expression) extends UnaryExpression {
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(_: StringType, _) => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"simhash64 expects array<string>, got ${other.catalogString}")
-  }
-
-  override def dataType: DataType = LongType
-
-  override def nullSafeEval(input: Any): Any =
-    TextHashes.simhash64(input.asInstanceOf[ArrayData])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.TextHashes.simhash64($c)")
-
-  override def prettyName: String = "simhash64"
-
-  override protected def withNewChildInternal(newChild: Expression): SimHash64 =
-    copy(child = newChild)
-}
-
-/** Karp-Rabin rolling polynomial fingerprint of a string (base 256,
-  * mod 2^61-1) — an order-sensitive content fingerprint (vs order-free
-  * SimHash), cheap to maintain incrementally over sliding windows.
-  */
-case class RollingHash(child: Expression) extends UnaryExpression {
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType.isInstanceOf[StringType]) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"rolling_hash expects string, got ${child.dataType.catalogString}")
-
-  override def dataType: DataType = LongType
-
-  override def nullSafeEval(input: Any): Any =
-    TextHashes.rollingHash(input.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.TextHashes.rollingHash($c)")
-
-  override def prettyName: String = "rolling_hash"
-
-  override protected def withNewChildInternal(newChild: Expression): RollingHash =
-    copy(child = newChild)
-}
 
 /** Polynomial string hash mod 2^31-1 over the first 64 bytes — the
   * CROSS-ENGINE fingerprint tier: unlike xxhash64/FNV (64-bit overflow
   * wraparound, engine-specific), this is plain int64 arithmetic that DuckDB
   * reproduces exactly (ascii(substr(s,j,1)) == byte j for ASCII corpora;
-  * TextOracles mirrors it), so MinHash/SimHash queries built on it get full
+  * TextOracles mirrors it), so the MinHash queries built on it get full
   * rows+schema+hash oracles.
   */
 case class PolyHash31(child: Expression) extends UnaryExpression {
@@ -89,69 +38,6 @@ case class PolyHash31(child: Expression) extends UnaryExpression {
   override def prettyName: String = "poly_hash31"
 
   override protected def withNewChildInternal(newChild: Expression): PolyHash31 =
-    copy(child = newChild)
-}
-
-/** 62-bit SimHash over a token array — the cross-engine (oracle-checkable)
-  * variant of [[SimHash64]]: per-token bit sources are PolyHash31 (low 31
-  * bits) and its affine image (h·1000003+12345 mod 2³¹-1) (high 31 bits),
-  * both plain int64 arithmetic DuckDB reproduces exactly.
-  */
-case class SimHashPoly(child: Expression) extends UnaryExpression {
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(_: StringType, _) => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"simhash_poly expects array<string>, got ${other.catalogString}")
-  }
-
-  override def dataType: DataType = LongType
-
-  override def nullSafeEval(input: Any): Any =
-    TextHashes.simHashPoly31(input.asInstanceOf[ArrayData])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.TextHashes.simHashPoly31($c)")
-
-  override def prettyName: String = "simhash_poly"
-
-  override protected def withNewChildInternal(newChild: Expression): SimHashPoly =
-    copy(child = newChild)
-}
-
-/** Content-defined chunk boundaries (d20/d21): 1-based end positions
-  * `window..len-1` whose trailing `window`-byte PolyHash31 ≡ 0 (mod
-  * `divisor`), computed with a true O(1)-per-byte ROLLING update of the
-  * same polynomial (remove b·131^(w−1), shift, add) — value-identical to
-  * hashing each window from scratch but O(L) instead of O(L·window) and
-  * allocation-free (the HOF substr form was measured 42 s → ~6 s on the
-  * sf0.1 d20 query). The final position is NOT emitted (it always
-  * terminates the last chunk; callers append it).
-  */
-case class CdcBoundaries(child: Expression, window: Int, divisor: Long)
-    extends UnaryExpression {
-
-  require(window >= 1 && window <= TextHashes.MaxPolyLen,
-    s"cdc window must be in [1, ${TextHashes.MaxPolyLen}]")
-  require(divisor >= 1, "cdc divisor must be positive")
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType.isInstanceOf[StringType]) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"cdc_boundaries expects string, got ${child.dataType.catalogString}")
-
-  override def dataType: DataType = ArrayType(IntegerType, containsNull = false)
-
-  override def nullSafeEval(input: Any): Any =
-    TextHashes.cdcBoundaries(input.asInstanceOf[UTF8String], window, divisor)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev,
-      c => s"graft.functions.TextHashes.cdcBoundaries($c, $window, ${divisor}L)")
-
-  override def prettyName: String = "cdc_boundaries"
-
-  override protected def withNewChildInternal(newChild: Expression): CdcBoundaries =
     copy(child = newChild)
 }
 
@@ -248,47 +134,12 @@ case class BpeTokenCount(child: Expression, merges: Seq[(String, String)])
 }
 
 object TextHashes {
-  private final val FNV_OFFSET = 0xcbf29ce484222325L
-  private final val FNV_PRIME = 0x100000001b3L
-  /** 2^61 - 1 (Mersenne prime) */
-  private final val MOD = (1L << 61) - 1
-
   /** 2^31 - 1 (Mersenne prime) — the cross-engine modulus. */
   final val P31 = 2147483647L
   /** polynomial base */
   final val B31 = 131L
   /** hash window: first 64 bytes (ASCII ⇒ 64 chars, mirrored in SQL) */
   final val MaxPolyLen = 64
-
-  /** Rolling-PolyHash31 chunk boundaries — see [[CdcBoundaries]]. Byte
-    * semantics like [[polyHash31]] (identical to character semantics on
-    * the documented ASCII corpus).
-    */
-  def cdcBoundaries(s: UTF8String, window: Int, divisor: Long): ArrayData = {
-    val bytes = s.getBytes
-    val n = bytes.length
-    if (n < window + 1)
-      return org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
-        .fromPrimitiveArray(Array.emptyIntArray)
-    // B31^(window-1) mod P31 — the removal weight of the oldest byte
-    var powW1 = 1L
-    var k = 0
-    while (k < window - 1) { powW1 = (powW1 * B31) % P31; k += 1 }
-    var h = 0L
-    var i = 0
-    while (i < window) { h = (h * B31 + (bytes(i) & 0xffL)) % P31; i += 1 }
-    val out = new scala.collection.mutable.ArrayBuilder.ofInt
-    var end = window // 1-based end position of the current window
-    while (end < n) { // the final position (end == n) never emits
-      if (h % divisor == 0L) out += end
-      // roll: drop bytes(end - window), append bytes(end)
-      h = (h + P31 - ((bytes(end - window) & 0xffL) * powW1) % P31) % P31
-      h = (h * B31 + (bytes(end) & 0xffL)) % P31
-      end += 1
-    }
-    org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
-      .fromPrimitiveArray(out.result())
-  }
 
   def polyHash31(s: UTF8String): Long = {
     val bytes = s.getBytes
@@ -419,84 +270,5 @@ object TextHashes {
       i += 1
     }
     new org.apache.spark.sql.catalyst.util.GenericArrayData(out)
-  }
-
-  def simHashPoly31(tokens: ArrayData): Long = {
-    val n = tokens.numElements()
-    val votes = new Array[Int](62)
-    var i = 0
-    while (i < n) {
-      if (!tokens.isNullAt(i)) {
-        val h1 = polyHash31(tokens.getUTF8String(i))
-        val h2 = (h1 * 1000003L + 12345L) % P31
-        var b = 0
-        while (b < 31) {
-          if (((h1 >>> b) & 1L) == 1L) votes(b) += 1 else votes(b) -= 1
-          if (((h2 >>> b) & 1L) == 1L) votes(b + 31) += 1 else votes(b + 31) -= 1
-          b += 1
-        }
-      }
-      i += 1
-    }
-    var out = 0L
-    var b = 0
-    while (b < 62) {
-      if (votes(b) > 0) out |= (1L << b)
-      b += 1
-    }
-    out
-  }
-
-  def fnv64(s: UTF8String): Long = {
-    val bytes = s.getBytes
-    var h = FNV_OFFSET
-    var i = 0
-    while (i < bytes.length) {
-      h ^= (bytes(i) & 0xffL)
-      h *= FNV_PRIME
-      i += 1
-    }
-    h
-  }
-
-  def simhash64(tokens: ArrayData): Long = {
-    val n = tokens.numElements()
-    val votes = new Array[Int](64)
-    var i = 0
-    while (i < n) {
-      if (!tokens.isNullAt(i)) {
-        val h = fnv64(tokens.getUTF8String(i))
-        var b = 0
-        while (b < 64) {
-          if (((h >>> b) & 1L) == 1L) votes(b) += 1 else votes(b) -= 1
-          b += 1
-        }
-      }
-      i += 1
-    }
-    var out = 0L
-    var b = 0
-    while (b < 64) {
-      if (votes(b) > 0) out |= (1L << b)
-      b += 1
-    }
-    out
-  }
-
-  /** Hamming distance between two 64-bit fingerprints. */
-  def hamming(a: Long, b: Long): Int = java.lang.Long.bitCount(a ^ b)
-
-  def rollingHash(s: UTF8String): Long = {
-    val bytes = s.getBytes
-    var h = 0L
-    var i = 0
-    while (i < bytes.length) {
-      // h = (h * 256 + byte) mod (2^61-1), using mersenne fold
-      h = (h << 8) + (bytes(i) & 0xffL)
-      h = (h & MOD) + (h >>> 61)
-      if (h >= MOD) h -= MOD
-      i += 1
-    }
-    h
   }
 }

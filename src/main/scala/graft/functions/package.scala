@@ -16,12 +16,6 @@ package object functions {
   /** Fused grok parse of a transcript turn: struct(op, db, tbl, payload). */
   def parse_turn(c: Column): Column = column(ParseTurn(expression(c)))
 
-  /** 64-bit SimHash document fingerprint over a token array. */
-  def simhash64(c: Column): Column = column(SimHash64(expression(c)))
-
-  /** Karp-Rabin rolling polynomial fingerprint of a string. */
-  def rolling_hash(c: Column): Column = column(RollingHash(expression(c)))
-
   /** Distinct word 3-gram shingles (codegen'd loop — the HOF form was ~17×
     * slower, see Shingles3).
     */
@@ -32,15 +26,6 @@ package object functions {
 
   /** Cross-engine polynomial fingerprint (mod 2^31-1, first 64 bytes). */
   def poly_hash31(c: Column): Column = column(PolyHash31(expression(c)))
-
-  /** Cross-engine 31-bit SimHash over a token array. */
-  def simhash_poly(c: Column): Column = column(SimHashPoly(expression(c)))
-
-  /** Content-defined chunk boundaries via rolling PolyHash31 (codegen'd
-    * O(L) loop — value-identical to hashing each window from scratch).
-    */
-  def cdc_boundaries(c: Column, window: Int, divisor: Long): Column =
-    column(CdcBoundaries(expression(c), window, divisor))
 
   /** Integer dot product of two array<bigint> (codegen'd loop). */
   def dot_long(a: Column, b: Column): Column =
@@ -91,49 +76,40 @@ package object functions {
   /** Split a raw JSON array token into raw element tokens. */
   def json_arr_raw(c: Column): Column = column(JsonArrRaw(expression(c)))
 
-  /** Register the library's expressions in the session's function registry
-    * so plain SQL can call them: parse_turn(text), simhash64(arr),
-    * rolling_hash(text).
+  /** Every SQL-callable expression: (name, expression class, builder).
+    * Both registration paths read this one list — [[registerAll]] for
+    * sessions the library builds, [[graft.GraftExtensions]] for sessions
+    * configured with `spark.sql.extensions` — so they cannot drift apart.
+    */
+  private[graft] val sqlFunctions
+      : Seq[(String, Class[_ <: Expression], Seq[Expression] => Expression)] =
+    Seq(
+      ("parse_turn", classOf[ParseTurn], e => ParseTurn(e.head)),
+      ("valid_turn", classOf[ValidTurn], e => ValidTurn(e.head)),
+      ("json_kv_raw", classOf[JsonKvRaw], e => JsonKvRaw(e.head)),
+      ("json_unquote", classOf[JsonUnquote], e => JsonUnquote(e.head)),
+      ("json_arr_raw", classOf[JsonArrRaw], e => JsonArrRaw(e.head)),
+      ("poly_hash31", classOf[PolyHash31], e => PolyHash31(e.head)),
+      ("shingles3", classOf[Shingles3], e => Shingles3(e.head)),
+      ("dot_long", classOf[DotLong], e => DotLong(e(0), e(1))),
+      ("sign_projections", classOf[SignProjections],
+        e => SignProjections(e(0), litNum(e(1)).toInt, litNum(e(2)))))
+
+  /** Register [[sqlFunctions]] in the session's function registry so plain
+    * SQL can call them, e.g. parse_turn(text), poly_hash31(text).
     */
   def registerAll(spark: org.apache.spark.sql.SparkSession): Unit = {
     val reg = spark.sessionState.functionRegistry
-    reg.createOrReplaceTempFunction("parse_turn",
-      exprs => ParseTurn(exprs.head), "scala_udf")
-    reg.createOrReplaceTempFunction("simhash64",
-      exprs => SimHash64(exprs.head), "scala_udf")
-    reg.createOrReplaceTempFunction("rolling_hash",
-      exprs => RollingHash(exprs.head), "scala_udf")
-    reg.createOrReplaceTempFunction("valid_turn",
-      exprs => ValidTurn(exprs.head), "scala_udf")
-    reg.createOrReplaceTempFunction("json_kv_raw",
-      exprs => JsonKvRaw(exprs.head), "scala_udf")
-    reg.createOrReplaceTempFunction("json_unquote",
-      exprs => JsonUnquote(exprs.head), "scala_udf")
-    reg.createOrReplaceTempFunction("json_arr_raw",
-      exprs => JsonArrRaw(exprs.head), "scala_udf")
-    reg.createOrReplaceTempFunction("poly_hash31",
-      exprs => PolyHash31(exprs.head), "scala_udf")
-    reg.createOrReplaceTempFunction("simhash_poly",
-      exprs => SimHashPoly(exprs.head), "scala_udf")
-    reg.createOrReplaceTempFunction("shingles3",
-      exprs => Shingles3(exprs.head), "scala_udf")
-    reg.createOrReplaceTempFunction("dot_long",
-      exprs => DotLong(exprs(0), exprs(1)), "scala_udf")
-    reg.createOrReplaceTempFunction("sign_projections",
-      exprs => SignProjections(exprs(0), litNum(exprs(1)).toInt,
-        litNum(exprs(2))), "scala_udf")
-    reg.createOrReplaceTempFunction("cdc_boundaries",
-      exprs => CdcBoundaries(exprs(0), litNum(exprs(1)).toInt,
-        litNum(exprs(2))), "scala_udf")
+    sqlFunctions.foreach { case (name, _, build) =>
+      reg.createOrReplaceTempFunction(name, build, "scala_udf")
+    }
   }
 
   /** Foldable numeric argument of a SQL call (n/salt of sign_projections).
     * Foldability is checked BEFORE eval: eval(null) on a column reference
     * throws an opaque unbound-attribute error instead of this message.
-    * Shared by both registration paths (this registry helper and
-    * GraftExtensions) — one definition, one behavior.
     */
-  private[graft] def litNum(e: Expression): Long = {
+  private def litNum(e: Expression): Long = {
     if (!e.foldable) throw new IllegalArgumentException(
       s"expected a numeric literal argument, got non-literal $e")
     e.eval(null) match {

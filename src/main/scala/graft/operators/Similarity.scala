@@ -263,7 +263,7 @@ object Similarity {
     * quantizer ([[kmeansCentroids]]), then prune within-cluster semantic
     * duplicates — pairs whose quantized cosine ≥ `threshold` — keeping the
     * smallest vec_id of each duplicate pair. Per paper and per this tier's
-    * keep-first convention (d1/d7/t15), a vector is a DUP if ANY
+    * keep-first convention (d7/t15), a vector is a DUP if ANY
     * smaller-id vector in its cell clears the threshold, whether or not
     * that vector is itself a dup — one aggregate, no iterative chasing;
     * transitive chains collapse toward the smallest id of each clique.

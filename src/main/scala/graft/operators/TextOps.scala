@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.functions.TextHashes.P31
-import graft.functions.{poly_hash31, simhash_poly}
+import graft.functions.poly_hash31
 
 /** Text-analysis + deduplication operators over the `documents` table —
   * the training-data-pipeline surface a 100 TB corpus needs. All are
@@ -23,33 +23,6 @@ object TextOps {
     * array.
     */
   private def shingles3(t: Column): Column = graft.functions.shingles3(t)
-
-  // ------------------------------------------------------------ exact dedup
-
-  /** Exact dedup: content fingerprint (sha256) → keep-first by doc_id.
-    * At scale: only (hash, doc_id) pairs are ever shuffled — project
-    * before shuffling; never shuffle full text.
-    *
-    * Keep-first is a two-phase min(doc_id) aggregate joined back, NOT a
-    * row_number window over fingerprint: web corpora duplicate boilerplate
-    * pages millions of times, and a window must sort each fingerprint's
-    * entire partition on ONE reducer (the skew cliff the DDL aggregate
-    * path already retired). The aggregate combines the hot key map-side,
-    * and the join back is AQE-skew-splittable because the build side
-    * carries one row per fingerprint. Semantics identical (smallest
-    * doc_id survives); the oracle keeps its window form.
-    */
-  def exactDedup(docs: DataFrame): DataFrame = {
-    val fp = docs.select(col("doc_id"), sha2(col("text"), 256).as("fingerprint"))
-    val first = fp.groupBy(col("fingerprint")).agg(min(col("doc_id")).as("keep_id"))
-    // null-SAFE join: sha2(NULL) = NULL, and both the old window form and
-    // the oracle's PARTITION BY group all NULL-text docs into ONE dup
-    // group — a plain equi-join would silently drop them instead
-    fp.as("a").join(first.as("b"),
-        col("a.fingerprint") <=> col("b.fingerprint"))
-      .select(col("a.doc_id"), col("a.fingerprint"),
-        (col("a.doc_id") =!= col("b.keep_id")).as("is_duplicate"))
-  }
 
   // ---------------------------------------------------------- n-gram jaccard
 
@@ -152,9 +125,8 @@ object TextOps {
     // side is a broadcast build of a differently-projected subtree), so
     // without the checkpoint the full shingle-explode + k-min signature
     // aggregate ran twice per ladder call. (doc_id, band, bucket) is
-    // bands × one long per doc — exactly the relation d22 persists as
-    // the dedup index artifact, so materializing it is the documented
-    // store posture, not a new cost.
+    // bands × one long per doc, so materializing it is cheap next to
+    // the signature work it saves.
     val banded = sigs.select(col("doc_id"),
       posexplode(array((0 until bands).map(b => bandBucket(b, r)): _*))
         .as(Seq("band", "bucket")))
@@ -230,371 +202,6 @@ object TextOps {
       .select(col("doc1"), col("doc2"), col("inter"), col("n1"), col("n2"))
   }
 
-  /** d17 — cross-source duplication ATTRIBUTION: the governance matrix
-    * "how much of source A is (near-)duplicated in source B", counted
-    * over [[nearDupLadder]]'s VERIFIED pairs — the exact-count sibling
-    * of d10's KMV containment estimates (d10 answers the same question
-    * from sketches without pairing; this one names the pairs, so it
-    * feeds takedown/licensing audits where an estimate isn't evidence).
-    * Output: (source_a, source_b, dup_pairs) with a ≤ b lexicographically
-    * (the pair relation is symmetric; same-source boilerplate shows up
-    * on the diagonal).
-    *
-    * Scale shape: the verified pair set is SPARSE (ladder output, linear
-    * in corpus); the id→source map joins against it twice and AQE
-    * broadcasts the pair side, so the corpus-sized map is never
-    * shuffled; the final aggregate is |sources|²-bounded.
-    */
-  def sourceDupMatrix(docs: DataFrame, k: Int = 32, bands: Int = 8,
-                      minBandHits: Int = 2): DataFrame = {
-    val pairs = nearDupLadder(docs, k, bands, minBandHits)
-      .select(col("doc1"), col("doc2"))
-    val src = docs.select(col("doc_id"), col("source"))
-    pairs
-      .join(src.select(col("doc_id").as("doc1"), col("source").as("s1")),
-        "doc1")
-      .join(src.select(col("doc_id").as("doc2"), col("source").as("s2")),
-        "doc2")
-      .select(least(col("s1"), col("s2")).as("source_a"),
-        greatest(col("s1"), col("s2")).as("source_b"))
-      .groupBy(col("source_a"), col("source_b"))
-      .agg(count(lit(1)).as("dup_pairs"))
-  }
-
-  /** d16 — edit-distance-verified near-dup pairs: the CHARACTER-level
-    * verify rung under [[nearDupLadder]]'s shingle-Jaccard tier. Shingle
-    * Jaccard is blind to intra-token edits (typo variants, OCR noise,
-    * template fills change every overlapping 3-gram), so curation
-    * pipelines that chase boilerplate-with-typos pair the same banded
-    * MinHash candidate generator with a bounded Levenshtein verify
-    * instead. Candidates stay LINEAR in the corpus (same ≥`minBandHits`
-    * band vote as d7); the exact tier touches candidate pairs only, and
-    * uses Spark's THRESHOLDED `levenshtein(l, r, maxDist)` — the DP
-    * short-circuits outside the |maxDist| diagonal band, O(maxDist·len)
-    * per pair instead of O(len²), and returns -1 past the bound so no
-    * full distance is ever computed for far pairs. Candidate texts are
-    * fetched via an ids-only semi-join restriction (the d7 cost-cliff
-    * lesson: never equi-join the full corpus text relation against a
-    * tiny candidate set). Output: (doc1, doc2, lev) for verified pairs,
-    * lev ≤ maxDist. Oracle: same banded CTEs + DuckDB `levenshtein`
-    * (both engines implement unit-cost Wagner-Fischer, integer-exact).
-    *
-    * 100 TB shape: candidates ~O(corpus) band collisions, each verify
-    * O(maxDist·len) on exactly two short strings — no shuffle beyond
-    * the candidate join; the text relation crosses the exchange once,
-    * restricted to candidate ids.
-    */
-  def editDistancePairs(docs: DataFrame, k: Int = 32, bands: Int = 8,
-                        minBandHits: Int = 2, maxDist: Int = 24): DataFrame = {
-    // three consumers (id restriction + both verify joins) — checkpoint
-    // the KB-sized candidate list, the nearDupLadder discipline
-    val cand = minhashCandidatesVoted(docs, k, bands, minBandHits)
-      .localCheckpoint()
-    val candDocs = cand.select(col("doc1").as("doc_id"))
-      .union(cand.select(col("doc2").as("doc_id"))).distinct()
-    val txt = docs.select(col("doc_id"), col("text"))
-      .join(candDocs, Seq("doc_id"), "left_semi")
-    cand
-      .join(txt.select(col("doc_id").as("doc1"), col("text").as("t1")), "doc1")
-      .join(txt.select(col("doc_id").as("doc2"), col("text").as("t2")), "doc2")
-      .select(col("doc1"), col("doc2"),
-        levenshtein(col("t1"), col("t2"), maxDist).as("lev"))
-      .filter(col("lev") >= 0)
-  }
-
-  /** The order-preserving 8-byte prefix key: Σ byte_i · 256^(7−i) over
-    * the first 8 characters (0-padded when shorter) — for ASCII text,
-    * ordering by this long IS ordering by the truncated lexicographic
-    * key, computable identically in both engines.
-    */
-  private[graft] def prefixKey8(text: Column): Column =
-    (0 until 8).map { i =>
-      when(length(text) > i,
-        ascii(substring(text, i + 1, 1)).cast("long")).otherwise(0L) *
-        (1L << (8 * (7 - i)))
-    }.reduce(_ + _)
-
-  /** d19 — SORTED-NEIGHBORHOOD dedup (Hernández & Stolfo 1995, the
-    * merge/purge method): the third blocking strategy next to LSH bands
-    * (d7/d16) and SimHash bands (d3) — sort the corpus by a truncated
-    * key and compare each record only to its `window` successors in the
-    * sort order. Classic record-linkage; catches near-dups whose edits
-    * are DENSE (many shingles changed — band recall collapses) but whose
-    * prefix is stable, the template-with-rewritten-tail shape. Key =
-    * the 8-byte text prefix as an order-preserving long.
-    *
-    * Scale shape — the t20 machinery in a new role: a GLOBAL rank with
-    * NO global sort. Top-2-byte range buckets tile the keyspace in
-    * order (≤ 65k histogram rows to the driver regardless of corpus
-    * size), a driver cumsum assigns per-bucket base offsets, and the
-    * within-bucket window is bounded by a bucket's population (prefix
-    * skew — every doc starting "the " — is the method's classic
-    * weakness; widen the bucket byte-depth or pre-salt hot prefixes at
-    * corpus scale). Neighborhood pairing is rank-adjacency as an
-    * EQUI-join: each doc explodes its `window` successor ranks — n·w
-    * rows, linear — and the verify is d16's bounded Levenshtein on
-    * exactly those pairs. Output (doc1, doc2, lev), doc1 = lower rank.
-    */
-  def sortedNeighborPairs(docs: DataFrame, window: Int = 4,
-                          maxDist: Int = 24): DataFrame = {
-    require(window >= 1, s"window must be >= 1, got $window")
-    val spark = docs.sparkSession
-    import spark.implicits._
-    val keyed = docs.select(col("doc_id"), col("text"),
-        prefixKey8(col("text")).as("key8"))
-      .withColumn("b", shiftright(col("key8"), 48).cast("int"))
-    val hist = keyed.groupBy(col("b")).count()
-      .collect().map(r => (r.getInt(0), r.getLong(1)))
-    var cum = 0L
-    val offs = hist.sortBy(_._1).map { case (b, n) =>
-      val o = (b, cum); cum += n; o
-    }
-    val w = Window.partitionBy(col("b")).orderBy(col("key8"), col("doc_id"))
-    val ranked = keyed
-      .join(broadcast(offs.toSeq.toDF("b", "off")), Seq("b"))
-      .withColumn("pos", col("off") + row_number().over(w) - 1)
-      .select(col("doc_id"), col("text"), col("pos"))
-    val probes = ranked.select(col("doc_id").as("doc1"),
-      col("text").as("t1"),
-      explode(sequence(col("pos") + 1, col("pos") + window)).as("pos"))
-    probes.join(ranked.select(col("doc_id").as("doc2"),
-        col("text").as("t2"), col("pos")), Seq("pos"))
-      .select(col("doc1"), col("doc2"),
-        levenshtein(col("t1"), col("t2"), maxDist).as("lev"))
-      .filter(col("lev") >= 0)
-  }
-
-  /** d18 — typo-family CLUSTERS: the components engine composed over
-    * [[editDistancePairs]]' character-level relation instead of the
-    * shingle-Jaccard one (the same swap d16 makes under d7). OCR/typo
-    * boilerplate forms transitive families exactly like shingle
-    * near-dups do (A~B, B~C with A,C two edits apart), and downstream
-    * policy is cluster-level (keep one per family, count family mass
-    * per source) — so the edit-distance rung needs the same
-    * cluster closure d11 gives the Jaccard rung. Identical label
-    * contract (cluster_id = min reachable doc_id, singletons
-    * self-label); [[componentsAuto]] routes chain-shaped graphs to
-    * star contraction. The oracle cross-checks with an independent
-    * recursive-CTE transitive closure over the SAME verified pairs.
-    */
-  def editDistClusters(docs: DataFrame, k: Int = 32, bands: Int = 8,
-                       minBandHits: Int = 2, maxDist: Int = 24,
-                       maxIters: Int = 25): DataFrame = {
-    val pairs = editDistancePairs(docs, k, bands, minBandHits, maxDist)
-      .select(col("doc1"), col("doc2"))
-    val labels = componentsAuto(pairs, maxIters)
-    docs.select(col("doc_id"))
-      .join(labels.withColumnRenamed("id", "doc_id"), Seq("doc_id"), "left")
-      .select(col("doc_id"),
-        coalesce(col("lbl"), col("doc_id")).as("cluster_id"))
-  }
-
-  /** Transitive duplicate CLUSTERS over the ladder's verified pairs —
-    * connected components by iterative hash-to-min label propagation
-    * (Rastogi et al. 2013's Hash-to-Min shape on DataFrames). Pairwise
-    * dedup ([[dropNearDups]]) keeps the smaller of each PAIR, but a
-    * near-dup RELATION is transitive in practice (A~B, B~C with A,C just
-    * under the threshold): cluster-level policies (keep one doc per
-    * cluster, count cluster mass per source) need the component, not the
-    * edge list. Output: (doc_id, cluster_id) for EVERY doc, cluster_id =
-    * min doc_id reachable through verified pairs (singletons label
-    * themselves) — a deterministic canonical labeling, hash-checked
-    * against a DuckDB recursive-CTE transitive closure.
-    *
-    * Scale shape: edges (two directed copies of the sparse verified pair
-    * set) are localCheckpointed ONCE and reused every iteration; each
-    * iteration is one edges⋈labels hash join + a min-aggregate (map-side
-    * partial min absorbs high-degree hubs — boilerplate twins collapse
-    * in the combiner, no single-reducer star) + a least() join-back, with
-    * the result checkpointed so the plan does NOT grow with iterations
-    * (the classic iterative-lineage blow-up). Iterations = component
-    * diameter — tiny for dup clusters (twins of twins); on adversarial
-    * chain components the `maxIters` guard trips and [[componentsAuto]]
-    * (the default `components`) re-routes through
-    * [[starContractComponents]] (same label contract, O(log n) rounds on
-    * any diameter). The corpus itself never enters the loop: docs join
-    * the converged labels once, at the end, via a left join
-    * (null ⇒ singleton).
-    */
-  def dupClusters(docs: DataFrame, k: Int = 32, bands: Int = 8,
-                  minBandHits: Int = 2, maxIters: Int = 25,
-                  components: (DataFrame, Int) => DataFrame =
-                    componentsAuto): DataFrame = {
-    val pairs = nearDupLadder(docs, k, bands, minBandHits)
-      .select(col("doc1"), col("doc2"))
-    val labels = components(pairs, maxIters)
-    docs.select(col("doc_id"))
-      .join(labels.withColumnRenamed("id", "doc_id"), Seq("doc_id"), "left")
-      .select(col("doc_id"),
-        coalesce(col("lbl"), col("doc_id")).as("cluster_id"))
-  }
-
-  /** Min-label connected components over an undirected (doc1, doc2) edge
-    * list — the iterative core of [[dupClusters]], exposed for direct use
-    * on any pair relation (the embedding ladder's pairs, simhash pairs).
-    * Returns (id, lbl) for every endpoint; nodes absent from the edge
-    * list are the caller's to label (dupClusters left-joins them to
-    * themselves). See [[dupClusters]] for the per-iteration scale shape.
-    */
-  def connectedComponents(pairs: DataFrame, maxIters: Int = 25): DataFrame = {
-    val p2 = pairs.toDF("doc1", "doc2")
-    val edges = p2
-      .union(p2.select(col("doc2"), col("doc1")))
-      .toDF("src", "dst")
-      .localCheckpoint()
-    var labels = edges.select(col("src").as("id")).distinct()
-      .withColumn("lbl", col("id"))
-      .localCheckpoint()
-    var it = 0
-    var converged = labels.isEmpty // no edges at all ⇒ nothing to iterate
-    while (!converged && it < maxIters) {
-      val nbrMin = edges
-        .join(labels.select(col("id").as("dst"), col("lbl")), "dst")
-        .groupBy(col("src").as("id")).agg(min(col("lbl")).as("nbr_lbl"))
-      val next = labels.select(col("id"), col("lbl").as("old_lbl"))
-        .join(nbrMin, Seq("id"), "left")
-        .select(col("id"),
-          least(col("old_lbl"), coalesce(col("nbr_lbl"), col("old_lbl")))
-            .as("lbl"),
-          col("old_lbl"))
-        .localCheckpoint()
-      converged = next.filter(col("lbl") =!= col("old_lbl")).isEmpty
-      labels = next.select(col("id"), col("lbl"))
-      it += 1
-    }
-    if (!converged)
-      throw new ComponentsNotConverged(
-        s"connectedComponents: not converged after $maxIters rounds — " +
-          "component diameter exceeds the bound; use star-contraction " +
-          "for chain-shaped graphs")
-    labels
-  }
-
-  /** Star-contraction connected components — the O(log n)-round
-    * alternative that [[connectedComponents]]'s convergence guard points
-    * at: min-label propagation needs diameter-many rounds, so a
-    * chain-shaped dup graph (pathological but real — A≈B≈C≈… drift under
-    * a loose threshold) blows past any fixed iteration bound, while
-    * alternating large-star / small-star contraction (Kiveris et al.,
-    * "Connected Components in MapReduce and Beyond", SoCC'14) converges
-    * in O(log n) rounds regardless of diameter. Same (id, lbl) output
-    * contract as [[connectedComponents]]: lbl = component minimum, nodes
-    * absent from the edge list are the caller's to self-label.
-    *
-    * Scale shape per round — two aggregate+join passes over the CURRENT
-    * edge set (ids only, and it only shrinks toward the star forest):
-    * large-star re-attaches every node's strictly-larger neighbors to
-    * min(Γ(x) ∪ {x}) (map-side-combining min per node + one hash join
-    * back — high-degree hubs collapse in the combiner, no single-reducer
-    * star), then small-star, on the (u > v)-oriented result, attaches
-    * every smaller neighbor and u itself to u's minimum neighbor (same
-    * shape). localCheckpoint per round keeps lineage flat (the
-    * [[connectedComponents]] discipline). Fixpoint = edge set unchanged
-    * (equal counts + one ids-only exceptAll probe — both sides are
-    * distinct, so one inclusion at equal cardinality is equality); at
-    * fixpoint the graph IS the star forest, so labels read directly off
-    * the edges — non-roots point at their component min, roots
-    * self-label. Readout runs over every endpoint of the ORIGINAL pair
-    * list (ids-only, checkpointed once), so nodes whose only edges are
-    * self-loops label themselves exactly as [[connectedComponents]]
-    * labels them — the two engines return the same row set, not just
-    * the same labels.
-    */
-  def starContractComponents(pairs: DataFrame,
-                             maxIters: Int = 64): DataFrame = {
-    // materialize the incoming pair list ONCE: `nodes` and the initial
-    // `edges` both consume it, and when the caller hands over a raw
-    // ladder relation (d13 plugs this engine into dupClusters directly,
-    // without componentsAuto's up-front checkpoint) each consumer
-    // re-executed the ENTIRE candidate+verify ladder — measured as ~2×
-    // the ladder's executor time inside d13. Ids-only, KBs; a second
-    // checkpoint over componentsAuto's is a no-op-cheap cache scan.
-    val p2 = pairs.toDF("a", "b").localCheckpoint()
-    val nodes = p2.select(col("a").as("id"))
-      .union(p2.select(col("b").as("id"))).distinct().localCheckpoint()
-    var edges = p2.filter(col("a") =!= col("b"))
-      .select(greatest(col("a"), col("b")).as("u"),
-        least(col("a"), col("b")).as("v"))
-      .distinct().localCheckpoint()
-    var edgeCount = edges.count()
-    var it = 0
-    var converged = edgeCount == 0L
-    while (!converged && it < maxIters) {
-      // large-star over the bidirected neighborhood; n > x ≥ m ⇒ the
-      // emitted (n, m) pair is already (larger, smaller)-oriented
-      val bi = edges.select(col("u").as("x"), col("v").as("n"))
-        .union(edges.select(col("v").as("x"), col("u").as("n")))
-      val mins = bi.groupBy(col("x")).agg(min(col("n")).as("mn"))
-        .select(col("x"), least(col("x"), col("mn")).as("m"))
-      // no distinct here: ls only feeds a min-aggregate (duplicates are
-      // idempotent under min) and the join-back, whose duplicates the
-      // terminal distinct below removes — dropping it removes one full
-      // exchange per round for an identical `next`
-      val ls = bi.join(mins, "x").filter(col("n") > col("x"))
-        .select(col("n").as("u"), col("m").as("v"))
-      // small-star on the oriented result: every smaller neighbor of u
-      // (and u itself) attaches to u's minimum neighbor
-      val sm = ls.groupBy(col("u")).agg(min(col("v")).as("m"))
-      val next = ls.join(sm, "u")
-        .select(col("v").as("a"), col("m").as("b"))
-        .union(sm.select(col("u").as("a"), col("m").as("b")))
-        .filter(col("a") =!= col("b"))
-        .select(greatest(col("a"), col("b")).as("u"),
-          least(col("a"), col("b")).as("v"))
-        .distinct().localCheckpoint()
-      // fixpoint = edge set unchanged. Both sides are distinct, so
-      // |next| == |edges| plus next ⊆ edges is equality — and one
-      // left-join aggregate reads off |next| AND |next ∩ edges| together
-      // (was a count() plus an exceptAll().isEmpty: two actions per
-      // round; the probe side is the just-checkpointed ids-only
-      // relation, so the fused check costs one small job)
-      val probe = next.join(
-          edges.select(col("u"), col("v"), lit(1).as("hit")),
-          Seq("u", "v"), "left")
-        .agg(count(lit(1)).as("n"), count(col("hit")).as("matched"))
-        .collect()(0)
-      val nextCount = probe.getLong(0)
-      converged = nextCount == edgeCount && probe.getLong(1) == nextCount
-      edges = next
-      edgeCount = nextCount
-      it += 1
-    }
-    require(converged,
-      s"starContractComponents: not converged after $maxIters rounds")
-    val nonRoots = edges.select(col("u").as("id"), col("v").as("lbl"))
-    nodes
-      .join(nonRoots, Seq("id"), "left")
-      .select(col("id"), coalesce(col("lbl"), col("id")).as("lbl"))
-  }
-
-  /** Typed non-convergence signal from [[connectedComponents]] — the
-    * compiler-checked contract [[componentsAuto]] routes on (extends
-    * IllegalArgumentException so callers treating it as a plain
-    * contract error keep working).
-    */
-  final class ComponentsNotConverged(msg: String)
-    extends IllegalArgumentException(msg)
-
-  /** [[connectedComponents]] with automatic routing to
-    * [[starContractComponents]] when the diameter guard trips — the
-    * [[dupClusters]] default. Dup graphs are near-star-shaped (twins of
-    * twins), so min-label propagation converges in a handful of rounds
-    * and is the cheap common path; a component whose diameter exceeds
-    * `maxIters` (chained drift A≈B≈C≈… under a loose threshold) re-runs
-    * through the O(log n)-round star-contraction engine instead of
-    * failing the job. Both engines share the component-min label
-    * contract, so the routed result is identical wherever both converge
-    * (spec-asserted). The pair list is materialized ONCE up front
-    * (ids-only localCheckpoint): whatever produced it — at corpus scale
-    * the full LSH ladder — must not re-execute when the fallback path
-    * re-reads it.
-    */
-  def componentsAuto(pairs: DataFrame, maxIters: Int = 25): DataFrame = {
-    val p = pairs.localCheckpoint()
-    try connectedComponents(p, maxIters)
-    catch { case _: ComponentsNotConverged => starContractComponents(p) }
-  }
-
   /** Near-dup DEDUP over the ladder's verified pairs: the larger member
     * of every qualifying pair is dropped, the smaller kept — the standard
     * keep-first policy, deterministic because pairs are emitted with
@@ -607,135 +214,6 @@ object TextOps {
     val dropped = nearDupLadder(docs, k, bands, minBandHits)
       .select(col("doc2").as("doc_id")).distinct()
     docs.join(dropped, Seq("doc_id"), "left_anti")
-  }
-
-  /** Incremental near-dup dedup — the "crawl N+1 against crawl N" job, the
-    * cadence corpus dedup actually runs at: a NEW batch is verdicted
-    * against the EXISTING corpus (and against its own lower-id members)
-    * without ever re-pairing the corpus with itself. Same banded-MinHash →
-    * exact-Jaccard ladder rule as [[nearDupLadder]]; doc_ids must be
-    * disjoint across the two relations. Output: one row per batch doc —
-    * (doc_id, is_dup, dup_of) with dup_of = the minimum verified partner
-    * (corpus or earlier-in-batch), NULL for survivors. Deterministic, so
-    * the DuckDB oracle chain (TextOracles.incrementalDedupSql) is
-    * hash-exact.
-    *
-    * Scale shape: the corpus side contributes ONLY its banded bucket rows
-    * (bands × one long per doc — in production a materialized index table
-    * written once per crawl and reused every batch; here computed inline
-    * from the same signature kernel) plus, at verify time, the shingles of
-    * the few corpus docs that actually collide (ids-only semi join, the
-    * d7 candidate-scoping rule). Everything else — shingling, signatures,
-    * candidate joins, verify — is linear in the BATCH, so per-batch cost
-    * is O(batch + candidates) regardless of corpus size. Keep-first
-    * across batches is structural: earlier crawls are never revisited,
-    * their members always win.
-    */
-  def incrementalDedup(corpus: DataFrame, batch: DataFrame, k: Int = 32,
-                       bands: Int = 8, minBandHits: Int = 2): DataFrame =
-    incrementalDedupIndexed(corpus, bandedIndex(corpus, k, bands), batch,
-      k, bands, minBandHits)
-
-  /** The banded-MinHash index relation (doc_id, band, bucket) — the
-    * per-crawl artifact [[incrementalDedupIndexed]] probes. bands ×
-    * one long per doc; at 100 TB this is the dedup STORE's key table.
-    */
-  private def bandedIndex(d: DataFrame, k: Int, bands: Int): DataFrame = {
-    val r = k / bands
-    minhashSignatures(d, k).select(col("doc_id"),
-      posexplode(array((0 until bands).map(b => bandBucket(b, r)): _*))
-        .as(Seq("band", "bucket")))
-  }
-
-  /** Build-if-absent / load-if-present banded index artifact (the
-    * bpeModelFor composition for the DEDUP tier): the index
-    * is written ONCE per crawl (content-addressed by corpus signature +
-    * k/bands, so crawls and settings coexist and a regenerated corpus
-    * never probes a stale index) and every subsequent batch probes the
-    * parquet relation instead of re-signaturing the corpus — d12's
-    * docstring shape made real. The artifact stores ONLY (doc_id, band,
-    * bucket); exact verify point-reads the corpus text for the few
-    * colliding candidates, like any CAS store.
-    */
-  def dedupIndexFor(corpus: DataFrame, baseDir: String, k: Int = 32,
-                    bands: Int = 8): DataFrame = {
-    val spark = corpus.sparkSession
-    val contentSig = corpus
-      .agg(coalesce(sum(hash(col("doc_id"), col("text"))), lit(0L)))
-      .collect()(0).getLong(0)
-    val key = s"dedupindex-v1|$contentSig|$k|$bands"
-    val fp = java.security.MessageDigest.getInstance("SHA-256")
-      .digest(key.getBytes("UTF-8")).map("%02x".format(_)).mkString
-    val path = s"$baseDir/$fp"
-    val marker = java.nio.file.Paths.get(path, "_built")
-    if (!java.nio.file.Files.exists(marker)) {
-      bandedIndex(corpus, k, bands).write.mode("overwrite").parquet(path)
-      java.nio.file.Files.writeString(marker, key): Unit
-    }
-    spark.read.parquet(path)
-  }
-
-  /** d22 — [[incrementalDedup]] probing a PREBUILT index relation
-    * (typically [[dedupIndexFor]]'s parquet artifact): identical
-    * semantics and output, but the corpus is never re-shingled or
-    * re-signatured on the banding path — per-batch cost is
-    * O(batch + candidates + index probe), the true recrawl cadence at
-    * 100 TB where the index is a persisted table and only verify
-    * touches corpus text (candidates only, ids-first semi join).
-    */
-  def incrementalDedupIndexed(corpus: DataFrame, corpusIdx: DataFrame,
-                              batch: DataFrame, k: Int = 32,
-                              bands: Int = 8, minBandHits: Int = 2): DataFrame = {
-    // the batch-side band relation feeds the corpus probe AND both sides
-    // of the in-batch self-join — checkpoint it (bands × one long per
-    // batch doc) so the batch is signatured once, the nearDupLadder
-    // discipline
-    val batchBands = bandedIndex(batch, k, bands).localCheckpoint()
-    // batch vs corpus: no id-order constraint (old ids can be larger);
-    // batch vs batch: strictly lower-id partners (keep-first in-batch)
-    val candOld = batchBands.as("n").join(corpusIdx.as("o"),
-        col("n.band") === col("o.band") && col("n.bucket") === col("o.bucket"))
-      .groupBy(col("n.doc_id").as("new_id"), col("o.doc_id").as("other_id"))
-      .agg(count(lit(1)).as("band_hits"))
-    val candNew = batchBands.as("x").join(batchBands.as("y"),
-        col("x.band") === col("y.band") && col("x.bucket") === col("y.bucket") &&
-        col("y.doc_id") < col("x.doc_id"))
-      .groupBy(col("x.doc_id").as("new_id"), col("y.doc_id").as("other_id"))
-      .agg(count(lit(1)).as("band_hits"))
-    val cand = candOld.unionByName(candNew)
-      .filter(col("band_hits") >= minBandHits)
-      .select(col("new_id"), col("other_id"))
-      .localCheckpoint()
-    // exact verify restricted to candidate docs only (see nearDupLadder:
-    // without the semi join the corpus shingle relation would be the
-    // join's sorted side — the measured 2.56M-doc cliff)
-    val candDocs = cand.select(col("new_id").as("doc_id"))
-      .union(cand.select(col("other_id").as("doc_id"))).distinct()
-    // semi-join below the explode (the nearDupLadder push): only
-    // candidate docs are shingled, and the three consumers each re-run
-    // a candidate-sized explode instead of a corpus+batch-sized one
-    val sh = shingleRows(corpus.unionByName(batch)
-        .join(candDocs, Seq("doc_id"), "left_semi"))
-      .drop("lang", "lb")
-    val sizes = sh.groupBy(col("doc_id")).agg(count(lit(1)).as("n_sh"))
-    val inter = cand
-      .join(sh.withColumnRenamed("doc_id", "new_id")
-        .withColumnRenamed("shingle", "s1"), "new_id")
-      .join(sh.withColumnRenamed("doc_id", "other_id")
-        .withColumnRenamed("shingle", "s2"), "other_id")
-      .filter(col("s1") === col("s2"))
-      .groupBy(col("new_id"), col("other_id")).agg(count(lit(1)).as("inter"))
-    val dups = inter
-      .join(sizes.withColumnRenamed("doc_id", "new_id")
-        .withColumnRenamed("n_sh", "n1"), "new_id")
-      .join(sizes.withColumnRenamed("doc_id", "other_id")
-        .withColumnRenamed("n_sh", "n2"), "other_id")
-      .filter(col("inter") * 10 >= (col("n1") + col("n2") - col("inter")) * 7)
-      .groupBy(col("new_id")).agg(min(col("other_id")).as("dup_of"))
-    batch.select(col("doc_id"))
-      .join(dups.withColumnRenamed("new_id", "doc_id"), Seq("doc_id"), "left")
-      .select(col("doc_id"), col("dup_of").isNotNull.as("is_dup"),
-        col("dup_of"))
   }
 
   /** t11 — the reference's defining trait re-expressed over the corpus:
@@ -917,39 +395,6 @@ object TextOps {
           "3, 'decontaminated', n_decon, 4, 'deduped', n_dedup, " +
           "5, 'mixed', n_mixed, 6, 'train', n_train, 7, 'val', n_val, " +
           "8, 'test', n_test) as (stage, stage_name, n_docs)"))
-  }
-
-  // --------------------------------------------------------------- SimHash
-
-  /** SimHash near-dup pairs: 62-bit cross-engine fingerprint (custom
-    * codegen'd SimHashPoly expression — TextOracles mirrors it), banded
-    * into 4×15-bit LSH keys (32768 buckets per band, selective at scale) —
-    * docs within Hamming distance ≤3 of the banded bits share at least one
-    * exact band; exact bit_count confirms. groupBy-shaped like
-    * minhashCandidates: linear scale cost. (The 64-bit FNV SimHash64
-    * expression remains as the non-oracle production fingerprint.)
-    */
-  def simhashPairs(docs: DataFrame, maxHamming: Int = 8): DataFrame = {
-    val fp = docs.select(col("doc_id"),
-      simhash_poly(split(col("text"), " ")).as("fp"))
-    // both sides of the self-join consume `banded` and neither occurrence
-    // reuses the other's work — checkpoint the (doc_id, fp, band, key)
-    // relation so the corpus is fingerprinted once (the
-    // minhashCandidatesVoted discipline)
-    val banded = fp.select(col("doc_id"), col("fp"),
-      posexplode(array((0 until 4).map { b =>
-        shiftright(col("fp"), b * 15).bitwiseAND(lit(0x7fffL))
-      }: _*)).as(Seq("band", "key")))
-      .localCheckpoint()
-    val a = banded.as("a")
-    val b = banded.as("b")
-    a.join(b,
-        col("a.band") === col("b.band") && col("a.key") === col("b.key") &&
-        col("a.doc_id") < col("b.doc_id"))
-      .select(col("a.doc_id").as("doc1"), col("b.doc_id").as("doc2"),
-        bit_count(col("a.fp").bitwiseXOR(col("b.fp"))).as("hamming"))
-      .distinct()
-      .filter(col("hamming") <= maxHamming)
   }
 
   // --------------------------------------------------------- quality / stats
@@ -1558,31 +1003,6 @@ object TextOps {
           .otherwise("test"))
   }
 
-  /** t24 — CLUSTER-aware train/val/test split: t4's deterministic hash
-    * split applied at the DUP-CLUSTER granularity (d11's transitive
-    * near-dup components), so a document and all its near-duplicates land
-    * in the SAME split — the group-shuffle-split posture every eval-honest
-    * training pipeline needs (a near-dup of a training doc in the val set
-    * silently inflates held-out metrics; doc-level hashing like t4 cannot
-    * prevent it because the twins hash independently). The split key is
-    * the cluster label, not the doc id: singleton clusters degenerate to
-    * exactly t4's rule (label = own id), so only near-dup families move.
-    *
-    * Scale shape: d11's per-iteration hash-to-min components (see
-    * [[dupClusters]]) plus ONE per-row hash — the split itself adds no
-    * exchange beyond the cluster labels it already joins.
-    */
-  def clusterSplit(docs: DataFrame, k: Int = 32, bands: Int = 8,
-                   minBandHits: Int = 2, maxIters: Int = 25): DataFrame = {
-    val bucket = (coalesce(poly_hash31(concat(lit("split|"),
-      col("cluster_id").cast("string"))), lit(0L)) % 10).cast("int")
-    dupClusters(docs, k, bands, minBandHits, maxIters)
-      .withColumn("bucket", bucket)
-      .withColumn("split",
-        when(col("bucket") < 8, "train").when(col("bucket") < 9, "val")
-          .otherwise("test"))
-  }
-
   /** Context-window chunking: overlapping token windows of `chunkSize`
     * with `stride` (training-sequence preparation). One chunk per offset
     * i·stride while the offset is inside the document — per-row explode,
@@ -1835,8 +1255,8 @@ object TextOps {
     * Scale shape: the eval index is benchmark-sized (≤ 10⁶ rows of
     * (band, bucket) longs) so the candidate join's build side is tiny;
     * train-side work is one linear banded pass; the exact tier touches
-    * candidate docs only (left-semi scoped, the incrementalDedup
-    * pattern). No train×train pairs are ever formed.
+    * candidate docs only (left-semi scoped, as in [[nearDupLadder]]).
+    * No train×train pairs are ever formed.
     */
   def fuzzyDecon(docs: DataFrame, k: Int = 32, bands: Int = 8,
                  minBandHits: Int = 2): DataFrame = {
@@ -2031,8 +1451,9 @@ object TextOps {
     * exchange — same reducer as d9), the tiny (source, threshold) table
     * broadcasts back, and the sample is a per-row filter. No corpus-wide
     * sort anywhere; `ORDER BY hash LIMIT k` per source would be a
-    * row_number window — the d1/DDL skew cliff again. Sources with < k
-    * docs keep everything (threshold = MaxValue). Hash-collision ties
+    * row_number window, which sorts a hot key's whole partition on one
+    * reducer. Sources with < k docs keep everything (threshold =
+    * MaxValue). Hash-collision ties
     * (~n²/2P₃₁ docs) keep BOTH docs, so the sample size is ≥ k by at
     * most the collision count — the oracle mirrors the same ≤-threshold
     * rule exactly.
@@ -2070,7 +1491,7 @@ object TextOps {
     * Scale shape — the corpus is never globally sorted: doc hashes bin
     * into `buckets` contiguous hash ranges, ONE two-phase hash aggregate
     * builds the (source, bucket) token histogram (≤ |sources|·buckets
-    * rows — KBs — collected once, the d11/e6 training-collect shape),
+    * rows — KBs — collected once),
     * the driver cumsums each source's histogram to classify buckets as
     * fully-kept (their whole mass still under budget), dead (budget
     * already spent before them) or THE boundary bucket (provably at most
@@ -2277,12 +1698,12 @@ object TextOps {
     * ANYWHERE in the corpus keeps only its first occurrence (ordered by
     * (doc_id, seg_idx)), and each document is reassembled from its
     * surviving segments — the remove-boilerplate / repeated-paragraph
-    * step that whole-document dedup (d1/d7) cannot express. Output per
+    * step that whole-document dedup (d7) cannot express. Output per
     * doc: segment count, kept count, and the cleaned text (empty when
     * every segment was seen earlier — an exact dup doc cleans to "").
     *
-    * Scale shape: segments are hashed with sha2 (full-content, like d1 —
-    * the 64-char polyhash window would false-positive long segments) and
+    * Scale shape: segments are hashed with sha2 (full-content — the
+    * 64-char polyhash window would false-positive long segments) and
     * the segment TEXT is dropped before anything shuffles — the
     * keep-first pass moves only (32B hash, packed id) rows, the kept
     * positions aggregate to one small int-array row per doc, and each
@@ -2813,99 +2234,6 @@ object TextOps {
       .agg(sum(col("s")).as("score_x1000"), count(lit(1)).as("n_terms"))
       .orderBy(col("score_x1000").desc, col("doc_id"))
       .limit(k)
-  }
-
-  // ------------------------------------------- content-defined chunking
-
-  /** d20 — content-defined chunking (CDC) dedup: the Rabin-fingerprint /
-    * FastCDC posture every dedup STORE runs (backup systems, CAS blob
-    * stores, and sub-document web dedup à la Lee et al.'s exact
-    * substrings): chunk boundaries are set by CONTENT — a position ends
-    * a chunk when the rolling `window`-char PolyHash31 ≡ 0 (mod
-    * `divisor`) — so an insertion early in a page only reshuffles chunks
-    * up to the next boundary instead of shifting every fixed-size block
-    * (the failure mode that makes fixed-window dedup useless against
-    * boilerplate drift). Expected chunk length ≈ divisor chars; the
-    * document tail always closes the last chunk. Chunks are identified
-    * by sha256; output = chunks appearing in ≥ 2 distinct docs with
-    * their doc/occurrence counts — the duplicated-boilerplate relation a
-    * curation pass subtracts.
-    *
-    * Scale shape: boundary detection + chunk splitting is a pure per-row
-    * HOF projection (O(L·window) per doc, corpus-independent); the only
-    * exchange carries (32 B hash, id) pairs — never text — into a
-    * two-phase count aggregate, exactly d1's shuffle posture. At 100 TB
-    * the chunk-hash relation is the dedup STORE: key it, bucket it, and
-    * incremental recrawls (d12) probe it instead of re-pairing the
-    * corpus.
-    */
-  def cdcDupChunks(docs: DataFrame, window: Int = 8,
-                   divisor: Long = 64L): DataFrame =
-    cdcChunkRows(docs, window, divisor)
-      .groupBy(col("chunk_hash"))
-      .agg(min(col("clen")).as("chunk_len"),
-        countDistinct(col("doc_id")).as("n_docs"),
-        count(lit(1)).as("n_occ"))
-      .filter(col("n_docs") >= 2)
-
-  /** The CDC chunk relation (doc_id, chunk_hash, clen) shared by d20/d21:
-    * one chunk row per content-defined chunk, text already reduced to its
-    * 32-byte sha256 before any exchange.
-    */
-  private def cdcChunkRows(docs: DataFrame, window: Int,
-                           divisor: Long): DataFrame = {
-    val L = length(col("text"))
-    // boundary candidates: 1-based end positions window..L-1 (the final
-    // position always terminates the last chunk). Codegen'd ROLLING
-    // PolyHash31 — O(L) per doc and allocation-free where the HOF
-    // substr-per-position form was O(L·window) (measured 42 s → ~6 s on
-    // d20 at sf0.1); value-identical by the rolling-update identity, law-
-    // spec'd against the from-scratch form in HashPropertySpec
-    val ends = concat(
-      graft.functions.cdc_boundaries(col("text"), window, divisor), array(L))
-    val chunks = transform(sequence(lit(1), size(ends)), j => {
-      val st = when(j === 1, lit(1)).otherwise(element_at(ends, j - 1) + 1)
-      col("text").substr(st, element_at(ends, j) - st + 1)
-    })
-    docs.select(col("doc_id"), explode(chunks).as("chunk"))
-      .select(col("doc_id"), sha2(col("chunk"), 256).as("chunk_hash"),
-        length(col("chunk")).cast("long").as("clen"))
-  }
-
-  /** d21 — boilerplate-fraction gate over the CDC chunk relation: per doc,
-    * the character mass lying in chunks that also appear in ≥ 2 distinct
-    * docs (self-repeats alone don't count — a chunk repeated WITHIN one
-    * doc is d15/t23's territory), and a keep verdict
-    * `dup_chars · den < n_chars · num` (default < 1/2 boilerplate) in
-    * cross-multiplied integers so the oracle replays it exactly. This is
-    * the gate a curation pass derives FROM d20's relation: template-heavy
-    * pages (headers/footers/nav shared across a site) fail while pages
-    * that merely share a snippet survive.
-    *
-    * Scale shape: the chunk relation shuffles twice on the 32-byte hash
-    * (dup-flag aggregate, then a left-semi back onto the same relation —
-    * ids+lens only, never text), once on doc_id for the per-doc sum, and
-    * the doc-side join to recover every doc (zero-dup docs must appear
-    * with dup_chars = 0) carries (doc_id, n_chars) pairs. All d1-posture
-    * exchanges; nothing is corpus-quadratic.
-    */
-  def cdcBoilerplateGate(docs: DataFrame, window: Int = 8,
-                         divisor: Long = 64L, num: Int = 1,
-                         den: Int = 2): DataFrame = {
-    val ch = cdcChunkRows(docs, window, divisor)
-    val dup = ch.groupBy(col("chunk_hash"))
-      .agg(countDistinct(col("doc_id")).as("nd"))
-      .filter(col("nd") >= 2)
-      .select(col("chunk_hash"))
-    val perDoc = ch.join(dup, Seq("chunk_hash"), "left_semi")
-      .groupBy(col("doc_id"))
-      .agg(sum(col("clen")).as("dup_chars"))
-    docs.select(col("doc_id"), length(col("text")).cast("long").as("n_chars"))
-      .join(perDoc, Seq("doc_id"), "left")
-      .select(col("doc_id"), col("n_chars"),
-        coalesce(col("dup_chars"), lit(0L)).as("dup_chars"),
-        (coalesce(col("dup_chars"), lit(0L)) * den <
-          col("n_chars") * num).as("keep"))
   }
 
   // ------------------------------------------------------ C4 cleaning pass

@@ -46,7 +46,9 @@ object TranscriptStream {
     routed(turns, toolDim).writeStream
       .option("checkpointLocation", checkpointDir)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (!batch.isEmpty) Checkpoint.commitBatch(batch, sinkPath, batchId)
+        // commit even an empty micro-batch (0 rows under its batch id): an
+        // isEmpty check would be a second job re-reading and re-parsing it
+        Checkpoint.commitBatch(batch, sinkPath, batchId)
         ()
       }
       .trigger(Trigger.AvailableNow())

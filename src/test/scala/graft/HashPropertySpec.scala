@@ -1,11 +1,10 @@
 package graft
 
-import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.unsafe.types.UTF8String
 import org.scalacheck.Gen
 import org.scalacheck.rng.Seed
 import org.scalatest.funsuite.AnyFunSuite
-import graft.functions.{ParseTurn, TextHashes}
+import graft.functions.ParseTurn
 
 /** Generative properties over the pure expression kernels (no Spark
   * session — these run the same static methods the generated code calls),
@@ -19,41 +18,8 @@ class HashPropertySpec extends AnyFunSuite {
     (0 until n).flatMap(i => g.apply(Gen.Parameters.default, Seed(42L + i)))
 
   private val word = Gen.nonEmptyListOf(Gen.alphaNumChar).map(_.mkString)
-  private val tokenList = Gen.nonEmptyListOf(word)
 
   private def u8(s: String) = UTF8String.fromString(s)
-  private def arr(ts: Seq[String]): GenericArrayData =
-    new GenericArrayData(ts.map(t => u8(t): Any).toArray)
-
-  test("rollingHash: total, stable, in [0, 2^61-1), order-sensitive") {
-    sample(Gen.zip(word, word), 300).foreach { case (a, b) =>
-      val ha = TextHashes.rollingHash(u8(a))
-      assert(ha == TextHashes.rollingHash(u8(a)))
-      assert(ha >= 0L && ha < (1L << 61) - 1)
-      if (a + b != b + a)
-        assert(TextHashes.rollingHash(u8(a + b)) !=
-          TextHashes.rollingHash(u8(b + a)), s"collision: <$a> <$b>")
-    }
-  }
-
-  test("simhash64: permutation-invariant (bag semantics), stable") {
-    val rnd = new scala.util.Random(7)
-    sample(tokenList, 300).foreach { ts =>
-      val h = TextHashes.simhash64(arr(ts))
-      assert(h == TextHashes.simhash64(arr(ts)))
-      assert(h == TextHashes.simhash64(arr(rnd.shuffle(ts))))
-    }
-  }
-
-  test("hamming: metric axioms on generated fingerprints") {
-    sample(Gen.zip(tokenList, tokenList), 300).foreach { case (a, b) =>
-      val fa = TextHashes.simhash64(arr(a))
-      val fb = TextHashes.simhash64(arr(b))
-      assert(TextHashes.hamming(fa, fa) == 0)
-      assert(TextHashes.hamming(fa, fb) == TextHashes.hamming(fb, fa))
-      assert(TextHashes.hamming(fa, fb) >= 0 && TextHashes.hamming(fa, fb) <= 64)
-    }
-  }
 
   test("MinKAggregator laws: sorted-unique ≤k buffer, order/split-invariant, equals brute-force k smallest distinct") {
     val agg = new graft.functions.MinKAggregator(8)
@@ -75,28 +41,6 @@ class HashPropertySpec extends AnyFunSuite {
         assert(shuffled == expected, s"shuffle on $xs")
         // invariant: buffer always sorted, distinct, bounded
         assert(direct.length <= 8 && direct == direct.distinct.sorted)
-    }
-  }
-
-  test("cdcBoundaries: rolling update ≡ from-scratch window PolyHash31, " +
-      "boundaries in (window, len), short strings empty") {
-    val text = Gen.chooseNum(0, 120).flatMap(n =>
-      Gen.listOfN(n, Gen.oneOf(('a' to 'f') ++ Seq(' ', '.'))).map(_.mkString))
-    for (window <- Seq(2, 8); divisor <- Seq(4L, 16L)) {
-      sample(text, 300).foreach { s =>
-        val got = {
-          val a = TextHashes.cdcBoundaries(u8(s), window, divisor)
-          (0 until a.numElements()).map(a.getInt)
-        }
-        // brute form: hash every window substring from scratch
-        val want = (window to math.max(s.length - 1, 0)).filter { end =>
-          TextHashes.polyHash31(
-            u8(s.substring(end - window, end))) % divisor == 0L
-        }
-        assert(got == want, s"window=$window divisor=$divisor <$s>")
-        if (s.length < window + 1) assert(got.isEmpty)
-        got.foreach(e => assert(e >= window && e <= s.length - 1))
-      }
     }
   }
 

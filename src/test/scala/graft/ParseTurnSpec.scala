@@ -51,14 +51,17 @@ class ParseTurnSpec extends SparkSuite {
     assert(got == texts.map(evalParse))
   }
 
-  test("SQL registration: parse_turn/simhash64/rolling_hash callable from spark.sql") {
+  test("SQL registration: parse_turn/valid_turn/poly_hash31 callable from spark.sql") {
     graft.functions.registerAll(spark)
     val r = spark.sql(
       """SELECT parse_turn('INS db0.t1 {"k":1}').op AS op,
-                simhash64(array('a','b')) AS sh,
-                rolling_hash('abc') AS rh""").collect()(0)
+                valid_turn('INS db0.t1 {"k":1}') AS ok,
+                valid_turn('INS admin.t1 {}') AS denied,
+                poly_hash31('abc') AS ph""").collect()(0)
     assert(r.getString(0) == "INS")
-    assert(r.getLong(1) != 0L && r.getLong(2) != 0L)
+    assert(r.getBoolean(1) && !r.getBoolean(2))
+    assert(r.getLong(3) == graft.functions.TextHashes.polyHash31(
+      org.apache.spark.unsafe.types.UTF8String.fromString("abc")))
   }
 
   test("valid_turn is equivalent to the parsed-column predicate (3-valued)") {

@@ -26,16 +26,17 @@ class StreamingSpec extends SparkSuite {
     val half1 = batchTurns.filter(col("ts") <= lit("2024-01-15").cast("timestamp"))
     half1.write.mode("append").parquet(in)
 
-    val q1 = TranscriptStream.startRouting(
+    // each tranche is one micro-batch, and a micro-batch is one Spark job:
+    // the commit's scan, parse, route and write
+    def route(): Int = jobsRun(TranscriptStream.startRouting(
       TranscriptStream.readTurns(spark, in), toolDim, sink, ckpt)
-    q1.awaitTermination()
+      .awaitTermination())
+    assert(route() == 1)
 
     // second tranche arrives; a NEW query resumes from the same checkpoint
     batchTurns.filter(col("ts") > lit("2024-01-15").cast("timestamp"))
       .write.mode("append").parquet(in)
-    val q2 = TranscriptStream.startRouting(
-      TranscriptStream.readTurns(spark, in), toolDim, sink, ckpt)
-    q2.awaitTermination()
+    assert(route() == 1)
 
     val expected = Pipeline.route(Pipeline.enrich(
       parsedValid(batchTurns), toolDim))

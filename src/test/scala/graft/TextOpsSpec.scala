@@ -18,16 +18,6 @@ class TextOpsSpec extends SparkSuite {
   private val nearDup = (1 to 60).map(i => if (i == 30) "CHANGED" else s"w$i").mkString(" ")
   private val unrelated = (1 to 60).map(i => s"z$i").mkString(" ")
 
-  test("exactDedup flags only true copies, keep-first by doc_id; NULL-text docs form one group") {
-    val d = TextOps.exactDedup(docs(1L -> base, 2L -> base, 3L -> nearDup,
-        4L -> null, 5L -> null))
-      .collect().map(r => r.getLong(0) -> r.getBoolean(2)).toMap
-    // NULL-text docs are one dup group (sha2(NULL)=NULL partition — the
-    // window form's and the oracle's semantics): 4 kept, 5 flagged
-    assert(d == Map(1L -> false, 2L -> true, 3L -> false,
-      4L -> false, 5L -> true))
-  }
-
   test("ngramJaccardPairs: near-dup pair found, unrelated not") {
     val pairs = TextOps.ngramJaccardPairs(
         docs(1L -> base, 2L -> nearDup, 3L -> unrelated))
@@ -76,23 +66,6 @@ class TextOpsSpec extends SparkSuite {
     }
   }
 
-  test("sourceDupMatrix: verified pairs attribute to unordered source " +
-    "pairs; diagonal = within-source boilerplate") {
-    import spark.implicits._
-    val base2 = (1 to 60).map(i => s"v$i").mkString(" ")
-    val nearDup2 = (1 to 60).map(i => if (i == 10) "X" else s"v$i").mkString(" ")
-    val d = Seq(
-      (1L, base, "en", "srcA", base.length.toLong),
-      (2L, nearDup, "en", "srcB", nearDup.length.toLong),   // cross-source pair
-      (3L, unrelated, "en", "srcA", unrelated.length.toLong),
-      (4L, base2, "en", "srcB", base2.length.toLong),
-      (5L, nearDup2, "en", "srcB", nearDup2.length.toLong)  // within-srcB pair
-    ).toDF("doc_id", "text", "lang", "source", "n_chars")
-    val got = TextOps.sourceDupMatrix(d).collect()
-      .map(r => (r.getString(0), r.getString(1)) -> r.getLong(2)).toMap
-    assert(got == Map(("srcA", "srcB") -> 1L, ("srcB", "srcB") -> 1L), got)
-  }
-
   test("multiSuiteDecon: contamination attributes to the RIGHT suite, " +
     "and the nSuites=1 slice is exactly t12's verdict set") {
     val sA = (1 to 15).map(i => s"qa$i").mkString(" ")
@@ -117,170 +90,6 @@ class TextOpsSpec extends SparkSuite {
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getBoolean(3)))
       .toSet
     assert(one == t12, s"${one.size} vs ${t12.size}")
-  }
-
-  test("prefixKey8 law: ordering by the packed long IS ordering by the " +
-    "8-char truncated string, on seeded random ASCII strings") {
-    import spark.implicits._
-    import org.apache.spark.sql.functions.col
-    val rnd = new scala.util.Random(42)
-    val strs = (0 until 300).map { _ =>
-      val len = rnd.nextInt(14)
-      (1 to len).map(_ => (32 + rnd.nextInt(95)).toChar).mkString
-    }.distinct
-    val keys = strs.toDF("text")
-      .select(col("text"), TextOps.prefixKey8(col("text")).as("k"))
-      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-    for (a <- strs; b <- strs) {
-      val (ta, tb) = (a.take(8), b.take(8))
-      val cmpStr = ta.compareTo(tb).sign
-      val cmpKey = keys(a).compareTo(keys(b)).sign
-      assert(cmpStr == cmpKey,
-        s"'$a' vs '$b': string cmp $cmpStr, key cmp $cmpKey")
-    }
-  }
-
-  test("Spark levenshtein law: agrees with an independent Wagner-Fischer " +
-    "DP on seeded random pairs, thresholded form consistent") {
-    import spark.implicits._
-    import org.apache.spark.sql.functions.{col, levenshtein}
-    def dp(a: String, b: String): Int = {
-      val m = Array.tabulate(a.length + 1, b.length + 1) { (i, j) =>
-        if (i == 0) j else if (j == 0) i else 0
-      }
-      for (i <- 1 to a.length; j <- 1 to b.length)
-        m(i)(j) = math.min(math.min(m(i - 1)(j) + 1, m(i)(j - 1) + 1),
-          m(i - 1)(j - 1) + (if (a.charAt(i - 1) == b.charAt(j - 1)) 0 else 1))
-      m(a.length)(b.length)
-    }
-    val rnd = new scala.util.Random(7)
-    val pairs = (0 until 150).map { _ =>
-      def s() = (1 to rnd.nextInt(12)).map(_ => ('a' + rnd.nextInt(4)).toChar).mkString
-      (s(), s())
-    }
-    val got = pairs.toDF("a", "b")
-      .select(col("a"), col("b"), levenshtein(col("a"), col("b")).as("l"),
-        levenshtein(col("a"), col("b"), 3).as("lt"))
-      .collect().map(r => (r.getString(0), r.getString(1),
-        r.getInt(2), r.getInt(3)))
-    got.foreach { case (a, b, l, lt) =>
-      val want = dp(a, b)
-      assert(l == want, s"lev('$a','$b') = $l, DP says $want")
-      assert(lt == (if (want <= 3) want else -1),
-        s"thresholded lev('$a','$b') = $lt, want ${if (want <= 3) want else -1}")
-    }
-  }
-
-  test("sortedNeighborPairs: bucketed no-global-sort rank reproduces the " +
-    "true sorted-window pairs (differential vs a driver-side sort)") {
-    import org.apache.spark.sql.functions.{col, levenshtein}
-    // varied prefixes incl. shared ones (same first-8 bucket) and a
-    // doc shorter than the key width
-    val texts = Seq(
-      1L -> ((1 to 60).map(i => s"alpha w$i").mkString(" ")),
-      2L -> ((1 to 60).map(i => if (i == 30) "alpha X" else s"alpha w$i").mkString(" ")),
-      3L -> ((1 to 60).map(i => s"beta w$i").mkString(" ")),
-      4L -> ((1 to 60).map(i => if (i == 10) "beta Y" else s"beta w$i").mkString(" ")),
-      5L -> "tiny",
-      6L -> ((1 to 60).map(i => s"zeta w$i").mkString(" ")))
-    val d = docs(texts: _*)
-    val window = 3; val maxDist = 24
-    val got = TextOps.sortedNeighborPairs(d, window, maxDist).collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).toSet
-    // driver reference: true global sort by (key8, doc_id), all pairs
-    // within `window` ranks, unbounded levenshtein ≤ maxDist
-    def key8(t: String): Long =
-      (0 until 8).map(i =>
-        (if (i < t.length) t.charAt(i).toLong else 0L) << (8 * (7 - i))).sum
-    val order = texts.sortBy { case (id, t) => (key8(t), id) }
-    def lev(a: String, b: String): Int = {
-      val dp = Array.tabulate(a.length + 1)(i => i)
-      for (j <- 1 to b.length) {
-        var prev = dp(0); dp(0) = j
-        for (i <- 1 to a.length) {
-          val cur = dp(i)
-          dp(i) = math.min(math.min(dp(i) + 1, dp(i - 1) + 1),
-            prev + (if (a.charAt(i - 1) == b.charAt(j - 1)) 0 else 1))
-          prev = cur
-        }
-      }
-      dp(a.length)
-    }
-    val want = (for {
-      i <- order.indices
-      j <- (i + 1) until math.min(i + 1 + window, order.size)
-      dist = lev(order(i)._2, order(j)._2) if dist <= maxDist
-    } yield (order(i)._1, order(j)._1, dist)).toSet
-    assert(got == want, s"got $got want $want")
-    // the shared-prefix near-dup pairs are IN (adjacency found them)
-    assert(got.exists(p => p._1 == 1L && p._2 == 2L || p._1 == 2L && p._2 == 1L))
-    // sanity vs Spark's own levenshtein for one pair
-    val sparkLev = d.sparkSession.sql(
-      s"SELECT levenshtein('${texts(0)._2}', '${texts(1)._2}')")
-      .collect()(0).getInt(0)
-    assert(want.exists(_._3 == sparkLev))
-  }
-
-  test("editDistClusters: transitive typo families close through the " +
-    "middle doc even when the endpoints exceed the edit bound") {
-    // d(A,B)=20, d(B,C)=20 — both within 24; d(A,C)=40 — outside. The
-    // cluster must still unite all three THROUGH B (the transitivity
-    // d16's pairwise output cannot express), while unrelated self-labels.
-    val a = (1 to 60).map(i => s"w$i").mkString(" ")
-    val b = (1 to 60).map(i => if (i == 10) "Q" * 20 else s"w$i").mkString(" ")
-    val c = (1 to 60).map(i =>
-      if (i == 10) "Q" * 20 else if (i == 40) "R" * 20 else s"w$i").mkString(" ")
-    val d = docs(1L -> a, 2L -> b, 3L -> c, 4L -> unrelated)
-    // preconditions: the pair tier sees exactly (A,B) and (B,C)
-    val pairs = TextOps.editDistancePairs(d)
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    assert(pairs == Set((1L, 2L), (2L, 3L)), pairs)
-    val got = TextOps.editDistClusters(d)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(got == Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 4L -> 4L), got)
-  }
-
-  test("editDistancePairs: bounded Levenshtein verifies the typo pair, " +
-    "threshold excludes, distance value is exact") {
-    val d = docs(1L -> base, 2L -> nearDup, 3L -> unrelated)
-    val got = TextOps.editDistancePairs(d)
-      .collect().map(r => (r.getLong(0), r.getLong(1)) -> r.getInt(2)).toMap
-    // one word swap: "w30" -> "CHANGED" = unbounded levenshtein of the
-    // full strings; verify the reported distance against the exact value
-    assert(got.keySet == Set((1L, 2L)))
-    val exact = d.sparkSession.sql(
-      s"SELECT levenshtein('$base', '$nearDup')").collect()(0).getInt(0)
-    assert(got((1L, 2L)) == exact && exact > 0 && exact <= 24)
-    // a threshold under the true distance drops the pair (the -1
-    // short-circuit path)
-    assert(TextOps.editDistancePairs(d, maxDist = exact - 1).collect().isEmpty)
-  }
-
-  test("simhashPairs: hamming-close pair found; fingerprints behave") {
-    val pairs = TextOps.simhashPairs(
-        docs(1L -> base, 2L -> nearDup, 3L -> unrelated), maxHamming = 16)
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    assert(pairs.contains((1L, 2L)))
-    assert(!pairs.contains((1L, 3L)))
-
-    // fingerprint-level sanity straight through the static fns
-    def fp(s: String): Long = {
-      import org.apache.spark.sql.catalyst.util.GenericArrayData
-      import org.apache.spark.unsafe.types.UTF8String
-      TextHashes.simhash64(new GenericArrayData(
-        s.split(" ").map(UTF8String.fromString): Array[Any]))
-    }
-    assert(TextHashes.hamming(fp(base), fp(nearDup)) <
-      TextHashes.hamming(fp(base), fp(unrelated)))
-  }
-
-  test("rollingHash: deterministic, order-sensitive, stable") {
-    import org.apache.spark.unsafe.types.UTF8String
-    val a = TextHashes.rollingHash(UTF8String.fromString("ab cd"))
-    val b = TextHashes.rollingHash(UTF8String.fromString("cd ab"))
-    assert(a != b)
-    assert(a == TextHashes.rollingHash(UTF8String.fromString("ab cd")))
-    assert(a >= 0L && a < (1L << 61) - 1)
   }
 
   test("tokenCounts / qualityCounts / langId shapes on a marker doc") {
@@ -424,125 +233,6 @@ class TextOpsSpec extends SparkSuite {
     // n_tokens reflects the REDACTED text (identity augment + PII-free
     // corpus here: token count equals the raw text's)
     assert(out.collect().forall(_.getAs[Int]("n_tokens") == 60))
-  }
-
-  test("connectedComponents: chains close transitively, components stay separate, iteration guard fires") {
-    import spark.implicits._
-    // chain 1-2-3-4 (needs 3 propagation rounds), triangle 10-11-12,
-    // detached pair 20-21
-    val pairs = Seq((1L, 2L), (2L, 3L), (3L, 4L), (10L, 11L), (11L, 12L),
-      (10L, 12L), (20L, 21L)).toDF("doc1", "doc2")
-    val got = TextOps.connectedComponents(pairs).collect()
-      .map(r => (r.getLong(0), r.getLong(1))).toMap
-    assert(got == Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 4L -> 1L,
-      10L -> 10L, 11L -> 10L, 12L -> 10L, 20L -> 20L, 21L -> 20L))
-    // a 12-node chain needs ~11 min-propagation rounds: a tiny bound must
-    // raise the convergence contract error, never return partial labels
-    val chain = (1L to 12L).sliding(2).map(s => (s.head, s(1))).toSeq
-      .toDF("doc1", "doc2")
-    assertThrows[IllegalArgumentException] {
-      TextOps.connectedComponents(chain, maxIters = 2).collect()
-    }
-  }
-
-  test("starContractComponents: diameter-proof — a 200-node chain converges in O(log n) rounds") {
-    import spark.implicits._
-    // min-label propagation needs ~199 rounds here; star contraction
-    // must close the whole chain onto node 0 within its default bound
-    val chain = (0L until 200L).sliding(2).map(s => (s.head, s(1))).toSeq
-      .toDF("doc1", "doc2")
-    val got = TextOps.starContractComponents(chain, maxIters = 16).collect()
-      .map(r => (r.getLong(0), r.getLong(1))).toMap
-    assert(got == (0L until 200L).map(_ -> 0L).toMap)
-  }
-
-  test("starContractComponents: differential vs driver-side union-find on a random graph; empty edges") {
-    import spark.implicits._
-    val rnd = new scala.util.Random(42)
-    val n = 300
-    val edges = Seq.fill(250)((rnd.nextInt(n).toLong, rnd.nextInt(n).toLong))
-      .filter { case (a, b) => a != b }
-    // reference labels: textbook union-find with path compression,
-    // re-rooted to the component minimum
-    val parent = Array.tabulate(n)(identity)
-    def find(x: Int): Int = { if (parent(x) != x) parent(x) = find(parent(x)); parent(x) }
-    edges.foreach { case (a, b) => parent(find(a.toInt)) = find(b.toInt) }
-    val minOf = (0 until n).groupBy(find).map { case (r, m) => r -> m.min }
-    val touched = edges.flatMap(e => Seq(e._1, e._2)).toSet
-    val want = touched.map(id => id -> minOf(find(id.toInt)).toLong).toMap
-    val got = TextOps.starContractComponents(edges.toDF("doc1", "doc2"))
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toMap
-    assert(got == want)
-    assert(TextOps.starContractComponents(
-      Seq.empty[(Long, Long)].toDF("doc1", "doc2")).collect().isEmpty)
-  }
-
-  test("starContractComponents keeps self-loop-only nodes — both engines return the same row SET") {
-    import spark.implicits._
-    // node 5's only edge is the self-loop: min-label keeps it (bidirected
-    // edges include (5,5)), so star contraction must too — a caller
-    // inner-joining on the labels must not see a different row set
-    // depending on which engine componentsAuto routed through
-    val pairs = Seq((5L, 5L), (1L, 2L)).toDF("doc1", "doc2")
-    val star = TextOps.starContractComponents(pairs).collect()
-      .map(r => (r.getLong(0), r.getLong(1))).toMap
-    val plain = TextOps.connectedComponents(pairs).collect()
-      .map(r => (r.getLong(0), r.getLong(1))).toMap
-    assert(star == Map(1L -> 1L, 2L -> 1L, 5L -> 5L))
-    assert(star == plain)
-  }
-
-  test("componentsAuto: routes a chain past the min-label diameter guard to star contraction") {
-    import spark.implicits._
-    val chain = (0L until 60L).sliding(2).map(s => (s.head, s(1))).toSeq
-      .toDF("doc1", "doc2")
-    // the plain engine must refuse (diameter 59 > maxIters 10)…
-    val raised = intercept[IllegalArgumentException] {
-      TextOps.connectedComponents(chain, maxIters = 10).collect()
-    }
-    assert(raised.getMessage.contains("not converged"))
-    // …and the auto router must land the identical component-min labels
-    val got = TextOps.componentsAuto(chain, maxIters = 10).collect()
-      .map(r => (r.getLong(0), r.getLong(1))).toMap
-    assert(got == (0L until 60L).map(_ -> 0L).toMap)
-    // on an easy graph both engines agree and the router takes the cheap path
-    val easy = Seq((5L, 9L), (9L, 7L), (1L, 2L)).toDF("doc1", "doc2")
-    val viaAuto = TextOps.componentsAuto(easy).collect()
-      .map(r => (r.getLong(0), r.getLong(1))).toSet
-    val viaPlain = TextOps.connectedComponents(easy).collect()
-      .map(r => (r.getLong(0), r.getLong(1))).toSet
-    assert(viaAuto == viaPlain)
-  }
-
-  test("dupClusters via starContractComponents matches the min-label engine") {
-    import spark.implicits._
-    val rows =
-      (1L to 10L).map(i => (i, (1 to 60).map(j => s"t${i}w$j").mkString(" "),
-        "en", "src0", 300L)) ++
-      Seq(11L, 12L).map(i => (i, (1 to 60).map(j => s"t1w$j").mkString(" "),
-        "en", "src0", 300L))
-    val d = rows.toDF("doc_id", "text", "lang", "source", "n_chars")
-    val got = TextOps.dupClusters(d,
-        components = TextOps.starContractComponents(_, _)).collect()
-      .map(r => (r.getLong(0), r.getLong(1))).toMap
-    val want = (1L to 10L).map(i => i -> i).toMap + (11L -> 1L) + (12L -> 1L)
-    assert(got == want)
-  }
-
-  test("dupClusters: ladder twins share the min-doc_id cluster, everything else is a singleton") {
-    import spark.implicits._
-    // docs 1..10 distinct; 11 and 12 exact copies of doc 1 — the ladder
-    // emits (1,11), (1,12), (11,12) and the component collapses to 1
-    val rows =
-      (1L to 10L).map(i => (i, (1 to 60).map(j => s"t${i}w$j").mkString(" "),
-        "en", "src0", 300L)) ++
-      Seq(11L, 12L).map(i => (i, (1 to 60).map(j => s"t1w$j").mkString(" "),
-        "en", "src0", 300L))
-    val d = rows.toDF("doc_id", "text", "lang", "source", "n_chars")
-    val got = TextOps.dupClusters(d).collect()
-      .map(r => (r.getLong(0), r.getLong(1))).toMap
-    val want = (1L to 10L).map(i => i -> i).toMap + (11L -> 1L) + (12L -> 1L)
-    assert(got == want)
   }
 
   test("dsirWeights: target-like docs outscore unrelated ones; short docs score (0,0); n_big = tokens-1") {
@@ -765,30 +455,6 @@ class TextOpsSpec extends SparkSuite {
       val got = TextOps.dupRunLength(docs(rows: _*)).collect()
         .map(r => r.getLong(0) -> ((r.getLong(1), r.getLong(2)))).toMap
       assert(got == model(rows), s"trial $trial rows=$rows")
-    }
-  }
-
-  test("clusterSplit: a near-dup family shares one split; singletons keep t4's own-id split") {
-    import spark.implicits._
-    val rows =
-      (1L to 10L).map(i => (i, (1 to 60).map(j => s"t${i}w$j").mkString(" "),
-        "en", "src0", 300L)) ++
-      Seq(11L, 12L).map(i => (i, (1 to 60).map(j => s"t1w$j").mkString(" "),
-        "en", "src0", 300L))
-    val d = rows.toDF("doc_id", "text", "lang", "source", "n_chars")
-    val got = TextOps.clusterSplit(d).collect()
-      .map(r => r.getLong(0) ->
-        ((r.getLong(1), r.getInt(2), r.getString(3)))).toMap
-    // the {1,11,12} family rides doc 1's label — identical bucket+split
-    assert(got(11L) == got(1L) && got(12L) == got(1L))
-    // singletons: label = own id, so bucket/split equal t4's doc-id rule
-    val t4 = TextOps.splitDocs(
-        d.filter(org.apache.spark.sql.functions.col("doc_id") <= 10L))
-      .collect()
-      .map(r => r.getAs[Long]("doc_id") ->
-        ((r.getAs[Int]("bucket"), r.getAs[String]("split")))).toMap
-    (2L to 10L).foreach { i =>
-      assert((got(i)._2, got(i)._3) == t4(i), s"doc $i")
     }
   }
 
@@ -1121,36 +787,6 @@ class TextOpsSpec extends SparkSuite {
       .select(graft.functions.dot_long(col("a"), col("b")).as("d"))
       .collect().map(r => if (r.isNullAt(0)) None else Some(r.getLong(0)))
     assert(rows.toSeq == Seq(Some(11L), None, None))
-  }
-
-  test("incrementalDedup: batch verdicts against corpus index + earlier batch members; keep-first across crawls") {
-    // corpus (crawl N): doc 1 = base, doc 2 = unrelated.
-    // batch (crawl N+1): 10 = exact copy of 1, 15 = near-dup of 1/10,
-    //                    20 = fresh content.
-    // Expected: 10 dup_of 1 (corpus wins over any batch partner),
-    // 15 dup_of 1 (min of verified partners {1, 10}), 20 survives.
-    // Corpus-internal pair (1 vs 2: none anyway) is NEVER re-examined.
-    val corpus = docs(1L -> base, 2L -> unrelated)
-    val batch = docs(10L -> base, 15L -> nearDup, 20L -> (1 to 60).map(i => s"q$i").mkString(" "))
-    val got = TextOps.incrementalDedup(corpus, batch).collect()
-      .map(r => r.getLong(0) ->
-        ((r.getBoolean(1), if (r.isNullAt(2)) -1L else r.getLong(2)))).toMap
-    assert(got == Map(10L -> ((true, 1L)), 15L -> ((true, 1L)),
-      20L -> ((false, -1L))))
-    // d22: probing the PERSISTED index artifact is row-identical; the
-    // second dedupIndexFor call LOADS (one artifact dir, no rebuild);
-    // a different corpus keys a NEW artifact
-    val dir = tempDir("dedup_index_spec").toString
-    val idx = TextOps.dedupIndexFor(corpus, dir)
-    val gotIdx = TextOps.incrementalDedupIndexed(corpus, idx, batch)
-      .collect()
-      .map(r => r.getLong(0) ->
-        ((r.getBoolean(1), if (r.isNullAt(2)) -1L else r.getLong(2)))).toMap
-    assert(gotIdx == got, s"indexed path diverged: $gotIdx vs $got")
-    TextOps.dedupIndexFor(corpus, dir)
-    assert(new java.io.File(dir).listFiles().count(_.isDirectory) == 1)
-    TextOps.dedupIndexFor(batch, dir)
-    assert(new java.io.File(dir).listFiles().count(_.isDirectory) == 2)
   }
 
   test("bm25TopK: exact integer kernel on a hand-computed corpus; tf saturation and idf ordering") {
@@ -1585,65 +1221,4 @@ class TextOpsSpec extends SparkSuite {
     assert(out(10L) == "w1 w2 w3 w4 w5 w6 javascript\nw7.")
   }
 
-  test("cdcDupChunks: content-defined boundaries dedup a shared suffix " +
-    "across different-length prefixes (differential vs a driver chunker)") {
-    import org.apache.spark.unsafe.types.UTF8String
-    val window = 8; val divisor = 16L
-    // deterministic pseudo-prose; divisor 16 → ~16-char expected chunks
-    val rnd = new scala.util.Random(11)
-    def para(n: Int): String = (1 to n).map(_ =>
-      ('a' + rnd.nextInt(26)).toChar.toString * (1 + rnd.nextInt(5)))
-      .mkString(" ")
-    val shared = para(80)
-    val t1 = "intro one " + shared
-    val t2 = "a different and much longer preamble " + shared
-    val t3 = para(80) // unrelated
-    // driver reference: same boundary rule (window-char polyHash31 of the
-    // window ENDING at 1-based position i, i in window..L-1, ≡ 0 mod
-    // divisor; tail always closes)
-    def chunksOf(t: String): Seq[String] = {
-      val ends = (window to t.length - 1).filter { i =>
-        TextHashes.polyHash31(
-          UTF8String.fromString(t.substring(i - window, i))) % divisor == 0
-      } :+ t.length
-      val starts = 1 +: ends.dropRight(1).map(_ + 1)
-      starts.zip(ends).map { case (s, e) => t.substring(s - 1, e) }
-    }
-    // invariant: chunks re-concatenate to the document
-    Seq(t1, t2, t3).foreach(t => assert(chunksOf(t).mkString == t))
-    def sha(s: String): String =
-      java.security.MessageDigest.getInstance("SHA-256")
-        .digest(s.getBytes("UTF-8")).map("%02x".format(_)).mkString
-    val want = Seq(1L -> t1, 2L -> t2, 3L -> t3)
-      .flatMap { case (id, t) => chunksOf(t).map(c => (id, c)) }
-      .groupBy(_._2)
-      .collect { case (c, occ) if occ.map(_._1).distinct.size >= 2 =>
-        (sha(c), c.length.toLong,
-          occ.map(_._1).distinct.size.toLong, occ.size.toLong) }.toSet
-    assert(want.nonEmpty, "shared suffix produced no dup chunks — weak fixture")
-    val got = TextOps.cdcDupChunks(docs(1L -> t1, 2L -> t2, 3L -> t3),
-        window, divisor)
-      .collect()
-      .map(r => (r.getString(0), r.getLong(1), r.getLong(2), r.getLong(3)))
-      .toSet
-    assert(got == want, s"got $got want $want")
-
-    // d21: the boilerplate gate over the same chunk relation — dup_chars
-    // = char mass in cross-doc chunks; the near-copies (mostly shared
-    // suffix) fail the <1/2 gate, the unrelated doc passes with 0
-    val dupChunks = want.map(_._1)
-    def dupChars(t: String): Long =
-      chunksOf(t).filter(c => dupChunks.contains(sha(c))).map(_.length.toLong).sum
-    val gate = TextOps.cdcBoilerplateGate(
-        docs(1L -> t1, 2L -> t2, 3L -> t3), window, divisor)
-      .collect()
-      .map(r => r.getLong(0) -> ((r.getLong(1), r.getLong(2), r.getBoolean(3))))
-      .toMap
-    Seq(1L -> t1, 2L -> t2, 3L -> t3).foreach { case (id, t) =>
-      assert(gate(id) == ((t.length.toLong, dupChars(t),
-        dupChars(t) * 2 < t.length.toLong)), s"doc $id: ${gate(id)}")
-    }
-    assert(!gate(1L)._3 && !gate(2L)._3, "near-copies should fail the gate")
-    assert(gate(3L)._3 && gate(3L)._2 == 0L, "unrelated doc keeps, 0 dup chars")
-  }
 }

@@ -23,9 +23,6 @@ object SparkEntry {
   /** t16's fixed probe query — terms of varying corpus frequency. */
   private val Bm25Terms = Seq("vector", "hash", "spark", "dup")
 
-  private val BpeModelDir =
-    sys.env.getOrElse("SPARK_GRAFT_BPE_MODEL_DIR", "target/bpe_model")
-
   /** Parsed+filtered transcript turns — the pipeline front half. text is
     * dropped so query outputs keep the oracle-matched column set.
     */
@@ -404,20 +401,12 @@ object SparkEntry {
     // curation-stack search primitive); TakeOrderedAndProject top-k
     "t16_bm25" -> ((s, dir) =>
       operators.TextOps.bm25TopK(t(s, dir, "documents"), Bm25Terms)),
-    "t1_lang_id" -> ((s, dir) =>
-      operators.TextOps.langId(t(s, dir, "documents"))),
-    "t2_quality_counts" -> ((s, dir) =>
-      operators.TextOps.qualityCounts(t(s, dir, "documents"))),
-    "t3_token_count" -> ((s, dir) =>
-      operators.TextOps.tokenCounts(t(s, dir, "documents"))),
     "t4_split" -> ((s, dir) =>
       operators.TextOps.deterministicSplit(t(s, dir, "documents"))),
     "t5_chunks" -> ((s, dir) =>
       operators.TextOps.chunkTokens(t(s, dir, "documents"))),
     "t7_source_filter" -> ((s, dir) =>
       operators.TextOps.sourceFilter(t(s, dir, "documents"))),
-    "t8_rep_signal" -> ((s, dir) =>
-      operators.TextOps.repetitionSignal(t(s, dir, "documents"))),
     // mixing config for the driver query: even-numbered sources kept in
     // full, odd-numbered downsampled to 25% (mirrored in the oracle SQL)
     "t9_data_mix" -> ((s, dir) =>
@@ -436,13 +425,6 @@ object SparkEntry {
     // attribution in a dense (doc x suite) grid
     "t33_multisuite_decon" -> ((s, dir) =>
       operators.TextOps.multiSuiteDecon(t(s, dir, "documents"))),
-    // C4 cleaning pass (Raffel et al. 2020 §2.2) over the deterministic
-    // line-structured rendering (synthesizeLines — flat synthetic docs
-    // have no lines/punctuation, so the generator is what gives the line
-    // gate test power)
-    "t34_c4_rules" -> ((s, dir) =>
-      operators.TextOps.c4Rules(
-        operators.TextOps.synthesizeLines(t(s, dir, "documents")))),
     // FUZZY decontamination: MinHash-banded train-vs-eval collisions,
     // exact-Jaccard ≥ 1/2 verified on candidates only — length-robust
     // (fraction verdict, not t12's absolute hit count) and attributing
@@ -460,51 +442,6 @@ object SparkEntry {
     // longest-duplicated-substring
     "d15_dup_run" -> ((s, dir) =>
       operators.TextOps.dupRunLength(t(s, dir, "documents"))),
-    // bigram LM quality (CCNet/KenLM posture): quantized conditional
-    // nll under the corpus bigram model — bigrams shuffle as longs
-    "t25_bigram_lm" -> ((s, dir) =>
-      operators.TextOps.bigramLmQuality(t(s, dir, "documents"))),
-    // CCNet terciles under the BIGRAM LM (perplexity, not unigram
-    // rarity): head = LOW-nll tercile — flipped comparisons vs t21
-    "t31_perplexity_buckets" -> ((s, dir) =>
-      operators.TextOps.perplexityBuckets(t(s, dir, "documents"))),
-    // min-count-pruned bigram LM: the model tables keep only the heavy
-    // head (count >= 3) and BROADCAST — the doc-bigram explode is never
-    // shuffled (vs t25's two shuffle joins); pruned entries score as
-    // unseen. The production form at corpus scale, where the unpruned
-    // bigram table is the largest text-tier exchange.
-    "t29_bigram_pruned" -> ((s, dir) =>
-      operators.TextOps.bigramLmQuality(t(s, dir, "documents"),
-        minCount = 3L)),
-    // trained BPE (Sennrich 2016): 12 merges learned on the distinct-word
-    // count table (one vocab-sized aggregate + 1-row collect per round),
-    // then applied in-row per doc — the real-tokenizer upgrade of t3's
-    // regex approximation; the oracle unrolls the same merge rounds
-    "t26_bpe_tokens" -> ((s, dir) => {
-      val d = t(s, dir, "documents")
-      operators.TextOps.bpeTokenCounts(d,
-        operators.TextOps.bpeTrainMerges(d))
-    }),
-    // tokenizer-fertility gate: trained-BPE tokens per 1000 chars, kept
-    // within ±25% of the corpus mean — the tokenizer-fit junk screen
-    // (base64/wrong-script text explodes, degenerate repetition
-    // collapses); corpus-relative so no tokenizer-specific constant
-    "t36_bpe_fertility" -> ((s, dir) => {
-      val d = t(s, dir, "documents")
-      operators.TextOps.bpeFertilityGate(d,
-        operators.TextOps.bpeTrainMerges(d))
-    }),
-    // the same gate served from the PERSISTED tokenizer artifact with
-    // ZERO training jobs (train-once/serve-many): first call trains +
-    // persists merges + the corpus-mean fertility, every later call (and
-    // RUN) loads ~KBs.
-    // Oracle is t36's verbatim — the artifact reconstructs the same
-    // deterministic merges, so model-served stays hash-exact
-    "t37_fertility_model" -> ((s, dir) => {
-      val d = t(s, dir, "documents")
-      val m = operators.TextOps.bpeModelFor(d, BpeModelDir)
-      operators.TextOps.bpeFertilityScoreInRow(d, m.merges, m.meanFertX1k)
-    }),
     // KMV distinct-count sketch: the ESTIMATE is integer-exact
     // cross-engine, so even the approximation is hash-checked
     "d9_kmv_distinct" -> ((s, dir) =>
@@ -522,80 +459,17 @@ object SparkEntry {
     // fully-kept and the boundary path carry rows at driver scale
     "t18_token_budget" -> ((s, dir) =>
       operators.TextOps.tokenBudgetSample(t(s, dir, "documents"))),
-    // t18's budget measured in TRAINED-tokenizer tokens (the t26
-    // artifact consumed downstream): budget 3000 ≈ the same kept
-    // fraction as t18's 600 whitespace tokens, since 12-merge BPE
-    // splits each word into ~4-5 surviving symbols
-    "t30_bpe_budget" -> ((s, dir) =>
-      operators.TextOps.bpeBudgetSample(t(s, dir, "documents"))),
-    // t30 served from the PERSISTED tokenizer artifact (zero training
-    // jobs — the second consumer of the t37 model, proving the artifact
-    // is a shared asset, not a per-query convenience); t30's oracle
-    // verbatim since the artifact reconstructs the same merges
-    "t38_budget_model" -> ((s, dir) => {
-      val d = t(s, dir, "documents")
-      val m = operators.TextOps.bpeModelFor(d, BpeModelDir)
-      operators.TextOps.tokenBudgetSample(d, budget = 3000L,
-        tokenCount = operators.TextOps.bpeTokenCountCol(m.merges))
-    }),
-    // Gopher rule filter over a synthetically-structured corpus (t6
-    // pattern): deterministic bullet/ellipsis/symbol augmentations keyed
-    // on doc_id make every rule non-vacuous (the %97 docs are bullet-
-    // heavy enough to FAIL r_bullet)
-    "t19_gopher_rules" -> ((s, dir) =>
-      operators.TextOps.gopherRules(t(s, dir, "documents").withColumn("text",
-        concat(col("text"),
-          when(col("doc_id") % 7 === 0,
-            lit("\n- bullet item\n- second bullet")).otherwise(lit("")),
-          when(col("doc_id") % 97 === 0,
-            lit("\n- filler bullet" * 9)).otherwise(lit("")),
-          when(col("doc_id") % 11 === 0,
-            lit("\nto be continued...")).otherwise(lit("")),
-          when(col("doc_id") % 5 === 0,
-            lit(" ## 123 456 789 #")).otherwise(lit("")))))),
-    // Gopher REPETITION suite (Table A1's other half): duplicate-line/
-    // paragraph fractions + top-2/3/4-gram char shares, pure per-row —
-    // augmentations keyed on doc_id (%13 dup lines, %17 dup paragraphs,
-    // %19 a spam-gram run) make every rule non-vacuous
-    "t27_gopher_repetition" -> ((s, dir) =>
-      operators.TextOps.gopherRepetition(t(s, dir, "documents")
-        .withColumn("text", concat(col("text"),
-          when(col("doc_id") % 13 === 0,
-            lit("\nrepeat line one" * 3)).otherwise(lit("")),
-          when(col("doc_id") % 17 === 0,
-            lit("\n\npara block alpha" * 2)).otherwise(lit("")),
-          when(col("doc_id") % 19 === 0,
-            lit(" spam" * 6)).otherwise(lit("")))))),
     // deterministic global training-order shuffle: global rank with no
     // global sort (range-bucket histogram + driver cumsum offsets +
     // bounded per-bucket windows)
     "t20_global_shuffle" -> ((s, dir) =>
       operators.TextOps.globalShuffle(t(s, dir, "documents"))),
-    // CCNet head/middle/tail terciles of the t14 quality score, per
-    // language — histogram-derived discrete thresholds, no ntile window
-    "t21_quality_buckets" -> ((s, dir) =>
-      operators.TextOps.qualityBuckets(t(s, dir, "documents"))),
     // mixture resampling at explicit epoch weights: src0 2.5 epochs,
     // src1 1.7, src2 0.5 (downsample), src3 excluded, others 1.0
     "t22_upsample" -> ((s, dir) =>
       operators.TextOps.upsample(t(s, dir, "documents"),
         Map("src0" -> 2500L, "src1" -> 1700L, "src2" -> 500L,
           "src3" -> 0L))),
-    // unigram LM quality: top-V vocab (TakeOrdered) broadcast, per-doc
-    // integer-quantized logprob — even the score is hash-checked
-    "t14_unigram_quality" -> ((s, dir) =>
-      operators.TextOps.unigramQuality(t(s, dir, "documents"))),
-    // DSIR importance weights: hashed-bigram target-vs-raw likelihood
-    // ratio, integer-quantized (t14's length(bin(·)) log₂) so the
-    // per-doc weight sum is hash-exact cross-engine; target slice =
-    // source 'src0' standing in for the high-quality reference corpus
-    "t17_dsir_weights" -> ((s, dir) =>
-      operators.TextOps.dsirWeights(t(s, dir, "documents"))),
-    // supervised NB quality classifier (fastText posture, t17's
-    // supervised sibling): src0/src1 stand in for the trusted slice;
-    // integer log₂ log-odds keep even the verdict hash-exact
-    "t28_nb_quality" -> ((s, dir) =>
-      operators.TextOps.nbQuality(t(s, dir, "documents"))),
     // C4-style segment-level dedup: corpus-wide keep-first on 10-token
     // segments (min-struct aggregate, no window), docs reassembled
     "t15_segment_dedup" -> ((s, dir) =>
@@ -998,18 +872,9 @@ object SparkEntry {
     "t10_seq_pack" -> TextOracles.seqPackSql(),
     "t12_decontaminate" -> TextOracles.decontaminateSql(),
     "t33_multisuite_decon" -> TextOracles.multiSuiteDeconSql(),
-    "t34_c4_rules" -> TextOracles.c4RulesSql,
     "d14_fuzzy_decon" -> TextOracles.fuzzyDeconSql(),
     "t23_ngram_coverage" -> TextOracles.ngramCoverageSql(),
     "d15_dup_run" -> TextOracles.dupRunSql(),
-    "t25_bigram_lm" -> TextOracles.bigramLmSql(),
-    "t31_perplexity_buckets" -> TextOracles.perplexityBucketsSql(),
-    "t29_bigram_pruned" -> TextOracles.bigramLmSql(minCount = 3L),
-    "t26_bpe_tokens" -> TextOracles.bpeSql(),
-    "t36_bpe_fertility" -> TextOracles.bpeFertilitySql(),
-    // the artifact reconstructs the same deterministic merges + mean,
-    // so the model-served gate shares t36's oracle verbatim
-    "t37_fertility_model" -> TextOracles.bpeFertilitySql(),
     "q25_gap_fill" -> """
       SELECT event_id, user_id, ts,
         CAST(last_value(v IGNORE NULLS) OVER (PARTITION BY user_id
@@ -1025,21 +890,12 @@ object SparkEntry {
     // the oracle states the per-source cumulative-window semantics
     // directly; the operator reaches the same row set bucket-wise
     "t18_token_budget" -> TextOracles.tokenBudgetSql(),
-    "t30_bpe_budget" -> TextOracles.bpeBudgetSql(),
-    "t38_budget_model" -> TextOracles.bpeBudgetSql(),
-    "t19_gopher_rules" -> TextOracles.gopherRulesSql,
-    "t27_gopher_repetition" -> TextOracles.gopherRepetitionSql,
     "t20_global_shuffle" -> TextOracles.globalShuffleSql,
-    "t21_quality_buckets" -> TextOracles.qualityBucketsSql(),
     "t22_upsample" -> TextOracles.upsampleSql(Seq("src0" -> 2500L,
       "src1" -> 1700L, "src2" -> 500L, "src3" -> 0L)),
-    "t14_unigram_quality" -> TextOracles.unigramQualitySql(),
-    "t17_dsir_weights" -> TextOracles.dsirWeightsSql(),
-    "t28_nb_quality" -> TextOracles.nbQualitySql(),
     "t15_segment_dedup" -> TextOracles.segmentDedupSql(),
     "d10_source_overlap" -> TextOracles.sourceOverlapSql(),
     "t7_source_filter" -> TextOracles.sourceGateSql(),
-    "t8_rep_signal" -> TextOracles.repSignalSql,
     "d2_dedup_minhash" -> TextOracles.minhashCandidatesSql(),
     "d7_neardup_ladder" -> TextOracles.nearDupLadderSql(),
     "t16_bm25" -> TextOracles.bm25Sql(Bm25Terms),
@@ -1067,38 +923,5 @@ object SparkEntry {
       JOIN sizes s1 ON s1.doc_id = doc1
       JOIN sizes s2 ON s2.doc_id = doc2
       WHERE inter * 10 >= (s1.n_sh + s2.n_sh - inter) * 7""",
-    "t1_lang_id" -> """
-      WITH c AS (
-        SELECT doc_id, lang,
-          len(list_filter(string_split(text,' '), x -> x IN ('the','and','of'))) AS c_en,
-          len(list_filter(string_split(text,' '), x -> x IN ('der','die','das','und'))) AS c_de,
-          len(list_filter(string_split(text,' '), x -> x IN ('le','la','les','et'))) AS c_fr,
-          len(list_filter(string_split(text,' '), x -> x IN ('el','los','las','y'))) AS c_es,
-          len(list_filter(string_split(text,' '), x -> x IN ('de','shi','le'))) AS c_zh
-        FROM documents)
-      SELECT doc_id, lang,
-        CASE WHEN m = 0 THEN 'und'
-             WHEN c_en = m THEN 'en' WHEN c_de = m THEN 'de'
-             WHEN c_fr = m THEN 'fr' WHEN c_es = m THEN 'es'
-             ELSE 'zh' END AS guess,
-        CAST(m AS INT) AS marker_hits
-      FROM (SELECT *, greatest(c_en, c_de, c_fr, c_es, c_zh) AS m FROM c)""",
-    "t2_quality_counts" -> """
-      SELECT doc_id,
-        CAST(len(string_split(text, ' ')) AS INT) AS n_tokens,
-        CAST(len(list_filter(string_split(text, ' '),
-          x -> x IN ('the','a','of','and','to','in'))) AS INT) AS n_stop,
-        CAST(length(text) AS INT) AS n_chars,
-        CAST(length(regexp_replace(text, '[a-z ]', '', 'g')) AS INT) AS n_nonalpha
-      FROM documents""",
-    "t3_token_count" -> """
-      SELECT doc_id,
-        CAST(len(string_split(text, ' ')) AS INT) AS ws_tokens,
-        CAST(len(regexp_extract_all(text, '[a-z0-9]+')) AS INT) AS word_tokens,
-        CAST(len(regexp_extract_all(text,
-          '''(?:s|t|re|ve|m|ll|d)| ?[a-zA-Z]+| ?[0-9]+| ?[^a-zA-Z0-9 ]+'))
-          AS INT) AS bpe_tokens,
-        CAST(length(text) AS INT) AS n_chars
-      FROM documents""",
   )
 }

@@ -99,7 +99,8 @@ WHERE inter * 10 >= (s1.n_sh + s2.n_sh - inter) * 7"""
 
   /** t16: integer-exact BM25 top-k — mirror of TextOps.bm25TopK (same
     * rational parameters k1 = 6/5, b = 3/4, same scaled integer kernel,
-    * same t14-style log₂ idf quantization; `//` mirrors Spark's `div`).
+    * same length(bin(·)) integer-log₂ idf quantization; `//` mirrors
+    * Spark's `div`).
     * The corpus scalars (N, Σdl) are subqueries where the Spark side
     * collects them once at build — same values, same arithmetic.
     */
@@ -179,22 +180,6 @@ WHERE ${ph("'mix|' || CAST(doc_id AS STRING)")} % 100 <
 SELECT d.doc_id, d.source
 FROM documents d JOIN s USING (source)
 WHERE s.sum_chars >= s.n_docs * $minAvgChars"""
-
-  /** t8: within-doc repetition signal — total vs distinct word 3-grams
-    * (same window construction as the shingle CTEs; the distinct-gram
-    * lambda is computed ONCE in a CTE so the gram definition lives in one
-    * place).
-    */
-  def repSignalSql: String =
-    s"""WITH toks AS (SELECT doc_id, string_split(text, ' ') AS t FROM documents),
-g AS (
-  SELECT doc_id,
-    CAST(greatest(len(t) - 2, 0) AS INT) AS n_grams,
-    CAST(len(list_distinct(list_transform(
-      range(1, greatest(len(t) - 2, 0) + 1),
-      i -> t[i] || ' ' || t[i+1] || ' ' || t[i+2]))) AS INT) AS n_distinct
-  FROM toks)
-SELECT doc_id, n_grams, n_distinct, n_grams - n_distinct AS n_dup FROM g"""
 
   /** t10: greedy sequence packing — running token total per
     * (source, shard), bin = exact integer floor division by the budget.
@@ -624,141 +609,6 @@ s AS (
 SELECT doc_id, source, n_tok FROM s WHERE cb < $budget"""
   }
 
-  /** t19: Gopher-style rule filter — mirror of TextOps.gopherRules over
-    * the driver query's synthetically-structured corpus (bullet /
-    * ellipsis / symbol augmentations keyed on doc_id so every rule is
-    * non-vacuous; the %97 docs are bullet-HEAVY to fail r_bullet). All
-    * ratio rules cross-multiplied to integers.
-    */
-  def gopherRulesSql: String =
-    s"""WITH aug AS (
-  SELECT doc_id,
-    text ||
-    CASE WHEN doc_id % 7 = 0 THEN chr(10) || '- bullet item' || chr(10) || '- second bullet' ELSE '' END ||
-    CASE WHEN doc_id % 97 = 0 THEN repeat(chr(10) || '- filler bullet', 9) ELSE '' END ||
-    CASE WHEN doc_id % 11 = 0 THEN chr(10) || 'to be continued...' ELSE '' END ||
-    CASE WHEN doc_id % 5 = 0 THEN ' ## 123 456 789 #' ELSE '' END AS text
-  FROM documents),
-f AS (
-  SELECT doc_id,
-    string_split(text, ' ') AS w,
-    string_split(text, chr(10)) AS l,
-    length(text) - length(replace(text, '#', '')) AS n_hash,
-    (length(text) - length(replace(text, '...', ''))) // 3 AS n_dots
-  FROM aug),
-m AS (
-  SELECT doc_id,
-    CAST(len(w) AS BIGINT) AS n_words,
-    CAST(len(l) AS BIGINT) AS n_lines,
-    CAST(list_sum(list_transform(w, x -> length(x))) AS BIGINT) AS t_wlen,
-    CAST(n_hash + n_dots AS BIGINT) AS n_sym,
-    CAST(len(list_filter(l, x -> regexp_matches(x, '^- '))) AS BIGINT) AS n_bullet,
-    CAST(len(list_filter(l, x -> regexp_matches(x, '\\.\\.\\.$$'))) AS BIGINT) AS n_ell,
-    CAST(len(list_filter(w, x -> regexp_matches(x, '[a-z]'))) AS BIGINT) AS n_alpha,
-    CAST(len(list_filter(['the','be','to','of','and','that','have','with'],
-      s -> list_contains(w, s))) AS BIGINT) AS n_stop_kinds
-  FROM f)
-SELECT doc_id, n_words, n_lines,
-  (n_words BETWEEN 50 AND 100000) AS r_wordcount,
-  (3 * n_words <= t_wlen AND t_wlen <= 10 * n_words) AS r_meanlen,
-  (10 * n_sym < n_words) AS r_symbol,
-  (10 * n_bullet < 9 * n_lines) AS r_bullet,
-  (10 * n_ell < 3 * n_lines) AS r_ellipsis,
-  (5 * n_alpha >= 4 * n_words) AS r_alpha,
-  (n_stop_kinds >= 2) AS r_stop,
-  ((n_words BETWEEN 50 AND 100000)
-    AND (3 * n_words <= t_wlen AND t_wlen <= 10 * n_words)
-    AND (10 * n_sym < n_words)
-    AND (10 * n_bullet < 9 * n_lines)
-    AND (10 * n_ell < 3 * n_lines)
-    AND (5 * n_alpha >= 4 * n_words)
-    AND (n_stop_kinds >= 2)) AS pass
-FROM m"""
-
-  /** t27: Gopher repetition suite — mirror of TextOps.gopherRepetition
-    * over the driver query's repetition-augmented corpus (duplicate
-    * lines / paragraphs / n-gram runs keyed on doc_id so every rule is
-    * non-vacuous). Duplicate rows are occurrences beyond the first of a
-    * distinct value; duplicate chars charge those repeats' lengths; the
-    * top-n-gram char share is max-count × gram length with the count
-    * tie broken toward the longest tied gram — definitions shared
-    * symbol-for-symbol with the Spark op. All shares cross-multiplied
-    * to integer comparisons at the paper's thresholds.
-    */
-  def gopherRepetitionSql: String = {
-    // top-n-gram char cover RELATIONALLY (unnest → per-(doc, gram)
-    // count → argmax by (count DESC, length DESC) via row_number) — the
-    // idiomatic DuckDB form and O(L log L), mirroring the Spark op's
-    // sorted-scan; the O(L²) per-distinct list_filter form is minutes
-    // per long document in either engine
-    def topCte(n: Int) = {
-      val upper = if (n == 2) "len(t)" else s"len(t) - ${n - 2}"
-      s"""gr$n AS (
-  SELECT doc_id, unnest(list_transform(range(1, greatest($upper, 1)),
-    i -> array_to_string(t[i:i+${n - 1}], ' '))) AS g
-  FROM f),
-top$n AS (
-  SELECT doc_id, CAST(c * length(g) AS BIGINT) AS top${n}_chars
-  FROM (
-    SELECT doc_id, g, count(*) AS c,
-      row_number() OVER (PARTITION BY doc_id
-        ORDER BY count(*) DESC, length(g) DESC) AS rn
-    FROM gr$n GROUP BY doc_id, g)
-  WHERE rn = 1)"""
-    }
-    // dup chars = Σ len(all) − Σ len(distinct) — O(L), identical to
-    // Σ_distinct (cnt−1)·len
-    def dupChars(a: String) =
-      s"""CAST(COALESCE(list_sum(list_transform($a, x -> length(x))), 0)
-      - COALESCE(list_sum(list_transform(list_distinct($a), x -> length(x))), 0)
-      AS BIGINT)"""
-    s"""WITH aug AS (
-  SELECT doc_id,
-    text ||
-    CASE WHEN doc_id % 13 = 0 THEN repeat(chr(10) || 'repeat line one', 3) ELSE '' END ||
-    CASE WHEN doc_id % 17 = 0 THEN repeat(chr(10) || chr(10) || 'para block alpha', 2) ELSE '' END ||
-    CASE WHEN doc_id % 19 = 0 THEN repeat(' spam', 6) ELSE '' END AS text
-  FROM documents),
-f AS (
-  SELECT doc_id, CAST(length(text) AS BIGINT) AS n_chars,
-    string_split(text, chr(10)) AS lns,
-    string_split(text, chr(10) || chr(10)) AS prs,
-    string_split(text, ' ') AS t
-  FROM aug),
-${topCte(2)},
-${topCte(3)},
-${topCte(4)},
-d AS (
-  SELECT f.doc_id, n_chars,
-    CAST(len(lns) AS BIGINT) AS n_lines,
-    CAST(len(lns) - len(list_distinct(lns)) AS BIGINT) AS dup_lines,
-    ${dupChars("lns")} AS dup_line_chars,
-    CAST(len(prs) AS BIGINT) AS n_paras,
-    CAST(len(prs) - len(list_distinct(prs)) AS BIGINT) AS dup_paras,
-    ${dupChars("prs")} AS dup_para_chars,
-    COALESCE(top2.top2_chars, 0) AS top2_chars,
-    COALESCE(top3.top3_chars, 0) AS top3_chars,
-    COALESCE(top4.top4_chars, 0) AS top4_chars
-  FROM f
-  LEFT JOIN top2 ON top2.doc_id = f.doc_id
-  LEFT JOIN top3 ON top3.doc_id = f.doc_id
-  LEFT JOIN top4 ON top4.doc_id = f.doc_id)
-SELECT doc_id, n_chars, n_lines, dup_lines, dup_line_chars,
-  n_paras, dup_paras, dup_para_chars, top2_chars, top3_chars, top4_chars,
-  (10 * dup_lines <= 3 * n_lines) AS r_dup_line,
-  (10 * dup_paras <= 3 * n_paras) AS r_dup_para,
-  (5 * dup_line_chars <= n_chars) AS r_dup_line_chars,
-  (5 * dup_para_chars <= n_chars) AS r_dup_para_chars,
-  (5 * top2_chars <= n_chars) AS r_top2,
-  (50 * top3_chars <= 9 * n_chars) AS r_top3,
-  (25 * top4_chars <= 4 * n_chars) AS r_top4,
-  ((10 * dup_lines <= 3 * n_lines) AND (10 * dup_paras <= 3 * n_paras)
-    AND (5 * dup_line_chars <= n_chars) AND (5 * dup_para_chars <= n_chars)
-    AND (5 * top2_chars <= n_chars) AND (50 * top3_chars <= 9 * n_chars)
-    AND (25 * top4_chars <= 4 * n_chars)) AS pass
-FROM d"""
-  }
-
   /** t20: deterministic global training-order shuffle — the oracle
     * states the semantics directly (row_number over the global
     * (hash, doc_id) order); the Spark operator reaches the identical
@@ -806,243 +656,6 @@ SELECT doc_id, count(*) AS n_segs,
 FROM ranked GROUP BY doc_id"""
   }
 
-  /** t14: unigram LM quality — mirror of TextOps.unigramQuality. The
-    * per-token logprob is length(bin(cnt)) (integer ⌊log₂⌋+1, identical
-    * in both engines); DuckDB's integer sum widens to HUGEINT so it is
-    * CAST back to BIGINT; `div`/`//` agree on positive operands.
-    */
-  def unigramQualitySql(vocabSize: Int = 256): String =
-    s"""WITH toks AS (
-  SELECT doc_id, unnest(string_split(text, ' ')) AS tok FROM documents),
-freq AS (SELECT tok, count(*) AS cnt FROM toks GROUP BY tok),
-vocab AS (
-  SELECT tok, cnt FROM freq
-  ORDER BY cnt DESC, ${ph("tok")} ASC, tok ASC LIMIT $vocabSize),
-scored AS (
-  SELECT t.doc_id, count(*) AS n_tok, count(v.cnt) AS n_invocab,
-    CAST(COALESCE(sum(length(bin(v.cnt))), 0) AS BIGINT) AS logprob_sum
-  FROM toks t LEFT JOIN vocab v USING (tok)
-  GROUP BY t.doc_id)
-SELECT doc_id, n_tok, n_invocab, logprob_sum,
-  (100 * logprob_sum) // n_tok AS score_x100
-FROM scored"""
-
-  /** t25/t29: bigram LM quality — mirror of TextOps.bigramLmQuality:
-    * hashed bigram/prefix counts with multiplicity, quantized conditional
-    * nll q(c(w1·)) − q(c(w1 w2)) summed per doc. Each term clamps at 0
-    * (a hash collision could invert c1/c2 and a negative sum would expose
-    * `div` vs `//` rounding — ADVICE r4); `minCount` > 1 prunes the model
-    * tables and scores pruned entries as unseen (count 1), matching the
-    * Spark op's broadcast-pruned form.
-    */
-  /** The bigram-LM CTE chain ending in `bscored` (doc_id, n_bg,
-    * nll_sum) — shared by t25/t29's score dump and t31's tercile
-    * consumer.
-    */
-  private def bigramCtes(minCount: Long): String = {
-    val (joins, c2e, c1e) =
-      if (minCount == 1L)
-        ("JOIN bc2 USING (f2) JOIN bc1 USING (f1)", "c2", "c1")
-      else
-        (s"""LEFT JOIN (SELECT * FROM bc2 WHERE c2 >= $minCount) p2 USING (f2)
-  LEFT JOIN (SELECT * FROM bc1 WHERE c1 >= $minCount) p1 USING (f1)""",
-          "COALESCE(c2, 1)", "COALESCE(c1, 1)")
-    s"""big AS (
-  SELECT doc_id, unnest(list_transform(range(1, greatest(len(t), 1)),
-    i -> t[i] || ' ' || t[i+1])) AS bg
-  FROM (SELECT doc_id, string_split(text, ' ') AS t FROM documents)),
-bf AS (
-  SELECT doc_id, ${ph("bg")} AS f2,
-    ${ph("split_part(bg, ' ', 1)")} AS f1
-  FROM big),
-bc2 AS (SELECT f2, count(*) AS c2 FROM bf GROUP BY f2),
-bc1 AS (SELECT f1, count(*) AS c1 FROM bf GROUP BY f1),
-bscored AS (
-  SELECT doc_id, count(*) AS n_bg,
-    CAST(sum(greatest(0, length(bin($c1e)) - length(bin($c2e))))
-      AS BIGINT) AS nll_sum
-  FROM bf $joins
-  GROUP BY doc_id)"""
-  }
-
-  def bigramLmSql(minCount: Long = 1L): String =
-    s"""WITH ${bigramCtes(minCount)}
-SELECT doc_id, n_bg, nll_sum, (100 * nll_sum) // n_bg AS nll_x100
-FROM bscored"""
-
-  /** t31: CCNet terciles under the bigram LM — per-language thresholds
-    * from a rank window over the nll (ASC: lower nll = more fluent =
-    * head; the comparisons are flipped vs t21's score ordering).
-    */
-  def perplexityBucketsSql(minCount: Long = 1L): String =
-    s"""WITH ${bigramCtes(minCount)},
-lmscored AS (
-  SELECT d.doc_id, d.lang, (100 * b.nll_sum) // b.n_bg AS nll_x100
-  FROM documents d JOIN bscored b ON b.doc_id = d.doc_id),
-ranked AS (
-  SELECT *, row_number() OVER (PARTITION BY lang
-      ORDER BY nll_x100 ASC, doc_id) AS rn,
-    count(*) OVER (PARTITION BY lang) AS n
-  FROM lmscored),
-th AS (
-  SELECT lang,
-    max(CASE WHEN rn = (n + 2) // 3 THEN nll_x100 END) AS t_head,
-    max(CASE WHEN rn = (2 * n + 2) // 3 THEN nll_x100 END) AS t_mid
-  FROM ranked GROUP BY lang)
-SELECT doc_id, s.lang, nll_x100,
-  CASE WHEN nll_x100 <= t_head THEN 'head'
-       WHEN nll_x100 <= t_mid THEN 'middle'
-       ELSE 'tail' END AS bucket
-FROM lmscored s JOIN th ON s.lang = th.lang"""
-
-  /** t26: trained-BPE token counts — the unrolled mirror of
-    * TextOps.bpeTrainMerges + bpeTokenCounts. Round t: pair counts over
-    * the round-(t-1) representations of the distinct-word table (pairs
-    * tab-joined through one unnest, then split back), the top pair by
-    * (count DESC, a, b), and one replace() applying it. The pipe-wrapped
-    * symbol encoding makes replace() a correct greedy BPE merge — see
-    * the Spark op's bpeWrap scaladoc for the double-delimiter argument.
-    * Final: per-doc symbol counts joined back through the word explode
-    * (LEFT JOIN so wordless docs score 0, like the in-row aggregate).
-    */
-  /** The trained-BPE CTE chain (bw word explode, wc vocab counts, r0
-    * char representations, then per-merge-round pair-count/argmax/replace
-    * CTEs up to r`nMerges`) — shared by t26's count dump and t30's
-    * budget consumer.
-    */
-  // Every round CTE is MATERIALIZED: DuckDB inlines CTEs by default and
-  // each round references its predecessor TWICE (pair counts + replace),
-  // so inlining re-evaluates r_{t-1} per reference — 2^nMerges copies of
-  // the round-0 work (measured: the 12-merge chain fell from ~5.5 min to
-  // seconds once pinned). Spark's side has no analog problem (each round
-  // is a driver-collected 1-row aggregate over a cached count table).
-  private def bpeCtes(nMerges: Int): String = {
-    val sb = new StringBuilder(s"""bw AS MATERIALIZED (
-  SELECT doc_id, unnest(regexp_extract_all(text, '[a-z0-9]+')) AS w
-  FROM documents),
-wc AS (SELECT w, count(*) AS cnt FROM bw GROUP BY w),
-r0 AS MATERIALIZED (
-  SELECT w, cnt, regexp_replace(w, '(.)', '|\\1|', 'g') AS repr FROM wc)""")
-    for (t <- 1 to nMerges) {
-      val prev = s"r${t - 1}"
-      sb.append(s""",
-p$t AS (
-  SELECT split_part(pr, chr(9), 1) AS a, split_part(pr, chr(9), 2) AS b,
-    CAST(sum(cnt) AS BIGINT) AS c
-  FROM (
-    SELECT cnt, unnest(list_transform(range(1, len(syms)),
-      i -> syms[i] || chr(9) || syms[i+1])) AS pr
-    FROM (SELECT cnt, string_split(trim(repr, '|'), '||') AS syms
-          FROM $prev))
-  GROUP BY a, b),
-m$t AS (SELECT a, b FROM p$t ORDER BY c DESC, a, b LIMIT 1),
-r$t AS MATERIALIZED (
-  SELECT w, cnt,
-    replace(repr, '|' || a || '||' || b || '|', '|' || a || b || '|') AS repr
-  FROM $prev CROSS JOIN m$t)""")
-    }
-    sb.toString
-  }
-
-  def bpeSql(nMerges: Int = 12): String =
-    s"""WITH ${bpeCtes(nMerges)}
-SELECT d.doc_id, COALESCE(t.n_words, 0) AS n_words,
-  COALESCE(t.bpe_tokens, 0) AS bpe_tokens
-FROM documents d LEFT JOIN (
-  SELECT doc_id, count(*) AS n_words,
-    CAST(sum((length(repr) - length(replace(repr, '|', ''))) // 2)
-      AS BIGINT) AS bpe_tokens
-  FROM bw JOIN r$nMerges USING (w) GROUP BY doc_id) t USING (doc_id)"""
-
-  /** t36: tokenizer-fertility gate — t26's per-doc BPE token replay per
-    * 1000 chars, kept iff within ±25% of the corpus mean fertility
-    * (mirrors TextOps.bpeFertilityGate's cross-multiplied integers).
-    */
-  def bpeFertilitySql(nMerges: Int = 12): String =
-    // sc is MATERIALIZED: DuckDB inlines CTEs by default, and sc sits on
-    // the whole nMerges-round merge chain — referenced twice (mean +
-    // scoring) it would re-run the chain per reference; mn joins in ONCE
-    // (a 1-row cross join) instead of per-row scalar subqueries
-    s"""WITH ${bpeCtes(nMerges)},
-sc AS MATERIALIZED (
-  SELECT d.doc_id, CAST(length(d.text) AS BIGINT) AS n_chars,
-    COALESCE(t.bpe_tokens, 0) AS bpe_tokens
-  FROM documents d LEFT JOIN (
-    SELECT doc_id,
-      CAST(sum((length(repr) - length(replace(repr, '|', ''))) // 2)
-        AS BIGINT) AS bpe_tokens
-    FROM bw JOIN r$nMerges USING (w) GROUP BY doc_id) t USING (doc_id)),
-mn AS (
-  SELECT CAST(sum(bpe_tokens) * 1000 // sum(n_chars) AS BIGINT) AS m
-  FROM sc)
-SELECT doc_id, n_chars, bpe_tokens, fert_x1k,
-  (abs(fert_x1k - m) * 4 <= m) AS keep
-FROM (
-  SELECT doc_id, n_chars, bpe_tokens,
-    CAST(bpe_tokens * 1000 // greatest(n_chars, 1) AS BIGINT) AS fert_x1k, m
-  FROM sc CROSS JOIN mn)"""
-
-  /** t30: per-source token-budget sampling under the trained tokenizer —
-    * t18's hash/window chain with the count column swapped for the
-    * replayed-merge BPE token count (mirror of TextOps.bpeBudgetSample).
-    */
-  def bpeBudgetSql(nMerges: Int = 12, budget: Long = 3000L): String = {
-    val mul = graft.functions.VectorOps.HashMul
-    s"""WITH ${bpeCtes(nMerges)},
-bt AS (
-  SELECT d.doc_id, d.source, COALESCE(t.bpe_tokens, 0) AS n_tok
-  FROM documents d LEFT JOIN (
-    SELECT doc_id,
-      CAST(sum((length(repr) - length(replace(repr, '|', ''))) // 2)
-        AS BIGINT) AS bpe_tokens
-    FROM bw JOIN r$nMerges USING (w) GROUP BY doc_id) t USING (doc_id)),
-h AS (
-  SELECT doc_id, source, n_tok,
-    (${ph("'tbs|' || CAST(doc_id AS VARCHAR)")} * $mul) % $P31 AS h
-  FROM bt),
-s AS (
-  SELECT doc_id, source, n_tok,
-    COALESCE(sum(n_tok) OVER (PARTITION BY source ORDER BY h, doc_id
-      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS cb
-  FROM h)
-SELECT doc_id, source, n_tok FROM s WHERE cb < $budget"""
-  }
-
-  /** t21: CCNet head/middle/tail quality buckets — the t14 chain with
-    * lang carried through, then DISCRETE per-language tercile thresholds
-    * (score of the ⌈n/3⌉-th / ⌈2n/3⌉-th doc in DESC score order; the
-    * oracle states them with a rank window, the Spark operator derives
-    * the same values from a score histogram + driver cumsum).
-    */
-  def qualityBucketsSql(vocabSize: Int = 256): String =
-    s"""WITH toks AS (
-  SELECT doc_id, lang, unnest(string_split(text, ' ')) AS tok FROM documents),
-freq AS (SELECT tok, count(*) AS cnt FROM toks GROUP BY tok),
-vocab AS (
-  SELECT tok, cnt FROM freq
-  ORDER BY cnt DESC, ${ph("tok")} ASC, tok ASC LIMIT $vocabSize),
-scored AS (
-  SELECT t.doc_id, t.lang,
-    (100 * CAST(COALESCE(sum(length(bin(v.cnt))), 0) AS BIGINT))
-      // count(*) AS score_x100
-  FROM toks t LEFT JOIN vocab v USING (tok)
-  GROUP BY t.doc_id, t.lang),
-ranked AS (
-  SELECT *, row_number() OVER (PARTITION BY lang
-      ORDER BY score_x100 DESC, doc_id) AS rn,
-    count(*) OVER (PARTITION BY lang) AS n
-  FROM scored),
-th AS (
-  SELECT lang,
-    max(CASE WHEN rn = (n + 2) // 3 THEN score_x100 END) AS t_head,
-    max(CASE WHEN rn = (2 * n + 2) // 3 THEN score_x100 END) AS t_mid
-  FROM ranked GROUP BY lang)
-SELECT doc_id, s.lang, score_x100,
-  CASE WHEN score_x100 >= t_head THEN 'head'
-       WHEN score_x100 >= t_mid THEN 'middle'
-       ELSE 'tail' END AS bucket
-FROM scored s JOIN th ON s.lang = th.lang"""
-
   /** t22: deterministic mixture resampling — mirror of TextOps.upsample
     * (⌊w⌋ copies + one hash-gated fractional copy; w = 0 drops the
     * source, unlisted sources take the default weight).
@@ -1063,120 +676,4 @@ c AS (
 SELECT doc_id, source, CAST(unnest(range(copies)) AS BIGINT) AS copy
 FROM c"""
   }
-
-  /** t17: DSIR importance weights — hashed-bigram features with
-    * multiplicity (NO distinct, unlike the shingle CTEs), raw vs
-    * target-slice bucket counts, per-occurrence weight
-    * length(bin(tc+1)) − length(bin(rc+1)) summed per doc. DuckDB's
-    * sum(BIGINT) widens to HUGEINT, so the sum is CAST back (the t14
-    * discipline); subtraction order and +1 smoothing mirror
-    * TextOps.dsirWeights digit-for-digit.
-    */
-  def dsirWeightsSql(targetSource: String = "src0",
-                     buckets: Int = 256): String =
-    s"""WITH big AS (
-  SELECT doc_id, unnest(list_transform(range(1, greatest(len(t), 1)),
-    i -> t[i] || ' ' || t[i+1])) AS bg
-  FROM (SELECT doc_id, string_split(text, ' ') AS t FROM documents)),
-feat AS (SELECT doc_id, ${ph("bg")} % $buckets AS f FROM big),
-raw AS (SELECT f, count(*) AS rc FROM feat GROUP BY f),
-tgt AS (
-  SELECT feat.f, count(*) AS tc FROM feat
-  JOIN documents d USING (doc_id)
-  WHERE d.source = '$targetSource' GROUP BY feat.f),
-wt AS (
-  SELECT r.f,
-    length(bin(COALESCE(t.tc, 0) + 1)) - length(bin(r.rc + 1)) AS w
-  FROM raw r LEFT JOIN tgt t ON t.f = r.f),
-scored AS (
-  SELECT doc_id, count(*) AS n_big, CAST(sum(w) AS BIGINT) AS logw
-  FROM feat JOIN wt USING (f) GROUP BY doc_id)
-SELECT d.doc_id, COALESCE(s.n_big, 0) AS n_big, COALESCE(s.logw, 0) AS logw
-FROM documents d LEFT JOIN scored s ON s.doc_id = d.doc_id"""
-
-  /** t28: Naive-Bayes quality classifier — mirror of TextOps.nbQuality:
-    * hashed-bigram features with multiplicity, ONE conditional per-class
-    * count per feature (FILTER, matching Spark's count(when(…))),
-    * integer log₂ log-odds q(pc+1) − q(nc+1) summed per doc, verdict
-    * logodds > 0. Sum widens to HUGEINT in DuckDB → CAST back (t14
-    * discipline); docs with no bigrams score (0, 0, false) through the
-    * LEFT JOIN like the Spark op's coalesce.
-    */
-  def nbQualitySql(positiveSources: Seq[String] = Seq("src0", "src1"),
-                   buckets: Int = 256): String = {
-    val inList = positiveSources.map(s => s"'$s'").mkString(", ")
-    s"""WITH big AS (
-  SELECT doc_id, unnest(list_transform(range(1, greatest(len(t), 1)),
-    i -> t[i] || ' ' || t[i+1])) AS bg
-  FROM (SELECT doc_id, string_split(text, ' ') AS t FROM documents)),
-feat AS (SELECT doc_id, ${ph("bg")} % $buckets AS f FROM big),
-cls AS (
-  SELECT feat.f,
-    count(*) FILTER (WHERE d.source IN ($inList)) AS pc,
-    count(*) FILTER (WHERE d.source NOT IN ($inList)) AS nc
-  FROM feat JOIN documents d USING (doc_id) GROUP BY feat.f),
-wt AS (SELECT f, length(bin(pc + 1)) - length(bin(nc + 1)) AS w FROM cls),
-scored AS (
-  SELECT doc_id, count(*) AS n_feat, CAST(sum(w) AS BIGINT) AS logodds
-  FROM feat JOIN wt USING (f) GROUP BY doc_id)
-SELECT d.doc_id, COALESCE(s.n_feat, 0) AS n_feat,
-  COALESCE(s.logodds, 0) AS logodds,
-  COALESCE(s.logodds, 0) > 0 AS is_high
-FROM documents d LEFT JOIN scored s ON s.doc_id = d.doc_id"""
-  }
-
-  /** t34: C4 cleaning pass — mirror of TextOps.c4Rules over
-    * TextOps.synthesizeLines' deterministic line rendering (k-word lines,
-    * k = doc_id % 7 + 3; terminal-punct cycle by (doc_id + line) % 4;
-    * '{x}' / 'javascript' / 'lorem ipsum' contaminants on the documented
-    * doc_id keys). Line retention = terminal punct AND ≥5 words AND no
-    * 'javascript' word; page gates = ≥3 sentence marks in retained text,
-    * no '{', no 'lorem ipsum'. All counts exact integers — replayed
-    * symbol-for-symbol from the generator arithmetic.
-    */
-  def c4RulesSql: String =
-    """WITH b AS (
-  SELECT doc_id, string_split(text, ' ') AS ws,
-         CAST(doc_id % 7 + 3 AS BIGINT) AS k
-  FROM documents),
-p AS (
-  SELECT doc_id, ws, k, (len(ws) + k - 1) // k AS nl FROM b),
-s AS (
-  SELECT doc_id,
-    list_transform(range(1, nl + 1), i ->
-      array_to_string(list_slice(ws, (i - 1) * k + 1, i * k), ' ')
-      || CASE WHEN (doc_id + i) % 13 = 0 THEN ' {x}' ELSE '' END
-      || CASE WHEN (doc_id + i) % 11 = 0 THEN ' javascript' ELSE '' END
-      || CASE WHEN doc_id % 17 = 0 AND i = 1 THEN ' lorem ipsum' ELSE '' END
-      || CASE CAST((doc_id + i) % 4 AS INT) WHEN 0 THEN '.' WHEN 1 THEN '?'
-              WHEN 2 THEN '!' ELSE '' END) AS lines
-  FROM p),
-f AS (
-  SELECT doc_id, lines,
-    list_filter(lines, l -> regexp_matches(l, '[.!?"]$')
-      AND len(string_split(l, ' ')) >= 5
-      AND NOT regexp_matches(l, '\bjavascript\b')) AS kept,
-    array_to_string(lines, chr(10)) AS text
-  FROM s),
-m AS (
-  SELECT doc_id,
-    CAST(len(lines) AS BIGINT) AS n_lines,
-    CAST(len(kept) AS BIGINT) AS n_kept,
-    COALESCE(array_to_string(kept, chr(10)), '') AS kept_text,
-    contains(text, '{') AS has_brace,
-    contains(text, 'lorem ipsum') AS has_lorem
-  FROM f)
-SELECT doc_id, n_lines, n_kept,
-  CAST(length(kept_text)
-    - length(regexp_replace(kept_text, '[.!?]', '', 'g')) AS BIGINT)
-    AS n_sentences,
-  CAST(length(kept_text) AS BIGINT) AS kept_chars,
-  (length(kept_text)
-    - length(regexp_replace(kept_text, '[.!?]', '', 'g')) >= 3) AS r_sent,
-  NOT has_brace AS r_brace,
-  NOT has_lorem AS r_lorem,
-  (length(kept_text)
-    - length(regexp_replace(kept_text, '[.!?]', '', 'g')) >= 3
-    AND NOT has_brace AND NOT has_lorem) AS pass
-FROM m"""
 }

@@ -46,20 +46,6 @@ package object functions {
     */
   def quantize_vec(c: Column): Column = column(QuantizeVec(expression(c)))
 
-  /** Adjacent-token bigram (f2, f1) hash-pair structs in one codegen'd
-    * pass (byte-identical to poly_hash31 over concat_ws / its
-    * substring_index prefix — the t25/t31 explode kernel).
-    */
-  def bigram_hash_pairs(c: Column): Column =
-    column(BigramHashPairs(expression(c)))
-
-  /** Trained-BPE token count of a word array under a literal merge list
-    * (codegen'd loop — replaces the per-word interpreted aggregate+replace
-    * chain of the serving-side merge replay).
-    */
-  def bpe_token_count(c: Column, merges: Seq[(String, String)]): Column =
-    column(BpeTokenCount(expression(c), merges))
-
   /** Single-pass op-whitelist + db-blacklist admission predicate. */
   def valid_turn(c: Column): Column = column(ValidTurn(expression(c)))
 

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.functions.TextHashes.P31
@@ -216,34 +216,6 @@ object TextOps {
     docs.join(dropped, Seq("doc_id"), "left_anti")
   }
 
-  /** t11 — the reference's defining trait re-expressed over the corpus:
-    * ONE linear dataflow end-to-end (/root/reference/main.go:84-107 runs
-    * scan→filter→route→transform→sink as a single pass), here the
-    * training-data shape: source gate → PII redaction → benchmark
-    * decontamination → near-dup dedup (MinHash-LSH ladder) → weighted
-    * mix → train/val/test split → per-(split, source, shard) sequence
-    * packing. Every stage is the SAME operator the standalone driver
-    * queries check (t7/t6/t12/d7/t9/t4/t10), composed full-row so
-    * stage-boundary effects are real: decon and dedup shingles see
-    * REDACTED text, the ladder sees only decontaminated survivors,
-    * packing sees only post-mix survivors, and bins never cross a split
-    * boundary.
-    *
-    * `augment` runs between gate and redaction — identity in production;
-    * the test harness injects a synthetic contact line so redaction is
-    * non-vacuous on the PII-free synthetic corpus (same trick as the t6
-    * driver query).
-    */
-  /** Pipeline stage form of [[decontaminate]]: drop eval-carve-out
-    * members and any training doc whose eval overlap reaches HALF its
-    * own shingles. The stage uses this overlap-FRACTION rule rather than
-    * t12's absolute ≥3-hit flag because 3-gram shingles over-fire on
-    * background collisions (the literature's absolute thresholds assume
-    * 8–13-gram spans); a fraction of the doc's own shingle count is
-    * vocabulary-robust — true eval twins share ~all shingles and drop,
-    * random collisions don't. Shingle-less docs survive. Left-semi
-    * against the verdicts, so surviving rows keep every upstream column.
-    */
   /** The id set [[dropContaminated]] removes: fraction-rule contaminated
     * docs plus (under the carve-out default) the eval members themselves.
     * SPARSE in a real corpus — KBs of ids, broadcastable, and cheap to
@@ -261,6 +233,16 @@ object TextOps {
     carveOut.fold(victims)(victims.union)
   }
 
+  /** Pipeline stage form of [[decontaminate]]: drop eval-carve-out
+    * members and any training doc whose eval overlap reaches HALF its
+    * own shingles. The stage uses this overlap-FRACTION rule rather than
+    * t12's absolute ≥3-hit flag because 3-gram shingles over-fire on
+    * background collisions (the literature's absolute thresholds assume
+    * 8–13-gram spans); a fraction of the doc's own shingle count is
+    * vocabulary-robust — true eval twins share ~all shingles and drop,
+    * random collisions don't. Shingle-less docs survive. Left-semi
+    * against the verdicts, so surviving rows keep every upstream column.
+    */
   def dropContaminated(d: DataFrame,
                        evalDocs: Option[DataFrame] = None): DataFrame =
     // Join AGAINST THE VICTIMS, not the survivors: the anti join's right
@@ -273,7 +255,25 @@ object TextOps {
     // by construction).
     d.join(contaminatedIds(d, evalDocs), Seq("doc_id"), "left_anti")
 
-  /** `materialize` is the STAGE-BOUNDARY hook (r3 verdict item 3): the
+  /** t11 — the reference's defining trait re-expressed over the corpus:
+    * ONE linear dataflow end-to-end (the reference's main.go:84-107 runs
+    * scan→filter→route→transform→sink as a single pass), here the
+    * training-data shape: source gate → PII redaction → benchmark
+    * decontamination → near-dup dedup (MinHash-LSH ladder) → weighted
+    * mix → train/val/test split → per-(split, source, shard) sequence
+    * packing. Every stage is the SAME operator the standalone driver
+    * queries check (t7/t6/t12/d7/t9/t4/t10), composed full-row so
+    * stage-boundary effects are real: decon and dedup shingles see
+    * REDACTED text, the ladder sees only decontaminated survivors,
+    * packing sees only post-mix survivors, and bins never cross a split
+    * boundary.
+    *
+    * `augment` runs between gate and redaction — identity in production;
+    * the test harness injects a synthetic contact line so redaction is
+    * non-vacuous on the PII-free synthetic corpus (same trick as the t6
+    * driver query).
+    *
+    * `materialize` is the STAGE-BOUNDARY hook (r3 verdict item 3): the
     * composed dataflow consumes the redacted relation twice (decon
     * verdicts + the semi join back) and the decontaminated relation twice
     * (ladder pairs + the anti join back), and Spark recomputes a shared
@@ -397,282 +397,6 @@ object TextOps {
           "8, 'test', n_test) as (stage, stage_name, n_docs)"))
   }
 
-  // --------------------------------------------------------- quality / stats
-
-  /** Token counts: whitespace tokens + regex word tokens (BPE-ish pre-token
-    * split). Pure per-row projections — embarrassingly parallel.
-    */
-  /** GPT-2-style pre-tokenizer pattern, restricted to the
-    * RE2-safe/Java-identical common dialect (no \p classes, no
-    * lookahead): contractions, space-prefixed letter runs, digit runs,
-    * punctuation runs. Both engines use leftmost-first alternation, so
-    * the match SEQUENCE — not just the count — is identical; this is the
-    * budget estimator a BPE tokenizer's piece count tracks (each match
-    * is one-or-more BPE pieces, and the pattern is what determines merge
-    * boundaries).
-    */
-  private[graft] val BpePat =
-    "'(?:s|t|re|ve|m|ll|d)| ?[a-zA-Z]+| ?[0-9]+| ?[^a-zA-Z0-9 ]+"
-
-  def tokenCounts(docs: DataFrame): DataFrame =
-    docs.select(col("doc_id"),
-      size(tokens).as("ws_tokens"),
-      size(regexp_extract_all(col("text"), lit("([a-z0-9]+)"))).as("word_tokens"),
-      size(regexp_extract_all(col("text"), lit(BpePat), lit(0)))
-        .as("bpe_tokens"),
-      length(col("text")).as("n_chars"))
-
-  // --------------------------------------------------- trained BPE (t26)
-
-  /** BPE word regex — the pre-tokenizer boundary: merges never cross it
-    * (Sennrich et al. 2016 train on word counts for exactly this reason).
-    * Restricted to [a-z0-9] so '|' is available as the symbol delimiter
-    * in [[bpeWrap]] (the corpus is ASCII — TESTDATA.md).
-    */
-  private[graft] val BpeWordPat = "[a-z0-9]+"
-
-  /** A word as a delimited symbol sequence: every symbol wrapped in
-    * pipes, e.g. "the" → "|t||h||e|". The DOUBLE delimiter between
-    * symbols is what makes string replace() a correct BPE merge step:
-    * the merge pattern "|a||b|" can only match a full symbol `a`
-    * followed by a full symbol `b` (a symbol merely ENDING in "a" gives
-    * "…xa||b|" — no "|a|" substring), and left-to-right non-overlapping
-    * replace() is exactly BPE's greedy merge order ([l,l,l] → [ll,l]).
-    * A single-delimiter encoding fails on consecutive merges: in
-    * " a b a b " the trailing space of match 1 is the leading space of
-    * match 2, so replace() merges only the first pair while BPE merges
-    * both.
-    */
-  private def bpeWrap(w: Column): Column =
-    regexp_replace(w, "(.)", "|$1|")
-
-  /** Symbol count of a wrapped representation: pipes / 2. (The serving
-    * replay now runs through the BpeTokenCount kernel; this stays as the
-    * single-column form the training loop's docs reference and specs
-    * exercise.)
-    */
-  private[graft] def bpeSymCount(repr: Column): Column =
-    ((length(repr) - length(translate(repr, "|", ""))) / 2).cast("long")
-
-  /** Train `nMerges` BPE merges on the corpus (Sennrich et al. 2016,
-    * "Neural Machine Translation of Rare Words with Subword Units"):
-    * start from characters, repeatedly merge the most frequent adjacent
-    * symbol pair. Deterministic: ties break by (first, second) symbol
-    * lexicographically — no RNG, replayable, and the DuckDB oracle
-    * unrolls the same rounds digit-for-digit.
-    *
-    * Scale shape (the BPE-on-word-counts design point): training runs on
-    * the DISTINCT-WORD count table, not the corpus — one corpus-linear
-    * explode+aggregate builds it, then every merge round is one
-    * vocab-sized two-phase pair-count aggregate plus a 1-row collect.
-    * At 100 TB the vocabulary is orders of magnitude smaller than the
-    * corpus (and capped in practice), so nMerges rounds cost
-    * nMerges × O(vocab), independent of corpus size; the word table is
-    * cached once. Representations are recomputed per round as an
-    * expression chain over the cached table (r replaces at round r) —
-    * O(nMerges²·vocab) string work beats checkpointing a mutated column
-    * every round at these merge counts.
-    */
-  def bpeTrainMerges(docs: DataFrame, nMerges: Int = 12)
-      : Seq[(String, String)] = {
-    require(nMerges >= 0, s"nMerges must be >= 0, got $nMerges")
-    // the vocab table is orders of magnitude smaller than the corpus and
-    // capped in practice (the design point above) — coalesce the cached
-    // relation to ONE partition so each of the nMerges round jobs runs a
-    // single scan task instead of shuffle.partitions near-empty ones
-    // (measured at sf0.1: the 12 rounds were 400+ tiny tasks, ~3 s of
-    // pure per-task overhead on a KB-sized table)
-    val wordCounts = docs
-      .select(explode(regexp_extract_all(col("text"), lit(BpeWordPat),
-        lit(0))).as("w"))
-      .groupBy(col("w")).agg(count(lit(1)).as("cnt"))
-      .coalesce(1)
-      .cache()
-    try {
-      val merges = scala.collection.mutable.ArrayBuffer.empty[(String, String)]
-      for (_ <- 0 until nMerges) {
-        // the representation expression: wrap, then apply the merges
-        // learned so far in order
-        val reprCol = merges.foldLeft(bpeWrap(col("w"))) { case (r, (a, b)) =>
-          call_function("replace", r, lit(s"|$a||$b|"), lit(s"|${a + b}|"))
-        }
-        val syms = split(expr("trim(BOTH '|' FROM repr)"), "\\|\\|")
-        val top = wordCounts.select(col("cnt"), reprCol.as("repr"))
-          .select(col("cnt"), syms.as("syms"))
-          .select(col("cnt"), col("syms"),
-            posexplode(slice(col("syms"), lit(1),
-              greatest(size(col("syms")) - 1, lit(0)))).as(Seq("i", "a")))
-          .select(col("cnt"), col("a"),
-            element_at(col("syms"), col("i") + 2).as("b"))
-          .groupBy(col("a"), col("b")).agg(sum(col("cnt")).as("c"))
-          .orderBy(col("c").desc, col("a").asc, col("b").asc)
-          .limit(1).collect()
-        if (top.isEmpty) return merges.toSeq
-        merges += ((top(0).getAs[String]("a"), top(0).getAs[String]("b")))
-      }
-      merges.toSeq
-    } finally { wordCounts.unpersist(): Unit }
-  }
-
-  /** Per-doc token counts under a TRAINED merge list — the real-BPE
-    * upgrade of [[tokenCounts]]'s regex approximation: each word wraps,
-    * replays the merges in order, and contributes its surviving symbol
-    * count. Pure per-row projection (the merge list is a literal chain —
-    * no join, no shuffle, stream-transparent), so the budgets that
-    * consume token counts (t18's tokenBudgetSample, t10's packSequences)
-    * can swap this column in wherever they take a count.
-    */
-  /** The trained-BPE token count as a pure COLUMN over `text` — the
-    * pluggable form every count consumer takes ([[tokenBudgetSample]]'s
-    * `tokenCount`, [[packSequences]]-style budgets): wrap each word,
-    * replay the merges as a literal chain, sum surviving symbol counts.
-    * No join, no shuffle, stream-transparent.
-    */
-  def bpeTokenCountCol(merges: Seq[(String, String)]): Column =
-    // codegen'd merge-replay kernel (functions.BpeTokenCount): the
-    // aggregate-HOF form ran an interpreted lambda per word with one
-    // Catalyst replace call per merge per word — same wrap / replace /
-    // pipes-per-2 arithmetic, same null poisoning, bit-identical counts
-    // (BpeKernelCheck differential + the t26/t30/t36-38 oracles)
-    graft.functions.bpe_token_count(
-      regexp_extract_all(col("text"), lit(BpeWordPat), lit(0)), merges)
-
-  def bpeTokenCounts(docs: DataFrame,
-                     merges: Seq[(String, String)]): DataFrame = {
-    val words = regexp_extract_all(col("text"), lit(BpeWordPat), lit(0))
-    docs.select(col("doc_id"),
-      size(words).cast("long").as("n_words"),
-      bpeTokenCountCol(merges).as("bpe_tokens"))
-  }
-
-  /** t36 — tokenizer-fertility gate under the TRAINED tokenizer: per doc
-    * the exact subword count ([[bpeTokenCountCol]], t26's replay) per
-    * 1000 chars (`fert_x1k = bpe_tokens·1000 div max(n_chars,1)`), kept
-    * iff within ±25% of the CORPUS mean fertility
-    * (`|fert − mean|·4 ≤ mean`, cross-multiplied integers). Fertility is
-    * the standard tokenizer-fit signal (tokens/byte): text far ABOVE the
-    * corpus mean is the tokenizer's worst case (non-language junk,
-    * wrong-script text, base64 — every char becomes a token), far BELOW
-    * it is degenerate repetition (a handful of fully-merged symbols
-    * looping); the corpus-relative band makes the gate data-adaptive
-    * instead of hardcoding a tokenizer-specific constant.
-    *
-    * Scale shape: the mean is ONE driver-sized aggregate (two longs —
-    * the bm25TopK stats pattern) folded back as literals; scoring is the
-    * same per-row projection that already scans `text` (the t26 merge
-    * replay), zero additional exchanges.
-    */
-  def bpeFertilityGate(docs: DataFrame,
-                       merges: Seq[(String, String)]): DataFrame = {
-    val s = docs.select(bpeTokenCountCol(merges).as("bpe_tokens"),
-        length(col("text")).cast("long").as("n_chars"))
-      .agg(sum(col("bpe_tokens")), sum(col("n_chars"))).collect()(0)
-    require(!s.isNullAt(1) && s.getLong(1) > 0, "bpeFertilityGate: empty corpus")
-    bpeFertilityScoreInRow(docs, merges, s.getLong(0) * 1000L / s.getLong(1))
-  }
-
-  /** The fixed-model serving form of [[bpeFertilityGate]]: merges + the
-    * corpus-mean fertility arrive as LITERALS (the trained artifact), so
-    * scoring is a stateless pure projection — a tailing ingest gates
-    * exactly like the batch pass (batch/stream row parity spec'd in
-    * StreamingSpec, the t17/t28 in-row-scorer contract).
-    */
-  def bpeFertilityScoreInRow(docs: DataFrame, merges: Seq[(String, String)],
-                             meanX1k: Long): DataFrame =
-    docs.select(col("doc_id"),
-        length(col("text")).cast("long").as("n_chars"),
-        bpeTokenCountCol(merges).as("bpe_tokens"))
-      .withColumn("fert_x1k",
-        expr("bpe_tokens * 1000 div greatest(n_chars, 1)"))
-      .withColumn("keep",
-        abs(col("fert_x1k") - lit(meanX1k)) * 4 <= lit(meanX1k))
-
-  // --------------------------------- train-once / serve-many BPE tokenizer
-
-  /** The persisted tokenizer artifact: the ordered merge table plus the
-    * corpus-mean fertility — a train-once posture for the TOKENIZER: at
-    * 100 TB you train merges on one pass, persist ~KBs, and every downstream consumer (token
-    * budgets, fertility gates, packing) serves from the artifact with
-    * ZERO training jobs until the corpus drifts. Long-format parquet so
-    * any engine reads it with a plain scan.
-    */
-  case class BpeModel(nMerges: Int, merges: Seq[(String, String)],
-                      meanFertX1k: Long)
-
-  def saveBpeModel(spark: SparkSession, model: BpeModel, path: String): Unit = {
-    import spark.implicits._
-    val rows =
-      Seq(("param", 0, "", "", model.nMerges.toLong),
-        ("param", 1, "", "", model.meanFertX1k)) ++
-        model.merges.zipWithIndex.map { case ((a, b), i) =>
-          ("merge", i, a, b, 0L)
-        }
-    rows.toDF("kind", "i", "a", "b", "v")
-      .coalesce(1).write.mode("overwrite").parquet(path)
-  }
-
-  /** Exact inverse of [[saveBpeModel]]. */
-  def loadBpeModel(spark: SparkSession, path: String): BpeModel = {
-    val rows = spark.read.parquet(path).collect()
-    def param(i: Int): Long = rows
-      .find(r => r.getString(0) == "param" && r.getInt(1) == i)
-      .getOrElse(sys.error(s"loadBpeModel: missing param $i in $path"))
-      .getLong(4)
-    val merges = rows.filter(_.getString(0) == "merge")
-      .sortBy(_.getInt(1)).map(r => (r.getString(2), r.getString(3))).toSeq
-    require(merges.length == param(0).toInt,
-      s"loadBpeModel: merge count ${merges.length} != param ${param(0)}")
-    BpeModel(merges.length, merges, param(1))
-  }
-
-  /** Train-if-absent / load-if-present:
-    * the artifact directory is keyed by a SHA-256 of the corpus content
-    * signature + nMerges, so models for different corpora/settings
-    * coexist and a regenerated corpus never reuses a stale tokenizer.
-    */
-  def bpeModelFor(docs: DataFrame, baseDir: String,
-                  nMerges: Int = 12): BpeModel = {
-    val spark = docs.sparkSession
-    val contentSig = docs
-      .agg(coalesce(sum(hash(col("doc_id"), col("text"))), lit(0L)))
-      .collect()(0).getLong(0)
-    val key = s"bpemodel-v1|$contentSig|$nMerges"
-    val fp = java.security.MessageDigest.getInstance("SHA-256")
-      .digest(key.getBytes("UTF-8")).map("%02x".format(_)).mkString
-    val path = s"$baseDir/$fp"
-    val marker = java.nio.file.Paths.get(path, "_trained")
-    if (java.nio.file.Files.exists(marker)) loadBpeModel(spark, path)
-    else {
-      val merges = bpeTrainMerges(docs, nMerges)
-      val s = docs.select(bpeTokenCountCol(merges).as("bt"),
-          length(col("text")).cast("long").as("nc"))
-        .agg(sum(col("bt")), sum(col("nc"))).collect()(0)
-      require(!s.isNullAt(1) && s.getLong(1) > 0, "bpeModelFor: empty corpus")
-      val model = BpeModel(nMerges, merges, s.getLong(0) * 1000L / s.getLong(1))
-      saveBpeModel(spark, model, path)
-      java.nio.file.Files.writeString(marker, key): Unit
-      model
-    }
-  }
-
-  /** t30 — per-source token-budget sampling under the TRAINED tokenizer:
-    * the composition the t26 artifact exists for. [[bpeTrainMerges]]
-    * learns the merge table (vocab-sized work, corpus-independent per
-    * round), then [[tokenBudgetSample]] consumes [[bpeTokenCountCol]] as
-    * its count column — so the budget is measured in the tokens the
-    * MODEL will actually see, not the whitespace approximation (the two
-    * counts diverge hardest exactly where it matters: non-English and
-    * code-like text whose words explode into many subword units).
-    * Scale/plan shape is t18's unchanged: KB-sized histogram collect,
-    * boundary-bucket-only window; the BPE replay rides the same per-row
-    * projection that already scans `text`.
-    */
-  def bpeBudgetSample(docs: DataFrame, nMerges: Int = 12,
-                      budget: Long = 3000L): DataFrame = {
-    val merges = bpeTrainMerges(docs, nMerges)
-    tokenBudgetSample(docs, budget, tokenCount = bpeTokenCountCol(merges))
-  }
-
   // RE2-safe common dialect (no backreferences/lookaround) shared verbatim
   // with the DuckDB oracle — Java regex and RE2 agree on these exactly.
   private[graft] val UrlPat = "https?://[^ ]+"
@@ -680,15 +404,6 @@ object TextOps {
     "[a-zA-Z0-9._%+-]+@[a-zA-Z0-9.-]+\\.[a-zA-Z]{2,}"
   private[graft] val PhonePat = "\\+?[0-9][0-9()\\- ]{6,}[0-9]"
 
-  /** PII scrub — the redaction pass every training-data pipeline runs
-    * before tokenization: URLs, then emails, then phone-like digit runs
-    * are replaced with typed placeholders (in that order — a URL may
-    * embed an '@', so it must go first), and per-kind match counts are
-    * emitted as the governance audit trail. Pure per-row regexp
-    * projections, embarrassingly parallel; counts are taken on the same
-    * intermediate string each replace consumes, so count and replacement
-    * always agree.
-    */
   /** The scrub chain itself (URL → email → phone, in that order — a URL
     * may embed an '@', so it goes first). Shared by the audit view
     * [[redactPii]] and the full-row composition stage [[redactDocs]].
@@ -705,6 +420,15 @@ object TextOps {
   def redactDocs(docs: DataFrame): DataFrame =
     docs.withColumn("text", scrubbed)
 
+  /** PII scrub — the redaction pass every training-data pipeline runs
+    * before tokenization: URLs, then emails, then phone-like digit runs
+    * are replaced with typed placeholders (in that order — a URL may
+    * embed an '@', so it must go first), and per-kind match counts are
+    * emitted as the governance audit trail. Pure per-row regexp
+    * projections, embarrassingly parallel; counts are taken on the same
+    * intermediate string each replace consumes, so count and replacement
+    * always agree.
+    */
   def redactPii(docs: DataFrame): DataFrame = {
     val s1 = regexp_replace(col("text"), UrlPat, "<URL>")
     val s2 = regexp_replace(s1, EmailPat, "<EMAIL>")
@@ -716,21 +440,6 @@ object TextOps {
       size(regexp_extract_all(col("text"), lit(UrlPat), lit(0))).as("n_url"),
       size(regexp_extract_all(s1, lit(EmailPat), lit(0))).as("n_email"),
       size(regexp_extract_all(s2, lit(PhonePat), lit(0))).as("n_phone"))
-  }
-
-  /** Within-document repetition signal (the Gopher-style rep filter
-    * ingredient): total vs distinct word 3-grams per document, as exact
-    * integers — a high duplicate-gram count marks boilerplate/spam text
-    * that per-corpus dedup can't see. Per-row projection over the same
-    * codegen'd [[graft.functions.shingles3]] kernel the dedup tier uses.
-    */
-  def repetitionSignal(docs: DataFrame): DataFrame = {
-    val total = greatest(size(tokens) - 2, lit(0))
-    val dist = size(shingles3(tokens))
-    docs.select(col("doc_id"),
-      total.as("n_grams"),
-      dist.as("n_distinct"),
-      (total - dist).as("n_dup"))
   }
 
   /** Deterministic weighted sampling — the data-MIXING step: each source
@@ -817,169 +526,6 @@ object TextOps {
     docs.join(broadcast(good), Seq("source"), "left_semi")
   }
 
-  private val stopwords = Seq("the", "a", "of", "and", "to", "in")
-
-  /** Quality-score ingredients as exact integers (ratios are assembled by
-    * the caller; integer outputs keep the oracle bit-exact).
-    */
-  def qualityCounts(docs: DataFrame): DataFrame = {
-    val t = tokens
-    docs.select(col("doc_id"),
-      size(t).as("n_tokens"),
-      size(filter(t, x => x.isin(stopwords: _*))).as("n_stop"),
-      length(col("text")).as("n_chars"),
-      length(regexp_replace(col("text"), "[a-z ]", "")).as("n_nonalpha"))
-  }
-
-  /** Gopher-style rule filter (Rae et al. 2021, appendix A1.1 — the
-    * composite heuristic gate MassiveText/Gopher, and after it RefinedWeb
-    * and Dolma, apply before any model-based scoring): one verdict row
-    * per document with each rule as its own boolean plus the conjunction.
-    * Rules, with every ratio comparison CROSS-MULTIPLIED so the whole
-    * table is integer/boolean arithmetic (bit-identical cross-engine —
-    * no float ratios):
-    *
-    *   r_wordcount  50 ≤ |words| ≤ 100,000
-    *   r_meanlen    mean word length in [3, 10] chars (3·wc ≤ Σlen ≤ 10·wc)
-    *   r_symbol     symbol-to-word ratio < 0.1 ('#' and '...' occurrences)
-    *   r_bullet     < 90% of lines start with a bullet ("- ")
-    *   r_ellipsis   < 30% of lines end with "..."
-    *   r_alpha      ≥ 80% of words contain an alphabetic character
-    *   r_stop       ≥ 2 distinct Gopher stopwords present
-    *
-    * Words are the corpus's space-split convention (t2/t3); lines split
-    * on '\n'. Pure per-row projection — no shuffle, stream-transparent
-    * like the rest of the per-row text tier.
-    */
-  def gopherRules(docs: DataFrame): DataFrame = {
-    val w = tokens
-    val lines = split(col("text"), "\n")
-    val gopherStops = array(Seq("the", "be", "to", "of", "and", "that",
-      "have", "with").map(lit): _*)
-    val nHash = (length(col("text")) -
-      length(regexp_replace(col("text"), "#", ""))).cast("long")
-    // '...' count: char-delta is a multiple of 3 (< 2^52), so the double
-    // division is exact before the cast back to long
-    val nDots = floor((length(col("text")) -
-      length(regexp_replace(col("text"), "\\.\\.\\.", ""))).cast("long") / 3)
-    val m = docs.select(col("doc_id"),
-      size(w).cast("long").as("n_words"),
-      size(lines).cast("long").as("n_lines"),
-      aggregate(w, lit(0L), (acc, x) => acc + length(x)).as("t_wlen"),
-      (nHash + nDots).as("n_sym"),
-      size(filter(lines, x => x.rlike("^- "))).cast("long").as("n_bullet"),
-      size(filter(lines, x => x.rlike("\\.\\.\\.$"))).cast("long").as("n_ell"),
-      size(filter(w, x => x.rlike("[a-z]"))).cast("long").as("n_alpha"),
-      size(filter(gopherStops, s => array_contains(w, s))).cast("long")
-        .as("n_stop_kinds"))
-    val rules = Seq(
-      col("n_words").between(50L, 100000L).as("r_wordcount"),
-      (lit(3L) * col("n_words") <= col("t_wlen") &&
-        col("t_wlen") <= lit(10L) * col("n_words")).as("r_meanlen"),
-      (lit(10L) * col("n_sym") < col("n_words")).as("r_symbol"),
-      (lit(10L) * col("n_bullet") < lit(9L) * col("n_lines")).as("r_bullet"),
-      (lit(10L) * col("n_ell") < lit(3L) * col("n_lines")).as("r_ellipsis"),
-      (lit(5L) * col("n_alpha") >= lit(4L) * col("n_words")).as("r_alpha"),
-      (col("n_stop_kinds") >= 2L).as("r_stop"))
-    m.select(col("doc_id") +: col("n_words") +: col("n_lines") +: rules :+
-      rules.map(r => r: Column).reduce(_ && _).as("pass"): _*)
-  }
-
-  /** t27 — the Gopher REPETITION suite (Rae et al. 2021, appendix Table
-    * A1 — the half of the MassiveText repetition gate [[gopherRules]]
-    * doesn't cover): per-document duplicate-line / duplicate-paragraph
-    * fractions (row and character share) and the top-2/3/4-gram
-    * character share, each as exact integer ingredients plus a
-    * cross-multiplied boolean rule at the paper's thresholds:
-    *
-    *   r_dup_line        dup-line fraction ≤ 0.30  (10·dup ≤ 3·n)
-    *   r_dup_para        dup-paragraph fraction ≤ 0.30
-    *   r_dup_line_chars  dup-line char fraction ≤ 0.20  (5·c ≤ chars)
-    *   r_dup_para_chars  dup-paragraph char fraction ≤ 0.20
-    *   r_top2            top-2-gram char share ≤ 0.20  (5·c ≤ chars)
-    *   r_top3            top-3-gram char share ≤ 0.18  (50·c ≤ 9·chars)
-    *   r_top4            top-4-gram char share ≤ 0.16  (25·c ≤ 4·chars)
-    *
-    * Definitions (documented because the paper leaves them loose, and
-    * the oracle must agree symbol-for-symbol): lines split on '\n',
-    * paragraphs on '\n\n'; a duplicate row is any occurrence beyond the
-    * first of its distinct value (dup = n − n_distinct), and duplicate
-    * CHARS charge those repeat occurrences' lengths. The top-n-gram is
-    * the most frequent space-joined word n-gram; its char share is
-    * count × gram length, with the count-tie broken toward the LONGEST
-    * tied gram (any tie-break yields the same product when lengths also
-    * tie, and max-length makes the rule deterministic when they don't).
-    * All shares are over length(text). Empty gram sets score 0.
-    *
-    * Scale shape: pure per-row projection — higher-order array
-    * functions only, NO shuffle, stream-transparent like the rest of
-    * the per-row text tier. The distinct-value scans are O(L²) in a
-    * document's own line/gram count, bounded by the longest DOCUMENT
-    * (the t10/t15 partition argument), never by corpus size.
-    */
-  def gopherRepetition(docs: DataFrame): DataFrame = {
-    val lns = split(col("text"), "\n")
-    val prs = split(col("text"), "\n\n")
-    // (rows, dup rows, dup chars): dup chars = Σ len(all) − Σ len(distinct)
-    // — identical to Σ_distinct (cnt−1)·len but O(L), not the O(L²)
-    // count-each-distinct form (which at document length interprets to
-    // minutes per row — measured, not hypothetical)
-    def lenSum(a: Column): Column =
-      aggregate(a, lit(0L), (acc, x) => acc + length(x))
-    def dupStats(a: Column): (Column, Column, Column) = (
-      size(a).cast("long"),
-      (size(a) - size(array_distinct(a))).cast("long"),
-      lenSum(a) - lenSum(array_distinct(a)))
-    // when-guard, not greatest: sequence(1, 0) steps BACKWARD in Spark
-    def grams(n: Int): Column =
-      when(size(tokens) >= n,
-        transform(sequence(lit(1), size(tokens) - (n - 1)),
-          i => concat_ws(" ", slice(tokens, i, lit(n)))))
-        .otherwise(array().cast("array<string>"))
-    // count × length of the most frequent gram (count ties → longest):
-    // sort, then ONE linear scan with a struct accumulator tracking the
-    // current run and the best (count, length) seen — O(L log L) per row.
-    // A run that extends past the current max overwrites its own earlier
-    // tie-update, so intermediate prefixes of a long run are harmless.
-    def topChars(g: Column): Column = {
-      val st = aggregate(array_sort(g),
-        struct(lit("").as("prev"), lit(0).as("run"),
-          lit(0).as("maxc"), lit(0).as("bestl")),
-        (acc, x) => {
-          val run = when(x === acc("prev"), acc("run") + 1).otherwise(lit(1))
-          struct(x.as("prev"), run.as("run"),
-            greatest(run, acc("maxc")).as("maxc"),
-            when(run > acc("maxc"), length(x))
-              .when(run === acc("maxc"), greatest(length(x), acc("bestl")))
-              .otherwise(acc("bestl")).as("bestl"))
-        })
-      (st("maxc").cast("long") * st("bestl").cast("long")).as("top")
-    }
-    val (nl, dl, dlc) = dupStats(lns)
-    val (np, dp, dpc) = dupStats(prs)
-    val m = docs.select(col("doc_id"),
-      length(col("text")).cast("long").as("n_chars"),
-      nl.as("n_lines"), dl.as("dup_lines"), dlc.as("dup_line_chars"),
-      np.as("n_paras"), dp.as("dup_paras"), dpc.as("dup_para_chars"),
-      topChars(grams(2)).as("top2_chars"),
-      topChars(grams(3)).as("top3_chars"),
-      topChars(grams(4)).as("top4_chars"))
-    val rules = Seq(
-      (lit(10L) * col("dup_lines") <= lit(3L) * col("n_lines"))
-        .as("r_dup_line"),
-      (lit(10L) * col("dup_paras") <= lit(3L) * col("n_paras"))
-        .as("r_dup_para"),
-      (lit(5L) * col("dup_line_chars") <= col("n_chars"))
-        .as("r_dup_line_chars"),
-      (lit(5L) * col("dup_para_chars") <= col("n_chars"))
-        .as("r_dup_para_chars"),
-      (lit(5L) * col("top2_chars") <= col("n_chars")).as("r_top2"),
-      (lit(50L) * col("top3_chars") <= lit(9L) * col("n_chars")).as("r_top3"),
-      (lit(25L) * col("top4_chars") <= lit(4L) * col("n_chars")).as("r_top4"))
-    m.select(m.columns.map(col) ++ rules :+
-      rules.map(r => r: Column).reduce(_ && _).as("pass"): _*)
-  }
-
   /** Deterministic train/val/test corpus split: bucket =
     * polyhash31("split|" + doc_id) mod 10 → 8/1/1. Hash-based (not random)
     * so the split is REPRODUCIBLE across runs, engines and shards — a
@@ -1020,31 +566,13 @@ object TextOps {
         least(lit(chunkSize), col("n") - col("chunk_idx") * stride)
           .as("n_tokens"))
 
-  private val langMarkers: Seq[(String, Seq[String])] = Seq(
-    "en" -> Seq("the", "and", "of"),
-    "de" -> Seq("der", "die", "das", "und"),
-    "fr" -> Seq("le", "la", "les", "et"),
-    "es" -> Seq("el", "los", "las", "y"),
-    "zh" -> Seq("de", "shi", "le"))
-
-  /** Language-ID heuristic: per-language marker-token counts, argmax with
-    * deterministic order tie-break (list order above), 'und' when all zero.
-    * (On the synthetic corpus most rows fall through to 'und'/'en' — the
-    * operator shape, not the model, is what scales.)
-    */
-  def langId(docs: DataFrame): DataFrame = {
-    val t = tokens
-    val counts = langMarkers.map { case (lang, ms) =>
-      lang -> size(filter(t, x => x.isin(ms: _*)))
-    }
-    val best = counts.foldLeft((lit("und"), lit(0))) {
-      case ((bl, bc), (lang, c)) => (when(c > bc, lang).otherwise(bl), greatest(c, bc))
-    }
-    docs.select(col("doc_id"), col("lang"),
-      best._1.as("guess"), best._2.as("marker_hits"))
-  }
-
   // ------------------------------------------------------- decontamination
+
+  /** Default eval carve-out rule — shared by [[decontaminate]] (which
+    * excludes these docs from `train`) and [[dropContaminated]] (which
+    * must also DROP them, since they carry no verdict row).
+    */
+  private def isEvalCarveOut: Column = col("doc_id") % 29 === 3
 
   /** Benchmark decontamination: flag every training document that shares
     * ≥ `minHits` distinct word 3-gram shingles with the evaluation set —
@@ -1063,8 +591,8 @@ object TextOps {
     * 8 GB broadcast cap if someone runs the carve-out at corpus scale).
     *
     * Scale shape: the corpus explodes to shingle hashes ONCE; n_sh needs
-    * no aggregation at all (size(shingles3) in-row — the t8 pattern);
-    * hit marking is an INNER join against the broadcast eval set, so
+    * no aggregation at all (size(shingles3) in-row); hit marking is an
+    * INNER join against the broadcast eval set, so
     * only hit rows (≈ contaminated docs × overlap, tiny for a clean
     * corpus) reach the groupBy(doc_id), and the resulting hit-stats
     * relation is small enough for AQE to broadcast back. The corpus is
@@ -1072,12 +600,6 @@ object TextOps {
     * with its shingle count, overlap count, and the verdict — docs too
     * short to shingle report (0, 0, clean) instead of vanishing.
     */
-  /** Default eval carve-out rule — shared by [[decontaminate]] (which
-    * excludes these docs from `train`) and [[dropContaminated]] (which
-    * must also DROP them, since they carry no verdict row).
-    */
-  private def isEvalCarveOut: Column = col("doc_id") % 29 === 3
-
   def decontaminate(docs: DataFrame, minHits: Int = 3,
                     evalDocs: Option[DataFrame] = None): DataFrame = {
     val isEval = isEvalCarveOut
@@ -1385,7 +907,7 @@ object TextOps {
     * The PAIR math is distributed (r3 verdict item 4): the collected
     * sketch array (|sources|·k longs — KBs at ANY corpus size; that
     * driver hop is the entire point of sketching, same shape as pulling
-    * k-means centroids for e6) is BROADCAST, and each source index i
+    * a k-means centroid table) is BROADCAST, and each source index i
     * expands to its (i, j>i) pair row on the executors — O(|sources|²·k)
     * total pair work spread over the cluster instead of serialized on
     * the driver (the r3 form's honest bound; the loop went quadratic on
@@ -1500,31 +1022,22 @@ object TextOps {
     * the exact cumulative window — the bounded-window discipline of
     * [[packSequences]], never a per-source sort of the full corpus.
     */
-  /** `tokenCount` is the per-doc token expression the budget is charged
-    * in — default whitespace tokens (the oracle's convention); pass
-    * the trained-BPE count to budget in REAL tokens, e.g.
-    * `bpeTokenCounts`' in-row aggregate (spec-asserted composition).
-    */
   def tokenBudgetSample(docs: DataFrame, budget: Long = 600L,
-                        buckets: Int = 1024,
-                        tokenCount: Column = null): DataFrame = {
+                        buckets: Int = 1024): DataFrame = {
     require(budget >= 1, s"budget must be positive, got $budget")
     require(buckets >= 1, s"buckets must be positive, got $buckets")
     val spark = docs.sparkSession
     import spark.implicits._
-    val nTok = Option(tokenCount).getOrElse(size(tokens).cast("long"))
     val bw = (P31 + buckets - 1) / buckets
     // `hashed` feeds THREE consumers (the histogram collect, the
     // fully-kept semi join, the boundary window): an eager local
     // checkpoint computes the narrow (id, source, h, n_tok, b) relation
-    // ONCE — crucially the `tokenCount` column, which for the trained-BPE
-    // callers (t30/t38) replays the full merge chain over `text`, runs a
-    // single corpus scan instead of three (the t31 discipline; at 100 TB
-    // this is ~tens of bytes per doc of executor storage vs two extra
-    // full-text passes)
+    // ONCE, so `text` is scanned and tokenized in a single corpus pass
+    // instead of three (at 100 TB this is ~tens of bytes per doc of
+    // executor storage vs two extra full-text passes)
     val hashed = docs.select(col("doc_id"), col("source"),
       finalizedHash("tbs|", col("doc_id").cast("string")).as("h"),
-      nTok.cast("long").as("n_tok"))
+      size(tokens).cast("long").as("n_tok"))
       .withColumn("b", expr(s"CAST(h DIV $bw AS INT)"))
       .localCheckpoint()
     val hist = hashed.groupBy(col("source"), col("b"))
@@ -1600,58 +1113,6 @@ object TextOps {
     hashed.join(broadcast(offs.toSeq.toDF("b", "off")), Seq("b"))
       .withColumn("pos", col("off") + row_number().over(w) - 1)
       .select(col("doc_id"), col("h").as("shuffle_key"), col("pos"))
-  }
-
-  /** CCNet-style quality bucketing (Wenzek et al. 2020): every document
-    * lands in the head / middle / tail TERCILE of its language's quality
-    * distribution — the partition CCNet publishes and downstream recipes
-    * (Llama's CCNet reproduction, RedPajama-CC) consume, usually keeping
-    * head+middle. The score is the t14 integer-quantized unigram-LM
-    * logprob (cross-engine exact where perplexity floats would drift);
-    * thresholds are DISCRETE percentiles — t_head is the score of the
-    * ⌈n/3⌉-th document in descending score order, t_mid of the
-    * ⌈2n/3⌉-th — so assignment depends only on a doc's score value and
-    * ties land in the same bucket in both engines.
-    *
-    * Scale shape: the t14 vocabulary chain unchanged (TakeOrdered vocab,
-    * broadcast, two-phase per-doc aggregate — lang rides the doc_id
-    * grouping key, no join-back to the corpus); then a (lang × distinct
-    * scores) histogram — KB-sized because quantized scores live in a
-    * BOUNDED integer range independent of corpus size — collects to the
-    * driver, the exact tercile thresholds fall out of a cumsum, and the
-    * |langs|-row threshold table broadcasts back. No per-language global
-    * sort, no ntile window over the corpus.
-    */
-  def qualityBuckets(docs: DataFrame, vocabSize: Int = 256): DataFrame = {
-    val spark = docs.sparkSession
-    import spark.implicits._
-    // scored feeds TWO actions (threshold histogram + the bucket join):
-    // localCheckpoint so the unigram scoring chain runs once — the same
-    // discipline as t31's bigram chain
-    val scored = unigramScores(docs, vocabSize, Seq("lang"))
-      .select(col("doc_id"), col("lang"), col("score_x100"))
-      .localCheckpoint()
-    val hist = scored.groupBy(col("lang"), col("score_x100"))
-      .agg(count(lit(1)).as("cnt"))
-      .collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2)))
-    val th = hist.groupBy(_._1).map { case (lang, rows) =>
-      val desc = rows.sortBy(-_._2)
-      val n = desc.map(_._3).sum
-      val (rHead, rMid) = ((n + 2) / 3, (2 * n + 2) / 3)
-      var cum = 0L
-      var tHead = Long.MinValue; var tMid = Long.MinValue
-      desc.foreach { case (_, s, c) =>
-        val lo = cum; cum += c
-        if (lo < rHead && rHead <= cum) tHead = s
-        if (lo < rMid && rMid <= cum) tMid = s
-      }
-      (lang, tHead, tMid)
-    }.toSeq
-    scored.join(broadcast(th.toDF("lang", "t_head", "t_mid")), Seq("lang"))
-      .select(col("doc_id"), col("lang"), col("score_x100"),
-        when(col("score_x100") >= col("t_head"), "head")
-          .when(col("score_x100") >= col("t_mid"), "middle")
-          .otherwise("tail").as("bucket"))
   }
 
   /** Deterministic mixture RESAMPLING — the recipe step that turns
@@ -1774,410 +1235,6 @@ object TextOps {
           .as("clean_text"))
   }
 
-  // ---------------------------------------------------- unigram LM quality
-
-  /** CCNet/Gopher-style unigram language-model quality signal: score each
-    * document by how much of it is made of high-frequency corpus tokens.
-    * A corpus-wide token-frequency table is built, the top `vocabSize`
-    * tokens become the model vocabulary, and each doc reports its token
-    * count, in-vocabulary token count, and a quantized log-probability
-    * sum — the per-token "logprob" is length(bin(count)) =
-    * ⌊log₂ count⌋+1, a PURE-INTEGER quantization, so the score is exact
-    * cross-engine (a float log₂ would hash-mismatch at the ulp level).
-    * score_x100 = 100·logprob_sum div n_tok is the per-token average;
-    * gibberish/rare-token docs score low, natural text scores high.
-    *
-    * Scale shape: the frequency build is one two-phase hash aggregate
-    * whose exchange is vocabulary-sized (how every LM vocab is built);
-    * top-V is TakeOrderedAndProject — never a global sort — with the
-    * deterministic tie-break (cnt desc, token hash, token); the tiny
-    * vocab broadcasts; scoring is a map-side join + one partial-agged
-    * groupBy(doc_id) whose exchange is ~1 row per doc. The corpus is
-    * never the shuffled side of a join.
-    */
-  def unigramQuality(docs: DataFrame, vocabSize: Int = 256): DataFrame =
-    unigramScores(docs, vocabSize, Nil)
-      .select(col("doc_id"), col("n_tok"), col("n_invocab"),
-        col("logprob_sum"), col("score_x100"))
-
-  /** The t14 scoring chain — top-`vocabSize` corpus vocabulary joined
-    * onto the token explode, quantized log-prob sum per doc — ONE
-    * definition shared by [[unigramQuality]] (t14) and
-    * [[qualityBuckets]] (t21): the score is oracle-contract-bearing, so
-    * a tweak applied to one caller but not the other would make t14 and
-    * t21 silently disagree. `keyCols` ride through the per-doc aggregate
-    * (t21 carries lang).
-    */
-  private def unigramScores(docs: DataFrame, vocabSize: Int,
-                            keyCols: Seq[String]): DataFrame = {
-    require(vocabSize >= 1, s"vocabSize must be positive, got $vocabSize")
-    // ONE token explode (the t25 docPair discipline): the corpus token
-    // stream rolls up to per-(doc, token) multiplicities once, and both
-    // the frequency table (Σ m per token — the same multiset total the
-    // flat count took) and the scoring join consume the checkpointed
-    // rollup; per-occurrence sums come back as m-weighted sums, so every
-    // count and quantized logprob is bit-identical to the two-explode
-    // form and the oracle SQL is untouched.
-    val toks = docs.select(
-      (col("doc_id") +: keyCols.map(col)) :+ explode(tokens).as("tok"): _*)
-    val docTok = toks
-      .groupBy((col("doc_id") +: keyCols.map(col)) :+ col("tok"): _*)
-      .agg(count(lit(1)).as("m"))
-      .localCheckpoint()
-    val freq = docTok.groupBy(col("tok")).agg(sum(col("m")).as("cnt"))
-    val vocab = freq
-      .orderBy(col("cnt").desc, poly_hash31(col("tok")).asc, col("tok").asc)
-      .limit(vocabSize)
-    docTok.join(broadcast(vocab), Seq("tok"), "left")
-      .groupBy(col("doc_id") +: keyCols.map(col): _*)
-      .agg(sum(col("m")).as("n_tok"),
-        sum(when(col("cnt").isNotNull, col("m")).otherwise(0L))
-          .as("n_invocab"),
-        coalesce(sum(col("m") * length(bin(col("cnt")))), lit(0L))
-          .as("logprob_sum"))
-      .withColumn("score_x100", expr("(100 * logprob_sum) div n_tok"))
-  }
-
-  /** t25 — BIGRAM LM quality (the CCNet/KenLM posture one notch up from
-    * t14's unigram): per-doc average conditional negative-log-probability
-    * proxy under the corpus-trained bigram model. For each doc bigram
-    * (w1 w2), quantized −log P(w2 | w1) ≈ q(c(w1 ·)) − q(c(w1 w2)) with
-    * q = length(bin(·)) — the t14/t17 integer log₂ — where c(w1 ·) is
-    * the count of bigrams STARTING with w1 (the proper conditional
-    * denominator) and c(w1 w2) the bigram count, both with multiplicity.
-    * Each term is ≥ 0 (the prefix count dominates its bigram count), so
-    * the sum stays non-negative and the `div` is truncation-safe
-    * cross-engine. Lower nll = more predictable/fluent text — rare
-    * continuations of common prefixes score worst, exactly the LM
-    * intuition CCNet's 5-gram perplexity filter runs on. Docs with < 2
-    * tokens have no bigrams and drop (the t23 convention).
-    *
-    * Scale shape: bigrams cross every exchange as poly_hash31 LONGS (f2
-    * the pair, f1 the prefix — the t23/d9 text-never-shuffles lesson);
-    * both count tables are two-phase hash aggregates whose map-side
-    * partials absorb the heavy bigrams; the join-backs are long-keyed
-    * equi-joins and the per-doc sum another two-phase aggregate. Linear
-    * in corpus bigram volume. Hash collisions fold identically in both
-    * engines (same family), so the scores stay hash-exact.
-    */
-  /** `minCount` prunes the MODEL tables (not the doc bigrams): bigram /
-    * prefix entries with count < minCount drop and score as unseen
-    * (count 1 → q = 1) — the standard LM min-count prune. With real
-    * counts c1 ≥ c2, so a surviving bigram always has a surviving prefix
-    * and the clamp below never fires on pruned tables either. The win is
-    * the model-table exchange: at corpus scale the bigram table is the
-    * largest text-tier relation, and pruning the long tail (most bigrams
-    * are hapax) shrinks it to the heavy head, which then BROADCASTS —
-    * the doc-bigram explode is never shuffled at all (vs two shuffle
-    * joins in the unpruned form). minCount = 1 keeps the exact unpruned
-    * semantics (inner joins, every bigram has a count).
-    *
-    * Each nll term is clamped at zero (ADVICE r4): with true counts the
-    * prefix count dominates its bigram count so every term is ≥ 0, but a
-    * poly_hash31 collision between bigrams could make c2 > c1, and a
-    * negative nll_sum would put Spark `div` vs DuckDB `//` rounding in
-    * play. The clamp (mirrored in the oracle) makes truncation-safety
-    * unconditional.
-    */
-  def bigramLmQuality(docs: DataFrame, minCount: Long = 1L): DataFrame = {
-    require(minCount >= 1, s"minCount must be >= 1, got $minCount")
-    // codegen'd bigram kernel: one byte-level pass per row emits the
-    // (f2, f1) hash pairs directly — the HOF form built every bigram as
-    // an intermediate string through interpreted lambdas and then ran
-    // two separate hash expressions over it (hash values bit-identical:
-    // same 64-byte window, same concat_ws/substring_index byte rules —
-    // BigramHashPairs scaladoc)
-    val big = docs.select(col("doc_id"),
-        explode(graft.functions.bigram_hash_pairs(tokens)).as("bg"))
-      .select(col("doc_id"), col("bg.f2").as("f2"), col("bg.f1").as("f1"))
-    // ONE corpus explode (was three: each model aggregate and the score
-    // join-back re-ran the tokenize+concat+hash explode from scratch —
-    // the exchanges don't line up, so Catalyst can't share the subtree).
-    // The per-(doc, bigram) multiplicity rollup is checkpointed once;
-    // BOTH model tables derive from its distinct-pair rollup by pure
-    // re-aggregation — c(f2) = Σ_pairs m and c(f1) = Σ_pairs m are the
-    // same multiset totals the flat counts took, so every count (and
-    // therefore every quantized nll term) is bit-identical and the
-    // oracle SQL is untouched. Scoring then joins the pair-level model
-    // onto the ALREADY-AGGREGATED docPair relation and weights each
-    // term by its multiplicity: n_bg = Σ m and nll_sum = Σ m·term
-    // reproduce the per-occurrence sums exactly.
-    if (minCount == 1L) {
-      // unpruned: the model tables are corpus-vocabulary-sized and the
-      // score join must shuffle SOMETHING corpus-shaped — so shuffle the
-      // aggregated docPair rollup once and derive both model tables from
-      // its distinct-pair rollup, never re-running the explode.
-      val docPair = big.groupBy(col("doc_id"), col("f2"), col("f1"))
-        .agg(count(lit(1)).as("m"))
-        .localCheckpoint()
-      val pair = docPair.groupBy(col("f2"), col("f1"))
-        .agg(sum(col("m")).as("pc"))
-        .localCheckpoint()
-      val c2 = pair.groupBy(col("f2")).agg(sum(col("pc")).as("c2"))
-      val c1 = pair.groupBy(col("f1")).agg(sum(col("pc")).as("c1"))
-      docPair.join(pair.join(c2, Seq("f2")).join(c1, Seq("f1"))
-          .select(col("f2"), col("f1"), col("c2"), col("c1")),
-          Seq("f2", "f1"))
-        .groupBy(col("doc_id"))
-        .agg(sum(col("m")).as("n_bg"),
-          sum(col("m") * greatest(lit(0L),
-            length(bin(col("c1"))) - length(bin(col("c2")))))
-            .cast("long").as("nll_sum"))
-        .select(col("doc_id"), col("n_bg"), col("nll_sum"),
-          expr("(100 * nll_sum) div n_bg").as("nll_x100"))
-    } else {
-      // pruned (t29): the heavy-head model BROADCASTS, so the
-      // per-occurrence stream never shuffles at all — keep the r5 shape
-      // verbatim: score on the raw explode, model aggregates straight
-      // off it. (Two rewrites were measured and REJECTED here: deriving
-      // c2/c1 via a (f2, f1) pair rollup assumes the rollup collapses
-      // map-side to the bigram vocabulary, but the corpus's bigram set
-      // is high-cardinality at bench scale, so the rollup + checkpoint
-      // cost ~2× the explodes they replaced — 3.2 s → 5.5-6 s warm.)
-      val c2 = big.groupBy(col("f2")).agg(count(lit(1)).as("c2"))
-      val c1 = big.groupBy(col("f1")).agg(count(lit(1)).as("c1"))
-      big
-        .join(broadcast(c2.filter(col("c2") >= minCount)), Seq("f2"), "left")
-        .join(broadcast(c1.filter(col("c1") >= minCount)), Seq("f1"), "left")
-        .withColumn("c2", coalesce(col("c2"), lit(1L)))
-        .withColumn("c1", coalesce(col("c1"), lit(1L)))
-        .groupBy(col("doc_id"))
-        .agg(count(lit(1)).as("n_bg"),
-          sum(greatest(lit(0L),
-            length(bin(col("c1"))) - length(bin(col("c2")))))
-            .cast("long").as("nll_sum"))
-        .select(col("doc_id"), col("n_bg"), col("nll_sum"),
-          expr("(100 * nll_sum) div n_bg").as("nll_x100"))
-    }
-  }
-
-  /** t31 — CCNet buckets under the BIGRAM LM (the composition CCNet
-    * actually ships: Wenzek et al. 2020 bucket by KenLM *perplexity*,
-    * not unigram rarity — t21 is the unigram stand-in, this is the
-    * 2-gram upgrade): per-language terciles over [[bigramLmQuality]]'s
-    * integer nll_x100, LOWER = more fluent, so `head` is the LOW-nll
-    * tercile (note the flipped comparisons vs t21, where high score =
-    * head). Same scale shape as t21: a (lang × distinct-score) histogram
-    * collects to the driver (KBs — nll_x100 is bounded by 100·64), a
-    * driver cumsum finds the two discrete thresholds, and they broadcast
-    * back as a per-row CASE — no ntile/rank window over the corpus.
-    * Docs with <2 tokens have no bigrams and are absent, mirroring t25.
-    */
-  def perplexityBuckets(docs: DataFrame, minCount: Long = 1L): DataFrame = {
-    val spark = docs.sparkSession
-    import spark.implicits._
-    // scored feeds TWO actions (the threshold histogram and the final
-    // bucket join): localCheckpoint so the bigram-LM chain — two corpus
-    // count tables + the doc join — runs ONCE, not once per action
-    // (measured: 14.9 s → ~8 s at sf0.1)
-    val scored = bigramLmQuality(docs, minCount)
-      .join(docs.select(col("doc_id"), col("lang")), Seq("doc_id"))
-      .select(col("doc_id"), col("lang"), col("nll_x100"))
-      .localCheckpoint()
-    val hist = scored.groupBy(col("lang"), col("nll_x100"))
-      .agg(count(lit(1)).as("cnt"))
-      .collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2)))
-    val th = hist.groupBy(_._1).map { case (lang, rows) =>
-      val asc = rows.sortBy(_._2)
-      val n = asc.map(_._3).sum
-      val (rHead, rMid) = ((n + 2) / 3, (2 * n + 2) / 3)
-      var cum = 0L
-      var tHead = Long.MaxValue; var tMid = Long.MaxValue
-      asc.foreach { case (_, s, c) =>
-        val lo = cum; cum += c
-        if (lo < rHead && rHead <= cum) tHead = s
-        if (lo < rMid && rMid <= cum) tMid = s
-      }
-      (lang, tHead, tMid)
-    }.toSeq
-    scored.join(broadcast(th.toDF("lang", "t_head", "t_mid")), Seq("lang"))
-      .select(col("doc_id"), col("lang"), col("nll_x100"),
-        when(col("nll_x100") <= col("t_head"), "head")
-          .when(col("nll_x100") <= col("t_mid"), "middle")
-          .otherwise("tail").as("bucket"))
-  }
-
-  // ----------------------------------------------- DSIR importance weights
-
-  /** DSIR-style importance weights for target-matched data selection
-    * (Xie et al., "Data Selection for Language Models via Importance
-    * Resampling", NeurIPS'23): score every corpus document by how much
-    * its hashed-bigram feature distribution looks like a TARGET slice
-    * (here a source label — in production the high-quality reference
-    * corpus) relative to the RAW corpus. Per-occurrence weight is
-    * q(T_f + 1) − q(R_f + 1) with q = length(bin(·)) — the t14
-    * integer-log₂ quantization, so logw is a pure-integer sum and the
-    * cross-engine oracle is hash-exact where float log-likelihood ratios
-    * would drift at the ulp. Docs with fewer than two tokens score
-    * (0, 0). Selection = rank by logw desc (more-target-like is less
-    * negative); emitting the weights keeps the operator composable with
-    * [[sampleBySource]]-style threshold selection.
-    *
-    * Scale shape: one linear bigram explode; the raw and target feature
-    * tables are `buckets`-row two-phase hash aggregates (map-side
-    * partials absorb the heavy buckets); the weight table is KBs and
-    * broadcasts back onto the explode, and the per-doc sum is another
-    * two-phase aggregate — the corpus is never shuffled, exactly the t14
-    * vocabulary shape.
-    */
-  /** Word bigrams of `text` WITH multiplicity (the DSIR feature unit —
-    * unlike the distinct shingle tiers, repetition counts).
-    */
-  private def dsirBigrams: Column =
-    when(size(tokens) >= 2,
-      transform(sequence(lit(1), size(tokens) - 1),
-        i => concat_ws(" ", element_at(tokens, i),
-          element_at(tokens, i + 1))))
-      .otherwise(array().cast("array<string>"))
-
-  private def dsirFeats(docs: DataFrame, buckets: Int): DataFrame =
-    docs.select(col("doc_id"), col("source"), explode(dsirBigrams).as("bg"))
-      .select(col("doc_id"), col("source"),
-        (graft.functions.poly_hash31(col("bg")) % buckets).as("f"))
-
-  /** The (feature, weight) model relation — ≤ `buckets` rows. Raw and
-    * target counts come out of ONE conditional aggregation over the
-    * bigram explode (count(when(target))), not two separate passes — a
-    * filter on the target slice would defeat exchange reuse and scan
-    * the corpus-wide explode twice for the same hash-exact result.
-    */
-  private def dsirWt(feats: DataFrame, targetSource: String): DataFrame =
-    feats.groupBy(col("f"))
-      .agg(count(lit(1)).as("rc"),
-        count(when(col("source") === targetSource, lit(1))).as("tc"))
-      .select(col("f"),
-        (length(bin(col("tc") + 1)) -
-          length(bin(col("rc") + 1))).cast("long").as("w"))
-
-  def dsirWeights(docs: DataFrame, targetSource: String = "src0",
-                  buckets: Int = 256): DataFrame = {
-    require(buckets >= 1, s"buckets must be positive, got $buckets")
-    val feats = dsirFeats(docs, buckets)
-    // every observed feature has a raw count, so the weight join is total
-    val perDoc = feats.join(broadcast(dsirWt(feats, targetSource)), Seq("f"))
-      .groupBy(col("doc_id"))
-      .agg(count(lit(1)).as("n_big"), sum(col("w")).as("logw"))
-    docs.select(col("doc_id"))
-      .join(perDoc, Seq("doc_id"), "left")
-      .select(col("doc_id"),
-        coalesce(col("n_big"), lit(0L)).as("n_big"),
-        coalesce(col("logw"), lit(0L)).as("logw"))
-  }
-
-  /** The collected (f → w) model — KBs at any corpus size (≤ `buckets`
-    * entries): the artifact a production selection job materializes once
-    * from a reference pass and reuses per shard or per stream batch.
-    */
-  def dsirWeightTable(docs: DataFrame, targetSource: String = "src0",
-                      buckets: Int = 256): Map[Int, Long] =
-    dsirWt(dsirFeats(docs, buckets), targetSource).collect()
-      .map(r => r.getLong(0).toInt -> r.getLong(1)).toMap
-
-  /** Stateless in-row DSIR scorer against a FIXED weight table — the
-    * streaming sibling of [[dsirWeights]] (the decontamination pattern:
-    * model broadcast as a literal, verdicts per row, no state operators,
-    * append-mode safe). Batch-parity with [[dsirWeights]] is exact when
-    * the table was built over the same corpus (spec-asserted): every
-    * observed feature is in the table, so the coalesce(0) miss arm never
-    * fires there; on a tailing stream it scores unseen features 0, the
-    * standard out-of-model convention.
-    */
-  def dsirScoreInRow(docs: DataFrame, wt: Map[Int, Long],
-                     buckets: Int = 256): DataFrame = {
-    val wmap = typedLit(wt)
-    val bg = dsirBigrams
-    docs.select(col("doc_id"),
-      size(bg).cast("long").as("n_big"),
-      aggregate(bg, lit(0L), (acc, s) =>
-        acc + coalesce(element_at(wmap,
-          (graft.functions.poly_hash31(s) % buckets).cast("int")), lit(0L)))
-        .as("logw"))
-  }
-
-  // --------------------------------- Naive-Bayes quality classifier (t28)
-
-  /** The NB model relation — ≤ `buckets` rows of (feature, log-odds).
-    * Both class counts come out of ONE conditional aggregation over the
-    * feature explode (the dsirWt discipline — a per-class filter would
-    * scan the corpus-wide explode twice for the same hash-exact result).
-    */
-  private def nbWt(feats: DataFrame, positive: Column): DataFrame =
-    feats.groupBy(col("f"))
-      .agg(count(when(positive, lit(1))).as("pc"),
-        count(when(!positive, lit(1))).as("nc"))
-      .select(col("f"),
-        (length(bin(col("pc") + 1)) - length(bin(col("nc") + 1)))
-          .cast("long").as("w"))
-
-  /** t28 — supervised quality classifier (the fastText-classifier
-    * posture of CCNet/LLaMA-style curation: label a trusted slice,
-    * train a linear bag-of-features model, score the whole corpus —
-    * the SUPERVISED sibling of [[dsirWeights]]' likelihood ratio).
-    * Naive-Bayes per-feature log-odds over the same hashed-bigram
-    * family: w(f) = q(c_pos(f)+1) − q(c_neg(f)+1), q = length(bin(·))
-    * — the t14/t17 integer log₂ quantization, so every score is
-    * hash-exact cross-engine. Per doc: feature count, Σ w over feature
-    * OCCURRENCES (bag semantics, like fastText's mean-of-embeddings
-    * but unnormalized to stay integral), and the verdict logodds > 0.
-    * The per-doc class-prior term is omitted deliberately: it is
-    * constant across docs, so it shifts every score equally — the
-    * decision threshold absorbs it.
-    *
-    * Scale shape: identical to t17 — one corpus-linear explode, one
-    * conditional two-phase aggregate whose exchange is ≤ `buckets`
-    * rows, model broadcasts back, per-doc partial-agged groupBy. The
-    * corpus is never the shuffled side of a join.
-    */
-  def nbQuality(docs: DataFrame,
-                positiveSources: Seq[String] = Seq("src0", "src1"),
-                buckets: Int = 256): DataFrame = {
-    require(buckets >= 1, s"buckets must be positive, got $buckets")
-    require(positiveSources.nonEmpty, "nbQuality needs a labeled slice")
-    val feats = dsirFeats(docs, buckets)
-    val pos = col("source").isin(positiveSources: _*)
-    val perDoc = feats.join(broadcast(nbWt(feats, pos)), Seq("f"))
-      .groupBy(col("doc_id"))
-      .agg(count(lit(1)).as("n_feat"), sum(col("w")).as("logodds"))
-    docs.select(col("doc_id"))
-      .join(perDoc, Seq("doc_id"), "left")
-      .select(col("doc_id"),
-        coalesce(col("n_feat"), lit(0L)).as("n_feat"),
-        coalesce(col("logodds"), lit(0L)).as("logodds"))
-      .withColumn("is_high", col("logodds") > 0L)
-  }
-
-  /** The collected (f → w) NB model — KBs at any corpus size, the
-    * artifact a production classifier trains once and serves everywhere
-    * (the [[dsirWeightTable]] pattern).
-    */
-  def nbWeightTable(docs: DataFrame,
-                    positiveSources: Seq[String] = Seq("src0", "src1"),
-                    buckets: Int = 256): Map[Int, Long] =
-    nbWt(dsirFeats(docs, buckets),
-      col("source").isin(positiveSources: _*)).collect()
-      .map(r => r.getLong(0).toInt -> r.getLong(1)).toMap
-
-  /** Stateless in-row NB scorer against a FIXED model table — the
-    * streaming sibling of [[nbQuality]] (model broadcast as a literal,
-    * verdict per row, no state operators, append-mode safe). Exact
-    * batch parity when the table was trained on the same corpus
-    * (every observed feature is in the model — StreamingSpec); on a
-    * tailing stream unseen features score 0, the out-of-model
-    * convention.
-    */
-  def nbScoreInRow(docs: DataFrame, wt: Map[Int, Long],
-                   buckets: Int = 256): DataFrame = {
-    val wmap = typedLit(wt)
-    val bg = dsirBigrams
-    docs.select(col("doc_id"),
-      size(bg).cast("long").as("n_feat"),
-      aggregate(bg, lit(0L), (acc, s) =>
-        acc + coalesce(element_at(wmap,
-          (graft.functions.poly_hash31(s) % buckets).cast("int")), lit(0L)))
-        .as("logodds"))
-      .withColumn("is_high", col("logodds") > 0L)
-  }
-
   // ------------------------------------------------------- BM25 retrieval
 
   /** Integer-exact BM25 top-k keyword retrieval over the corpus — the
@@ -2190,7 +1247,7 @@ object TextOps {
     *   num  = 44·A·tf                 ( = tf·(k1+1) scaled by 20A )
     *   den  = 20·A·tf + 6·A + 18·dl   ( = tf + k1·(1−b+b·dl/A), same scale )
     *   idfq = ⌊log₂((N−df)·1024 div (df+1) + 1)⌋ + 1   (length(bin(x)) —
-    *          the t14 integer-log quantization, monotone in true idf)
+    *          an integer-log quantization, monotone in true idf)
     *   score_term = (idfq · num · 1000) div den
     * Overflow bound: dl, tf ≤ 2²⁰ and A ≤ 2²⁰ keep idfq·num·1000 under
     * 2.8e18 < 2⁶³. Per-term saturation is the true k1+1 = 2.2 ceiling.
@@ -2202,7 +1259,7 @@ object TextOps {
     * the df table (|terms| rows) broadcasts back; doc scores partial-agg
     * per doc; top-k is TakeOrderedAndProject — never a global sort. The
     * two corpus-level scalars (N, Σdl) are one count/sum action at build
-    * (the e6 centroid-collect shape); the oracle computes the same
+    * (a 1-row collect); the oracle computes the same
     * scalars as subqueries.
     */
   def bm25TopK(docs: DataFrame, queryTerms: Seq[String],
@@ -2234,90 +1291,5 @@ object TextOps {
       .agg(sum(col("s")).as("score_x1000"), count(lit(1)).as("n_terms"))
       .orderBy(col("score_x1000").desc, col("doc_id"))
       .limit(k)
-  }
-
-  // ------------------------------------------------------ C4 cleaning pass
-
-  /** t34 generator — deterministic line-structured rendering of the flat
-    * synthetic corpus (the engine consumes the STRUCTURE, the oracle
-    * replays the derivation). The
-    * driver's documents have no newlines or sentence punctuation, so a
-    * line-level gate over them would be vacuous; this renders each doc
-    * as k-word lines (k = doc_id % 7 + 3) with a terminal-punctuation
-    * cycle ('.', '?', '!', none — by (doc_id + line) % 4) and three
-    * deterministic contaminants the C4 rules exist to catch: a '{x}'
-    * code token on lines where (doc_id + line) % 13 == 0, a
-    * 'javascript' word where (doc_id + line) % 11 == 0, and
-    * ' lorem ipsum' appended to line 1 of every 17th doc. Pure per-row
-    * projection (sequence/slice HOFs) — no shuffle; line count is
-    * bounded by the longest document, never corpus size.
-    */
-  def synthesizeLines(docs: DataFrame): DataFrame = {
-    val ws = tokens
-    val k = (col("doc_id") % 7 + 3).cast("int")
-    // ceil(|ws| / k): double division is exact below 2^52 and truncates
-    // to floor on positives — mirrored by DuckDB's // operator
-    val nl = ((size(ws) + k - lit(1)).cast("long") / k).cast("int")
-    val lines = transform(sequence(lit(1), nl), i => {
-      val base = array_join(slice(ws, (i - lit(1)) * k + lit(1), k), " ")
-      val withBrace = when((col("doc_id") + i) % 13 === 0,
-        concat(base, lit(" {x}"))).otherwise(base)
-      val withJs = when((col("doc_id") + i) % 11 === 0,
-        concat(withBrace, lit(" javascript"))).otherwise(withBrace)
-      val withLorem = when(col("doc_id") % 17 === 0 && i === 1,
-        concat(withJs, lit(" lorem ipsum"))).otherwise(withJs)
-      val punct = element_at(array(lit("."), lit("?"), lit("!"), lit("")),
-        ((col("doc_id") + i) % 4 + 1).cast("int"))
-      concat(withLorem, punct)
-    })
-    docs.select(col("doc_id"), array_join(lines, "\n").as("text"),
-      col("lang"), col("source"))
-  }
-
-  /** C4 cleaning pass (Raffel et al. 2020, §2.2 — the line-level
-    * retention + page-level gates applied to Common Crawl before T5;
-    * after it the default first pass of most web-scale English corpora).
-    * One verdict row per document over line-structured text:
-    *
-    * Line retention (a line survives iff ALL hold):
-    *   - ends in a terminal punctuation mark ('.', '!', '?', '"')
-    *   - has at least 5 words
-    *   - does not contain the word 'javascript' (C4 drops the line,
-    *     not the page)
-    *
-    * Page-level gates (on the ORIGINAL text / retained lines):
-    *   r_sent   retained text contains ≥ 3 sentence marks ([.!?])
-    *   r_brace  page does not contain '{' (code marker)
-    *   r_lorem  page does not contain 'lorem ipsum' (boilerplate
-    *            marker — stands in for C4's parameterized blocklist)
-    *   pass = r_sent ∧ r_brace ∧ r_lorem
-    *
-    * Outputs exact integers (n_lines, n_kept, n_sentences, kept_chars =
-    * length of the retained text re-joined with '\n') so the gate is
-    * bit-identical cross-engine — no float ratios anywhere. Pure
-    * per-row projection: higher-order array functions only, NO shuffle,
-    * stream-transparent like the rest of the per-row text tier; at
-    * 100 TB this runs in the scan stage at ingest bandwidth.
-    */
-  def c4Rules(docs: DataFrame): DataFrame = {
-    val lines = split(col("text"), "\n")
-    val kept = filter(lines, l =>
-      l.rlike("[.!?\"]$") && size(split(l, " ")) >= 5 &&
-        !l.rlike("\\bjavascript\\b"))
-    val m = docs.select(col("doc_id"),
-      size(lines).cast("long").as("n_lines"),
-      size(kept).cast("long").as("n_kept"),
-      array_join(kept, "\n").as("kept_text"),
-      col("text").contains("{").as("has_brace"),
-      col("text").contains("lorem ipsum").as("has_lorem"))
-    val nSent = (length(col("kept_text")) -
-      length(regexp_replace(col("kept_text"), "[.!?]", ""))).cast("long")
-    m.select(col("doc_id"), col("n_lines"), col("n_kept"),
-      nSent.as("n_sentences"),
-      length(col("kept_text")).cast("long").as("kept_chars"),
-      (nSent >= 3L).as("r_sent"),
-      (!col("has_brace")).as("r_brace"),
-      (!col("has_lorem")).as("r_lorem"),
-      (nSent >= 3L && !col("has_brace") && !col("has_lorem")).as("pass"))
   }
 }

@@ -22,14 +22,17 @@ class EntryContractSpec extends SparkSuite {
     assert(unoracled.isEmpty, s"queries without oracles: $unoracled")
     // the tiers are p* (pipeline), q* (relational), t* (text curation),
     // d* (dedup) and e* (embedding); the media tier (m*) and the ANN
-    // search queries are gone. d* keeps only the ladder core and the
-    // decon, run, KMV and embedding queries; e* keeps only the two that
-    // go with the text tier: SemDeDup and the BM25+dense fusion
+    // search queries are gone. t* keeps only the split, chunk, redact,
+    // gate, mix, pack, decon, sampling, upsample, shuffle, BM25,
+    // coverage, segment-dedup and pipeline queries; d* keeps only the
+    // ladder core and the decon, run, KMV and embedding queries; e*
+    // keeps only the two that go with the text tier: SemDeDup and the
+    // BM25+dense fusion
     val offTier = SparkEntry.queries.keySet.filterNot(_.matches("[pqtde][0-9]+_.*"))
     assert(offTier.isEmpty, s"queries outside the p/q/t/d/e tiers: $offTier")
     val eTier = SparkEntry.queries.keySet.filter(_.startsWith("e"))
     assert(eTier == Set("e8_semdedup", "e31_hybrid_rrf"), s"e tier: $eTier")
-    assert(SparkEntry.queries.size == 89, s"${SparkEntry.queries.size} queries")
+    assert(SparkEntry.queries.size == 70, s"${SparkEntry.queries.size} queries")
     // the benchmark reads these oracles by key (perfbench's OracleSql.used);
     // a missing one would otherwise surface only when the benchmark runs
     val src = new String(java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(

@@ -94,7 +94,7 @@ class RenderFuzzSpec extends SparkSuite {
     1 -> Gen.oneOf(true, false).map(JBool),
     1 -> Gen.const(JNull))
 
-  private def jval(depth: Int, keys: Gen[String] = keyGen): Gen[J] =
+  private def jval(depth: Int, keys: Gen[String]): Gen[J] =
     if (depth <= 0) scalarGen
     else Gen.frequency(
       6 -> scalarGen,

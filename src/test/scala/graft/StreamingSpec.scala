@@ -250,7 +250,7 @@ class StreamingSpec extends SparkSuite {
       progressed.map(_.stateOperators.length).mkString(","))
   }
 
-  test("per-row text ops are stream-transparent: split/mix/redact/quality identical on stream vs batch") {
+  test("per-row text ops are stream-transparent: redact/split/mix/upsample identical on stream vs batch") {
     import spark.implicits._
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     import graft.operators.TextOps
@@ -281,29 +281,13 @@ class StreamingSpec extends SparkSuite {
       assert(got == want, s"$name: stream != batch")
     }
     check("redact", TextOps.redactPii)
-    check("quality", TextOps.qualityCounts)
     check("split", TextOps.deterministicSplit)
     check("mix", TextOps.weightedSample(_,
       when(col("source") === "src0", lit(100)).otherwise(lit(50))))
-    // DSIR scoring against a fixed weight table is stateless per-row —
-    // the model is a literal map, so the stream scores exactly like the
-    // batch pass (the decontamination pattern)
-    check("dsir", TextOps.dsirScoreInRow(_, TextOps.dsirWeightTable(batch)))
-    // NB classifier serving is the same fixed-model in-row pattern: the
-    // trained log-odds table scores a tailing stream exactly like batch
-    check("nb", TextOps.nbScoreInRow(_, TextOps.nbWeightTable(batch)))
-    // the Gopher rule gate is a pure projection — a tailing ingest can
-    // apply the same admission rules the batch tier does
-    check("gopher", TextOps.gopherRules)
     // mixture resampling broadcasts a literal weight table; per-row
     // explode is stateless, so stream copies == batch copies
     check("upsample", TextOps.upsample(_, Map("src0" -> 2500L,
       "src1" -> 500L, "src2" -> 0L)))
-    // the fertility gate's serving form: merge table + corpus-mean both
-    // literals (the trained artifact), scoring a pure projection
-    val fertMerges = TextOps.bpeTrainMerges(batch, 4)
-    check("fertility",
-      TextOps.bpeFertilityScoreInRow(_, fertMerges, 700L))
   }
 
   test("kill-resume: shutdown-hook drain stops queries; restart loses nothing, dupes nothing (K4)") {

@@ -43,29 +43,6 @@ class TextOpsSpec extends SparkSuite {
     assert(ladder.subsetOf(exact))
   }
 
-  test("perplexityBuckets: per-lang terciles with FLIPPED ordering — " +
-    "head is the low-nll tercile and buckets are balanced") {
-    val d = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-    val rows = TextOps.perplexityBuckets(d).collect()
-      .map(r => (r.getString(1), r.getLong(2), r.getString(3)))
-    assert(rows.nonEmpty)
-    rows.groupBy(_._1).values.foreach { rs =>
-      val by = rs.groupBy(_._3).view.mapValues(_.size).toMap
-      val n = rs.size
-      // discrete-threshold terciles: each bucket within ±(ties) of n/3 —
-      // loose band, but head can never dominate
-      assert(by.getOrElse("head", 0) >= 1 && by.getOrElse("tail", 0) >= 1)
-      assert(by.values.max <= n) // sanity
-      // ordering: every head nll <= every tail nll (threshold semantics)
-      val maxHead = rs.filter(_._3 == "head").map(_._2).maxOption
-      val minTail = rs.filter(_._3 == "tail").map(_._2).minOption
-      (maxHead, minTail) match {
-        case (Some(h), Some(t)) => assert(h <= t, s"head $h > tail $t")
-        case _ => ()
-      }
-    }
-  }
-
   test("multiSuiteDecon: contamination attributes to the RIGHT suite, " +
     "and the nSuites=1 slice is exactly t12's verdict set") {
     val sA = (1 to 15).map(i => s"qa$i").mkString(" ")
@@ -92,15 +69,6 @@ class TextOpsSpec extends SparkSuite {
     assert(one == t12, s"${one.size} vs ${t12.size}")
   }
 
-  test("tokenCounts / qualityCounts / langId shapes on a marker doc") {
-    val d = docs(1L -> "the fast el cat and the dog a 42x")
-    val tc = TextOps.tokenCounts(d).collect()(0)
-    assert(tc.getInt(1) == 9) // ws tokens
-    assert(tc.getInt(2) == 9) // word tokens ([a-z0-9]+ keeps '42x' whole)
-    val li = TextOps.langId(d).collect()(0)
-    assert(li.getString(2) == "en") // 'the'×2 + 'and' beat es ('el')
-  }
-
   test("redactPii scrubs urls/emails/phones in order, counts agree with replacements") {
     val d = docs(
       1L -> "mail me at jo.doe+x@corp.example.com or call +1 (555) 123-4567 now",
@@ -114,18 +82,6 @@ class TextOpsSpec extends SparkSuite {
     // the bare email outside any url survives to the email pass
     assert(got(2L) == (("see <URL> and <URL> then <EMAIL>", 2, 1, 0)))
     assert(got(3L) == (("no pii here at all", 0, 0, 0)))
-  }
-
-  test("repetitionSignal: duplicate 3-grams counted exactly; short docs zero out") {
-    val got = TextOps.repetitionSignal(docs(
-      1L -> "a b c a b c a b c", // 7 grams, distinct {abc,bca,cab} = 3
-      2L -> "w1 w2 w3 w4",       // 2 grams, both unique
-      3L -> "only two"))         // < 3 tokens -> all zero
-      .collect().map(r => r.getLong(0) ->
-        ((r.getInt(1), r.getInt(2), r.getInt(3)))).toMap
-    assert(got(1L) == ((7, 3, 4)))
-    assert(got(2L) == ((2, 2, 0)))
-    assert(got(3L) == ((0, 0, 0)))
   }
 
   test("weightedSample: rate 100 keeps all, rate 0 keeps none, deterministic across runs") {
@@ -233,33 +189,6 @@ class TextOpsSpec extends SparkSuite {
     // n_tokens reflects the REDACTED text (identity augment + PII-free
     // corpus here: token count equals the raw text's)
     assert(out.collect().forall(_.getAs[Int]("n_tokens") == 60))
-  }
-
-  test("dsirWeights: target-like docs outscore unrelated ones; short docs score (0,0); n_big = tokens-1") {
-    import spark.implicits._
-    val tgtText = (1 to 40).map(i => s"tw${i % 6}").mkString(" ")
-    val offText = (1 to 40).map(i => s"zz${i % 6}").mkString(" ")
-    val rows = Seq(
-      (1L, tgtText, "en", "src0", 200L),   // the target slice
-      (2L, tgtText, "en", "src0", 200L),
-      (3L, tgtText, "en", "srcX", 200L),   // target-like, outside slice
-      (4L, offText, "en", "srcX", 200L),   // unrelated vocabulary
-      (5L, "solo", "en", "srcX", 4L))      // one token: no bigrams
-    val d = rows.toDF("doc_id", "text", "lang", "source", "n_chars")
-    val got = TextOps.dsirWeights(d).collect()
-      .map(r => r.getLong(0) -> (r.getLong(1), r.getLong(2))).toMap
-    assert(got.keySet == Set(1L, 2L, 3L, 4L, 5L))
-    assert(got(5L) == (0L, 0L))
-    assert(got(1L)._1 == 39L && got(3L)._1 == 39L && got(4L)._1 == 39L)
-    // doc 3 shares every bigram with the target slice; doc 4 shares none —
-    // the importance weight must rank 3 strictly above 4
-    assert(got(3L)._2 > got(4L)._2,
-      s"target-like ${got(3L)._2} should outrank unrelated ${got(4L)._2}")
-    // the in-row scorer against the collected model reproduces the
-    // distributed form exactly (every observed feature is in the table)
-    val inRow = TextOps.dsirScoreInRow(d, TextOps.dsirWeightTable(d))
-      .collect().map(r => r.getLong(0) -> (r.getLong(1), r.getLong(2))).toMap
-    assert(inRow == got)
   }
 
   test("corpusPipeline: stage-boundary materialization is row-identical and cuts the plan at the boundary") {
@@ -402,20 +331,6 @@ class TextOpsSpec extends SparkSuite {
     // 9 tokens → 7 positions each; shingle-less doc 5 absent (as in t23)
     assert(got == Map(1L -> ((7L, 3L)), 2L -> ((7L, 3L)),
       3L -> ((7L, 0L)), 4L -> ((7L, 0L))))
-  }
-
-  test("bigramLmQuality: rare continuations of common prefixes score worst; hand-computed nll") {
-    // corpus bigrams (with multiplicity): doc1 "a b a b" → (a b),(b a),
-    // (a b); doc2 "a b" → (a b); doc3 "a c" → (a c). c(a·)=4, c(b·)=1,
-    // c(a b)=3, c(b a)=1, c(a c)=1; q=⌊log2⌋+1: q(4)=3,q(3)=2,q(1)=1.
-    // doc1: (3−2)+(1−1)+(3−2)=2 over 3 → 66; doc2: 1 over 1 → 100;
-    // doc3: (3−1)=2 over 1 → 200 — the rare continuation is worst.
-    val got = TextOps.bigramLmQuality(docs(
-        1L -> "a b a b", 2L -> "a b", 3L -> "a c", 4L -> "solo"))
-      .collect().map(r => r.getLong(0) ->
-        ((r.getLong(1), r.getLong(2), r.getLong(3)))).toMap
-    assert(got == Map(1L -> ((3L, 2L, 66L)), 2L -> ((1L, 1L, 100L)),
-      3L -> ((1L, 2L, 200L)))) // 1-token doc 4 has no bigrams → absent
   }
 
   test("dupRunLength: generative equivalence with an in-memory runs model") {
@@ -574,98 +489,6 @@ class TextOpsSpec extends SparkSuite {
       !plan.contains("SortMergeJoin"), plan)
   }
 
-  test("bpeFertilityGate: fertility is exact tokens-per-1000-chars, the " +
-      "±25%-of-corpus-mean band keeps normal text and drops both tails") {
-    // normal docs share merge-heavy words; the junk doc's distinct rare
-    // string stays fully split (high fertility); the degenerate doc is
-    // one fully-merged word amid long spaces padding (low fertility)
-    val normal = (1L to 8L).map(i => i -> ("the cat sat on the mat " * 4))
-    val d = docs(normal ++ Seq(
-      90L -> "zqxjkvbwpf zqxjkvbwpf qzjxkwvbfp xjqzkvwbpf",
-      91L -> ("the" + " " * 120)): _*)
-    val merges = TextOps.bpeTrainMerges(d, 8)
-    val toks = TextOps.bpeTokenCounts(d, merges).collect()
-      .map(r => r.getLong(0) -> r.getLong(2)).toMap
-    val chars = d.collect().map(r =>
-      r.getAs[Long]("doc_id") -> r.getAs[String]("text").length.toLong).toMap
-    val mean = toks.values.sum * 1000L / chars.values.sum
-    val got = TextOps.bpeFertilityGate(d, merges).collect()
-      .map(r => r.getLong(0) ->
-        ((r.getLong(1), r.getLong(2), r.getLong(3), r.getBoolean(4)))).toMap
-    got.foreach { case (id, (nc, bt, fert, keep)) =>
-      assert(nc == chars(id) && bt == toks(id), s"doc $id inputs")
-      assert(fert == bt * 1000L / math.max(nc, 1L), s"doc $id fert")
-      assert(keep == (math.abs(fert - mean) * 4 <= mean), s"doc $id keep")
-    }
-    assert((1L to 8L).forall(got(_)._4), "normal docs must pass")
-    assert(!got(90L)._4 && got(90L)._3 > mean, "junk tail must fail high")
-    assert(!got(91L)._4 && got(91L)._3 < mean, "degenerate must fail low")
-  }
-
-  test("bpeModelFor: artifact round-trips merges + mean exactly; the " +
-      "model-served gate is row-identical to the in-query gate; the " +
-      "second call LOADS (no retrain) and a changed corpus re-keys") {
-    val d = docs((1L to 12L).map(i =>
-      i -> ("the cat sat on the mat row " + i)): _*)
-    val dir = tempDir("bpe_model_spec").toString
-    val m1 = TextOps.bpeModelFor(d, dir, nMerges = 6)
-    // round-trip: the persisted artifact equals the in-memory model
-    assert(m1.merges == TextOps.bpeTrainMerges(d, 6))
-    val onDisk = new java.io.File(dir).listFiles().filter(_.isDirectory)
-    assert(onDisk.length == 1)
-    assert(TextOps.loadBpeModel(spark, onDisk(0).getPath) == m1)
-    // served output == the in-query gate's output
-    val served = TextOps.bpeFertilityScoreInRow(d, m1.merges, m1.meanFertX1k)
-      .collect().map(_.toSeq).sortBy(_.head.asInstanceOf[Long].toString)
-    val inQuery = TextOps.bpeFertilityGate(d, TextOps.bpeTrainMerges(d, 6))
-      .collect().map(_.toSeq).sortBy(_.head.asInstanceOf[Long].toString)
-    assert(served.toSeq == inQuery.toSeq)
-    // second call loads the SAME model (marker hit — identical values)
-    assert(TextOps.bpeModelFor(d, dir, nMerges = 6) == m1)
-    assert(new java.io.File(dir).listFiles().count(_.isDirectory) == 1)
-    // a different corpus (or nMerges) keys a NEW artifact directory
-    TextOps.bpeModelFor(d, dir, nMerges = 4)
-    assert(new java.io.File(dir).listFiles().count(_.isDirectory) == 2)
-  }
-
-  test("bpeBudgetSample: admission is the hash-order prefix under " +
-    "TRAINED-BPE counts, and the count column matches bpeTokenCounts") {
-    import org.apache.spark.sql.functions.{col, concat, lit, when}
-    import graft.functions.TextHashes.P31
-    val d = docs((1L to 60L).map(i =>
-        i -> (1 to (i % 7 + 1).toInt).map(j => s"w$j").mkString(" ")): _*)
-      .withColumn("source",
-        when(col("doc_id") <= 40L, "srcA").otherwise("srcB"))
-    val nMerges = 4
-    val budget = 90L
-    val merges = TextOps.bpeTrainMerges(d, nMerges)
-    val bpe = TextOps.bpeTokenCounts(d, merges).collect()
-      .map(r => r.getLong(0) -> r.getLong(2)).toMap
-    // brute force: same salt/finalizer hash order, admit while the
-    // PRECEDING per-source BPE-token total is under budget
-    val rows = d.select(col("doc_id"), col("source"),
-        (graft.functions.poly_hash31(
-          concat(lit("tbs|"), col("doc_id").cast("string")))
-          * graft.functions.VectorOps.HashMul % P31).as("h"))
-      .collect().map(r => (r.getLong(0), r.getString(1), r.getLong(2)))
-    val want = rows.groupBy(_._2).values.flatMap { rs =>
-      var cum = 0L
-      rs.sortBy(r => (r._3, r._1)).flatMap { r =>
-        val keep = cum < budget; cum += bpe(r._1)
-        if (keep) Some((r._1, r._2, bpe(r._1))) else None
-      }
-    }.toSet
-    val got = TextOps.bpeBudgetSample(d, nMerges, budget).collect()
-      .map(r => (r.getLong(0), r.getString(1), r.getLong(2))).toSet
-    assert(got == want, s"got ${got.size} want ${want.size}")
-    assert(got.nonEmpty && got.size < 60) // budget genuinely bites
-    // the swap matters: BPE totals diverge from the whitespace counts
-    // t18 budgets against (4 merges leave some multi-symbol words)
-    val wsSum = (1L to 60L).map(i => i % 7 + 1).sum
-    assert(bpe.values.sum != wsSum,
-      s"BPE total ${bpe.values.sum} degenerate-equal to whitespace $wsSum")
-  }
-
   test("segmentDedup: corpus-wide keep-first on segments, docs reassembled in order") {
     // w=10: doc 1 has segments A(t1..t10) B(t11..t20); doc 2 = B then C —
     // its copy of B must vanish, C survives; doc 3 is an exact copy of
@@ -747,28 +570,6 @@ class TextOpsSpec extends SparkSuite {
     assert(xh > 150L && xh < 550L, s"J(X,H) estimate $xh")
   }
 
-  test("unigramQuality: common-token docs outscore rare-token docs; exact quantized arithmetic") {
-    // 'the' appears 12x, 'cat'/'dog' 6x each, z* tokens once each.
-    // vocabSize=3 -> vocab = {the:12, cat:6, dog:6} (hash tie-break on
-    // the 6s, both still in)
-    val d = docs(
-      1L -> "the cat the dog the cat the dog the cat the dog",  // all in-vocab
-      2L -> "the cat the dog the cat the dog the cat the dog",
-      3L -> "z1 z2 z3 z4 z5 z6 z7 z8 z9 z10 z11 z12")           // none in-vocab
-    val got = TextOps.unigramQuality(d, vocabSize = 3).collect()
-      .map(r => r.getLong(0) ->
-        ((r.getLong(1), r.getLong(2), r.getLong(3), r.getLong(4)))).toMap
-    // doc1: 12 tokens, all in vocab; logprob = 6*len(bin(12)) + 3*len(bin(6))*2
-    //     = 6*4 + 6*3 = 42; score = 4200 div 12 = 350
-    assert(got(1L) == ((12L, 12L, 42L, 350L)))
-    assert(got(2L) == got(1L))
-    assert(got(3L) == ((12L, 0L, 0L, 0L)))
-    // scale shape: vocab via TakeOrdered (no global Sort->Limit), corpus
-    // joined broadcast
-    val qe = TextOps.unigramQuality(d, 3).queryExecution.executedPlan.toString
-    assert(qe.contains("TakeOrderedAndProject") && qe.contains("BroadcastHashJoin"), qe)
-  }
-
   test("kernel edge semantics: null-array shingles -> empty; dot_long mismatch/null-element -> NULL") {
     import org.apache.spark.sql.functions._
     import spark.implicits._
@@ -813,48 +614,6 @@ class TextOpsSpec extends SparkSuite {
       plan)
   }
 
-  test("gopherRules: every rule flips at its documented boundary") {
-    def rules(text: String): Map[String, Boolean] = {
-      val r = TextOps.gopherRules(docs(1L -> text)).collect()(0)
-      val names = Seq("r_wordcount", "r_meanlen", "r_symbol", "r_bullet",
-        "r_ellipsis", "r_alpha", "r_stop", "pass")
-      names.map(n => n -> r.getBoolean(r.fieldIndex(n))).toMap
-    }
-    // a clean passing doc: 50 words of 3-10 chars incl. two stopwords
-    val goodWords = Seq("the", "and") ++ (3 to 50).map(i => s"word$i")
-    val good = goodWords.mkString(" ")
-    assert(rules(good).forall(_._2 == true))
-    // word count: 49 words fails, 50 passes
-    assert(!rules(goodWords.drop(1).mkString(" "))("r_wordcount"))
-    // mean word length: fifty 2-char words -> mean 2 < 3 fails r_meanlen
-    val short = (1 to 50).map(_ => "ab").mkString(" ")
-    assert(!rules(short)("r_meanlen") && rules(short)("r_wordcount"))
-    // symbol ratio: k '#' words over 50+k words — 10k >= 50+k at k=6
-    // (ratio 6/56 > 0.1 fails); k=5 is 5/55 < 0.1 and passes
-    assert(!rules(good + " # # # # # #")("r_symbol"))
-    assert(rules(good + " # # # # #")("r_symbol"))
-    // bullets: 9 of 10 lines bulleted = 90% -> fail; 8 of 10 passes
-    val bullets9 = (good +: (1 to 9).map(i => s"- b$i")).mkString("\n")
-    assert(!rules(bullets9)("r_bullet"))
-    val bullets8 = (good +: "tail line" +: (1 to 8).map(i => s"- b$i"))
-      .mkString("\n")
-    assert(rules(bullets8)("r_bullet"))
-    // ellipsis: 3 of 10 lines = 30% -> fail; 2 of 10 passes
-    val ell3 = (good +: (1 to 6).map(i => s"line $i") ++:
-      (1 to 3).map(i => s"trailing $i...")).mkString("\n")
-    assert(!rules(ell3)("r_ellipsis"))
-    // alpha: 10 numeric of 50 = exactly 80% alpha -> pass (>=); 11 fails
-    val alpha40 = ((1 to 40).map(i => s"word$i") ++
-      (1 to 10).map(_ => "12345")).mkString(" ")
-    assert(rules(alpha40)("r_alpha"))
-    val alpha39 = ((1 to 39).map(i => s"word$i") ++
-      (1 to 11).map(_ => "12345")).mkString(" ")
-    assert(!rules(alpha39)("r_alpha"))
-    // stopwords: one distinct kind (even repeated) fails, two pass
-    val oneStop = ("the" +: "the" +: (3 to 50).map(i => s"word$i")).mkString(" ")
-    assert(!rules(oneStop)("r_stop"))
-  }
-
   test("globalShuffle: exact hash-order permutation, bucketing-invariant, no global one-partition sort") {
     import org.apache.spark.sql.functions.{col, concat, lit}
     import graft.functions.TextHashes.P31
@@ -884,47 +643,6 @@ class TextOpsSpec extends SparkSuite {
     val plan = TextOps.globalShuffle(d).queryExecution.executedPlan.toString
     assert(plan.contains("BroadcastHashJoin") &&
       !plan.contains("SortMergeJoin"), plan)
-  }
-
-  test("qualityBuckets: differential vs a driver-side tercile model; terciles populated per lang") {
-    import org.apache.spark.sql.functions.{col, when}
-    // two languages; per-doc token mixes of a very common token vs
-    // per-doc unique tokens spread the quality scores
-    val d = docs((1L to 18L).map { i =>
-        val common = (1L to i % 9 + 1).map(_ => "common").mkString(" ")
-        val rare = (1 to 4).map(j => s"rare${i}x$j").mkString(" ")
-        i -> s"$common $rare"
-      }: _*)
-      .withColumn("lang", when(col("doc_id") % 2 === 0, "aa").otherwise("bb"))
-    val got = TextOps.qualityBuckets(d).collect()
-      .map(r => (r.getLong(0), r.getString(1), r.getLong(2), r.getString(3)))
-      .sortBy(_._1)
-    // independent model: corpus token counts (all tokens fit vocab 256),
-    // score = (100 * sum(len(bin(cnt)))) / n_tok, terciles by the
-    // ceil(n/3) / ceil(2n/3) DESC-rank score values
-    val raw = d.select(col("doc_id"), col("lang"), col("text")).collect()
-      .map(r => (r.getLong(0), r.getString(1), r.getString(2).split(" ")))
-    val cnt = raw.flatMap(_._3).groupBy(identity).map { case (t, o) =>
-      t -> o.length.toLong }
-    val scored = raw.map { case (id, lang, toks) =>
-      val lp = toks.map(t => cnt(t).toBinaryString.length.toLong).sum
-      (id, lang, 100L * lp / toks.length)
-    }
-    val want = scored.groupBy(_._2).flatMap { case (lang, rs) =>
-      val desc = rs.map(_._3).sorted.reverse
-      val n = desc.length
-      val (tHead, tMid) = (desc((n + 2) / 3 - 1), desc((2 * n + 2) / 3 - 1))
-      rs.toSeq.map { case (id, _, s) =>
-        val b = if (s >= tHead) "head" else if (s >= tMid) "middle" else "tail"
-        (id, lang, s, b)
-      }
-    }.toSeq.sortBy(_._1)
-    assert(got.toSeq == want)
-    // with 9 docs per lang and distinct scores, every tercile is populated
-    Seq("aa", "bb").foreach { lang =>
-      val bs = got.filter(_._2 == lang).map(_._4)
-      assert(Set("head", "middle", "tail").subsetOf(bs.toSet), bs.toSeq)
-    }
   }
 
   test("upsample: floor copies + hash-gated fractional copy; w=0 excludes; default applies; no corpus shuffle") {
@@ -961,264 +679,6 @@ class TextOpsSpec extends SparkSuite {
     assert(plan.contains("BroadcastHashJoin") &&
       !plan.contains("SortMergeJoin") && !plan.contains("Exchange hashpartitioning"),
       plan)
-  }
-
-  // ------------------------------------- NB quality classifier (t28)
-
-  private def labeledDocs(rows: (Long, String, String)*): org.apache.spark.sql.DataFrame = {
-    import spark.implicits._
-    rows.toSeq.map { case (id, t, src) =>
-      (id, t, "en", src, t.length.toLong) }
-      .toDF("doc_id", "text", "lang", "source", "n_chars")
-  }
-
-  test("nbQuality separates a vocabulary-disjoint corpus: positive-slice " +
-    "vocab scores high, negative scores low, scores are pure integers") {
-    val hi = "good clean prose flows well here"
-    val lo = "spamword junkword adword spamword junkword adword"
-    val d = labeledDocs(
-      (1L, hi, "src0"), (2L, hi, "src1"), (3L, hi, "src0"),
-      (4L, lo, "src9"), (5L, lo, "src9"),
-      (6L, hi, "src9")) // held-out-ish: positive vocab under a negative label
-    val out = TextOps.nbQuality(d).collect()
-      .map(r => r.getLong(0) -> (r.getLong(2), r.getBoolean(3))).toMap
-    assert(out(1L)._1 > 0 && out(1L)._2)
-    assert(out(4L)._1 < 0 && !out(4L)._2)
-    // doc 6 carries positive vocabulary: its features' pc (3 docs' worth)
-    // outweighs nc (its own), so the model generalizes past the label
-    assert(out(6L)._1 > 0, s"doc6 logodds = ${out(6L)._1}")
-  }
-
-  test("nbQuality: docs with no bigrams score (0, 0, false); n_feat is " +
-    "the bigram count") {
-    val d = labeledDocs((1L, "solo", "src0"), (2L, "a b c", "src9"))
-    val out = TextOps.nbQuality(d).collect()
-      .map(r => r.getLong(0) -> (r.getLong(1), r.getLong(2), r.getBoolean(3)))
-      .toMap
-    assert(out(1L) == ((0L, 0L, false)))
-    assert(out(2L)._1 == 2L)
-  }
-
-  test("nbScoreInRow against the trained table reproduces nbQuality " +
-    "row-for-row (the serve-from-model path)") {
-    val d = labeledDocs(
-      (1L, "good clean prose flows", "src0"),
-      (2L, "spamword junkword adword", "src9"),
-      (3L, "good clean junkword prose", "src9"),
-      (4L, "x", "src0"))
-    val batch = TextOps.nbQuality(d).collect().map(_.toString).sorted.toSeq
-    val served = TextOps.nbScoreInRow(d, TextOps.nbWeightTable(d))
-      .collect().map(_.toString).sorted.toSeq
-    assert(served == batch)
-  }
-
-  // ----------------------------------------------- Gopher repetition (t27)
-
-  test("gopherRepetition: duplicate line/paragraph counts, duplicate chars, " +
-    "top-n-gram char shares and rules match hand-computed values") {
-    val clean = "alpha beta gamma delta epsilon"     // no repetition at all
-    // 4 lines, 'dup line' twice (7 chars each); paragraphs: the \n\n
-    // split yields [l1\ndup line, dup line\nend] — NO dup paragraphs
-    val liney = "l1\ndup line\n\ndup line\nend"
-    // 'spam spam' 2-gram occurs 5 times in a 6-token run
-    val spammy = "spam spam spam spam spam spam"
-    val out = TextOps.gopherRepetition(
-        docs(1L -> clean, 2L -> liney, 3L -> spammy, 4L -> base))
-      .collect().map(r => r.getLong(0) -> r).toMap
-
-    val c = out(1L)
-    assert(c.getAs[Long]("dup_lines") == 0L &&
-      c.getAs[Long]("dup_paras") == 0L &&
-      c.getAs[Long]("dup_line_chars") == 0L)
-    // top-2-gram of all-distinct text: every bigram count 1, longest wins:
-    // "delta epsilon" (13 chars)
-    assert(c.getAs[Long]("top2_chars") == 13L,
-      s"top2=${c.getAs[Long]("top2_chars")}")
-    // 13 of 30 chars = 43% > 20%: even a clean SHORT doc fails r_top2 —
-    // the Gopher thresholds presuppose document-length text
-    assert(!c.getAs[Boolean]("r_top2") && !c.getAs[Boolean]("pass"))
-    // a 60-token all-distinct doc passes every repetition rule
-    assert(out(4L).getAs[Boolean]("pass"))
-
-    val l = out(2L)
-    assert(l.getAs[Long]("n_lines") == 5L)      // l1, dup line, "", dup line, end
-    assert(l.getAs[Long]("dup_lines") == 1L)    // second 'dup line'
-    assert(l.getAs[Long]("dup_line_chars") == 8L) // "dup line".length
-    assert(l.getAs[Long]("n_paras") == 2L && l.getAs[Long]("dup_paras") == 0L)
-    // 1 dup of 5 lines = 0.2 ≤ 0.3 → rule holds (10*1 <= 3*5)
-    assert(l.getAs[Boolean]("r_dup_line"))
-
-    val s = out(3L)
-    // 6 'spam' tokens → 5 'spam spam' bigrams; share = 5*9=45 of 29 chars
-    assert(s.getAs[Long]("top2_chars") == 45L)
-    assert(!s.getAs[Boolean]("r_top2") && !s.getAs[Boolean]("pass"))
-    // 4 'spam spam spam' trigrams → 4*14=56; 4-grams: 3*19=57
-    assert(s.getAs[Long]("top3_chars") == 56L)
-    assert(s.getAs[Long]("top4_chars") == 57L)
-  }
-
-  test("gopherRepetition degenerate shapes: empty text and single token") {
-    val out = TextOps.gopherRepetition(docs(1L -> "", 2L -> "one"))
-      .collect().map(r => r.getLong(0) -> r).toMap
-    val e = out(1L)
-    assert(e.getAs[Long]("n_chars") == 0L && e.getAs[Long]("n_lines") == 1L &&
-      e.getAs[Long]("top2_chars") == 0L && e.getAs[Boolean]("pass"))
-    val o = out(2L)
-    assert(o.getAs[Long]("top2_chars") == 0L &&
-      o.getAs[Long]("top3_chars") == 0L && o.getAs[Boolean]("pass"))
-  }
-
-  test("gopherRepetition plan is shuffle-free (pure per-row projection)") {
-    val plan = TextOps.gopherRepetition(docs(1L -> base))
-      .queryExecution.executedPlan.toString
-    assert(!plan.contains("Exchange"), plan)
-  }
-
-  // ------------------------------------------------------- trained BPE
-
-  /** Reference BPE (Sennrich et al. 2016) in plain driver-side Scala:
-    * word counts → repeat (count adjacent pairs with multiplicity, merge
-    * the (count DESC, a, b)-best pair greedily left-to-right).
-    */
-  private def refBpe(texts: Seq[String], nMerges: Int)
-      : (Seq[(String, String)], Map[String, Int]) = {
-    val wordsOf = (t: String) => "[a-z0-9]+".r.findAllIn(t).toVector
-    val wc = texts.flatMap(wordsOf).groupBy(identity)
-      .view.mapValues(_.size.toLong).toMap
-    def mergeOne(syms: Vector[String], p: (String, String)): Vector[String] = {
-      val out = Vector.newBuilder[String]
-      var i = 0
-      while (i < syms.length) {
-        if (i + 1 < syms.length && syms(i) == p._1 && syms(i + 1) == p._2) {
-          out += (p._1 + p._2); i += 2
-        } else { out += syms(i); i += 1 }
-      }
-      out.result()
-    }
-    var reprs: Map[String, Vector[String]] =
-      wc.keys.map(w => w -> w.map(_.toString).toVector).toMap
-    val merges = Seq.newBuilder[(String, String)]
-    var done = false
-    for (_ <- 0 until nMerges if !done) {
-      val pc = scala.collection.mutable.Map.empty[(String, String), Long]
-      reprs.foreach { case (w, syms) =>
-        val c = wc(w)
-        var i = 0
-        while (i + 1 < syms.length) {
-          val k = (syms(i), syms(i + 1)); pc(k) = pc.getOrElse(k, 0L) + c
-          i += 1
-        }
-      }
-      if (pc.isEmpty) done = true
-      else {
-        val best = pc.toSeq.minBy { case ((a, b), c) => (-c, a, b) }._1
-        merges += best
-        reprs = reprs.map { case (w, s) => w -> mergeOne(s, best) }
-      }
-    }
-    (merges.result(), reprs.map { case (w, s) => w -> s.length })
-  }
-
-  test("bpeTrainMerges matches the driver-side reference BPE merge-for-merge " +
-    "and bpeTokenCounts matches its per-doc symbol counts") {
-    // overlap + consecutive-merge shapes on purpose: 'lll' exercises the
-    // greedy left-to-right rule, 'abab' the back-to-back merge that a
-    // single-delimiter replace encoding gets wrong
-    val texts = Seq(
-      "the cat sat on the mat lll abab",
-      "the hat and the rat abab abab",
-      "cats eat rats lll ll catcat",
-      "no 12 overlap 345 here the end")
-    val d = docs(texts.zipWithIndex.map { case (t, i) => (i.toLong, t) }: _*)
-    for (n <- Seq(0, 3, 8, 15)) {
-      val (expMerges, expCounts) = refBpe(texts, n)
-      val gotMerges = TextOps.bpeTrainMerges(d, n)
-      assert(gotMerges == expMerges, s"nMerges=$n")
-      val wordsOf = (t: String) => "[a-z0-9]+".r.findAllIn(t).toVector
-      val expPerDoc = texts.zipWithIndex.map { case (t, i) =>
-        val ws = wordsOf(t)
-        (i.toLong, ws.length.toLong, ws.map(expCounts).sum.toLong)
-      }.toSet
-      val got = TextOps.bpeTokenCounts(d, gotMerges).collect()
-        .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
-      assert(got == expPerDoc, s"nMerges=$n")
-    }
-  }
-
-  test("BPE degenerate shapes: wordless docs count 0; single-char words " +
-    "survive unmerged; merges stop early when no pairs remain") {
-    val d = docs(1L -> "??? !!!", 2L -> "a b c a b")
-    // only pairs: (a,b)x2, (b,c), (c,a) -> merge1 ab; then no pair has
-    // count > ... still (ab merged) pairs (ab,c),(c,ab)? words are
-    // single tokens 'a','b','c' — each word is ONE char, no intra-word
-    // pairs at all, so training stops immediately
-    val merges = TextOps.bpeTrainMerges(d, 5)
-    assert(merges.isEmpty, s"single-char words have no pairs: $merges")
-    val got = TextOps.bpeTokenCounts(d, merges).collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
-    assert(got == Set((1L, 0L, 0L), (2L, 5L, 5L)))
-  }
-
-  test("trained-BPE counts compose into tokenBudgetSample as the charged " +
-    "token column") {
-    val texts = (1 to 20).map(i => s"pay$i " + ("tok " * (i % 5 + 1)).trim)
-    val d = docs(texts.zipWithIndex.map { case (t, i) => (i.toLong, t) }: _*)
-    val merges = TextOps.bpeTrainMerges(d, 6)
-    val applied = TextOps.bpeTokenCounts(d, merges)
-      .select(org.apache.spark.sql.functions.col("doc_id"),
-        org.apache.spark.sql.functions.col("bpe_tokens"))
-    val withBpe = d.join(applied, Seq("doc_id"))
-    val sampled = TextOps.tokenBudgetSample(withBpe, budget = 30L,
-      tokenCount = org.apache.spark.sql.functions.col("bpe_tokens")).collect()
-    // the budget rule holds in BPE tokens: selected docs' bpe sum <= 30
-    // + the boundary doc, and at least one doc is selected
-    assert(sampled.nonEmpty)
-    val bpeOf = applied.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val total = sampled.map(r => bpeOf(r.getAs[Long]("doc_id"))).sum
-    val maxDoc = bpeOf.values.max
-    assert(total <= 30L + maxDoc, s"total=$total")
-  }
-
-  test("c4Rules: line retention and page gates flip at their boundaries") {
-    def run(text: String): Map[String, Any] = {
-      val r = TextOps.c4Rules(docs(1L -> text)).collect()(0)
-      r.schema.fieldNames.map(n => n -> r.get(r.fieldIndex(n))).toMap
-    }
-    // 3 qualifying lines (5 words, terminal punct) -> all kept, pass
-    val good = Seq("a b c d e.", "f g h i j!", "k l m n o?").mkString("\n")
-    val g = run(good)
-    assert(g("n_lines") == 3L && g("n_kept") == 3L &&
-      g("n_sentences") == 3L && g("pass") == true)
-    assert(g("kept_chars") == good.length.toLong) // everything retained
-    // 4-word line dropped; no-terminal line dropped; quote terminal kept
-    val mixed = Seq("a b c d.", "a b c d e", "a b c d e\"",
-      "f g h i j.", "k l m n o.").mkString("\n")
-    val m = run(mixed)
-    assert(m("n_kept") == 3L)
-    // the '"' terminal line carries no [.!?], so sentences = 2 -> r_sent
-    // fails at 2, passes at 3 (boundary)
-    assert(m("n_sentences") == 2L && m("r_sent") == false)
-    // a 'javascript' line is dropped even when otherwise qualifying,
-    // and dropping it is line-level: the page still passes
-    val js = Seq("a b c d e.", "f g javascript h i.", "j k l m n.",
-      "o p q r s.").mkString("\n")
-    val j = run(js)
-    assert(j("n_kept") == 3L && j("pass") == true)
-    // page gates: '{' anywhere fails even on a dropped line; 'lorem
-    // ipsum' fails; bare 'lorem' does not
-    assert(run(good + "\nx {")("r_brace") == false)
-    assert(run(good + "\nx {")("pass") == false)
-    assert(run(good.replace("f g h", "lorem ipsum h"))("r_lorem") == false)
-    assert(run(good.replace("f g h", "lorem x h"))("r_lorem") == true)
-  }
-
-  test("synthesizeLines: deterministic k-word lines, punct cycle, contaminants") {
-    val out = TextOps.synthesizeLines(docs(
-        0L -> "w1 w2 w3 w4 w5 w6 w7",   // k=3, %17 lorem on line 1
-        10L -> "w1 w2 w3 w4 w5 w6 w7")) // k=6, (10+1)%11 js on line 1
-      .collect().map(r => r.getLong(0) -> r.getString(1)).toMap
-    assert(out(0L) == "w1 w2 w3 lorem ipsum?\nw4 w5 w6!\nw7")
-    assert(out(10L) == "w1 w2 w3 w4 w5 w6 javascript\nw7.")
   }
 
 }
